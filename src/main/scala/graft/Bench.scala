@@ -158,8 +158,9 @@ object Bench {
       .mkString("{", ",", "}")
     // quiet-band cpu_sec reference for steal classification: env-supplied
     // (round-14 advice — the 2254 default was measured on THIS gate host
-    // at sf0.1; other hosts/SFs should export their own or ignore it)
-    val quietRef = sys.env.getOrElse("SPARK_GRAFT_QUIET_CPU_REF", "2254")
+    // at sf0.1; other hosts/SFs should export their own or ignore it). Parsed,
+    // so a malformed value falls back instead of breaking the JSON line
+    val quietRef = sys.env.get("SPARK_GRAFT_QUIET_CPU_REF").flatMap(_.trim.toLongOption).getOrElse(2254L)
     println(s"""{"metric":"summary","total":${math.round(total * 1000) / 1000.0},"cpu_sec":${math.round(cpuSec * 10) / 10.0},"loadavg_start":"$load0","loadavg_end":"${loadavg()}","quiet_cpu_ref":$quietRef,"queries_ok":${results.count(_._2.isDefined)},"failed":${failed.size},"slowest":$slowest}""")
     // the full machine-readable line AGAIN, LAST (round-14 verdict #1):
     // the driver archives/parses a bounded stdout tail, and for two

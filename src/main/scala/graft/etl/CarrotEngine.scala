@@ -226,13 +226,16 @@ final class CarrotEngine(
     * summary_mapstream table sorted by stringified key. */
   def summary(threshold: Long = 0): DataFrame = CarrotMetrics.summary(this, threshold)
 
+  /** The raw metrics counters, collected on first use and kept: the summary
+    * (at any threshold) and the CLI's run log read these same rows. */
+  private[etl] lazy val metricsCounts: Seq[CarrotMetrics.Counter] = CarrotMetrics.rawCounts(this)
+
   // internal accessors for CarrotMetrics
   private[etl] def metricsSchema: OmopSchema = schema
   private[etl] def metricsRules: CarrotRules = rules
   private[etl] def metricsRaw: Map[String, DataFrame] = rawSources
   private[etl] def metricsPrepared: Map[String, DataFrame] = prepared
   private[etl] def metricsBuilds: Map[String, TargetBuild] = builds
-  private[etl] def metricsDateCols(src: String): Seq[String] = dateColsOf(src)
   private[etl] def sparkSession: SparkSession = spark
 
   // ------------------------------------------------------------ standard

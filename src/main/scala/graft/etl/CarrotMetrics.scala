@@ -1,9 +1,12 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.functions.DateNorm
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The metrics/summary subsystem (reference `tools/metrics.py`) as DataFrame
   * aggregations — a hand-rolled grouping-sets over
@@ -19,6 +22,12 @@ import graft.functions.DateNorm
   *    (`metrics.py:191-259`; person rows use out_record[1] as concept and
   *    out_record[2] as additional, non-person rows use out_record[2])
   *
+  * The raw counters are computed ONCE per engine: one union of per-source
+  * and per-target aggregations, collected and memoised on the engine
+  * (`CarrotEngine.metricsCounts`). [[summary]] and [[runLogCounts]] both
+  * read those same rows, so the console counts always agree with the
+  * written summary and printing them costs no Spark job.
+  *
   * Materialization (A3, `metrics.py:305-343`): rows sorted by the
   * "src~field~table~concept~additional" key string, source truncated at the
   * first '.', rows below the output-count threshold dropped.
@@ -27,7 +36,15 @@ object CarrotMetrics {
 
   import CarrotEngine._
 
-  private val KeyCols = Seq("source", "fieldname", "tablename", "concept_id", "additional")
+  /** One raw counter at its FULL key (source names untruncated). A key may
+    * occur more than once; readers sum. */
+  private[etl] final case class Counter(source: String, fieldname: String, tablename: String,
+                                        conceptId: String, additional: String,
+                                        countType: String, n: Long)
+
+  private def counter(src: Column, field: Column, table: Column, concept: Column,
+                      additional: Column, countType: String, n: Column): Column =
+    struct(keyed(src, field, table, concept, additional, countType, n): _*)
 
   private def keyed(src: Column, field: Column, table: Column, concept: Column,
                     additional: Column, countType: String, n: Column): Seq[Column] =
@@ -35,56 +52,54 @@ object CarrotMetrics {
       concept.as("concept_id"), additional.as("additional"),
       lit(countType).as("count_type"), n.cast("long").as("n"))
 
-  /** Every raw counter at its FULL key (source names untruncated) —
-    * [[summary]] rolls this into the reference's thresholded, prefix-
-    * truncated mapstream table; [[runLogCounts]] reads the two key
-    * shapes the reference's console log prints. */
-  private def rawCounts(e: CarrotEngine): DataFrame = {
+  /** Every raw counter, as one collected union — call through the engine's
+    * memo (`CarrotEngine.metricsCounts`), never directly. */
+  private[etl] def rawCounts(e: CarrotEngine): Seq[Counter] = {
     val rules  = e.metricsRules
     val schema = e.metricsSchema
 
     val parts = Seq.newBuilder[DataFrame]
 
-    def keyStruct(src: Column, field: Column, table: Column, ct: String): Column =
-      struct(src.as("source"), field.as("fieldname"), table.as("tablename"), lit(ct).as("count_type"))
-
-    // ---- ONE scan per source file: every per-row counter (input_count,
-    // date drops, empty-value counts per mapped field×target) emitted as an
-    // exploded key array and aggregated in a single shuffle — the reference
-    // increments these in its one pass over the file; so do we.
+    // ---- per source file: the input count from the raw rows; the date
+    // drops and the empty-value counts from the engine's date-normalized
+    // (`prepared`) view, which holds exactly the date-valid rows — so
+    // input_date_fields = input rows - prepared rows, and empties are
+    // counted over the rows that passed the date filter, as the reference
+    // counts them after its date check. Both sides feed ONE global
+    // aggregate as 0/1 flag columns: a single shuffle per source.
     for (src <- rules.sourceTables) {
-      val raw = e.metricsRaw(src)
-      val dateCols = e.metricsDateCols(src)
-      val dateOk = dateCols.map(c => DateNorm.normalise8601(col(c)).isNotNull)
-        .reduceOption(_ && _).getOrElse(lit(true))
+      // v1 iterates every mapped data column (term fields AND verbatim-copy
+      // source fields); v2's standard builder counts per concept-mapped
+      // field and its person builder does not count at all.
+      val empties: Seq[(String, String)] = for {
+        m <- rules.forSource(src)
+        f <- (if (m.target == "person") {
+                if (rules.v1Compat) m.conceptMappings.take(1).map(_.sourceField) else Seq.empty
+              } else {
+                val extra = if (rules.v1Compat) m.conceptMappings.flatMap(_.extraCopies.map(_._1)) else Seq.empty
+                (m.conceptMappings.map(_.sourceField) ++ extra).distinct
+              })
+      } yield f -> m.target
 
-      val elems = Seq.newBuilder[Column]
-      elems += keyStruct(lit(src), lit("all"), lit("all"), "input_count")
-      if (dateCols.nonEmpty)
-        elems += when(!dateOk, keyStruct(lit(src), lit("all"), lit("all"), "input_date_fields"))
-      for (m <- rules.forSource(src)) {
-        // v1 iterates every mapped data column (term fields AND verbatim-copy
-        // source fields); v2's standard builder counts per concept-mapped
-        // field and its person builder does not count at all.
-        val fields: Seq[String] =
-          if (m.target == "person") {
-            if (rules.v1Compat) m.conceptMappings.take(1).map(_.sourceField) else Seq.empty
-          } else {
-            val extra = if (rules.v1Compat) m.conceptMappings.flatMap(_.extraCopies.map(_._1)) else Seq.empty
-            (m.conceptMappings.map(_.sourceField) ++ extra).distinct
+      val flags = "_in" +: "_ok" +: empties.indices.map(i => s"_e$i")
+      def flagRow(ones: Map[String, Column]): Seq[Column] =
+        flags.map(c => ones.getOrElse(c, lit(0L)).as(c))
+      val rawSide = e.metricsRaw(src).select(flagRow(Map("_in" -> lit(1L))): _*)
+      val okSide = e.metricsPrepared(src).select(flagRow(Map("_ok" -> lit(1L)) ++
+        empties.zipWithIndex.map { case ((f, _), i) =>
+          s"_e$i" -> when(trim(col(f)) === "", 1L).otherwise(0L)
+        }): _*)
+      val totals = rawSide.unionByName(okSide).agg(sum(flags.head).as(flags.head),
+        flags.tail.map(c => sum(c).as(c)): _*)
+
+      val all = lit("all")
+      val keys =
+        counter(lit(src), all, all, all, lit(""), "input_count", col("_in")) +:
+          counter(lit(src), all, all, all, lit(""), "input_date_fields", col("_in") - col("_ok")) +:
+          empties.zipWithIndex.map { case ((f, t), i) =>
+            counter(lit(src), lit(f), lit(t), all, lit(""), "invalid_source_fields", col(s"_e$i"))
           }
-        for (f <- fields)
-          elems += when(dateOk && trim(col(f)) === "",
-            keyStruct(lit(src), lit(f), lit(m.target), "invalid_source_fields"))
-      }
-      parts += raw
-        .select(explode(array(elems.result(): _*)).as("k"))
-        .filter(col("k").isNotNull)
-        .groupBy(col("k.source"), col("k.fieldname"), col("k.tablename"), col("k.count_type"))
-        .count()
-        .select(col("source"), col("fieldname"), col("tablename"),
-          lit("all").as("concept_id"), lit("").as("additional"),
-          col("count_type"), col("count").cast("long").as("n"))
+      parts += totals.select(explode(array(keys: _*)).as("k")).select(col("k.*"))
     }
 
     // ---- per target: invalid_date from the pre-filter candidates (one
@@ -145,55 +160,57 @@ object CarrotMetrics {
         .agg(sum(col("count")).cast("long").as("n"))
     }
 
-    parts.result().reduce(_.unionByName(_)).filter(col("n") > 0)
+    parts.result().reduce(_.unionByName(_)).filter(col("n") > 0).collect().toSeq.map(r =>
+      Counter(r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getString(4),
+        r.getString(5), r.getLong(6)))
   }
+
+  private val SummarySchema = StructType(Seq("dsname", "source", "source_field", "target",
+    "concept_id", "additional", "incount", "invalid_persid", "invalid_date",
+    "invalid_source", "outcount").map(StructField(_, StringType)))
+
+  /** Spark's string order (UTF8_BINARY): unsigned UTF-8 bytes. */
+  private val Utf8Order: Ordering[Array[Byte]] = (a, b) => java.util.Arrays.compareUnsigned(a, b)
 
   def summary(e: CarrotEngine, threshold: Long): DataFrame = {
-    val rules  = e.metricsRules
-    val counts = rawCounts(e)
-
-    def sumOf(ct: String): Column =
-      coalesce(sum(when(col("count_type") === ct, col("n"))), lit(0L)).cast("long")
-
-    counts
-      .groupBy(KeyCols.map(col): _*)
-      .agg(
-        sumOf("input_count").as("incount"),
-        sumOf("invalid_person_ids").as("invalid_persid"),
-        sumOf("invalid_date_fields").as("invalid_date"),
-        sumOf("invalid_source_fields").as("invalid_source"),
-        sumOf("output_count").as("outcount"))
-      .filter(col("outcount") >= lit(threshold))
+    val dataset = e.metricsRules.dataset
+    // the rendered counters, in column order; outcount last
+    val countTypes = Seq("input_count", "invalid_person_ids", "invalid_date_fields",
+      "invalid_source_fields", "output_count")
+    val rows = e.metricsCounts
+      .groupBy(c => (c.source, c.fieldname, c.tablename, c.conceptId, c.additional))
+      .toSeq
+      .map { case (key, cs) =>
+        key -> countTypes.map(ct => cs.iterator.filter(_.countType == ct).map(_.n).sum)
+      }
+      .filter { case (_, sums) => sums.last >= threshold }
       // the reference sorts by the FULL stringified key (pre-prefix source)
-      .withColumn("_sortkey", concat_ws("~", col("source"), col("fieldname"),
-        col("tablename"), col("concept_id"), col("additional")))
-      .select(
-        lit(rules.dataset).as("dsname"),
-        regexp_extract(col("source"), "^[^.]*", 0).as("source"),
-        col("fieldname").as("source_field"),
-        col("tablename").as("target"),
-        col("concept_id"), col("additional"),
-        col("incount").cast("string").as("incount"),
-        col("invalid_persid").cast("string").as("invalid_persid"),
-        col("invalid_date").cast("string").as("invalid_date"),
-        col("invalid_source").cast("string").as("invalid_source"),
-        col("outcount").cast("string").as("outcount"),
-        col("_sortkey"))
-      .orderBy(col("_sortkey"))
-      .drop("_sortkey")
+      .sortBy { case ((s, f, t, c, a), _) => Seq(s, f, t, c, a).mkString("~").getBytes(UTF_8) }(Utf8Order)
+      .map { case ((s, f, t, c, a), sums) =>
+        Row.fromSeq(Seq(dataset, s.takeWhile(_ != '.'), f, t, c, a) ++ sums.map(_.toString))
+      }
+    e.sparkSession.createDataFrame(rows.asJava, SummarySchema)
   }
+
+  private val RunLogSchema = StructType(Seq(StructField("source", StringType),
+    StructField("tablename", StringType), StructField("count_type", StringType),
+    StructField("n", LongType)))
 
   /** The reference's per-file console log counters (`run.py:304-307`):
     * (source, tablename, count_type, n) at the two granularities the log
     * prints — per-source `input_count` and per-(source, target)
     * `output_count` — with FULL source names (the summary table
-    * truncates them at the first '.'; the console log does not). */
-  def runLogCounts(e: CarrotEngine): DataFrame =
-    rawCounts(e).filter(col("fieldname") === "all" &&
-        col("concept_id") === "all" && col("additional") === "" &&
-        col("source") =!= "all" &&
-        ((col("count_type") === "input_count" && col("tablename") === "all") ||
-         (col("count_type") === "output_count" && col("tablename") =!= "all")))
-      .groupBy(col("source"), col("tablename"), col("count_type"))
-      .agg(sum(col("n")).cast("long").as("n"))
+    * truncates them at the first '.'; the console log does not). Read from
+    * the same memoised counters as [[summary]]. */
+  def runLogCounts(e: CarrotEngine): DataFrame = {
+    val rows = e.metricsCounts
+      .filter(c => c.fieldname == "all" && c.conceptId == "all" && c.additional == "" &&
+        c.source != "all" &&
+        ((c.countType == "input_count" && c.tablename == "all") ||
+         (c.countType == "output_count" && c.tablename != "all")))
+      .groupMapReduce(c => (c.source, c.tablename, c.countType))(_.n)(_ + _)
+      .map { case ((s, t, ct), n) => Row(s, t, ct, n) }
+      .toSeq
+    e.sparkSession.createDataFrame(rows.asJava, RunLogSchema)
+  }
 }

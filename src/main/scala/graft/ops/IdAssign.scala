@@ -36,8 +36,13 @@ import org.apache.spark.sql.functions._
   * offsets and positions MUST see the same partition boundaries — without a
   * materialization point, AQE may re-plan the range exchange differently
   * for separate consumers and shift IDs across partitions (caught by the
-  * oracle in round 1). Callers that want the memory back after their last
-  * action pass a `CacheScope`.
+  * oracle in round 1). Whether AQE sizes the range exchange of that cached
+  * snapshot at all is a session choice: Spark plans cached queries with AQE
+  * off unless `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+  * is true (as `CarrotCli`'s session sets it); otherwise the snapshot keeps
+  * `spark.sql.shuffle.partitions` partitions. Either way the ids are the
+  * same. Callers that want the memory back after their last action pass a
+  * `CacheScope`.
   *
   * IDs are dense, start at `offset + 1`, and follow the global order of
   * `orderCols` (callers must order by a unique key for determinism).
@@ -59,9 +64,13 @@ object IdAssign {
     // at spark.sql.shuffle.partitions even when the data is tiny, while the
     // by-column form lets AQE coalesce a small range shuffle to few tasks
     // (task setup dominates below ~64 MB/partition) and keep full width on a
-    // real shuffle. Adjacent-partition coalescing preserves the global range
-    // order, and the collected offsets always match because they are read
-    // from the SAME materialized snapshot as the positions.
+    // real shuffle. That coalescing happens only in sessions that let AQE
+    // re-partition cached plans (canChangeCachedPlanOutputPartitioning, set
+    // by CarrotCli); elsewhere the cached snapshot keeps
+    // spark.sql.shuffle.partitions partitions. Adjacent-partition coalescing
+    // preserves the global range order, and the collected offsets always
+    // match because they are read from the SAME materialized snapshot as the
+    // positions.
     // _mid = (partition index << 33) | 0-based row position, assigned in the
     // partition's physical row order = the sorted order. The immediate cache
     // pins the (nondeterministic) assignment so offsets and positions see one

@@ -28,8 +28,9 @@ object Golden {
     .getOrCreate()
 
   val RefRoot   = "/root/reference"
-  val DdlPath   = s"$RefRoot/carrottransform/config/OMOPCDM_postgresql_5.3_ddl.sql"
-  val CfgPath   = s"$RefRoot/carrottransform/config/config.json"
+  // the bundled copies production loads by default (CarrotCli, AtPath)
+  val DdlPath   = "@carrot/config/OMOPCDM_postgresql_5.3_ddl.sql"
+  val CfgPath   = "@carrot/config/config.json"
 
   lazy val schema: OmopSchema = OmopSchema.fromFiles(DdlPath, CfgPath)
 
