@@ -3,20 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — nanosAsLong must hold
-      // BEFORE the warmup reads, or the events warmup job fails (r2: a
-      // swallowed "aborting job" ERROR in the official bench log, and a
-      // cold events table for q03). Session construction is where a
-      // session-wide SQL conf belongs (round-3 advice).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the same session Verify checks results in (UTC, nanosAsLong set
+    // before the warmup reads the events table)
+    val spark = GraftSession.local()
     // warmup: spin up executors/codegen and touch each table's footer once,
     // so per-query timings measure the engine rather than JVM startup.
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -457,16 +457,8 @@ object CurateCli {
       throw new IllegalArgumentException(
         s"option${if (stray.size > 1) "s" else ""} not valid for '$command': ${stray.toSeq.sorted.mkString(", ")}")
     def req(k: String): String = argv.getOrElse(k, sys.error(s"missing required option $k"))
-    val master = sys.props.get("spark.master").orElse(sys.env.get("SPARK_MASTER")).getOrElse("local[*]")
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .appName("graft-curate")
-      .master(master)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli("graft-curate")
 
     def fmt(path: String, key: String): String = argv.get(key) match {
       case Some(f @ ("jsonl" | "parquet")) => f

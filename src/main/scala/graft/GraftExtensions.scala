@@ -15,7 +15,8 @@ import graft.functions.{DotProduct, MinHashSignature, NGramShingles, Normalise86
   *   SELECT ngram_shingles(text, 5) FROM docs
   *   SELECT minhash_signature(ngram_shingles(text, 5), 8) FROM docs
   *
-  * (or SparkSession.builder().withExtensions(new GraftExtensions)).
+  * (or SparkSession.builder().withExtensions(new GraftExtensions); every
+  * session this project builds gets them from [[GraftSession]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.DateNorm
+import graft.functions.{DateExprs, DateNorm}
 import graft.ops.{BudgetSelect, Cluster, Corpus, Dedup, HistLedger, IdAssign, Layout, Multimodal, Pipeline, SampleLedger, Scrub, Sessionize, Shard, Similarity, Stats, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -96,7 +96,6 @@ object SparkEntry {
     * customer = the person file (market segment as the mapped gender code,
     * a synthetic-but-deterministic birthdate), orders = a measurement feed.
     * The DuckDB oracle replays the same pipeline in SQL. */
-  private[graft] def carrotTpchRulesForProf: String = carrotTpchRules
   private val carrotTpchRules: String =
     """{"metadata": {"dataset": "tpch"}, "cdm": {
       |  "person": {"customer_src": {
@@ -543,7 +542,7 @@ object SparkEntry {
       tbl(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           date_format(col("l_shipdate"), "dd/MM/yyyy").as("raw"))
-        .withColumn("norm", DateNorm.normalise8601(col("raw")))
+        .withColumn("norm", DateExprs.normalise8601(col("raw")))
     }),
 
     // ---- T10: birthdate component split (non-zero-padded strings) ----

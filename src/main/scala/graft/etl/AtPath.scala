@@ -20,8 +20,6 @@ object AtPath {
   /** Windows separators are normalized first, as in the reference. */
   private def posix(path: String): String = path.replace("\\", "/")
 
-  def isBundled(path: String): Boolean = posix(path).startsWith(Prefix)
-
   /** Read a user-supplied path as UTF-8: `@carrot/X` loads classpath
     * resource `carrot/X`; anything else is a filesystem path. */
   def readString(path: String): String = {

@@ -2,6 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
+
 /** CLI entry point mirroring the reference's `carrot-transform run` surface
   * (`tools/args.py:340-395`, `cli/subcommands/run.py:28-60`): rules file +
   * inputs + output (+ optional DDL/config overrides, last-used-ids seed,
@@ -25,17 +27,14 @@ import org.apache.spark.sql.SparkSession
   * the default `single` matches the reference's one-file-per-table layout
   * byte for byte.
   *
-  * Session confs set by the builder (on an existing session, `getOrCreate`
-  * applies them to it too):
-  *  - `spark.sql.session.timeZone=UTC`: date strings never shift with the
-  *    host zone;
-  *  - `spark.sql.legacy.parquet.nanosAsLong=true`: TIMESTAMP(NANOS) parquet
-  *    inputs read as their raw tick count instead of failing the reader;
-  *  - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`: AQE
-  *    also plans the queries the engine caches (the `IdAssign` range
-  *    snapshots, the person dictionary, the joined targets), so their
-  *    shuffles take partition counts from the real map output instead of a
-  *    fixed `spark.sql.shuffle.partitions` each.
+  * The session is [[graft.GraftSession.cli]]'s (UTC, nanosAsLong — the
+  * engine stringifies all inputs, so a nanos column reads as its raw tick
+  * count, verbatim) plus
+  * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`: AQE
+  * also sizes the shuffles of the queries the engine caches (the `IdAssign`
+  * range snapshots, the person dictionary, the joined targets) instead of
+  * a fixed `spark.sql.shuffle.partitions` each. On an existing session
+  * `getOrCreate` applies them to it too.
   */
 object CarrotCli {
 
@@ -155,27 +154,11 @@ object CarrotCli {
       }.toMap
     }.getOrElse(Map.empty)
 
-    // honor an externally-provided master (spark-submit / cluster); default
-    // to all local cores when run standalone
-    val master = sys.props.get("spark.master").orElse(sys.env.get("SPARK_MASTER")).getOrElse("local[*]")
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .appName("carrot-transform-spark")
-      .master(master)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TIMESTAMP(NANOS) parquet inputs reject the vectorized reader; set
-      // the legacy nanos-as-long flag HERE, at session construction, so no
-      // reader has to mutate session conf mid-run (round-3 advice). The
-      // engine stringifies all inputs, so a nanos column reads as its raw
-      // tick count — verbatim, never silently re-scaled.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark plans cached queries with AQE off by default, which pins every
-      // cached shuffle at spark.sql.shuffle.partitions; dense ids stay exact
-      // because IdAssign reads offsets and positions from one snapshot
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // dense ids stay exact under AQE: IdAssign reads offsets and positions
+    // from one snapshot
+    val spark = GraftSession.cli("carrot-transform-spark",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
     val schema = OmopSchema.fromFiles(ddlFile, cfgFile)
     val rules  = Rules.fromFile(rulesFile, schema)
@@ -197,19 +180,14 @@ object CarrotCli {
       cacheJoined = true) // every target is consumed twice: write + summary
 
     val write = Dispatch.outputTarget(spark, output, dirMode = outMode == "dir")
-    def timed(what: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime(); f
-      if (sys.env.contains("GRAFT_PROF"))
-        System.err.println(f"[prof] cli $what%-22s ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    timed("person_ids")(write("person_ids", engine.personIds))
+    write("person_ids", engine.personIds)
     // file-ish sinks get the reference's sequential row order; a SQL table
     // has no observable order, so skip the global sort there
     val results = if (Dispatch.isSql(output, spark.sparkContext.hadoopConfiguration) &&
         !Dispatch.isMinio(output))
       engine.run() else engine.runOrdered()
-    for ((target, df) <- results) timed(target)(write(target, df))
-    timed("summary_mapstream")(write("summary_mapstream", engine.summary(threshold)))
+    for ((target, df) <- results) write(target, df)
+    write("summary_mapstream", engine.summary(threshold))
 
     // Reference logging surface (logger.py; run.py:304-307,341): one
     // INPUT line per source file (input count + time since start), a

@@ -113,8 +113,9 @@ final class CarrotEngine(
     * ALL targets (reference mutates `indata[datetime_col]` in place,
     * `run.py:229-242`). */
   private lazy val prepared: Map[String, DataFrame] = rawSources.map { case (src, df) =>
-    // single-pass expression form of DateNorm.normalise8601 — bit-identical
-    // (DateNormSpec), ~10× fewer regex executions on the engine's hottest path
+    // single-pass `normalise_to8601` — bit-identical to the composable
+    // reference model in DateNormSpec, ~10× fewer regex executions on the
+    // engine's hottest path
     val out = dateColsOf(src).foldLeft(df) { (d, c) =>
       d.withColumn(c, graft.functions.DateExprs.normalise8601(col(c)))
     }

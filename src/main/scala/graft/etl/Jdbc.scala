@@ -11,8 +11,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * The reference inserts row-at-a-time in per-record transactions; here
   * `df.write.jdbc` batches inserts per partition — same table contents,
-  * parallel writers. Partitioned reads (partitionColumn/numPartitions)
-  * are exposed for big tables; a plain full scan otherwise.
+  * parallel writers.
   */
 object Jdbc {
 
@@ -24,13 +23,6 @@ object Jdbc {
     val lowered = raw.columns.foldLeft(raw)((d, c) => d.withColumnRenamed(c, c.toLowerCase))
     lowered.select(lowered.columns.map(c => col(c).cast(StringType).as(c)): _*).na.fill("")
   }
-
-  /** Partitioned parallel scan for large tables. */
-  def readTablePartitioned(spark: SparkSession, url: String, table: String,
-                           partitionColumn: String, lower: Long, upper: Long,
-                           numPartitions: Int,
-                           props: Properties = new Properties()): DataFrame =
-    spark.read.jdbc(url, table.toLowerCase, partitionColumn, lower, upper, numPartitions, props)
 
   /** All-string write (reference K2 creates every column as Text). */
   def writeTable(df: DataFrame, url: String, table: String,

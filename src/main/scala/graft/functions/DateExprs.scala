@@ -8,18 +8,25 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import org.apache.spark.sql.graft.ColumnBridge
 
-/** Single-pass form of `DateNorm.normalise8601` (reference
-  * `tools/date_helpers.py:31-83` `normalise_to8601`).
+/** The reference's `normalise_to8601` (`tools/date_helpers.py:31-83`),
+  * verified against its unit tests:
+  *  - input split on single spaces; token 0 is the date, token 1 (only when
+  *    there are exactly two tokens) is the time; extra tokens → time ignored;
+  *  - date must PREFIX-match `dddd[-/]dd[-/]dd` (year first) or, failing
+  *    that, `dd[-/]dd[-/]dddd` (day first); trailing junk tolerated; month /
+  *    day values NOT range-validated; unmatched → null (row later dropped);
+  *  - time must prefix-match `dd:dd[:dd[.dddddd]]`; unmatched time → midnight;
+  *  - components re-rendered via str(int(x)) + zero-fill → "YYYY-MM-DD HH:MM:SS".
   *
-  * The composable version is a CASE tree of ~15 `regexp_extract` calls that
-  * each re-run the full pattern match — and the engine evaluates it once in
-  * the date-validity FILTER and again in the normalized PROJECTION, making
-  * it the hottest expression of the whole ETL (round-3 profile: the largest
-  * single CPU sink in q26). This expression runs each pattern's matcher at
-  * most once per row and builds the output in one StringBuilder pass.
-  * Output is bit-identical to the composable form (DateNormSpec asserts
-  * equality over the edge-case corpus, and the goldens/oracle pin it
-  * end-to-end).
+  * A composable form of the same rules is a CASE tree of ~15
+  * `regexp_extract` calls that each re-run the full pattern match — and the
+  * engine evaluates it once in the date-validity FILTER and again in the
+  * normalized PROJECTION, making it the hottest expression of the whole ETL
+  * (round-3 profile: the largest single CPU sink in q26). This expression
+  * runs each pattern's matcher at most once per row and builds the output
+  * in one StringBuilder pass. That composable form is kept in DateNormSpec
+  * as the reference model: the spec asserts bit-identical output over the
+  * edge-case corpus, and the goldens/oracle pin it end-to-end.
   *
   * CodegenFallback: the row-local work is a few regex matches; following the
   * NGramShingles precedent, falling out of whole-stage codegen costs less

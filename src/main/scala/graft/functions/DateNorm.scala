@@ -4,56 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Date handling with the exact semantics of the reference
-  * (carrot-transform `tools/date_helpers.py:31-83` `normalise_to8601`,
-  * `tools/validation.py:13-63` `valid_date_value`,
+  * (`tools/validation.py:13-63` `valid_date_value`,
   * `tools/date_helpers.py:9-28` `get_datetime_value`), re-expressed as
   * codegen-friendly compositions of built-in Spark SQL functions — no UDFs.
-  *
-  * Reference behavior being replicated (verified against its unit tests):
-  *  - input split on single spaces; token 0 is the date, token 1 (only when
-  *    there are exactly two tokens) is the time; extra tokens → time ignored;
-  *  - date must PREFIX-match `dddd[-/]dd[-/]dd` (year first) or, failing
-  *    that, `dd[-/]dd[-/]dddd` (day first); trailing junk tolerated; month /
-  *    day values NOT range-validated; unmatched → null (row later dropped);
-  *  - time must prefix-match `dd:dd[:dd[.dddddd]]`; unmatched time → midnight;
-  *  - components re-rendered via str(int(x)) + zero-fill → "YYYY-MM-DD HH:MM:SS".
+  * The reference's `normalise_to8601` is [[DateExprs.normalise8601]].
   */
 object DateNorm {
-
-  private val YearFirst = "^(\\d{4})[-/](\\d{2})[-/](\\d{2})"
-  private val DayFirst  = "^(\\d{2})[-/](\\d{2})[-/](\\d{4})"
-  private val TimeRe    = "^(\\d{2}):(\\d{2})(:(\\d{2})(\\.\\d{6})?)?"
-
-  private def zfill(c: Column, n: Int): Column =
-    lpad(c.cast("int").cast("string"), n, "0")
-
-  /** `normalise_to8601`: returns "YYYY-MM-DD HH:MM:SS" or null. */
-  def normalise8601(raw: Column): Column = {
-    val toks   = split(raw, " ", -1)
-    val p0     = toks.getItem(0)
-    val yfYear = regexp_extract(p0, YearFirst, 1)
-    val yf     = yfYear =!= ""
-    val dfYear = regexp_extract(p0, DayFirst, 3)
-    val df     = dfYear =!= ""
-
-    val year  = when(yf, yfYear).when(df, dfYear)
-    val month = when(yf, regexp_extract(p0, YearFirst, 2)).when(df, regexp_extract(p0, DayFirst, 2))
-    val day   = when(yf, regexp_extract(p0, YearFirst, 3)).when(df, regexp_extract(p0, DayFirst, 1))
-
-    val datePart = concat(zfill(year, 4), lit("-"), zfill(month, 2), lit("-"), zfill(day, 2))
-
-    val t       = toks.getItem(1)
-    val hasTwo  = size(toks) === 2
-    val hh      = regexp_extract(t, TimeRe, 1)
-    val timeOk  = hasTwo && (hh =!= "")
-    val ss      = regexp_extract(t, TimeRe, 4)
-    val timePart = concat(
-      zfill(hh, 2), lit(":"),
-      zfill(regexp_extract(t, TimeRe, 2), 2), lit(":"),
-      zfill(when(ss === "", "0").otherwise(ss), 2))
-
-    when(yf || df, concat(datePart, lit(" "), when(timeOk, timePart).otherwise(lit("00:00:00"))))
-  }
 
   /** First 10 chars of a normalized datetime — the `_date` twin of a
     * `_datetime` field (reference `tools/core.py:149-154`, config

@@ -404,9 +404,12 @@ object Cluster {
       }
       // BOUNDED await (round-14 verdict #3): a wedged threshold loop (a
       // stuck external scan, a scheduler deadlock) must fail loudly with
-      // a TimeoutException, not hang the caller forever. The bound is
-      // per-future wall time from now — generous for a metadata-scale
-      // pair graph, and a parameter for callers whose graphs are not.
+      // a TimeoutException, not hang the caller forever. `maxWaitSec` is
+      // ONE total budget shared by all the futures: one deadline is fixed
+      // here and each await gets only what is left of it, so a sweep of
+      // many slow thresholds can time out although each alone would fit.
+      // Callers with large pair graphs or many thresholds pass a bigger
+      // budget.
       val deadline = System.nanoTime() + maxWaitSec * 1000000000L
       futs.map { f =>
         val left = math.max(1L, (deadline - System.nanoTime()) / 1000000L)

@@ -1831,7 +1831,9 @@ object Corpus {
     BudgetSelect.selectByBudgetPerGroupWith(
         base.withColumn("_ts_one", lit(1L)),
         groupCol, "_ts_one",
-        supplies => {
+        // an empty corpus has no groups to allocate to (and its Σ over
+        // zero groups is SQL null, not 0)
+        supplies => if (supplies.isEmpty) Map.empty[String, Long] else {
           val tot = base.groupBy(col(groupCol).as("_g"))
             .agg(count(lit(1)).as("n_docs"))
             .agg(sum(pow(col("n_docs"), alpha)).as("_tot"))

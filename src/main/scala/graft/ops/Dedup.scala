@@ -14,11 +14,10 @@ import org.apache.spark.sql.functions._
   *  - n-gram Jaccard: exact pairwise similarity via an inverted shingle
   *    index (explode + self-join on shingle, count-based Jaccard) — no
   *    O(n²) cross join.
-  *  - SimHash: 32-bit bit-majority signature; near-dups differ in few bits.
+  *  - SimHash: bit-majority signature; near-dups differ in few bits.
   *
-  * The minhash family uses md5 (bit-identical in the DuckDB oracle);
-  * simhash uses xxhash64 (fastest 64-bit hash available as a codegen'd
-  * built-in).
+  * The minhash and simhash families use md5 (bit-identical in the DuckDB
+  * oracle).
   */
 object Dedup {
 
@@ -428,18 +427,6 @@ object Dedup {
         when(col("_size") > 0,
           coalesce(col("_nh"), lit(0L)).cast("double") / col("_size"))
           .as("overlap_frac"))
-  }
-
-  /** 32-bit SimHash: per bit, majority vote over xxhash64(token) bits. */
-  def simhash32(text: Column): Column = {
-    val t = split(lower(trim(text)), "\\s+")
-    val hashes = transform(t, w => xxhash64(w))
-    val bits: Seq[Column] = (0 until 32).map { b =>
-      val mask = 1L << b
-      val ones = size(filter(hashes, h => h.bitwiseAND(lit(mask)) =!= 0L))
-      when(ones * 2 >= size(hashes), lit(mask)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
   }
 
   /** Hamming distance between two simhash values. */

@@ -922,18 +922,6 @@ object Similarity {
     math.max(2, math.ceil(
       math.max(0L, n).toDouble / math.max(1L, targetPerCell).toDouble).toInt)
 
-  /** [[pqRerankTopK]] with the shortlist [[autoShortlist]]-sized from the
-    * corpus cardinality. Pass `n` when the pipeline already knows it;
-    * n < 0 pays one count(). */
-  def pqRerankTopKAuto(df: DataFrame, idCol: String, vecCol: String,
-                       queries: DataFrame, qIdCol: String, qVecCol: String,
-                       book: Seq[Seq[Seq[Double]]], topK: Int,
-                       frac: Double = 0.2, n: Long = -1L): DataFrame = {
-    val nn = if (n >= 0) n else df.count()
-    pqRerankTopK(df, idCol, vecCol, queries, qIdCol, qVecCol, book,
-      autoShortlist(nn, topK, frac), topK)
-  }
-
   /** [[ivfTopKWith]] with the probe count [[autoProbe]]-sized from the
     * codebook (which is small — the count is metadata). */
   def ivfTopKAuto(cents: DataFrame, df: DataFrame, idCol: String, vecCol: String,

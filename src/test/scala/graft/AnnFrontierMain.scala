@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -10,8 +10,8 @@ import graft.ops.Similarity
   * PQ m×k, rerank shortlist) on the sf embeddings, score recall@k
   * against the exact top-k, and print the markdown frontier table a
   * 100 TB user sizes an index from (recorded in BASELINE.md §ANN
-  * frontier). Wall times are warm single-run local[16] — relative cost,
-  * not absolute.
+  * frontier). Wall times are warm single runs — relative cost, not
+  * absolute.
   *
   * Usage: sbt "Test/runMain graft.AnnFrontierMain" (SPARK_GRAFT_SF_DIR
   * overrides the corpus).
@@ -19,11 +19,7 @@ import graft.ops.Similarity
 object AnnFrontierMain {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevHarness.session()
 
     val k = 10
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")

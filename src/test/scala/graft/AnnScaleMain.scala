@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.{replay, time, timed}
 
 /** Dev harness: does the ANN/dedup family scale? Replays the sf0.1
   * embeddings table K× (vec_ids offset per copy, vectors identical) and
@@ -15,54 +16,36 @@ import org.apache.spark.sql.functions._
 object AnnScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
     import graft.ops.Similarity
 
     val base = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val n = base.count()
-    def replay(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        base.select((col("vec_id") + lit(i.toLong * n)).as("vec_id"), col("embedding")))
-        .reduce(_ unionAll _)
-
-    def time(what: String, df: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      println(f"SCALE $what: ${(System.nanoTime() - t0) / 1e9}%.2f s ($rows rows)")
-    }
 
     val book = Similarity.pqBookConst(64, 4, 8)
     for ((label, copies) <- Seq("1x" -> 1, s"${k}x" -> k)) {
-      val emb = replay(copies)
+      val emb = replay(base, "vec_id", copies, n)
       val queries = base.filter(col("vec_id") < 5)
       val cents = base.select(col("vec_id").as("_cid"),
           col("embedding").cast("array<double>").as("_cv"))
         .orderBy(col("_cid")).limit(8)
-      time(s"ivfPqTopK      $label",
+      time(s"ivfPqTopK      $label")(
         Similarity.ivfPqTopK(cents, emb, "vec_id", "embedding",
           queries, "vec_id", "embedding", book, nProbe = 2, topK = 5))
       // standing-index serving shape: build+save once (the amortized
       // cost), then search the STORED coded table — probe wall must ride
       // the query side, not the corpus size
       locally {
-        val dir = java.nio.file.Files.createTempDirectory(s"ivfpq$label").toString
-        val t0 = System.nanoTime()
-        graft.ops.CacheScope.withScope { scope =>
+        val dir = DevHarness.tempPath(s"ivfpq$label")
+        timed(s"ivfPq build+save $label")(graft.ops.CacheScope.withScope { scope =>
           Similarity.saveIvfPqIndex(Similarity.buildIvfPqIndex(
             emb, "vec_id", "embedding", cents, book, dim = 64, scope = scope), dir)
-        }
-        println(f"SCALE ivfPq build+save $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        })
         graft.ops.CacheScope.withScope { scope =>
           val idx = Similarity.loadIvfPqIndex(spark, dir, scope)
           idx.coded.count() // warm the standing cache, as a serving session would
-          time(s"ivfPqTopKWith  $label (standing probe)",
+          time(s"ivfPqTopKWith  $label (standing probe)")(
             Similarity.ivfPqTopKWith(idx, queries, "vec_id", "embedding",
               nProbe = 2, topK = 5))
         }
@@ -74,21 +57,18 @@ object AnnScaleMain {
         graft.ops.CacheScope.withScope { scope =>
           val idx = Similarity.loadIvfPqIndex(spark, dir, scope)
           idx.coded.count()
-          time(s"ivfPqTopKWith  $label (tombstoned probe)",
+          time(s"ivfPqTopKWith  $label (tombstoned probe)")(
             Similarity.ivfPqTopKWith(idx, queries, "vec_id", "embedding",
               nProbe = 2, topK = 5))
         }
         // …and the physical apply rides the compaction rewrite the store
         // was already paying for (no deletion-specific history pass)
-        val tc0 = System.nanoTime()
-        Similarity.compactIvfPqIndex(spark, dir)
-        println(f"SCALE ivfPq compact+apply $label: ${(System.nanoTime() - tc0) / 1e9}%.2f s")
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+        timed(s"ivfPq compact+apply $label")(Similarity.compactIvfPqIndex(spark, dir))
       }
-      time(s"semDedup       $label",
+      time(s"semDedup       $label")(
         Similarity.semDedup(cents, emb, "vec_id", "embedding", minSim = 0.95,
           maxPerCell = 512))
-      time(s"lshNearDup     $label",
+      time(s"lshNearDup     $label")(
         Similarity.lshNearDupPairs(emb, "vec_id", "embedding", dim = 64,
           nPlanes = Similarity.autoPlanes(n * copies, 64), minSim = 0.95,
           maxPerBucket = 256))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{CacheScope, Corpus}
@@ -28,11 +27,7 @@ object BpeBenchMain {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "40").toInt
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevHarness.session()
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -40,9 +35,7 @@ object BpeBenchMain {
     // corpus-size independence probe: the same docs replayed 4x — the
     // (word, freq) table is identical, so train rounds should cost the
     // same; only the initial collapse pays for the extra scan volume
-    val docs4x = (0 until 4).map(i =>
-      docs.select((col("doc_id") + lit(i.toLong * 1000000)).as("doc_id"),
-        col("text"))).reduce(_ unionAll _)
+    val docs4x = DevHarness.replay(docs, "doc_id", 4, 1000000L)
 
     def train(d: org.apache.spark.sql.DataFrame, label: String): Seq[(String, String, Long)] =
       CacheScope.withScope { scope =>

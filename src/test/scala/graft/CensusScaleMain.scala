@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.{replay, timed}
 
 /** Dev harness for the round-10 census/report operators: replay the
   * sf0.1 documents table K× (the TextScaleMain discipline — doc_ids
@@ -22,34 +23,15 @@ import org.apache.spark.sql.functions._
 object CensusScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 8
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select(col("doc_id"), col("text"), col("source"))
-    val n = base.count()
-    def replay(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        base.select((col("doc_id") + lit(i.toLong * n)).as("doc_id"),
-          col("text"), col("source")))
-        .reduce(_ unionAll _)
-
-    def time[T](what: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"SCALE $what: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
     var div1: Map[(String, Int), (Long, Long)] = Map.empty
     for ((label, copies) <- Seq("1x" -> 1, s"${k}x" -> k)) {
-      val docs = replay(copies)
-      val div = time(s"ngramDiversity      $label") {
+      val docs = replay(base, "doc_id", copies)
+      val div = timed(s"ngramDiversity      $label") {
         graft.ops.Corpus.ngramDiversity(docs, "source", "text")
           .collect().map(r => (r.getString(0), r.getInt(1)) ->
             (r.getLong(2), r.getLong(3))).toMap
@@ -62,7 +44,7 @@ object CensusScaleMain {
           s"$key: distincts must be replication-INVARIANT " +
             s"(got $dist vs ${div1(key)._2})")
       }
-      val divA = time(s"ngramDiversityApprox $label") {
+      val divA = timed(s"ngramDiversityApprox $label") {
         graft.ops.Corpus.ngramDiversityApprox(docs, "source", "text")
           .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(3)).toMap
       }
@@ -71,10 +53,10 @@ object CensusScaleMain {
         require(math.abs(est - exact) <= math.max(8.0, 0.25 * exact),
           s"$key: sketch $est vs exact $exact")
       }
-      time(s"piiCensus           $label") {
+      timed(s"piiCensus           $label") {
         graft.ops.Scrub.piiCensus(docs, "source", "text").collect()
       }
-      time(s"manifest            $label") {
+      timed(s"manifest            $label") {
         val sized = docs.select(col("doc_id"), col("text"),
           graft.ops.TextAnalysis.tokenCount(col("text")).as("_nt"))
         graft.ops.Shard.manifest(

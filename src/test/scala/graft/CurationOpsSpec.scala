@@ -407,6 +407,13 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(ids1 == ids2)
   }
 
+  test("temperatureSample on an empty corpus draws nothing instead of failing") {
+    val docs = Seq.empty[(Long, String)].toDF("doc_id", "grp")
+    val got = Corpus.temperatureSample(docs, "doc_id", "grp", 0.5, 20L)
+    assert(got.columns.toSeq == Seq("doc_id", "grp"))
+    assert(got.count() == 0L)
+  }
+
   test("temperatureSample (BudgetSelect form) replays the per-group window draw on a skewed corpus") {
     import org.apache.spark.sql.expressions.Window
     // one dominant group (90%), two tails — the shape the round-7 rewrite

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.{time, timed}
 
 /** Dev harness: do the curation operators scale? Replays the sf0.1
   * documents table K× (doc_ids offset per copy, content identical) and
@@ -23,38 +25,20 @@ import org.apache.spark.sql.functions._
 object CurationScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select(col("doc_id"), col("text"), col("lang"))
     val n = base.count()
-    def replay(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        base.select((col("doc_id") + lit(i.toLong * n)).as("doc_id"),
-          col("text"), col("lang")))
-        .reduce(_ unionAll _)
-
-    def time(what: String, df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"SCALE $what: $sec%.2f s ($rows rows)")
-      sec
-    }
+    def replay(copies: Int): DataFrame = DevHarness.replay(base, "doc_id", copies, n)
 
     val blockKey = Seq(col("lang"),
       element_at(split(lower(trim(col("text"))), "\\s+"), 1))
     for ((label, copies) <- Seq("1x" -> 1, s"${k}x" -> k)) {
       val docs = replay(copies)
-      time(s"boilerplate  $label",
+      time(s"boilerplate  $label")(
         graft.ops.Dedup.boilerplateRemove(docs, "doc_id", "text", 10, 2))
-      time(s"tempMix      $label",
+      time(s"tempMix      $label")(
         graft.ops.Corpus.temperatureMix(docs, "lang", 0.5, 1000L))
     }
     // round-7: temperatureSample's mega-group fix — ONE dominant group
@@ -88,7 +72,7 @@ object CurationScaleMain {
         when(col("doc_id") % 50 === 0, col("lang")).otherwise(lit("en")))
       val budget = n * copies / 2
       graft.ops.CacheScope.withScope { scope =>
-        time(s"tempSample budget $label",
+        time(s"tempSample budget $label")(
           graft.ops.Corpus.temperatureSample(docs, "doc_id", "lang", 0.5, budget,
             scope = scope))
       }
@@ -102,7 +86,7 @@ object CurationScaleMain {
         .filter(col("lang") === "en")
         .select(countDistinct(col("_pid"))).head().getLong(0)
       println(s"SCALE tempSample dominant-group range-partition spread $label: $pids pids")
-      time(s"tempSample window $label", windowedSample(docs, budget))
+      time(s"tempSample window $label")(windowedSample(docs, budget))
     }
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     // round-7: standing-index persistence — append vs rewrite at Kx
@@ -110,31 +94,26 @@ object CurationScaleMain {
     // on disk, does adding one 1x batch cost a batch (append) or the
     // whole history (extend + re-save)?
     locally {
-      val dir = java.nio.file.Files.createTempDirectory("ndx16").toString
-      def secs(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
+      val dir = DevHarness.tempPath("ndx16")
       graft.ops.CacheScope.withScope { scope =>
         val hist = replay(k)
         val idx = graft.ops.Dedup.buildNearDupIndex(hist, "doc_id", "text", scope = scope)
-        val tSave = secs(graft.ops.Dedup.saveNearDupIndex(idx, dir))
-        println(f"SCALE index save (build+write ${k}x history): $tSave%.2f s")
+        timed(s"index save (build+write ${k}x history)")(
+          graft.ops.Dedup.saveNearDupIndex(idx, dir))
         val batch = base.select((col("doc_id") + lit(k.toLong * n)).as("doc_id"),
           col("text"), col("lang"))
-        val tAppend = secs(graft.ops.CacheScope.withScope { s2 =>
-          graft.ops.Dedup.appendNearDupIndex(spark, dir, batch, "doc_id", "text", s2)
-        })
-        println(f"SCALE index append (1x batch onto ${k}x history): $tAppend%.2f s")
-        val tRewrite = secs(graft.ops.CacheScope.withScope { s2 =>
-          val ext = graft.ops.Dedup.extendNearDupIndex(
-            graft.ops.Dedup.loadNearDupIndex(spark, dir, s2),
-            batch, "doc_id", "text", s2)
-          graft.ops.Dedup.saveNearDupIndex(ext,
-            java.nio.file.Files.createTempDirectory("ndx16rw").toString)
-        })
-        println(f"SCALE index rewrite (extend + full re-save): $tRewrite%.2f s")
+        timed(s"index append (1x batch onto ${k}x history)")(
+          graft.ops.CacheScope.withScope { s2 =>
+            graft.ops.Dedup.appendNearDupIndex(spark, dir, batch, "doc_id", "text", s2)
+          })
+        timed("index rewrite (extend + full re-save)")(
+          graft.ops.CacheScope.withScope { s2 =>
+            val ext = graft.ops.Dedup.extendNearDupIndex(
+              graft.ops.Dedup.loadNearDupIndex(spark, dir, s2),
+              batch, "doc_id", "text", s2)
+            graft.ops.Dedup.saveNearDupIndex(ext, DevHarness.tempPath("ndx16rw"))
+          })
       }
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
     // quadratic-by-design: smaller replay, growth factor is the message —
     // and the round-8 maxBlockSize cap is the escape: replication grows
@@ -143,10 +122,10 @@ object CurationScaleMain {
     val fk = math.max(2, k / 4)
     for ((label, copies) <- Seq("1x" -> 1, s"${fk}x" -> fk)) {
       val docs = replay(copies)
-      time(s"fuzzyPairs   $label",
+      time(s"fuzzyPairs   $label")(
         graft.ops.Dedup.fuzzyDupPairs(docs, "doc_id", "text", blockKey, 20, 80))
       graft.ops.CacheScope.withScope { scope =>
-        time(s"fuzzyCapped  $label",
+        time(s"fuzzyCapped  $label")(
           graft.ops.Dedup.fuzzyDupPairs(docs, "doc_id", "text", blockKey, 20, 80,
             maxBlockSize = 25, scope = scope))
       }
@@ -165,19 +144,17 @@ object CurationScaleMain {
       val l = base.select(col("_id").as("id1"), col("_pfx").as("_p1"), col("_blk"))
       val r = base.select(col("_id").as("id2"), col("_pfx").as("_p2"), col("_blk"))
       val joined = l.join(r, Seq("_blk")).filter(col("id1") < col("id2"))
-      def timePairs(what: String, d: => DataFrame): Unit = {
-        d.count() // warm
-        val t0 = System.nanoTime(); val n = d.count()
-        println(f"SCALE $what: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n pairs)")
-      }
-      timePairs(s"lev banded   prefix=$prefix maxEdit=$maxEdit 4x",
-        joined.select(col("id1"), col("id2"),
-            levenshtein(col("_p1"), col("_p2"), maxEdit).as("edit_dist"))
-          .filter(col("edit_dist") >= 0))
-      timePairs(s"lev 2-arg    prefix=$prefix maxEdit=$maxEdit 4x",
-        joined.select(col("id1"), col("id2"),
-            levenshtein(col("_p1"), col("_p2")).as("edit_dist"))
-          .filter(col("edit_dist") <= maxEdit))
+      // each form runs once to warm, then once timed
+      val banded = joined.select(col("id1"), col("id2"),
+          levenshtein(col("_p1"), col("_p2"), maxEdit).as("edit_dist"))
+        .filter(col("edit_dist") >= 0)
+      banded.count()
+      time(s"lev banded   prefix=$prefix maxEdit=$maxEdit 4x")(banded)
+      val full = joined.select(col("id1"), col("id2"),
+          levenshtein(col("_p1"), col("_p2")).as("edit_dist"))
+        .filter(col("edit_dist") <= maxEdit)
+      full.count()
+      time(s"lev 2-arg    prefix=$prefix maxEdit=$maxEdit 4x")(full)
     }
     spark.stop()
   }

@@ -1,19 +1,22 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.DateNorm
+import graft.functions.{DateExprs, DateNorm}
 
 /** Unit tests for the reference-faithful date semantics
   * (cases derived from carrot-transform tools/date_helpers.py +
-  * tools/validation.py behavior, exercised via its test corpus). */
+  * tools/validation.py behavior, exercised via its test corpus). The
+  * normalise8601 cases run the shipped [[DateExprs.normalise8601]]. */
 class DateNormSpec extends AnyFunSuite {
+  import DateNormSpec.ComposableNormalise8601
   private lazy val spark = Golden.spark
   import spark.implicits._
 
   private def norm(ss: String*): Seq[String] =
-    ss.toDF("raw").select(DateNorm.normalise8601(col("raw")).as("n"))
+    ss.toDF("raw").select(DateExprs.normalise8601(col("raw")).as("n"))
       .collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
 
   private def strict(ss: String*): Seq[String] =
@@ -60,8 +63,8 @@ class DateNormSpec extends AnyFunSuite {
       "2020-01-02  11:12", "x 11:12", "11:12 2020-01-02", null)
     val df = corpus.toDF("raw")
     val both = df.select(
-      DateNorm.normalise8601(col("raw")).as("a"),
-      graft.functions.DateExprs.normalise8601(col("raw")).as("b"))
+      ComposableNormalise8601(col("raw")).as("a"),
+      DateExprs.normalise8601(col("raw")).as("b"))
     val rows = both.collect()
     rows.zip(corpus).foreach { case (r, in) =>
       val a = if (r.isNullAt(0)) null else r.getString(0)
@@ -77,5 +80,49 @@ class DateNormSpec extends AnyFunSuite {
     assert(strict("01/03/1985") == Seq("1985-03-01")) // DD/MM/YYYY
     assert(strict("1985-03-01 00:00:00", "2020-02-30", "", "nope") ==
       Seq(null, null, null, null))
+  }
+}
+
+object DateNormSpec {
+
+  /** Reference model of `normalise_to8601` as a composition of built-in
+    * Spark SQL functions (one `regexp_extract` per captured group), written
+    * straight from the reference's rules; the shipped expression must
+    * match it bit for bit. */
+  object ComposableNormalise8601 {
+    private val YearFirst = "^(\\d{4})[-/](\\d{2})[-/](\\d{2})"
+    private val DayFirst  = "^(\\d{2})[-/](\\d{2})[-/](\\d{4})"
+    private val TimeRe    = "^(\\d{2}):(\\d{2})(:(\\d{2})(\\.\\d{6})?)?"
+
+    private def zfill(c: Column, n: Int): Column =
+      lpad(c.cast("int").cast("string"), n, "0")
+
+    /** "YYYY-MM-DD HH:MM:SS" or null. */
+    def apply(raw: Column): Column = {
+      val toks   = split(raw, " ", -1)
+      val p0     = toks.getItem(0)
+      val yfYear = regexp_extract(p0, YearFirst, 1)
+      val yf     = yfYear =!= ""
+      val dfYear = regexp_extract(p0, DayFirst, 3)
+      val df     = dfYear =!= ""
+
+      val year  = when(yf, yfYear).when(df, dfYear)
+      val month = when(yf, regexp_extract(p0, YearFirst, 2)).when(df, regexp_extract(p0, DayFirst, 2))
+      val day   = when(yf, regexp_extract(p0, YearFirst, 3)).when(df, regexp_extract(p0, DayFirst, 1))
+
+      val datePart = concat(zfill(year, 4), lit("-"), zfill(month, 2), lit("-"), zfill(day, 2))
+
+      val t       = toks.getItem(1)
+      val hasTwo  = size(toks) === 2
+      val hh      = regexp_extract(t, TimeRe, 1)
+      val timeOk  = hasTwo && (hh =!= "")
+      val ss      = regexp_extract(t, TimeRe, 4)
+      val timePart = concat(
+        zfill(hh, 2), lit(":"),
+        zfill(regexp_extract(t, TimeRe, 2), 2), lit(":"),
+        zfill(when(ss === "", "0").otherwise(ss), 2))
+
+      when(yf || df, concat(datePart, lit(" "), when(timeOk, timePart).otherwise(lit("00:00:00"))))
+    }
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.{replay, time, timed}
 
 /** Dev harness for the round-10 ranked store evals: does the RANKED
   * probe ([[graft.ops.Dedup.nearDupTopKWith]] /
@@ -24,13 +25,7 @@ import org.apache.spark.sql.functions._
 object EvalScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
     import graft.ops.{CacheScope, Dedup, Similarity}
 
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
@@ -39,11 +34,6 @@ object EvalScaleMain {
       .orderBy(col("doc_id")).limit(500).cache()
     queries.count()
     val nd = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replayDocs(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        docs.filter(col("doc_id") % 2 === 0)
-          .select((col("doc_id") + lit(i.toLong * nd)).as("doc_id"), col("text")))
-        .reduce(_ unionAll _)
 
     val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -51,57 +41,50 @@ object EvalScaleMain {
       .orderBy(col("vec_id")).limit(500).cache()
     vq.count()
     val nv = emb.agg(max("vec_id")).head().getLong(0) + 1
-    def replayVecs(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        emb.filter(col("vec_id") % 2 === 0)
-          .select((col("vec_id") + lit(i.toLong * nv)).as("vec_id"), col("embedding")))
-        .reduce(_ unionAll _)
 
     for ((label, copies) <- Seq("1x" -> 1, s"${k}x" -> k)) {
       CacheScope.withScope { scope =>
-        val hist = replayDocs(copies)
-        var t0 = System.nanoTime()
-        val idx = Dedup.buildNearDupIndex(hist, "doc_id", "text",
-          k = 4, rowsPerBand = 2, n = 5, scope = scope)
-        idx.bandFrame.count()
-        println(f"SCALE nd build        $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        for (pass <- Seq("cold", "warm")) {
-          t0 = System.nanoTime()
-          val n = Dedup.nearDupTopKWith(queries, idx, "doc_id", "text",
-            minJaccard = 0.2, topK = 5, scope = scope).count()
-          println(f"SCALE nd rankedprobe $pass $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+        val hist = replay(docs.filter(col("doc_id") % 2 === 0), "doc_id", copies, nd)
+        val idx = timed(s"nd build        $label") {
+          val idx = Dedup.buildNearDupIndex(hist, "doc_id", "text",
+            k = 4, rowsPerBand = 2, n = 5, scope = scope)
+          idx.bandFrame.count()
+          idx
         }
-        t0 = System.nanoTime()
-        val approx = Dedup.nearDupTopKWith(queries, idx, "doc_id", "text",
-          minJaccard = 0.2, topK = 5, scope = scope)
-        val exact = Dedup.exactJaccardTopK(hist, queries, "doc_id", "text",
-          n = 5, minJaccard = 0.2, topK = 5, scope = scope)
-        val ev = Similarity.rankedEval(approx, exact, "query_id", "doc_id",
-          "jaccard", ascending = false, 5).count()
-        println(f"SCALE nd exact+eval   $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($ev queries)")
+        for (pass <- Seq("cold", "warm"))
+          time(s"nd rankedprobe $pass $label")(
+            Dedup.nearDupTopKWith(queries, idx, "doc_id", "text",
+              minJaccard = 0.2, topK = 5, scope = scope))
+        time(s"nd exact+eval   $label") {
+          val approx = Dedup.nearDupTopKWith(queries, idx, "doc_id", "text",
+            minJaccard = 0.2, topK = 5, scope = scope)
+          val exact = Dedup.exactJaccardTopK(hist, queries, "doc_id", "text",
+            n = 5, minJaccard = 0.2, topK = 5, scope = scope)
+          Similarity.rankedEval(approx, exact, "query_id", "doc_id",
+            "jaccard", ascending = false, 5)
+        }
       }
 
       CacheScope.withScope { scope =>
-        val hist = replayVecs(copies)
-        var t0 = System.nanoTime()
-        val idx = Similarity.buildEmbedIndex(hist, "vec_id", "embedding",
-          dim = 64, nPlanes = 4, scope = scope)
-        idx.bucketed.count()
-        println(f"SCALE ed build        $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        for (pass <- Seq("cold", "warm")) {
-          t0 = System.nanoTime()
-          val n = Similarity.embedNearDupTopKWith(vq, idx, "vec_id", "embedding",
-            minSim = 0.3, topK = 5).count()
-          println(f"SCALE ed rankedprobe $pass $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+        val hist = replay(emb.filter(col("vec_id") % 2 === 0), "vec_id", copies, nv)
+        val idx = timed(s"ed build        $label") {
+          val idx = Similarity.buildEmbedIndex(hist, "vec_id", "embedding",
+            dim = 64, nPlanes = 4, scope = scope)
+          idx.bucketed.count()
+          idx
         }
-        t0 = System.nanoTime()
-        val approx = Similarity.embedNearDupTopKWith(vq, idx, "vec_id", "embedding",
-          minSim = 0.3, topK = 5)
-        val exact = Similarity.exactTopK(hist, "vec_id", "embedding",
-          vq, "vec_id", "embedding", k = 5)
-        val ev = Similarity.rankedEval(approx, exact, "query_id", "vec_id",
-          "sim", ascending = false, 5).count()
-        println(f"SCALE ed exact+eval   $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($ev queries)")
+        for (pass <- Seq("cold", "warm"))
+          time(s"ed rankedprobe $pass $label")(
+            Similarity.embedNearDupTopKWith(vq, idx, "vec_id", "embedding",
+              minSim = 0.3, topK = 5))
+        time(s"ed exact+eval   $label") {
+          val approx = Similarity.embedNearDupTopKWith(vq, idx, "vec_id", "embedding",
+            minSim = 0.3, topK = 5)
+          val exact = Similarity.exactTopK(hist, "vec_id", "embedding",
+            vq, "vec_id", "embedding", k = 5)
+          Similarity.rankedEval(approx, exact, "query_id", "vec_id",
+            "sim", ascending = false, 5)
+        }
       }
     }
     spark.stop()

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.timed
 
 /** Dev harness: does the standing FRAME store ([[graft.ops.Multimodal
   * .FrameIndex]]) keep its probe flat — and its ANSWERS invariant — as
@@ -22,23 +24,14 @@ import org.apache.spark.sql.functions._
 object FrameScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 8
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
     import spark.implicits._
     import graft.ops.{CacheScope, Multimodal}
 
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select(col("doc_id"), col("text"))
     val nd = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replay(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        docs.select((col("doc_id") + lit(i.toLong * nd)).as("doc_id"),
-          col("text"))).reduce(_ unionAll _)
+    def replay(copies: Int): DataFrame = DevHarness.replay(docs, "doc_id", copies, nd)
     // fixed probe batch: first-byte mutants of a 2k slice — frame 0
     // moves at most 1 bit, every later frame matches at distance 0
     val batch = Multimodal.packBinary(
@@ -50,19 +43,20 @@ object FrameScaleMain {
     var base: Seq[(Long, Long, Long, Int)] = null
     for ((label, copies) <- Seq("1x" -> 1, s"${k}x" -> k)) {
       CacheScope.withScope { scope =>
-        var t0 = System.nanoTime()
-        val idx = Multimodal.buildFrameIndex(
-          Multimodal.packBinary(replay(copies), "doc_id", "text"),
-          "doc_id", "payload", frameBytes = 128, stride = 128,
-          maxFrames = 4, nBands = 4, scope = scope)
-        idx.banded.count()
-        val buildS = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val got = Multimodal.incrementalFrameDupsWith(batch, idx,
-            "doc_id", "payload", maxDist = 2, minMatchedFrames = 2)
-          .as[(Long, Long, Long, Int)].collect().sortBy(_._1).toSeq
-        val probeS = (System.nanoTime() - t0) / 1e9
-        println(f"$label: build $buildS%.2f s, probe ${got.size} verdicts in $probeS%.2f s")
+        val idx = timed(s"$label build") {
+          val idx = Multimodal.buildFrameIndex(
+            Multimodal.packBinary(replay(copies), "doc_id", "text"),
+            "doc_id", "payload", frameBytes = 128, stride = 128,
+            maxFrames = 4, nBands = 4, scope = scope)
+          idx.banded.count()
+          idx
+        }
+        val got = timed(s"$label probe") {
+          Multimodal.incrementalFrameDupsWith(batch, idx,
+              "doc_id", "payload", maxDist = 2, minMatchedFrames = 2)
+            .as[(Long, Long, Long, Int)].collect().sortBy(_._1).toSeq
+        }
+        println(s"$label: ${got.size} verdicts")
         if (base == null) base = got
         else {
           require(got == base,

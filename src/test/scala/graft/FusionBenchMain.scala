@@ -1,24 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness: quantify FusePercentiles on a percentile-heavy grouped
-  * aggregate (5 quantiles per group over sf lineitem). Runs the FUSED
-  * session FIRST so JVM warm-up bias works against the rule's claim.
+  * aggregate (5 quantiles per group over 8 M generated rows). One session
+  * runs the query with the rule and then with it excluded
+  * (`spark.sql.optimizer.excludedRules`); the FUSED run goes FIRST so JVM
+  * warm-up bias works against the rule's claim.
   *
   * Usage: sbt "Test/runMain graft.FusionBenchMain"
   */
 object FusionBenchMain {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = DevHarness.session()
 
     def run(fused: Boolean): Double = {
-      val b = SparkSession.builder().master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-      val spark = (if (fused) b.withExtensions(new GraftExtensions) else b).getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      if (fused) spark.conf.unset("spark.sql.optimizer.excludedRules")
+      else spark.conf.set("spark.sql.optimizer.excludedRules", graft.plans.FusePercentiles.ruleName)
       val src = spark.range(0, 8L * 1000 * 1000).select(
         (col("id") % 7).as("g"), (col("id") * 2654435761L % 100000).as("v"))
       val qs = Seq(0.1, 0.25, 0.5, 0.75, 0.9)
@@ -32,14 +30,12 @@ object FusionBenchMain {
       val times = (0 until 3).map { _ =>
         val t0 = System.nanoTime(); once(); (System.nanoTime() - t0) / 1e9
       }
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
       times.min
     }
 
     val fusedSec = run(fused = true)
     val unfusedSec = run(fused = false)
     println(f"fused=$fusedSec%.3f s unfused=$unfusedSec%.3f s speedup=${unfusedSec / fusedSec}%.2f x")
+    spark.stop()
   }
 }

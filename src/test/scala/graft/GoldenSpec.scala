@@ -14,18 +14,9 @@ import graft.etl._
   * tables and un-mapping assigned person IDs back to source IDs via each
   * side's person_ids table. */
 object Golden {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .appName("graft-golden")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // session-construction home for the nanos conf (Dispatch no longer
-    // sets it as a reader side effect — round-4 advice); the shared test
-    // session reads TIMESTAMP(NANOS) parquet in DispatchSpec
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  // the shared test session; its nanosAsLong lets DispatchSpec read
+  // TIMESTAMP(NANOS) parquet
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   val RefRoot   = "/root/reference"
   // the bundled copies production loads by default (CarrotCli, AtPath)

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.{tempPath, timed}
 
 /** Dev harness: does the composed ingest front door stay flat as the
   * STANDING stores grow? Replays the sf0.1 even-half documents K× (ids
@@ -19,13 +20,7 @@ import org.apache.spark.sql.functions._
 object IngestScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
     import spark.implicits._
     import graft.ops.{CacheScope, Dedup, Pipeline, TextAnalysis}
     import graft.streaming.EventStream
@@ -35,11 +30,6 @@ object IngestScaleMain {
     val even = docs.filter(col("doc_id") % 2 === 0)
     val batch = docs.filter(col("doc_id") % 2 === 1)
     val nd = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-    def replay(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        even.select((col("doc_id") + lit(i.toLong * nd)).as("doc_id"),
-          col("text"))).reduce(_ unionAll _)
 
     // the streaming probe's microbatches: three fixed 2k-doc slices
     val stream = (0 until 3).map(b =>
@@ -47,49 +37,39 @@ object IngestScaleMain {
         .limit(2000).as[(Long, String)].collect().toSeq)
 
     for ((label, copies) <- Seq("1x" -> 1, s"${k}x" -> k)) {
-      val hist = replay(copies)
-      val snapDir = tmp(s"ing-snap-$label"); val idxDir = tmp(s"ing-idx-$label")
-      Seq(snapDir, idxDir).foreach(p =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
-      var t0 = System.nanoTime()
-      CacheScope.withScope { scope =>
+      val hist = DevHarness.replay(even, "doc_id", copies, nd)
+      val snapDir = tempPath(s"ing-snap-$label"); val idxDir = tempPath(s"ing-idx-$label")
+      timed(s"found stores   $label")(CacheScope.withScope { scope =>
         hist.select(col("doc_id"),
             TextAnalysis.fingerprint(col("text")).as("fp"))
           .write.parquet(snapDir)
         Dedup.saveNearDupIndex(Dedup.buildNearDupIndex(hist, "doc_id", "text",
           k = 4, rowsPerBand = 2, n = 5, scope = scope), idxDir)
-      }
-      println(f"SCALE found stores   $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      })
 
       CacheScope.withScope { scope =>
         val idx = Dedup.loadNearDupIndex(spark, idxDir, scope)
         val snap = Dedup.snapshotLive(spark, snapDir).select(col("fp"))
-        for (pass <- Seq("cold", "warm")) {
-          t0 = System.nanoTime()
-          val n = Pipeline.ingestGate(batch, "doc_id", "text", snap, idx,
-            minJaccard = 0.2, scope = scope).count()
-          println(f"SCALE ingestGate $pass $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n verdicts)")
-        }
+        for (pass <- Seq("cold", "warm"))
+          DevHarness.time(s"ingestGate $pass $label")(
+            Pipeline.ingestGate(batch, "doc_id", "text", snap, idx,
+              minJaccard = 0.2, scope = scope))
       }
 
       // streaming twin: per-microbatch wall against the same standing index
       CacheScope.withScope { scope =>
-        val vDir = tmp(s"ing-v-$label"); val ck = tmp(s"ing-ck-$label")
+        val vDir = tempPath(s"ing-v-$label"); val ck = tempPath(s"ing-ck-$label")
         implicit val sq = spark.sqlContext
         val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
         val q = EventStream.nearDupGateSink(mem.toDF().toDF("doc_id", "text"),
           "doc_id", "text", idxDir, vDir, ck, minJaccard = 0.2, scope = scope)
         stream.zipWithIndex.foreach { case (rows, b) =>
-          t0 = System.nanoTime()
-          mem.addData(rows: _*); q.processAllAvailable()
-          println(f"SCALE gateSink b$b     $label: ${(System.nanoTime() - t0) / 1e9}%.2f s (${rows.size} docs)")
+          timed(s"gateSink b$b     $label (${rows.size} docs)") {
+            mem.addData(rows: _*); q.processAllAvailable()
+          }
         }
         q.stop()
-        Seq(vDir, ck).foreach(p =>
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
       }
-      Seq(snapDir, idxDir).foreach(p =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
     }
     spark.stop()
   }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.time
 
 /** Dev harness: do the standing-ledger reads stay flat as history grows?
   * Builds histogram- and sample-ledgers over K batches (each a full
@@ -20,13 +22,7 @@ import org.apache.spark.sql.functions._
 object LedgerScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
     import graft.ops.{HistLedger, SampleLedger}
 
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
@@ -38,49 +34,41 @@ object LedgerScaleMain {
       docs.select((col("doc_id") + lit(i.toLong * nd)).as("doc_id"),
         col("lang"), col("source"), col("n"))
 
-    def time(what: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = body
-      println(f"SCALE $what: ${(System.nanoTime() - t0) / 1e9}%.2f s ($rows rows)")
-    }
-
-    val hist1 = java.nio.file.Files.createTempDirectory("histscale1").toString
-    val histK = java.nio.file.Files.createTempDirectory("histscaleK").toString
+    val hist1 = DevHarness.tempPath("histscale1")
+    val histK = DevHarness.tempPath("histscaleK")
     HistLedger.append(spark, hist1, batch(0), "lang", "n", 0L, 0.0, 200.0, 20)
     (0 until k).foreach(i =>
       HistLedger.append(spark, histK, batch(i), "lang", "n", i.toLong, 0.0, 200.0, 20))
 
     val probe = batch(k) // the arriving batch, identical cost both sides
     time(s"drift probe    1x history")(
-      HistLedger.drift(spark, hist1, probe, "lang", "n").count())
+      HistLedger.drift(spark, hist1, probe, "lang", "n"))
     time(s"drift probe    ${k}x history")(
-      HistLedger.drift(spark, histK, probe, "lang", "n").count())
-    time(s"naive rescan   ${k}x history")({
+      HistLedger.drift(spark, histK, probe, "lang", "n"))
+    time(s"naive rescan   ${k}x history") {
       // what the drift probe REPLACES: re-histogram the full history
       val full = (0 until k).map(batch).reduce(_ unionAll _)
       HistLedger.tvDistance(
         HistLedger.sketch(full, "lang", "n", 0.0, 200.0, 20),
-        HistLedger.sketch(probe, "lang", "n", 0.0, 200.0, 20)).count()
-    })
+        HistLedger.sketch(probe, "lang", "n", 0.0, 200.0, 20))
+    }
     time(s"quantile read  ${k}x history")(
-      HistLedger.quantiles(spark, histK, Seq(0.5, 0.9, 0.99)).count())
+      HistLedger.quantiles(spark, histK, Seq(0.5, 0.9, 0.99)))
 
-    val samp1 = java.nio.file.Files.createTempDirectory("sampscale1").toString
-    val sampK = java.nio.file.Files.createTempDirectory("sampscaleK").toString
+    val samp1 = DevHarness.tempPath("sampscale1")
+    val sampK = DevHarness.tempPath("sampscaleK")
     SampleLedger.append(spark, samp1, batch(0), "lang", "doc_id", "source", 0L, k = 20)
     (0 until k).foreach(i =>
       SampleLedger.append(spark, sampK, batch(i), "lang", "doc_id", "source",
         i.toLong, k = 20))
     time(s"sample read    1x history")(
-      SampleLedger.merged(spark, samp1).count())
+      SampleLedger.merged(spark, samp1))
     time(s"sample read    ${k}x dirs")(
-      SampleLedger.merged(spark, sampK).count())
+      SampleLedger.merged(spark, sampK))
     SampleLedger.compact(spark, sampK, upTo = (k - 2).toLong)
     time(s"sample read    ${k}x compacted")(
-      SampleLedger.merged(spark, sampK).count())
+      SampleLedger.merged(spark, sampK))
 
-    Seq(hist1, histK, samp1, sampK).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
     spark.stop()
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.timed
 
 /** Dev harness: does the perceptual-hash standing store keep its probe
   * flat — and its ANSWERS invariant — as the store replicates? Replays
@@ -22,23 +24,14 @@ import org.apache.spark.sql.functions._
 object PHashScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 8
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
     import spark.implicits._
     import graft.ops.{CacheScope, Multimodal}
 
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select(col("doc_id"), col("text"))
     val nd = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replay(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        docs.select((col("doc_id") + lit(i.toLong * nd)).as("doc_id"),
-          col("text"))).reduce(_ unionAll _)
+    def replay(copies: Int): DataFrame = DevHarness.replay(docs, "doc_id", copies, nd)
     // fixed probe batch: first-byte mutants of a 2k slice of the 1× corpus
     val batch = Multimodal.packBinary(
       docs.filter(col("doc_id") % 7 === 1).limit(2000)
@@ -49,18 +42,19 @@ object PHashScaleMain {
     var base: Seq[(Long, Long, Int)] = null
     for ((label, copies) <- Seq("1x" -> 1, s"${k}x" -> k)) {
       CacheScope.withScope { scope =>
-        var t0 = System.nanoTime()
-        val idx = Multimodal.buildPHashIndex(
-          Multimodal.packBinary(replay(copies), "doc_id", "text"),
-          "doc_id", "payload", nBands = 4, scope = scope)
-        idx.banded.count()
-        val buildS = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val got = Multimodal.incrementalPerceptualDupsWith(batch, idx,
-            "doc_id", "payload", maxDist = 6, multiProbe = true)
-          .as[(Long, Long, Int)].collect().sortBy(_._1).toSeq
-        val probeS = (System.nanoTime() - t0) / 1e9
-        println(f"$label: build $buildS%.2f s, multiprobe ${got.size} verdicts in $probeS%.2f s")
+        val idx = timed(s"$label build") {
+          val idx = Multimodal.buildPHashIndex(
+            Multimodal.packBinary(replay(copies), "doc_id", "text"),
+            "doc_id", "payload", nBands = 4, scope = scope)
+          idx.banded.count()
+          idx
+        }
+        val got = timed(s"$label multiprobe") {
+          Multimodal.incrementalPerceptualDupsWith(batch, idx,
+              "doc_id", "payload", maxDist = 6, multiProbe = true)
+            .as[(Long, Long, Int)].collect().sortBy(_._1).toSeq
+        }
+        println(s"$label: ${got.size} verdicts")
         if (base == null) base = got
         else {
           // replication invariance: same best matches, same distances —

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.time
 
 /** Dev harness: do the round-8 operators scale? Replays the sf0.1
   * documents table K× (doc_ids offset per copy) and times each op at 1×
@@ -24,48 +25,28 @@ import org.apache.spark.sql.functions._
 object PackScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select(col("doc_id"), col("text"), col("source"))
-    val n = base.count()
-    def replay(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        base.select((col("doc_id") + lit(i.toLong * n)).as("doc_id"),
-          col("text"), col("source")))
-        .reduce(_ unionAll _)
-
-    def time(what: String, df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"SCALE $what: $sec%.2f s ($rows rows)")
-      sec
-    }
 
     for ((label, copies) <- Seq("1x" -> 1, s"${k}x" -> k)) {
-      val docs = replay(copies)
-      time(s"seqPack      $label",
+      val docs = DevHarness.replay(base, "doc_id", copies)
+      time(s"seqPack      $label")(
         graft.ops.TextAnalysis.sequencePack(docs, "doc_id", "text", 512))
-      time(s"epochPack    $label",
+      time(s"epochPack    $label")(
         graft.ops.TextAnalysis.epochShuffledPack(docs, "doc_id", "text", 512, 2))
-      time(s"seqAssemble  $label",
+      time(s"seqAssemble  $label")(
         graft.ops.TextAnalysis.sequenceAssemble(docs, "doc_id", "text", 512))
-      time(s"shardAssign  $label", {
+      time(s"shardAssign  $label") {
         val sized = docs.select(col("doc_id"),
           graft.ops.TextAnalysis.tokenCount(col("text")).as("n_tokens"))
         graft.ops.Shard.balancedAssign(sized, "doc_id", "n_tokens", 64)
-      })
-      time(s"charEntropy  $label",
+      }
+      time(s"charEntropy  $label")(
         docs.select(graft.functions.EntropyExprs.charEntropy(col("text")).as("e"))
           .filter(col("e") > 0))
-      time(s"precedence   $label",
+      time(s"precedence   $label")(
         graft.ops.Dedup.chunkPrecedenceDedup(
           docs.withColumn("prio", substring(col("source"), 4, 10).cast("int") % 3),
           "doc_id", "text", "prio", 10))

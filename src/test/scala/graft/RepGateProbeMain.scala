@@ -1,32 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.timed
 
 /** Dev probe: time the repetition gate's FULL evaluation (parquet write)
   * at sf0.01 under both gate-query instantiations, and print the final
   * plan so projection-collapse regressions are visible. */
 object RepGateProbeMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevHarness.session()
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    def run(label: String, repNs: Seq[(Int, Double)]): Unit = {
-      val t0 = System.nanoTime()
-      graft.ops.TextAnalysis.gopherRepetitionGate(docs, "doc_id", "text",
-          repNs = repNs)
-        .write.mode("overwrite").parquet("/tmp/repgate_probe")
-      println(f"PROBE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    val out = DevHarness.tempPath("repgate_probe")
+    def run(label: String, repNs: Seq[(Int, Double)]): Unit = timed(s"repGate write $label")(
+      graft.ops.TextAnalysis.gopherRepetitionGate(docs, "doc_id", "text", repNs = repNs)
+        .write.mode("overwrite").parquet(out))
     run("lite(3,5)", Seq(3 -> 0.15, 5 -> 0.15))
-    val t1 = System.nanoTime()
-    val n = graft.ops.TextAnalysis.gopherRepetitionGate(docs, "doc_id", "text",
-        repNs = Seq(3 -> 0.15, 5 -> 0.15))
-      .filter(col("rep_ok") === 1).select("doc_id").count()
-    println(f"PROBE filtered-count: ${(System.nanoTime() - t1) / 1e9}%.2f s ($n rows)")
+    DevHarness.time("repGate filtered-count")(
+      graft.ops.TextAnalysis.gopherRepetitionGate(docs, "doc_id", "text",
+          repNs = Seq(3 -> 0.15, 5 -> 0.15))
+        .filter(col("rep_ok") === 1).select("doc_id"))
     run("full(5..10)", Seq(5 -> 0.15, 6 -> 0.14, 7 -> 0.13,
       8 -> 0.12, 9 -> 0.11, 10 -> 0.10))
     graft.ops.TextAnalysis.gopherRepetitionGate(docs, "doc_id", "text")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev harness: the round-13 temporal family's scale probe. Scene
@@ -22,13 +22,7 @@ import org.apache.spark.sql.functions._
 object SceneScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 8
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
     import graft.ops.Multimodal
 
     // the q204 corpus shape: a repeated opening block so scenes have
@@ -38,31 +32,24 @@ object SceneScaleMain {
         concat(expr("substring(text, 1, 128)"), expr("substring(text, 1, 128)"),
           expr("substring(text, 1, 128)"), expr("substring(text, 129)")).as("text"))
     val nd = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replay(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        docs.select((col("doc_id") + lit(i.toLong * nd)).as("doc_id"),
-          col("text"))).reduce(_ unionAll _)
+    def replay(copies: Int): DataFrame = DevHarness.replay(docs, "doc_id", copies, nd)
     def segs(copies: Int): DataFrame =
       Multimodal.sceneSegments(
         Multimodal.packBinary(replay(copies), "doc_id", "text"),
         "doc_id", "payload", frameBytes = 128, stride = 128,
         maxFrames = 6, cutThreshold = 10)
 
-    var t0 = System.nanoTime()
     val base = segs(1).cache()
-    val nBase = base.count()
-    println(f"1x: $nBase scene rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val nBase = DevHarness.timed("1x segment")(base.count())
+    println(s"1x: $nBase scene rows")
 
-    t0 = System.nanoTime()
-    val kx = segs(k)
     // equivariance: fold replica ids back to originals — every base row
     // must appear exactly K times, and nothing else may exist
-    val folded = kx.withColumn("doc_id", col("doc_id") % nd)
+    val folded = segs(k).withColumn("doc_id", col("doc_id") % nd)
       .groupBy("doc_id", "scene_idx", "start_frame", "end_frame",
         "n_frames", "keyframe_sig")
       .count().cache()
-    val nFolded = folded.count()
-    println(f"${k}x: segmented in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val nFolded = DevHarness.timed(s"${k}x segment + fold")(folded.count())
     require(nFolded == nBase,
       s"folded distinct rows $nFolded != 1x rows $nBase")
     require(folded.filter(col("count") =!= k).count() == 0,

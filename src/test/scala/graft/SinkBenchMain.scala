@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.timed
 
 /** Dev harness: time TsvSink.writeDir vs writeSingleFile on the same
   * wide synthetic frame, isolated from the ETL engine — pins down
@@ -12,11 +13,7 @@ import org.apache.spark.sql.functions._
 object SinkBenchMain {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 3000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevHarness.session()
     // ~20 mostly-empty string columns, like an OMOP measurement row
     val df = spark.range(n).select(
       (col("id") + 1).cast("string").as("measurement_id") +:
@@ -29,12 +26,9 @@ object SinkBenchMain {
       .persist()
     println(s"rows: ${df.count()}")
     for (i <- 0 until 2) {
-      var t0 = System.nanoTime()
-      graft.etl.TsvSink.writeDir(df, s"/tmp/sinkbench_dir")
-      println(f"run$i writeDir        ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      t0 = System.nanoTime()
-      graft.etl.TsvSink.writeSingleFile(df, s"/tmp/sinkbench_single.tsv")
-      println(f"run$i writeSingleFile ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      timed(s"run$i writeDir")(graft.etl.TsvSink.writeDir(df, DevHarness.tempPath("sink_dir")))
+      timed(s"run$i writeSingleFile")(
+        graft.etl.TsvSink.writeSingleFile(df, DevHarness.tempPath("sink_single.tsv")))
     }
     spark.stop()
   }

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.DevHarness.timed
 import graft.ops.{CacheScope, Cluster}
 
 /** Scale evidence for the two connected-components engine paths (q45
@@ -33,20 +33,8 @@ import graft.ops.{CacheScope, Cluster}
 object StarScaleMain {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 50000
-    val spark = SparkSession.builder().master("local[16]")
-      .appName("star-scale")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevHarness.session()
     import spark.implicits._
-
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label%-42s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
 
     val nodes = (0L until n.toLong).toDF("id").cache()
     nodes.count()
@@ -57,14 +45,14 @@ object StarScaleMain {
     chainEdges.count()
     println(s"== chains: $n nodes, diameter 64 ==")
     val lpA = CacheScope.withScope { scope =>
-      time("label propagation (needs 64+ rounds)") {
+      timed("label propagation (needs 64+ rounds)") {
         Cluster.connectedComponents(nodes, "id", chainEdges, "a", "b",
           maxIter = 70, scope = scope)
           .agg(count_distinct(col("component"))).head().getLong(0)
       }
     }
     val stA = CacheScope.withScope { scope =>
-      time("star alternation (~log rounds)") {
+      timed("star alternation (~log rounds)") {
         Cluster.connectedComponentsStar(nodes, "id", chainEdges, "a", "b",
           scope = scope)
           .agg(count_distinct(col("component"))).head().getLong(0)
@@ -89,14 +77,14 @@ object StarScaleMain {
     hubEdges.count()
     println(s"== megahub: $n nodes, one hub, diameter 2 ==")
     val lpB = CacheScope.withScope { scope =>
-      time("label propagation") {
+      timed("label propagation") {
         Cluster.connectedComponents(nodes, "id", hubEdges, "a", "b",
           scope = scope)
           .agg(count_distinct(col("component"))).head().getLong(0)
       }
     }
     val stB = CacheScope.withScope { scope =>
-      time("star alternation") {
+      timed("star alternation") {
         Cluster.connectedComponentsStar(nodes, "id", hubEdges, "a", "b",
           scope = scope)
           .agg(count_distinct(col("component"))).head().getLong(0)

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.DevHarness.time
 
 /** Dev harness: do the round-6 text operators scale linearly? Replays the
   * sf0.1 documents table K× (doc_ids offset per copy, content identical)
@@ -17,47 +18,27 @@ import org.apache.spark.sql.functions._
 object TextScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 8
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = DevHarness.session()
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select(col("doc_id"), col("text"), col("lang"))
-    val n = base.count()
-    def replay(copies: Int): DataFrame =
-      (0 until copies).map(i =>
-        base.select((col("doc_id") + lit(i.toLong * n)).as("doc_id"),
-          col("text"), col("lang")))
-        .reduce(_ unionAll _)
-
-    def time(what: String, df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"SCALE $what: $sec%.2f s ($rows rows)")
-      sec
-    }
 
     for ((label, copies) <- Seq("1x" -> 1, s"${k}x" -> k)) {
-      val docs = replay(copies)
-      val a = time(s"chunkDedup   $label", graft.ops.Dedup.chunkDedup(docs, "doc_id", "text", 10))
-      val b = time(s"dsirWeights  $label", graft.ops.Corpus.dsirWeights(docs, "doc_id", "text", col("lang") === "en"))
-      val c = time(s"bigramLm     $label", graft.ops.Corpus.bigramLmScore(docs, "doc_id", "text"))
+      val docs = DevHarness.replay(base, "doc_id", copies)
+      val a = time(s"chunkDedup   $label")(graft.ops.Dedup.chunkDedup(docs, "doc_id", "text", 10))
+      val b = time(s"dsirWeights  $label")(graft.ops.Corpus.dsirWeights(docs, "doc_id", "text", col("lang") === "en"))
+      val c = time(s"bigramLm     $label")(graft.ops.Corpus.bigramLmScore(docs, "doc_id", "text"))
       // round-9: the repetition gate is row-local (the zero-shuffle bound)
       // and the normalized dedup is ONE groupBy on 16-byte keys whose
       // distinct-key table is replication-invariant — both should track
       // the corpus linearly at worst. The gate is FORCED through an
       // aggregate over its feature columns: a bare count() would let
       // column pruning skip the projection entirely and time nothing
-      val d = time(s"repetitionGate $label",
+      val d = time(s"repetitionGate $label")(
         graft.ops.TextAnalysis.gopherRepetitionGate(docs, "doc_id", "text")
           .agg(sum(col("rep_ok")), sum(col("top2_char_frac")),
             sum(col("rep5_char_frac")), sum(col("rep10_char_frac"))))
-      val e = time(s"normDedup    $label",
+      val e = time(s"normDedup    $label")(
         docs.select(md5(graft.ops.TextAnalysis.normalizeForDedup(col("text"))).as("fp"))
           .groupBy(col("fp")).agg(count(lit(1)).as("n")))
       println(f"SCALE total $label: ${a + b + c + d + e}%.2f s")
