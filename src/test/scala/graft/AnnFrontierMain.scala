@@ -18,7 +18,7 @@ import graft.ops.Similarity
   */
 object AnnFrontierMain {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val dir = DevHarness.sfDir("0.01")
     val spark = DevHarness.session()
 
     val k = 10

@@ -17,9 +17,10 @@ object AnnScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
     val spark = DevHarness.session()
+    val sfDir = DevHarness.sfDir("0.1")
     import graft.ops.Similarity
 
-    val base = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val n = base.count()
 

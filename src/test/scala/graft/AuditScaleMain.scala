@@ -18,11 +18,12 @@ object AuditScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
     val spark = DevHarness.session()
+    val sfDir = DevHarness.sfDir("0.1")
     import graft.ops.{Corpus, Dedup, Similarity, TextAnalysis}
 
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"), col("source"))
-    val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val ne = emb.count()
 

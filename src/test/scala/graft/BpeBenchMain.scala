@@ -25,7 +25,7 @@ import graft.ops.{CacheScope, Corpus}
   */
 object BpeBenchMain {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val dir = DevHarness.sfDir("0.1")
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "40").toInt
     val spark = DevHarness.session()
 

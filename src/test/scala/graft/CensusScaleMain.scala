@@ -24,8 +24,9 @@ object CensusScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 8
     val spark = DevHarness.session()
+    val sfDir = DevHarness.sfDir("0.1")
 
-    val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"), col("source"))
 
     var div1: Map[(String, Int), (Long, Long)] = Map.empty

@@ -21,6 +21,11 @@ object DevHarness {
     spark
   }
 
+  /** The test-data directory: `SPARK_GRAFT_SF_DIR` when set (as Bench
+    * reads it), else scale factor `defaultSf` (e.g. "0.1"). */
+  def sfDir(defaultSf: String): String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", s"/root/testdata/sf$defaultSf")
+
   /** Counts `df`, prints `SCALE label: secs s (rows rows)`, returns secs. */
   def time(label: String)(df: => DataFrame): Double = {
     val t0 = System.nanoTime()

@@ -26,16 +26,17 @@ object EvalScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
     val spark = DevHarness.session()
+    val sfDir = DevHarness.sfDir("0.1")
     import graft.ops.{CacheScope, Dedup, Similarity}
 
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val queries = docs.filter(col("doc_id") % 2 === 1)
       .orderBy(col("doc_id")).limit(500).cache()
     queries.count()
     val nd = docs.agg(max("doc_id")).head().getLong(0) + 1
 
-    val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val vq = emb.filter(col("vec_id") % 2 === 1)
       .orderBy(col("vec_id")).limit(500).cache()

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -69,19 +67,10 @@ class GraftSessionSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
   }
 
-  /** Scala source with comments and string/char literals blanked. */
-  private def codeOnly(src: String): String =
-    ("(?s)\"\"\".*?\"\"\"|\"(?:\\\\.|[^\"\\\\\\n])*\"|'(?:\\\\.|[^'\\\\\\n])'" +
-      "|//[^\\n]*|/\\*.*?\\*/").r.replaceAllIn(src, " ")
-
   test("GraftSession.scala is the only file under src/ that calls SparkSession.builder") {
-    val root = Paths.get("src")
-    assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
     val call = "\\bSparkSession\\s*\\.\\s*builder\\b".r
-    def calls(src: String): Boolean = call.findFirstIn(codeOnly(src)).isDefined
-    val callers = Files.walk(root).iterator().asScala.toSeq
-      .filter(p => p.toString.endsWith(".scala") && calls(Files.readString(p)))
-      .map(p => root.relativize(p).toString.replace('\\', '/'))
+    def calls(src: String): Boolean = call.findFirstIn(SourceScan.codeOnly(src)).isDefined
+    val callers = SourceScan.filesWhere("src")(call.findFirstIn(_).isDefined)
     assert(callers == Seq("main/scala/graft/GraftSession.scala"))
     // a call inside a comment or a string is not one; a char literal
     // holding a quote does not hide the code after it

@@ -21,11 +21,12 @@ object IngestScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
     val spark = DevHarness.session()
+    val sfDir = DevHarness.sfDir("0.1")
     import spark.implicits._
     import graft.ops.{CacheScope, Dedup, Pipeline, TextAnalysis}
     import graft.streaming.EventStream
 
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val even = docs.filter(col("doc_id") % 2 === 0)
     val batch = docs.filter(col("doc_id") % 2 === 1)

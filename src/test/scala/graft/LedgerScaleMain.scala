@@ -23,9 +23,10 @@ object LedgerScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 16
     val spark = DevHarness.session()
+    val sfDir = DevHarness.sfDir("0.1")
     import graft.ops.{HistLedger, SampleLedger}
 
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("lang"), col("source"),
         graft.ops.TextAnalysis.tokenCount(col("text")).as("n"))
       .cache()

@@ -25,10 +25,11 @@ object PHashScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 8
     val spark = DevHarness.session()
+    val sfDir = DevHarness.sfDir("0.1")
     import spark.implicits._
     import graft.ops.{CacheScope, Multimodal}
 
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val nd = docs.agg(max("doc_id")).head().getLong(0) + 1
     def replay(copies: Int): DataFrame = DevHarness.replay(docs, "doc_id", copies, nd)

@@ -10,7 +10,8 @@ import graft.DevHarness.timed
 object RepGateProbeMain {
   def main(args: Array[String]): Unit = {
     val spark = DevHarness.session()
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    val sfDir = DevHarness.sfDir("0.01")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val out = DevHarness.tempPath("repgate_probe")
     def run(label: String, repNs: Seq[(Int, Double)]): Unit = timed(s"repGate write $label")(
       graft.ops.TextAnalysis.gopherRepetitionGate(docs, "doc_id", "text", repNs = repNs)

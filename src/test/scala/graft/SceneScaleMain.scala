@@ -23,11 +23,12 @@ object SceneScaleMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 8
     val spark = DevHarness.session()
+    val sfDir = DevHarness.sfDir("0.1")
     import graft.ops.Multimodal
 
     // the q204 corpus shape: a repeated opening block so scenes have
     // real multi-frame structure, not one-frame-per-scene noise
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"),
         concat(expr("substring(text, 1, 128)"), expr("substring(text, 1, 128)"),
           expr("substring(text, 1, 128)"), expr("substring(text, 129)")).as("text"))
