@@ -1242,7 +1242,7 @@ object SparkEntry {
       // the regex-scored corpus is gone
       BudgetSelect.selectByBudgetPerGroupWith(scored, "lang", "n_tokens",
           supplies => supplies.collect {
-            case (Some(g), _, Some(t)) => g -> t * 3 / 10 }.toMap,
+            case BudgetSelect.GroupSupply(Some(g), Some(t)) => g -> t * 3 / 10 }.toMap,
           graft.ops.CacheScope.noop,
           col("punct_ratio").asc, col("doc_id").asc)
         .select(col("doc_id"), col("lang"), col("n_tokens"), col("punct_ratio"))

@@ -19,8 +19,6 @@ import graft.ops.IdAssign
   */
 object PersonLookup {
 
-  final case class Result(lookup: DataFrame, rejectCount: Long)
-
   /** @param personDf raw person source with `_row_idx` (CsvSource.read) */
   def build(personDf: DataFrame, personIdField: String, birthDateField: String,
             useInputPersonIds: Boolean,

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType}
 
 /** Corpus selection under a cost budget: keep the prefix of the ranked
   * corpus whose running cost fits the budget — the standard "pick the best
@@ -12,33 +12,24 @@ import org.apache.spark.sql.functions._
   * prefix of the global order).
   *
   * The naive formulation is a running sum over one global window — a
-  * single-partition `WindowExec`, a non-starter at 100 TB (the same trap
-  * [[IdAssign]] documents for `row_number`). This implementation confines
-  * the sequential work to ONE partition:
+  * single-partition `WindowExec`. This implementation is a [[RangeScan]]
+  * by the ranking key (its scaladoc states the snapshot and cache-lifetime
+  * contract) whose cells are the per-partition cost totals. Every
+  * partition is then decidable wholesale — fully inside the budget (its
+  * offset + total ≤ budget: keep every row, a codegen'd filter, NO window)
+  * or fully outside (offset already past the budget: drop) — except at
+  * most ONE boundary partition, which alone runs the running-cost window,
+  * keyed by the partition id. At 100 TB the full-data path is therefore a
+  * range exchange plus a partition-id filter; the window touches 1/Nth of
+  * the data.
   *
-  *   1. range-partition by the ranking key (partitions come out in global
-  *      rank order), sort within partitions; the snapshot is cached so
-  *      every consumer sees one set of partition boundaries (AQE may
-  *      otherwise re-plan the exchange per consumer — the IdAssign
-  *      lesson from round 1);
-  *   2. per-partition cost totals are METADATA (≤ one row per partition):
-  *      collect, prefix-sum on the driver. Every partition is then
-  *      decidable wholesale — fully inside the budget (its prefix offset +
-  *      total ≤ budget: keep every row, a codegen'd filter, NO window) or
-  *      fully outside (offset already past the budget: drop) — except at
-  *      most ONE boundary partition;
-  *   3. only the boundary partition runs a running-cost window, and it is
-  *      keyed by the partition id, so the window state is bounded by one
-  *      partition's rows no matter how large the corpus.
-  *
-  * At 100 TB the full-data path is therefore a range exchange plus a
-  * partition-id filter; the window touches 1/Nth of the data. Rows whose
-  * running cost (inclusive, in `orderCols` order) is ≤ `budget` survive.
-  * Costs must be integral (summed as long): a float cumulative sum is
-  * order-of-addition dependent and would not reproduce across engines or
-  * partitionings. Null costs add nothing (SQL sum semantics) and survive
-  * whenever the running sum at their position fits. `orderCols` must
-  * contain a unique tie-break key (same precondition as [[IdAssign]]).
+  * Rows whose running cost (inclusive, in `orderCols` order) is ≤
+  * `budget` survive. Costs must be integral (summed as long): a float
+  * cumulative sum is order-of-addition dependent and would not reproduce
+  * across engines or partitionings. Null costs add nothing (SQL sum
+  * semantics) and survive whenever the running sum at their position
+  * fits. `orderCols` must contain a unique tie-break key (same
+  * precondition as [[IdAssign]]).
   */
 object BudgetSelect {
 
@@ -53,12 +44,9 @@ object BudgetSelect {
   }
 
   /** [[selectByBudget]] with the budget stated as a FRACTION of the
-    * corpus's total cost (`total · num / den`, exact long arithmetic) —
-    * round 15 (r14 verdict #6): callers previously ran a SEPARATE
-    * full-corpus aggregation just for the total, but the per-partition
-    * totals this operator collects anyway sum to exactly that value
-    * (long sums are partitioning-independent), so the fraction form folds
-    * the budget pass away. */
+    * corpus's total cost (`total · num / den`, exact long arithmetic). The
+    * total is the sum of the cell totals the scan collects anyway (long
+    * sums are partitioning-independent), so no separate total pass runs. */
   def selectByBudgetFrac(df: DataFrame, costCol: String, num: Long, den: Long,
                          scope: CacheScope, orderCols: Column*): DataFrame = {
     require(num >= 0 && den > 0, s"budget fraction must be >= 0 / > 0, got $num/$den")
@@ -70,48 +58,34 @@ object BudgetSelect {
                                  orderCols: Seq[Column]): DataFrame = {
     require(orderCols.nonEmpty, "orderCols must rank the corpus")
     val cost = col(costCol).cast("long")
-    // _bs_pid decoded from monotonically_increasing_id's high bits — the
-    // physical partition index, no extra exchange (IdAssign step 2 rationale)
-    val ranged = df
-      .repartitionByRange(orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-      .withColumn("_bs_pid", shiftright(monotonically_increasing_id(), 33))
-      .cache()
-    scope.track(ranged)
-
-    // one job: materializes the cache AND returns per-partition cost totals
-    val totals = ranged.groupBy(col("_bs_pid")).agg(sum(cost).as("_bs_tot"))
-      .collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-      .sortBy(_._1)
-    val budget = budgetOf(totals.map(_._2).sum)
+    val scan = RangeScan(df, "_bs_pid", scope, None, orderCols)
+    val cells = scan.cells[Long](cost)
+    val budget = budgetOf(cells.map(_.total).sum)
     require(budget >= 0, s"budget must be non-negative, got $budget")
-    var acc = 0L
-    val pref = totals.map { case (pid, tot) => val o = acc; acc += tot; (pid, o, tot) }
 
-    // o + t is the cumulative cost after each partition — nondecreasing in
-    // pid — so the fully-admitted partitions are always a PREFIX of the pid
-    // sequence: one <= comparison filters them, not an InSet that grows
-    // with partition count (100k partitions at cluster scale)
-    val wholePids = pref.collect { case (pid, o, t) if o + t <= budget => pid }
-    // o == budget still admits leading zero-cost rows (cum stays == budget),
-    // hence <=, not < — at most one partition matches because offsets are
-    // nondecreasing and the first overflow pushes every later offset past
-    // the budget
-    val boundary = pref.find { case (_, o, t) => o <= budget && o + t > budget }
+    // offset + total is the cumulative cost after each partition —
+    // nondecreasing in pid — so the fully-admitted partitions are always a
+    // PREFIX of the pid sequence: one <= comparison filters them, not an
+    // InSet that grows with partition count
+    val wholePids = cells.collect { case c if c.offset + c.total <= budget => c.pid }
+    // offset == budget still admits leading zero-cost rows (cum stays ==
+    // budget), hence <=, not < — at most one partition matches because
+    // offsets are nondecreasing and the first overflow pushes every later
+    // offset past the budget
+    val boundary = cells.find(c => c.offset <= budget && c.offset + c.total > budget)
 
     val whole = wholePids.lastOption match {
-      case Some(last) => ranged.filter(col("_bs_pid") <= last)
-      case None       => ranged.filter(lit(false))
+      case Some(last) => scan.rows.filter(col("_bs_pid") <= last)
+      case None       => scan.rows.filter(lit(false))
     }
     val out = boundary match {
-      case Some((pid, off, _)) =>
-        // partitionBy(_bs_pid) on a one-pid frame: a single bounded window
-        // partition without the unpartitioned-window global collapse
-        val w = Window.partitionBy(col("_bs_pid")).orderBy(orderCols: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val edge = ranged.filter(col("_bs_pid") === pid)
-          .withColumn("_bs_cum", sum(cost).over(w) + lit(off))
+      case Some(c) =>
+        // the running window on a one-pid frame: a single bounded window
+        // partition without the unpartitioned-window global collapse. A
+        // run of leading null costs sums to null: it spends nothing
+        val edge = scan.rows.filter(col("_bs_pid") === c.pid)
+          .withColumn("_bs_cum",
+            coalesce(scan.running(cost, inclusive = true), lit(0L)) + lit(c.offset))
           .filter(col("_bs_cum") <= budget)
           .drop("_bs_cum")
         whole.unionByName(edge)
@@ -124,19 +98,18 @@ object BudgetSelect {
     * under its own budget (the corpus-mixing shape: "30% of each
     * language's tokens", "cap every source at N"). Groups absent from
     * `budgets` are dropped entirely (budget 0); a null group value is the
-    * key `None` would have — give it no budget and it is dropped.
+    * key `None` would have — give it no budget and it is dropped. Budgets
+    * are keyed by Spark's cast-to-string of the group value, so the group
+    * column may be of any type that casts to string.
     *
-    * Same confinement argument as [[selectByBudget]], per group: ranking
-    * range-partitions by (group, rank), so every group occupies a
-    * CONTIGUOUS run of partitions and the per-(partition, group) cost
-    * cells number ≈ partitions + groups — still driver metadata. Each
-    * cell is then wholesale in (cell offset + total fits the group
-    * budget), wholesale out, or one of ≤ one boundary cell PER GROUP; the
-    * classification ships back as a broadcast-joined table (no literal
-    * grows with partition count), whole cells pass with no window, and
-    * only boundary-cell rows run the running-cost window, keyed by
-    * (partition id, group) — bounded by one partition's share of one
-    * group no matter the corpus size. */
+    * Same confinement argument as [[selectByBudget]], per group: the
+    * [[RangeScan]] is grouped by the group, so every group occupies a
+    * CONTIGUOUS run of partitions and the per-(partition, group) cells
+    * number ≈ partitions + groups. Each cell is wholesale in (offset +
+    * total fits the group budget), wholesale out, or one of ≤ one boundary
+    * cell PER GROUP; the classification ships back as a broadcast-joined
+    * table, whole cells pass with no window, and only boundary-cell rows
+    * run the running-cost window, keyed by (partition id, group). */
   def selectByBudgetPerGroup(df: DataFrame, groupCol: String, costCol: String,
                              budgets: Map[String, Long],
                              orderCols: Column*): DataFrame =
@@ -146,91 +119,71 @@ object BudgetSelect {
                              budgets: Map[String, Long], scope: CacheScope,
                              orderCols: Column*): DataFrame = {
     require(budgets.values.forall(_ >= 0), "budgets must be non-negative")
-    selectByBudgetPerGroupWith(df, groupCol, costCol, _ => budgets, scope,
-      orderCols: _*)
+    perGroupCore(df, groupCol, costCol, Nil, _ => budgets, scope, orderCols)
   }
 
+  /** One group of a per-group draw: `key` is Spark's cast-to-string of the
+    * group value (None for the null group, which no budget map can name)
+    * and `supply` the group's summed cost (None only when every cost in
+    * the group is null). */
+  final case class GroupSupply(key: Option[String], supply: Option[Long])
+
   /** [[selectByBudgetPerGroup]] with the budgets DERIVED from the
-    * per-group supplies this operator aggregates anyway — round 15
-    * (r14 verdict #6): the mixing entry points (temperature/waterfill
-    * draws) previously ran a separate full-corpus supply aggregation +
-    * collect before the draw; the draw's own per-cell collect carries
-    * the identical exact long sums, so `budgetsOf` receives them and
-    * the extra pass (and its cache) folds away.
-    *
-    * `budgetsOf` gets one row per group — (Spark cast-to-string key,
-    * raw key, supply) — in NO particular order (sort inside if order
-    * matters; the waterfill/temperature closed forms do); `supply` is
-    * None only when every cost in the group is SQL-null. The returned
-    * map is keyed by the cast-string key; groups absent from it (and
-    * the null group, which has no string key) are dropped — the
-    * [[selectByBudgetPerGroup]] contract. */
+    * per-group supplies: the cells the scan collects carry the exact long
+    * sums, so `budgetsOf` receives them and no separate supply pass runs.
+    * Supplies come one per group, in NO particular order (sort inside if
+    * order matters). The returned map is keyed like `budgets`. */
   def selectByBudgetPerGroupWith(df: DataFrame, groupCol: String, costCol: String,
-                                 budgetsOf: Seq[(Option[String], Any, Option[Long])] => Map[String, Long],
+                                 budgetsOf: Seq[GroupSupply] => Map[String, Long],
                                  scope: CacheScope,
-                                 orderCols: Column*): DataFrame = {
+                                 orderCols: Column*): DataFrame =
+    perGroupCore(df, groupCol, costCol, Nil, ss => budgetsOf(ss.map(_._1)), scope, orderCols)
+
+  /** [[selectByBudgetPerGroupWith]] for draws whose allocation orders the
+    * groups by their value: `budgetsOf` also gets each group's value
+    * (`min` over the group, so the group column must be orderable; one
+    * value per string key, the assumption the budget join already makes). */
+  private[ops] def selectByBudgetPerGroupByValue(
+      df: DataFrame, groupCol: String, costCol: String,
+      budgetsOf: Seq[(Any, GroupSupply)] => Map[String, Long],
+      scope: CacheScope, orderCols: Column*): DataFrame =
+    perGroupCore(df, groupCol, costCol, Seq(min(col(groupCol))),
+      ss => budgetsOf(ss.map { case (s, value) => value.get(0) -> s }), scope, orderCols)
+
+  private def perGroupCore(df: DataFrame, groupCol: String, costCol: String,
+                           extras: Seq[Column],
+                           budgetsOf: Seq[(GroupSupply, Row)] => Map[String, Long],
+                           scope: CacheScope, orderCols: Seq[Column]): DataFrame = {
     require(orderCols.nonEmpty, "orderCols must rank within each group")
     val cost = col(costCol).cast("long")
-    val gKey = col(groupCol).cast("string")
-    val ranged = df
-      .repartitionByRange(gKey +: orderCols: _*)
-      .sortWithinPartitions(gKey +: orderCols: _*)
-      .withColumn("_bs_pid", shiftright(monotonically_increasing_id(), 33))
-      .cache()
-    scope.track(ranged)
-
-    // one job: materializes the cache AND returns the per-cell totals;
-    // within a group, ascending pid IS the group's rank order (range
-    // partitioning on (group, rank) keeps each group's rows contiguous
-    // and ordered across partitions). The raw group key rides along for
-    // budgetsOf implementations that order by it (injective-cast
-    // assumption: one raw key per cast key, already load-bearing in the
-    // budgets-map join).
-    val cells = ranged.groupBy(col("_bs_pid"), gKey.as("_bs_g"))
-      .agg(sum(cost).as("_bs_tot"), min(col(groupCol)).as("_bs_graw"))
-      .collect()
-      .map(r => (r.getLong(0), Option(r.getString(1)),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)), r.get(3)))
-
-    // per-group supplies under SQL sum semantics: None only when every
-    // cell's sum is null
-    val supplies = cells.groupBy(_._2).toSeq.map { case (g, cs) =>
-      val vals = cs.flatMap(_._3)
-      (g, cs.head._4, if (vals.isEmpty) None else Some(vals.sum))
+    val scan = RangeScan(df, "_bs_pid", scope, Some(col(groupCol)), orderCols)
+    // per cell: the cost sum and the count of non-null costs (a supply is
+    // None only when that count is zero), plus the caller's `extras`
+    val cells = scan.cellsWith[(Long, Long)](Seq(cost, cost.isNotNull.cast("long")), extras)
+    val supplies = cells.groupBy(_._1.group).toSeq.map { case (g, cs) =>
+      val sums = cs.map(_._1.total)
+      GroupSupply(g, if (sums.map(_._2).sum == 0L) None else Some(sums.map(_._1).sum)) -> cs.head._2
     }
     val budgets = budgetsOf(supplies)
     require(budgets.values.forall(_ >= 0), "budgets must be non-negative")
 
-    val classified = cells.groupBy(_._2).toSeq.flatMap { case (g, cs) =>
-      val budget = g.flatMap(budgets.get).getOrElse(0L)
-      var acc = 0L
-      cs.sortBy(_._1).flatMap { case (pid, _, tot0, _) =>
-        val tot = tot0.getOrElse(0L)
-        val off = acc; acc += tot
-        // same boundary rule as the single-budget path (off == budget
-        // still admits leading zero-cost rows); cells past the budget are
-        // simply not emitted — the inner join below drops their rows
-        if (off + tot <= budget) Some((pid, g, 1, 0L, budget))
-        else if (off <= budget) Some((pid, g, 0, off, budget))
-        else None
-      }
+    // the single-budget boundary rule per group; cells past the budget are
+    // not listed, so the inner join drops their rows
+    val classified = cells.flatMap { case (c, _) =>
+      val budget = c.group.flatMap(budgets.get).getOrElse(0L)
+      val (off, tot) = (c.offset._1, c.total._1)
+      if (off + tot <= budget) Some(c -> Seq(true, 0L, budget))
+      else if (off <= budget) Some(c -> Seq(false, off, budget))
+      else None
     }
-
-    val sess = df.sparkSession
-    import sess.implicits._
-    val cls = broadcast(classified
-      .toDF("_bs_cpid", "_bs_cg", "_bs_cls", "_bs_off", "_bs_bud"))
-    val joined = ranged.join(cls,
-      col("_bs_pid") === col("_bs_cpid") && (gKey <=> col("_bs_cg")))
-
-    val whole = joined.filter(col("_bs_cls") === 1)
-    val w = Window.partitionBy(col("_bs_pid"), col("_bs_cg")).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val edge = joined.filter(col("_bs_cls") === 0)
-      .withColumn("_bs_cum", sum(cost).over(w) + col("_bs_off"))
+    val joined = scan.withCells(classified,
+      "_bs_whole" -> BooleanType, "_bs_off" -> LongType, "_bs_bud" -> LongType)
+    val whole = joined.filter(col("_bs_whole"))
+    val edge = joined.filter(!col("_bs_whole"))
+      .withColumn("_bs_cum",
+        coalesce(scan.running(cost, inclusive = true), lit(0L)) + col("_bs_off"))
       .filter(col("_bs_cum") <= col("_bs_bud"))
       .drop("_bs_cum")
-    whole.unionByName(edge)
-      .drop("_bs_pid", "_bs_cpid", "_bs_cg", "_bs_cls", "_bs_off", "_bs_bud")
+    whole.unionByName(edge).drop("_bs_pid", "_bs_whole", "_bs_off", "_bs_bud")
   }
 }

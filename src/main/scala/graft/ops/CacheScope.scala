@@ -39,7 +39,7 @@ object CacheScope {
 
   /** Run `f` with a fresh scope, closing it afterwards. NOTE: only safe when
     * every Spark ACTION on the returned data happens inside `f` — an
-    * unpersisted IdAssign snapshot re-samples its range boundaries on
+    * unpersisted [[RangeScan]] snapshot re-samples its range boundaries on
     * recompute, which can shift IDs. */
   def withScope[A](f: CacheScope => A): A = {
     val s = new CacheScope

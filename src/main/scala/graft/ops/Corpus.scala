@@ -1709,22 +1709,23 @@ object Corpus {
       .select(col(idCol), col(groupCol), col(costCol))
   }
 
-  /** Shared waterfill draw: [[BudgetSelect.selectByBudgetPerGroupWith]]
+  /** Shared waterfill draw: [[BudgetSelect.selectByBudgetPerGroupByValue]]
     * with the closed form over the cell-derived supplies. */
   private def waterfillDraw(base: DataFrame, idCol: String, groupCol: String,
                             costCol: String, alpha: Double,
                             budgetOf: Long => Long, seed: String,
                             scope: CacheScope): DataFrame = {
     require(alpha >= 0, s"alpha must be non-negative, got $alpha")
-    BudgetSelect.selectByBudgetPerGroupWith(base, groupCol, costCol,
+    BudgetSelect.selectByBudgetPerGroupByValue(base, groupCol, costCol,
       supplies => {
         require(supplies.size <= waterfillMaxGroups,
           s"waterfill group table exceeds maxGroups=$waterfillMaxGroups — " +
             "the group column is not mixing-table metadata")
-        val tot = supplies.flatMap(_._3).sum
+        val tot = supplies.flatMap(_._2.supply).sum
         val gsOf = supplies.collect {
-          case (Some(gs), raw, _) if raw != null => raw -> gs }.toMap
-        waterfillLocal(supplies.map(t => (t._2, t._3)).toArray, alpha, budgetOf(tot))
+          case (raw, BudgetSelect.GroupSupply(Some(gs), _)) if raw != null => raw -> gs }.toMap
+        waterfillLocal(supplies.map { case (raw, s) => (raw, s.supply) }.toArray,
+          alpha, budgetOf(tot))
           .flatMap { case (g, _, alloc, _) =>
             Option(g).map(v => gsOf(v) -> alloc.getOrElse(0L))
           }.toMap
@@ -1828,7 +1829,7 @@ object Corpus {
     // md5(id) would keep exactly the below-threshold hashes hashSplit
     // puts in train. A null group gets no budget — dropped, as the old
     // mix-table equi-join dropped it.
-    BudgetSelect.selectByBudgetPerGroupWith(
+    BudgetSelect.selectByBudgetPerGroupByValue(
         base.withColumn("_ts_one", lit(1L)),
         groupCol, "_ts_one",
         // an empty corpus has no groups to allocate to (and its Σ over
@@ -1855,10 +1856,10 @@ object Corpus {
     * The null group participates in the arithmetic (as it did in the mix
     * table) and is dropped from the returned map (no string key). */
   private def temperatureAllocsLocal(
-      supplies: Seq[(Option[String], Any, Option[Long])],
+      supplies: Seq[(Any, BudgetSelect.GroupSupply)],
       alpha: Double, budget: Long, tot: Double): Map[String, Long] = {
     case class R(gs: Option[String], raw: Any, w: Double, base: Long, frac: Double)
-    val rs = supplies.map { case (gs, raw, s) =>
+    val rs = supplies.map { case (raw, BudgetSelect.GroupSupply(gs, s)) =>
       val n = s.getOrElse(0L) // unit costs: None impossible, count >= 1
       val w = math.pow(n.toDouble, alpha) / tot
       val b = math.floor(w * budget).toLong

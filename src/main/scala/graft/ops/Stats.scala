@@ -164,18 +164,12 @@ object Stats {
     * differences across engines at every step.)
     *
     * Scale shape: one groupBy on the value (map-side partials, output
-    * VALUE-DOMAIN-sized), then the cumulative counts via the repo's
-    * range-partition + driver-prefix-sum discipline
-    * ([[BudgetSelect.selectByBudget]], [[TextAnalysis.sequencePackBy]]):
-    * the distinct-value table range-partitions on the value (partitions
-    * come out in global value order), per-partition (ca, cb) totals are
-    * METADATA (one row per partition — collected and prefix-summed on the
-    * driver), and each partition then computes its own CDF segment under
-    * a window KEYED BY THE PARTITION ID with its offsets broadcast-joined
-    * on. No partition ever sees more than its slice — a CONTINUOUS metric
-    * (quality scores, losses: distinct values ≈ row count) stays
-    * multi-partition instead of funneling the corpus through one task,
-    * which is exactly the advertised drift-gate use.
+    * VALUE-DOMAIN-sized), then the cumulative counts as a [[RangeScan]] of
+    * the distinct-value table in value order: per-partition (ca, cb)
+    * totals prefix-summed on the driver, each partition's CDF segment from
+    * a window keyed by the partition id. A CONTINUOUS metric (quality
+    * scores, losses: distinct values ≈ row count) stays multi-partition
+    * instead of funneling the corpus through one task.
     *
     * Degenerate inputs return ZERO rows, not a null row: KS between an
     * empty sample and anything is undefined (the n_a·n_b denominator is
@@ -183,71 +177,34 @@ object Stats {
     * with a SQL GROUP BY oracle that yields no groups — so the operator
     * requires both samples non-empty and says so with an empty frame.
     *
-    * Driver note: the prefix sums make this operator EAGER (it runs the
-    * aggregation job at call time, like [[BudgetSelect]]). Returns ONE
-    * row: (n_a, n_b, d_num, ks).
-    *
-    * CACHE-LIFETIME HAZARD (the [[IdAssign]] snapshot contract, restated
-    * because correctness rides on it here too): the returned frame's
-    * `_pid` values are only meaningful against the CACHED range exchange
-    * the driver offsets were collected from. Run every action on the
-    * result BEFORE the owning `scope` closes/unpersists — a re-evaluation
-    * after unpersist may re-sample range boundaries, shifting rows across
-    * `_pid` values while the joined offsets stay stale, silently
-    * mis-summing the CDF. */
+    * Eager: the scan's collect runs at call time, and every action on the
+    * result must run inside `scope` ([[RangeScan]]'s cache-lifetime
+    * contract). Returns ONE row: (n_a, n_b, d_num, ks). */
   def ksDistance(df: DataFrame, valCol: String,
                  isA: org.apache.spark.sql.Column,
                  scope: CacheScope = CacheScope.noop): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sess = df.sparkSession
     import sess.implicits._
-    // distinct-value count table, range-partitioned by value: _pid decoded
-    // from monotonically_increasing_id's high bits is the physical
-    // partition index (the IdAssign/BudgetSelect idiom — no extra
-    // exchange). Cached: the per-partition totals job and the CDF job both
-    // consume it, and an uncached range exchange could re-sample its
-    // boundaries between the two (shifting rows across _pid values).
-    val counts = scope.track(df.filter(col(valCol).isNotNull)
-      .select(col(valCol).as("_v"), isA.as("_a"))
-      .groupBy(col("_v"))
-      .agg(sum(when(col("_a"), 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_a"), 0L).otherwise(1L)).as("_cb"))
-      .repartitionByRange(col("_v"))
-      .sortWithinPartitions(col("_v"))
-      .withColumn("_pid", shiftright(monotonically_increasing_id(), 33))
-      .cache())
-    // one job: materializes the cache AND returns per-partition totals —
-    // metadata-sized (≤ one row per partition), the bounded-driver-state
-    // exception
-    val parts = counts.groupBy(col("_pid"))
-      .agg(sum(col("_ca")).as("_ta"), sum(col("_cb")).as("_tb"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    var accA = 0L; var accB = 0L
-    val offs = parts.map { case (pid, ta, tb) =>
-      val o = (pid, accA, accB); accA += ta; accB += tb; o
-    }
-    val (na, nb) = (accA, accB)
+    val scan = RangeScan(df.filter(col(valCol).isNotNull)
+        .select(col(valCol).as("_v"), isA.as("_a"))
+        .groupBy(col("_v"))
+        .agg(sum(when(col("_a"), 1L).otherwise(0L)).as("_ca"),
+          sum(when(col("_a"), 0L).otherwise(1L)).as("_cb")),
+      "_pid", scope, None, Seq(col("_v")))
+    val cells = scan.cells[(Long, Long)](col("_ca"), col("_cb"))
+    val (na, nb) = RangeScan.totals(cells).getOrElse(None, (0L, 0L))
     if (na == 0L || nb == 0L)
       Seq.empty[(Long, Long, Long, Double)].toDF("n_a", "n_b", "d_num", "ks")
-    else {
-      val offDf = broadcast(offs.toSeq.toDF("_opid", "_offa", "_offb"))
-      // window keyed by the partition id: each window partition holds ONE
-      // range-partition's rows — the CDF is computed in parallel slices,
-      // never through a single global-ordered task
-      val w = Window.partitionBy(col("_pid")).orderBy(col("_v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      counts.join(offDf, col("_pid") === col("_opid"))
-        .withColumn("_cuma", sum(col("_ca")).over(w) + col("_offa"))
-        .withColumn("_cumb", sum(col("_cb")).over(w) + col("_offb"))
+    else
+      scan.withOffsets(cells, "_offa", "_offb")
+        .withColumn("_cuma", scan.running(col("_ca"), inclusive = true) + col("_offa"))
+        .withColumn("_cumb", scan.running(col("_cb"), inclusive = true) + col("_offb"))
         .withColumn("_dnum",
           abs(col("_cuma") * lit(nb) - col("_cumb") * lit(na)))
         .agg(max(col("_dnum")).as("d_num"))
         .select(lit(na).as("n_a"), lit(nb).as("n_b"), col("d_num"),
           (col("d_num").cast("double")
             / (lit(na) * lit(nb)).cast("double")).as("ks"))
-    }
   }
 
   /** Per-group score calibration: appends `<scoreCol>_cal` =
@@ -268,38 +225,24 @@ object Stats {
     * dominated by the tail; percent_rank is distribution-free and lands
     * in [0,1] for every source.
     *
-    * Scale shape (round-8: the per-group rank window removed — a window
-    * partitioned by group puts each group through ONE task, the
-    * mega-source exposure the round-7 verdict watch-listed): ranks ride
-    * the DISTINCT (group, score) tally table, not the rows. percent_rank
-    * of a row is `(# strictly smaller scores in its group) / (n_g − 1)`
-    * — tie-stable by construction — so the tally table (vocabulary-
-    * sized: one row per distinct score per group) carries everything.
-    * Cumulative tallies over it use the [[ksDistance]]/[[BudgetSelect]]
-    * discipline: range partition on (group, score) — each group a
-    * contiguous, ordered run of partitions — per-(partition, group) cell
-    * totals collected as driver METADATA and prefix-summed per group,
-    * windows bounded by one partition's share of one group. The corpus
-    * itself pays one groupBy and one equi-join on (group, score); no
-    * task ever holds a whole group. The division replays Spark's
-    * percent_rank bit-for-bit (same longs, one IEEE division; singleton
-    * groups pin 0.0).
+    * Scale shape: no per-group rank window (it would put each group
+    * through ONE task, a mega-source exposure); ranks ride the DISTINCT
+    * (group, score) tally table, not the rows. percent_rank of a row is
+    * `(# strictly smaller scores in its group) / (n_g − 1)` — tie-stable
+    * by construction — so the tally table (vocabulary-sized: one row per
+    * distinct score per group) carries everything.
+    * Cumulative tallies over it are a [[RangeScan]] grouped by group and
+    * ordered by score: windows bounded by one partition's share of one
+    * group. The corpus itself pays one groupBy and one equi-join on
+    * (group, score); no task ever holds a whole group. The division
+    * replays Spark's percent_rank bit-for-bit (same longs, one IEEE
+    * division; singleton groups pin 0.0).
     *
-    * Driver note: the prefix sums make this operator EAGER at call time
-    * (like [[BudgetSelect]]).
-    *
-    * CACHE-LIFETIME HAZARD (see [[ksDistance]] — same mechanism): the
-    * result joins driver-collected per-`_cs_pid` offsets against the
-    * CACHED range exchange they were collected from. Complete every
-    * action on the result before the owning `scope` closes; re-evaluating
-    * after unpersist can re-sample range boundaries and pair rows with
-    * stale offsets. */
+    * Eager at call time; finish every action on the result inside `scope`
+    * ([[RangeScan]]'s cache-lifetime contract). */
   def calibrateScores(df: DataFrame, groupCol: String, scoreCol: String,
                       scope: CacheScope = CacheScope.noop): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
-    val sess = df.sparkSession
-    import sess.implicits._
+    import org.apache.spark.sql.types.{DoubleType, FloatType, LongType}
     // float group keys: + 0.0 folds IEEE −0.0 into +0.0 BEFORE the string
     // cast ("−0.0" and "0.0" would otherwise split one group in two —
     // the window percent_rank this op replays partitions them together)
@@ -308,36 +251,18 @@ object Stats {
       case FloatType  => col(groupCol) + lit(0.0f)
       case _          => col(groupCol)
     }).cast("string")
-    // distinct (group, score) tallies, range-partitioned so each group's
-    // scores are contiguous and ordered across partitions; cached — the
-    // cell-total job and the rank job must see one set of boundaries
-    val counts = scope.track(df
-      .groupBy(g.as("_cs_g"), col(scoreCol).as("_cs_s"))
-      .agg(count(lit(1)).as("_cs_n"))
-      .repartitionByRange(col("_cs_g"), col("_cs_s"))
-      .sortWithinPartitions(col("_cs_g"), col("_cs_s"))
-      .withColumn("_cs_pid", shiftright(monotonically_increasing_id(), 33))
-      .cache())
-    val cells = counts.groupBy(col("_cs_pid"), col("_cs_g"))
-      .agg(sum(col("_cs_n")).as("_t"))
-      .collect()
-      .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2)))
-    val offRows = cells.groupBy(_._2).toSeq.flatMap { case (gv, cs) =>
-      var acc = 0L
-      val total = cs.map(_._3).sum
-      cs.sortBy(_._1).map { case (pid, _, t) =>
-        val off = acc; acc += t; (pid, gv.orNull, off, total)
-      }
-    }
-    val offDf = broadcast(offRows.toDF("_cs_opid", "_cs_og", "_cs_off", "_cs_tot"))
-    // strictly-before tally inside the cell (rowsBetween ..., -1) plus
-    // the cell's group offset = # scores strictly smaller in the group
-    val w = Window.partitionBy(col("_cs_pid"), col("_cs_g")).orderBy(col("_cs_s"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranks = counts.join(offDf,
-        col("_cs_pid") === col("_cs_opid") && (col("_cs_g") <=> col("_cs_og")))
+    val scan = RangeScan(df
+        .groupBy(g.as("_cs_g"), col(scoreCol).as("_cs_s"))
+        .agg(count(lit(1)).as("_cs_n")),
+      "_cs_pid", scope, Some(col("_cs_g")), Seq(col("_cs_s")))
+    val cells = scan.cells[Long](col("_cs_n"))
+    val totals = RangeScan.totals(cells)
+    // strictly-before tally inside the cell plus the cell's group offset
+    // = # scores strictly smaller in the group
+    val ranks = scan.withCells(cells.map(c => c -> Seq(c.offset, totals(c.group))),
+        "_cs_off" -> LongType, "_cs_tot" -> LongType)
       .withColumn("_cs_before",
-        coalesce(sum(col("_cs_n")).over(w), lit(0L)) + col("_cs_off"))
+        coalesce(scan.running(col("_cs_n"), inclusive = false), lit(0L)) + col("_cs_off"))
       .select(col("_cs_g"), col("_cs_s"),
         when(col("_cs_tot") > 1L,
           col("_cs_before").cast("double") / (col("_cs_tot") - 1L).cast("double"))
@@ -415,25 +340,20 @@ object Stats {
     * have sub-micro weights, rescale them (quantiles are scale-free in
     * the weights) rather than expecting sub-scale-6 exactness.
     *
-    * Scale shape ([[calibrateScores]]'s discipline): cumulative weights
-    * ride the DISTINCT (group, value) tally table, not the rows — range
-    * partition on (group, value), per-(partition, group) cell totals
-    * collected as driver metadata and prefix-summed per group, windows
-    * bounded by one partition's share of one group. The corpus pays one
-    * groupBy; no task ever holds a whole group, so a dominant source
-    * cannot funnel the sort through one task. Thresholds and offsets
-    * broadcast (groups × qs rows). Rows with null or non-positive
-    * weight are excluded (a ≤0 weight would break cum monotonicity);
-    * groups left with no rows produce no output.
+    * Scale shape: cumulative weights ride a [[RangeScan]] of the DISTINCT
+    * (group, value) tally table, not the rows — windows bounded by one
+    * partition's share of one group, so a dominant source cannot funnel
+    * the sort through one task. Thresholds and offsets broadcast
+    * (groups × qs rows). Rows with null or non-positive weight are
+    * excluded (a ≤0 weight would break cum monotonicity); groups left with
+    * no rows produce no output.
     *
-    * Driver note: eager at call time (prefix sums + thresholds), and the
-    * [[ksDistance]] cache-lifetime hazard applies — finish every action
-    * on the result before the owning `scope` closes. */
+    * Eager at call time (prefix sums + thresholds); finish every action on
+    * the result inside `scope` ([[RangeScan]]'s cache-lifetime contract). */
   def weightedQuantiles(df: DataFrame, groupCol: String, valCol: String,
                         weightCol: String, qs: Seq[Double],
                         scope: CacheScope = CacheScope.noop): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
     require(qs.nonEmpty, "qs must be non-empty")
     require(qs.forall(q => q > 0.0 && q <= 1.0), s"each q must be in (0, 1], got $qs")
     val sess = df.sparkSession
@@ -446,52 +366,34 @@ object Stats {
       case _          => col(groupCol)
     }
     val g = gFolded.cast("string")
-    val tallies = scope.track(df
-      .filter(col(valCol).isNotNull && col(weightCol).isNotNull
-        && col(weightCol) > lit(0))
-      .groupBy(g.as("_wq_g"), col(valCol).as("_wq_v"))
-      // the output label is the FOLDED key, not first(raw): a ±0.0 float
-      // group folds into one group either way, but first() across
-      // partitions would flap between the two sign representations
-      // run-to-run (round-8 advice) — the folded value is the one
-      // deterministic representative
-      .agg(sum(col(weightCol).cast("decimal(38,6)")).as("_wq_w"),
-        first(gFolded).as("_wq_orig"))
-      .repartitionByRange(col("_wq_g"), col("_wq_v"))
-      .sortWithinPartitions(col("_wq_g"), col("_wq_v"))
-      .withColumn("_wq_pid", shiftright(monotonically_increasing_id(), 33))
-      .cache())
-    val cells = tallies.groupBy(col("_wq_pid"), col("_wq_g"))
-      .agg(sum(col("_wq_w")).as("_t"))
-      .collect()
-      .map(r => (r.getLong(0), Option(r.getString(1)), r.getDecimal(2)))
-    val zero = java.math.BigDecimal.ZERO
-    val offRows = cells.groupBy(_._2).toSeq.flatMap { case (gv, cs) =>
-      var acc = zero
-      cs.sortBy(_._1).map { case (pid, _, t) =>
-        val off = acc; acc = acc.add(t)
-        (pid, gv.orNull, BigDecimal(off).setScale(6))
-      }
-    }
+    val scan = RangeScan(df
+        .filter(col(valCol).isNotNull && col(weightCol).isNotNull
+          && col(weightCol) > lit(0))
+        .groupBy(g.as("_wq_g"), col(valCol).as("_wq_v"))
+        // the output label is the FOLDED key, not first(raw): a ±0.0 float
+        // group folds into one group either way, but first() across
+        // partitions would flap between the two sign representations
+        // run-to-run — the folded value is the one deterministic
+        // representative
+        .agg(sum(col(weightCol).cast("decimal(38,6)")).as("_wq_w"),
+          first(gFolded).as("_wq_orig")),
+      "_wq_pid", scope, Some(col("_wq_g")), Seq(col("_wq_v")))
+    implicit val weights: RangeScan.Sum[java.math.BigDecimal] =
+      RangeScan.Sum.decimals(DecimalType(38, 6))
+    val cells = scan.cells[java.math.BigDecimal](col("_wq_w"))
     // exact q·total per (group, q), ceiling-rounded onto the scale-6 cum
     // grid — preserves `cum >= q·total` exactly (see doc above)
-    val thrRows = cells.groupBy(_._2).toSeq.flatMap { case (gv, cs) =>
-      val total = cs.map(_._3).foldLeft(zero)(_.add(_))
+    val thrRows = RangeScan.totals(cells).toSeq.flatMap { case (gv, total) =>
       qs.map { q =>
         val thr = total.multiply(new java.math.BigDecimal(q.toString))
           .setScale(6, java.math.RoundingMode.CEILING)
         (gv.orNull, q, BigDecimal(thr))
       }
     }
-    val offDf = broadcast(offRows.toDF("_wq_opid", "_wq_og", "_wq_off")
-      .withColumn("_wq_off", col("_wq_off").cast("decimal(38,6)")))
     val thrDf = broadcast(thrRows.toDF("_wq_tg", "q", "_wq_thr")
       .withColumn("_wq_thr", col("_wq_thr").cast("decimal(38,6)")))
-    val w = Window.partitionBy(col("_wq_pid"), col("_wq_g")).orderBy(col("_wq_v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    tallies.join(offDf,
-        col("_wq_pid") === col("_wq_opid") && (col("_wq_g") <=> col("_wq_og")))
-      .withColumn("_wq_cum", sum(col("_wq_w")).over(w) + col("_wq_off"))
+    scan.withOffsets(cells, "_wq_off")
+      .withColumn("_wq_cum", scan.running(col("_wq_w"), inclusive = true) + col("_wq_off"))
       .join(thrDf, (col("_wq_g") <=> col("_wq_tg")) && col("_wq_cum") >= col("_wq_thr"))
       .groupBy(col("_wq_g"), col("q"))
       .agg(min(col("_wq_v")).as("wq"), first(col("_wq_orig")).as("_wq_o2"))

@@ -451,16 +451,11 @@ object TextAnalysis {
     * a document; this packs ACROSS documents, so short docs share
     * sequences and long docs span several).
     *
-    * The global running offset is the [[BudgetSelect]] discipline, not a
-    * single-partition window: range-partition by id (partitions come out
-    * in global order), per-partition token totals are metadata (one row
-    * per partition — collected, prefix-summed on the driver, broadcast
-    * back), and each partition's rows take partition offset + a
-    * WITHIN-partition exclusive running sum — every window is keyed by
-    * the partition id, so window state is bounded by one partition's rows
-    * at any corpus size, and all partitions run in parallel (unlike
-    * BudgetSelect, every row needs its offset, so every partition runs
-    * its bounded window — there is no wholesale-decidable case).
+    * The global running offset is a [[RangeScan]] of the documents in id
+    * order, not a single-partition window: each row takes its partition's
+    * offset plus a WITHIN-partition exclusive running sum, so window state
+    * is bounded by one partition's rows at any corpus size and all
+    * partitions run in parallel.
     *
     * Returns (idCol, n_tokens, start_off, seq_first, seq_last). Integral
     * arithmetic throughout — offsets are exact and engine-independent. */
@@ -555,14 +550,10 @@ object TextAnalysis {
     * cannot move another group's layout (spec-pinned), which is what
     * makes per-group re-packs incremental.
     *
-    * Scale shape: the [[graft.ops.BudgetSelect.selectByBudgetPerGroup]]
-    * cell discipline applied to the pack — range partition on
-    * (group, id) so each group's rows are contiguous and ordered across
-    * partitions, per-(partition, group) token totals collected (one row
-    * per cell — metadata), prefix-summed per group on the driver,
-    * broadcast back; every window is keyed by (partition, group), so
-    * window state is bounded by one partition regardless of group size
-    * and a giant group still parallelizes across its partitions.
+    * Scale shape: a [[RangeScan]] grouped by group and ordered by id, so
+    * every window is keyed by (partition, group): window state is bounded
+    * by one partition regardless of group size, and a giant group still
+    * parallelizes across its partitions.
     *
     * Returns (idCol, groupCol, n_tokens, start_off, seq_first,
     * seq_last), offsets within the group's stream. */
@@ -570,37 +561,12 @@ object TextAnalysis {
                           groupCol: String, seqLen: Int,
                           scope: CacheScope = CacheScope.noop): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
-    import org.apache.spark.sql.expressions.Window
-    val ranged = df
-      .select(col(idCol).as("_id"), col(groupCol).as("_g"),
-        tokenCount(col(textCol)).as("n_tokens"))
-      .withColumn("_gs", col("_g").cast("string"))
-      .repartitionByRange(col("_gs"), col("_id"))
-      .sortWithinPartitions(col("_gs"), col("_id"))
-      .withColumn("_gp_pid", shiftright(monotonically_increasing_id(), 33))
-      .cache()
-    scope.track(ranged)
-    // one row per (partition, group) cell — metadata by construction
-    val cells = ranged.groupBy(col("_gp_pid"), col("_gs"))
-      .agg(sum(col("n_tokens")).as("_t"))
-      .collect()
-      .map(r => (r.getLong(0), Option(r.getString(1)),
-        if (r.isNullAt(2)) 0L else r.getLong(2)))
-    val offsets = cells.groupBy(_._2).toSeq.flatMap { case (g, cs) =>
-      var acc = 0L
-      cs.sortBy(_._1).map { case (pid, _, tot) =>
-        val o = acc; acc += tot; (pid, g.orNull, o)
-      }
-    }
-    val sess = df.sparkSession
-    import sess.implicits._
-    val offDf = broadcast(offsets.toDF("_gp_pid_o", "_gs_o", "_gp_off"))
-    val w = Window.partitionBy(col("_gp_pid"), col("_gs")).orderBy(col("_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    ranged.join(offDf,
-        col("_gp_pid") === col("_gp_pid_o") && (col("_gs") <=> col("_gs_o")))
+    val scan = RangeScan(df.select(col(idCol).as("_id"), col(groupCol).as("_g"),
+        tokenCount(col(textCol)).as("n_tokens")),
+      "_gp_pid", scope, Some(col("_g")), Seq(col("_id")))
+    scan.withOffsets(scan.cells[Long](col("n_tokens")), "_gp_off")
       .withColumn("start_off",
-        col("_gp_off") + coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+        col("_gp_off") + coalesce(scan.running(col("n_tokens"), inclusive = false), lit(0L)))
       .select(col("_id").as(idCol), col("_g").as(groupCol), col("n_tokens"),
         col("start_off"),
         expr(s"start_off div $seqLen").as("seq_first"),
@@ -678,36 +644,18 @@ object TextAnalysis {
 
   /** Core packing with a pluggable stream order. `orderKey` (evaluated
     * against `df`'s columns) defines the concatenation order, tie-broken
-    * by id for a total order; None = id order. Same scale discipline as
-    * [[sequencePack]]'s doc: range partition on the order key, driver
-    * prefix sums over per-partition totals, bounded per-partition
-    * windows. */
+    * by id for a total order; None = id order. A [[RangeScan]] in that
+    * order, offsets counted from `startOffset`. */
   private def sequencePackBy(df: DataFrame, idCol: String, textCol: String,
                              seqLen: Int, orderKey: Option[org.apache.spark.sql.Column],
                              scope: CacheScope, startOffset: Long = 0L): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
-    import org.apache.spark.sql.expressions.Window
-    val ranged = df
-      .select(col(idCol).as("_id"), tokenCount(col(textCol)).as("n_tokens"),
-        orderKey.getOrElse(col(idCol)).as("_ok"))
-      .repartitionByRange(col("_ok"), col("_id"))
-      .sortWithinPartitions(col("_ok"), col("_id"))
-      .withColumn("_sp_pid", shiftright(monotonically_increasing_id(), 33))
-      .cache()
-    scope.track(ranged)
-    val totals = ranged.groupBy(col("_sp_pid")).agg(sum(col("n_tokens")).as("_t"))
-      .collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-      .sortBy(_._1)
-    var acc = startOffset
-    val offsets = totals.map { case (pid, tot) => val o = acc; acc += tot; (pid, o) }
-    val offDf = df.sparkSession.createDataFrame(offsets.toSeq)
-      .toDF("_sp_pid", "_sp_off")
-    val w = Window.partitionBy(col("_sp_pid")).orderBy(col("_ok"), col("_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    ranged.join(broadcast(offDf), Seq("_sp_pid"))
-      .withColumn("start_off",
-        col("_sp_off") + coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+    val scan = RangeScan(df.select(col(idCol).as("_id"), tokenCount(col(textCol)).as("n_tokens"),
+        orderKey.getOrElse(col(idCol)).as("_ok")),
+      "_sp_pid", scope, None, Seq(col("_ok"), col("_id")))
+    scan.withOffsets(scan.cells[Long](col("n_tokens")), "_sp_off")
+      .withColumn("start_off", lit(startOffset) + col("_sp_off")
+        + coalesce(scan.running(col("n_tokens"), inclusive = false), lit(0L)))
       .select(col("_id").as(idCol), col("n_tokens"), col("start_off"),
         expr(s"start_off div $seqLen").as("seq_first"),
         expr(s"(start_off + n_tokens - 1) div $seqLen").as("seq_last"))

@@ -11,16 +11,10 @@ import graft.ops.{BudgetSelect, CacheScope}
   * regardless of input partitioning, AQE coalescing, or which rows land in
   * the boundary partition. The naive reference sorts in memory. */
 class BudgetSelectSpec extends AnyFunSuite {
+  import BudgetSelectSpec.naive
+
   private lazy val spark = Golden.spark
   import spark.implicits._
-
-  /** rows: (id, score, cost); ranked by (score asc, id asc). */
-  private def naive(rows: Seq[(Long, Long, Long)], budget: Long): Set[Long] = {
-    var acc = 0L
-    rows.sortBy(r => (r._2, r._1)).takeWhile { case (_, _, c) =>
-      acc += c; acc <= budget
-    }.map(_._1).toSet
-  }
 
   private def run(df: DataFrame, budget: Long): Set[Long] =
     CacheScope.withScope { scope =>
@@ -146,6 +140,22 @@ class BudgetSelectSpec extends AnyFunSuite {
     assert(got == Set(1L, 3L))
   }
 
+  test("per-group: a map-typed group column works (budgets key its string cast)") {
+    // a map is not orderable: the static-budget path must not aggregate
+    // anything over the group value itself
+    val df = Seq((1L, Map("k" -> 1), 1L, 2L), (2L, Map("k" -> 1), 2L, 2L),
+        (3L, Map("k" -> 2), 1L, 2L))
+      .toDF("id", "g", "score", "cost")
+    val keyOf = df.select(col("id"), col("g").cast("string")).as[(Long, String)]
+      .collect().toMap
+    val got = CacheScope.withScope { scope =>
+      graft.ops.BudgetSelect.selectByBudgetPerGroup(df, "g", "cost", Map(keyOf(1L) -> 2L),
+          scope, col("score").asc, col("id").asc)
+        .select("id").collect().map(_.getLong(0)).toSet
+    }
+    assert(got == Set(1L))
+  }
+
   test("null costs spend nothing and survive while the running sum fits") {
     val df = Seq((1L, 1L, Some(5L)), (2L, 2L, None), (3L, 3L, Some(5L)), (4L, 4L, None))
       .toDF("id", "score", "cost")
@@ -155,11 +165,41 @@ class BudgetSelectSpec extends AnyFunSuite {
     assert(run(df, 10L) == Set(1L, 2L, 3L, 4L))
   }
 
+  test("null costs leading the boundary partition survive, as under any other partitioning") {
+    // one range partition: every row is in the boundary partition (cell),
+    // and the running sum over the leading null cost is SQL null
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try {
+      val df = Seq((1L, 1L, Option.empty[Long]), (2L, 2L, Some(5L)), (3L, 3L, Some(5L)))
+        .toDF("id", "score", "cost")
+      assert(run(df, 5L) == Set(1L, 2L))
+      val perGroup = CacheScope.withScope { scope =>
+        graft.ops.BudgetSelect.selectByBudgetPerGroup(df.withColumn("g", lit("a")), "g", "cost",
+            Map("a" -> 5L), scope, col("score").asc, col("id").asc)
+          .select("id").collect().map(_.getLong(0)).toSet
+      }
+      assert(perGroup == Set(1L, 2L))
+    } finally spark.conf.set(key, old)
+  }
+
   test("edge budgets: zero admits only leading zero-cost rows; empty input is empty") {
     val df = Seq((1L, 1L, 0L), (2L, 2L, 3L)).toDF("id", "score", "cost")
     assert(run(df, 0L) == Set(1L))
     assert(run(df, 3L) == Set(1L, 2L))
     val empty = spark.emptyDataset[(Long, Long, Long)].toDF("id", "score", "cost")
     assert(run(empty, 7L) == Set.empty[Long])
+  }
+}
+
+object BudgetSelectSpec {
+
+  /** rows: (id, score, cost); ranked by (score asc, id asc). */
+  def naive(rows: Seq[(Long, Long, Long)], budget: Long): Set[Long] = {
+    var acc = 0L
+    rows.sortBy(r => (r._2, r._1)).takeWhile { case (_, _, c) =>
+      acc += c; acc <= budget
+    }.map(_._1).toSet
   }
 }

@@ -452,4 +452,102 @@ class RandomPropertySpec extends AnyFunSuite {
       assert(got == want, s"seed=$seed")
     }
   }
+
+  test("range-scan operators survive degenerate inputs and agree with their naive models") {
+    import org.apache.spark.sql.DataFrame
+    import graft.ops.{BudgetSelect, CacheScope, IdAssign, Stats, TextAnalysis}
+    case class R(id: Long, g: Option[String], v: Option[Long])
+    val rng = new scala.util.Random(1200)
+    val inputs = Seq(
+      "empty" -> Seq.empty[R],
+      "single row" -> Seq(R(1L, Some("a"), Some(3L))),
+      "all-null measure" -> (1L to 6L).map(i =>
+        R(i, if (i % 3 == 0) None else Some(s"g${i % 2}"), None)),
+      "one hot group" -> (1L to 4000L).map(i => R(i, Some("hot"), Some(1L + rng.nextInt(9)))))
+    // the measure v doubles as a token count: text is v words, null with v
+    def frame(rows: Seq[R]): DataFrame =
+      rows.map(r => (r.id, r.g, r.v, r.v.map(n => Seq.fill(n.toInt)("w").mkString(" "))))
+        .toDF("id", "g", "v", "text").repartition(5)
+    def cost(r: R) = r.v.getOrElse(0L)
+    def half(rows: Seq[R]) = rows.map(cost).sum / 2
+    def groupBudgets(rows: Seq[R]) =
+      rows.filter(_.g.isDefined).groupBy(_.g.get).map { case (g, rs) => g -> half(rs) }
+    def ranked(rows: Seq[R]) = rows.map(r => (r.id, r.id, cost(r)))
+    // nulls sort first, as in Spark's ascending order
+    def before(a: Option[Long], b: Option[Long]) =
+      b.exists(y => a.forall(_ < y))
+    def packed(rows: Seq[R]) = {
+      var off = 0L
+      rows.sortBy(_.id).map { r => val o = off; off += cost(r); (r.id, r.v, o) }
+    }
+    def ids(df: DataFrame) = df.select("id").as[Long].collect().toSet
+    def spans(df: DataFrame) =
+      df.select(col("id"), col("n_tokens"), col("start_off")).as[(Long, Option[Long], Long)]
+        .collect().toSet
+    val qs = Seq(0.25, 0.5, 1.0)
+    case class Op(name: String, run: (DataFrame, Seq[R], CacheScope) => DataFrame,
+                  read: DataFrame => Any, model: Seq[R] => Any)
+    val ops = Seq(
+      Op("IdAssign.withDenseId", (df, _, s) => IdAssign.withDenseId(df, "dense", 10L, s, col("id")),
+        _.select("id", "dense").as[(Long, Long)].collect().toMap,
+        _.map(_.id).sorted.zipWithIndex.map { case (id, i) => id -> (11L + i) }.toMap),
+      Op("BudgetSelect.selectByBudget",
+        (df, rows, s) => BudgetSelect.selectByBudget(df, "v", half(rows), s, col("id")),
+        ids, rows => BudgetSelectSpec.naive(ranked(rows), half(rows))),
+      Op("BudgetSelect.selectByBudgetPerGroup",
+        (df, rows, s) => BudgetSelect.selectByBudgetPerGroup(df, "g", "v", groupBudgets(rows), s,
+          col("id")),
+        ids, rows => rows.groupBy(_.g).flatMap { case (g, rs) =>
+          BudgetSelectSpec.naive(ranked(rs), g.flatMap(groupBudgets(rows).get).getOrElse(0L))
+        }.toSet),
+      Op("Stats.ksDistance", (df, _, s) => Stats.ksDistance(df, "v", col("id") % 2 === 0, s),
+        _.as[(Long, Long, Long, Double)].collect().toSeq,
+        rows => {
+          val xs = rows.flatMap(r => r.v.map(v => (v, r.id % 2 == 0)))
+          val na = xs.count(_._2).toLong
+          val nb = xs.size - na
+          if (na == 0L || nb == 0L) Seq.empty else {
+            var (ca, cb, best) = (0L, 0L, 0L)
+            for (v <- xs.map(_._1).distinct.sorted) {
+              ca += xs.count(x => x._1 == v && x._2)
+              cb += xs.count(x => x._1 == v && !x._2)
+              best = math.max(best, math.abs(ca * nb - cb * na))
+            }
+            Seq((na, nb, best, best.toDouble / (na * nb).toDouble))
+          }
+        }),
+      Op("Stats.calibrateScores", (df, _, s) => Stats.calibrateScores(df, "g", "v", s),
+        _.select(col("id"), col("v_cal")).as[(Long, Double)].collect().toMap,
+        _.groupBy(_.g).flatMap { case (_, ms) =>
+          val n = ms.size
+          ms.map { r =>
+            val smaller = ms.count(o => before(o.v, r.v))
+            r.id -> (if (n == 1) 0.0 else smaller.toDouble / (n - 1).toDouble)
+          }
+        }),
+      Op("Stats.weightedQuantiles",
+        (df, _, s) => Stats.weightedQuantiles(df.withColumn("x", col("id").cast("double")),
+          "g", "x", "v", qs, s),
+        _.as[(String, Double, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap,
+        rows => ShardCalibSpec.wqModel(
+          rows.collect { case R(id, g, Some(w)) => (g.orNull, id.toDouble, w) }, qs)),
+      Op("TextAnalysis.sequencePack", (df, _, s) => TextAnalysis.sequencePack(df, "id", "text", 4, s),
+        spans, rows => packed(rows).toSet),
+      Op("TextAnalysis.groupedSequencePack",
+        (df, _, s) => TextAnalysis.groupedSequencePack(df, "id", "text", "g", 4, s),
+        spans, _.groupBy(_.g).values.flatMap(packed).toSet))
+    // AQE would coalesce the small range exchanges to one partition; the
+    // hot group must spread over the full multi-partition exchange
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      assert(spark.conf.get("spark.sql.shuffle.partitions").toInt > 1)
+      for ((input, rows) <- inputs; op <- ops) CacheScope.withScope { scope =>
+        val out = op.run(frame(rows), rows, scope)
+        if (rows.isEmpty) assert(out.count() == 0, s"${op.name}: empty input, non-empty output")
+        assert(op.read(out) == op.model(rows), s"${op.name} on $input")
+      }
+    } finally spark.conf.set(key, old)
+  }
 }

@@ -9,6 +9,7 @@ import graft.ops.{Shard, Stats}
 /** Round-5 continuation operators: size-balanced shard packing,
   * per-group score calibration, char-level Shannon entropy. */
 class ShardCalibSpec extends AnyFunSuite {
+  import ShardCalibSpec.wqModel
   private lazy val spark = Golden.spark
   import spark.implicits._
 
@@ -159,27 +160,6 @@ class ShardCalibSpec extends AnyFunSuite {
   }
 
   // ---- weightedQuantiles ----
-
-  /** Driver model: exact integer cums, min v with cum >= q*total. */
-  private def wqModel(rows: Seq[(String, Double, Long)], qs: Seq[Double])
-      : Map[(String, Double), Double] =
-    rows.filter(_._3 > 0L).groupBy(_._1).flatMap { case (g, rs) =>
-      val tally = rs.groupBy(_._2).map { case (v, vs) => (v, vs.map(_._3).sum) }
-        .toSeq.sortBy(_._1)
-      val total = tally.map(_._2).sum
-      qs.map { q =>
-        var cum = 0L
-        // integer-exact threshold compare: cum*denom >= num*total with
-        // q = num/denom from the decimal literal
-        val bd = new java.math.BigDecimal(q.toString)
-        val den = java.math.BigDecimal.TEN.pow(bd.scale()).longValueExact()
-        val num = bd.movePointRight(bd.scale()).longValueExact()
-        val v = tally.collectFirst {
-          case (v, w) if { cum += w; cum * den >= num * total } => v
-        }.get
-        (g, q) -> v
-      }
-    }
 
   test("weightedQuantiles matches the exact driver model on random grouped data") {
     val rng = new scala.util.Random(4242)
@@ -550,4 +530,28 @@ class ShardCalibSpec extends AnyFunSuite {
     assert(byFp(md5hex("e f")) == ((2L, 0, 1L)))
     assert(got.length == 3)
   }
+}
+
+object ShardCalibSpec {
+
+  /** Driver model: exact integer cums, min v with cum >= q*total. */
+  def wqModel(rows: Seq[(String, Double, Long)], qs: Seq[Double])
+      : Map[(String, Double), Double] =
+    rows.filter(_._3 > 0L).groupBy(_._1).flatMap { case (g, rs) =>
+      val tally = rs.groupBy(_._2).map { case (v, vs) => (v, vs.map(_._3).sum) }
+        .toSeq.sortBy(_._1)
+      val total = tally.map(_._2).sum
+      qs.map { q =>
+        var cum = 0L
+        // integer-exact threshold compare: cum*denom >= num*total with
+        // q = num/denom from the decimal literal
+        val bd = new java.math.BigDecimal(q.toString)
+        val den = java.math.BigDecimal.TEN.pow(bd.scale()).longValueExact()
+        val num = bd.movePointRight(bd.scale()).longValueExact()
+        val v = tally.collectFirst {
+          case (v, w) if { cum += w; cum * den >= num * total } => v
+        }.get
+        (g, q) -> v
+      }
+    }
 }
