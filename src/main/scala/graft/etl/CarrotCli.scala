@@ -32,9 +32,9 @@ import graft.GraftSession
   * count, verbatim) plus
   * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`: AQE
   * also sizes the shuffles of the queries the engine caches (the `IdAssign`
-  * range snapshots, the person dictionary, the joined targets) instead of
-  * a fixed `spark.sql.shuffle.partitions` each. On an existing session
-  * `getOrCreate` applies them to it too.
+  * range snapshots, the person dictionary, the joined person target)
+  * instead of a fixed `spark.sql.shuffle.partitions` each. On an existing
+  * session `getOrCreate` applies them to it too.
   */
 object CarrotCli {
 
@@ -101,6 +101,23 @@ object CarrotCli {
     out.result()
   }
 
+  /** The `--last-used-ids-file` TSV, `table \t last_id` per line: each
+    * table's counter resumes at last_id + 1 (S6, `person_helpers.py:16-24`).
+    * Blank lines are skipped; a malformed line fails naming the file and
+    * the line. */
+  private def readLastUsedIds(file: String): Map[String, Long] = {
+    val src = scala.io.Source.fromFile(file, "UTF-8")
+    try src.getLines().zipWithIndex.filter(_._1.nonEmpty).map { case (l, i) =>
+      val entry = l.split("\t") match {
+        case Array(table, last, _*) => last.trim.toLongOption.map(table -> _)
+        case _ => None
+      }
+      entry.getOrElse(throw new IllegalArgumentException(
+        s"$file:${i + 1}: expected 'table<TAB>last_used_id', got '$l'"))
+    }.toMap
+    finally src.close()
+  }
+
   /** Testable entry: argv + an explicit environment. */
   def run(args: Array[String], env: Map[String, String]): Unit =
     run(args, env, System.err.println(_: String))
@@ -146,13 +163,8 @@ object CarrotCli {
           "it needs to be just the name without any path or extension")
     }
 
-    val lastUsed: Map[String, Long] = argv.get("--last-used-ids-file").map { f =>
-      // TSV `table \t last_id`, counters resume at last_id + 1 (S6,
-      // person_helpers.py:16-24)
-      scala.io.Source.fromFile(f, "UTF-8").getLines().filter(_.nonEmpty).map { l =>
-        val parts = l.split("\t"); parts(0) -> parts(1).trim.toLong
-      }.toMap
-    }.getOrElse(Map.empty)
+    val lastUsed: Map[String, Long] =
+      argv.get("--last-used-ids-file").map(readLastUsedIds).getOrElse(Map.empty)
 
     val preexisting = SparkSession.getDefaultSession.isDefined
     // dense ids stay exact under AQE: IdAssign reads offsets and positions
@@ -177,7 +189,9 @@ object CarrotCli {
     val engine = new CarrotEngine(spark, schema, rules,
       Dispatch.sourceReader(spark, inputs, sep), usePids, lastUsed,
       personTable = person,
-      cacheJoined = true) // every target is consumed twice: write + summary
+      // a target without an auto-number field (person) is consumed twice,
+      // write + summary; numbered targets already read their id snapshot
+      cacheJoined = true)
 
     val write = Dispatch.outputTarget(spark, output, dirMode = outMode == "dir")
     write("person_ids", engine.personIds)

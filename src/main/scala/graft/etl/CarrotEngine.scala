@@ -13,7 +13,8 @@ import graft.ops.IdAssign
   * the rules compile into per-(source table, target table) DataFrame plan
   * branches built from literal lookup maps + explode fan-out, the person
   * dictionary becomes a broadcast inner join, and auto-numbering is a
-  * zipWithIndex dense-ID pass. All data columns stay verbatim strings.
+  * [[graft.ops.RangeScan]] dense-ID pass over the range-sorted candidate
+  * rows. All data columns stay verbatim strings.
   *
   * Dataflow per source file:
   *   read (all-string + `_row_idx`) → date normalize+filter (T1) →
@@ -34,9 +35,9 @@ final class CarrotEngine(
   import CarrotEngine._
 
   /** Lifetime of every cache this engine materializes (raw sources, the
-    * person dictionary, IdAssign positioned snapshots). One-shot processes
-    * can skip close() — JVM exit reclaims — but long-lived sessions must
-    * call it after the last action on the outputs. */
+    * person dictionary, each numbered target's IdAssign snapshot). One-shot
+    * processes can skip close() — JVM exit reclaims — but long-lived
+    * sessions must call it after the last action on the outputs. */
   private val scope = new graft.ops.CacheScope
 
   /** Unpersist all engine-held caches. The output DataFrames remain valid
@@ -135,9 +136,11 @@ final class CarrotEngine(
   private def dateColsOf(src: String): Seq[String] = rules.forSource(src).map(_.dateSource).distinct
 
   /** Per-target instrumented plan: candidates (pre component-filter, with
-    * metadata), numbered (filtered + auto-numbered), joined (left join with
-    * the person dictionary; `_matched` marks J1 hits). */
-  final case class TargetBuild(target: String, candidates: DataFrame, joined: DataFrame)
+    * metadata), joined (filtered, auto-numbered, left-joined with the
+    * person dictionary; `_matched` marks J1 hits) and the processing-order
+    * keys its rows are numbered and written in. */
+  final case class TargetBuild(target: String, candidates: DataFrame, joined: DataFrame,
+                               order: Seq[String])
 
   private lazy val builds: Map[String, TargetBuild] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -167,23 +170,36 @@ final class CarrotEngine(
   }
 
   private def buildTarget(target: String, mappings: Seq[TableMapping]): TargetBuild = {
+      // (file index, concept-mapping index, rows) per branch
       val branches = mappings.flatMap { m =>
-        if (target == "person") Seq(buildPersonBranch(m)) else buildStandardBranches(m)
+        val fileIdx = rules.sourceTables.indexOf(m.source)
+        if (target == "person") Seq((fileIdx, 0, buildPersonBranch(m, fileIdx)))
+        else buildStandardBranches(m, fileIdx).zipWithIndex.map { case (b, ci) => (fileIdx, ci, b) }
       }
-      val candidates = branches.reduce(_.unionByName(_))
+      val candidates = branches.map(_._3).reduce(_.unionByName(_))
+      // a key every branch sets to the same literal orders nothing, and the
+      // optimizer folds it out of the snapshot's sort: leave it out, so the
+      // write sorts by exactly the order the snapshot has
+      val constant = Map(FileIdx -> branches.map(_._1), CmIdx -> branches.map(_._2))
+        .collect { case (k, vs) if vs.distinct.size == 1 => k }.toSet
+      val order = OrderKeys.filterNot(constant)
       val filtered   = candidates.filter(!col(HasComp) || col(CompOk)).drop(CompOk, HasComp)
 
       // T12: dense auto-number in processing order, assigned BEFORE the person
       // join — rejected person IDs consume numbers, like the reference
-      // (`run.py:266-273` increments before the person_lookup check).
-      // the candidate rows are WIDE (every OMOP column): number a narrow
-      // key-only slice and join the ids back (broadcast when small), so the
-      // wide payload is computed once and never range-shuffled or cached
-      val numbered = schema.autoNumberField.get(target) match {
-        case Some(auto) =>
-          IdAssign.withDenseIdJoined(filtered, "_auto", lastUsedIds.getOrElse(target, 0L),
-              scope, Seq(FileIdx, RowIdx, CmIdx, ComboOut))
-            .withColumn(auto, col("_auto").cast("string"))
+      // (`run.py:266-273` increments before the person_lookup check). The
+      // wide candidate rows are numbered in place: IdAssign's range-sorted,
+      // cached snapshot is this target's one materialised copy, and J1, the
+      // `_matched` filter and the projection keep its partitioning and
+      // order, so runOrdered()'s sort by the same key plans no exchange and
+      // no sort. A SQL sink (run()) pays that one range shuffle of the wide
+      // rows too, where it needs no order.
+      val auto = schema.autoNumberField.get(target)
+      val numbered = auto match {
+        case Some(a) =>
+          IdAssign.withDenseId(filtered, "_auto", lastUsedIds.getOrElse(target, 0L),
+              scope, order.map(col): _*)
+            .withColumn(a, col("_auto").cast("string"))
             .drop("_auto")
         case None => filtered
       }
@@ -191,19 +207,16 @@ final class CarrotEngine(
       // J1: broadcast hash join replacing source person IDs (left join keeps
       // the miss path visible for metrics; result takes the inner slice)
       val pidDest = schema.personIdField.getOrElse(target, "person_id").toLowerCase
-      // no extra persist here: the dense-ID assigner materializes the
-      // numbered candidates internally, so re-deriving `joined` for a
-      // second consumer (metrics) only replays the cheap broadcast join
       val joined0 = numbered
         .join(broadcast(personLookup), numbered(pidDest) === personLookup("source_subject"), "left")
         .withColumn(Matched, col("target_subject").isNotNull)
         .withColumn(pidDest, coalesce(col("target_subject"), col(pidDest)))
-      // callers that consume every target more than once (the CLI: table
-      // write + metrics summary) opt into caching the joined relation, so
-      // the wide candidate pipeline executes exactly once per target
-      val joined = if (cacheJoined) scope.track(joined0.cache()) else joined0
+      // a target without an auto-number (person) has no snapshot: callers
+      // that consume it twice (the CLI: table write + metrics summary) opt
+      // into caching the joined relation, so its wide pipeline runs once
+      val joined = if (cacheJoined && auto.isEmpty) scope.track(joined0.cache()) else joined0
 
-      TargetBuild(target, candidates, joined)
+      TargetBuild(target, candidates, joined, order)
   }
 
   /** All target tables this rules file populates, each as an OMOP-shaped
@@ -214,11 +227,12 @@ final class CarrotEngine(
   }
 
   /** Like run(), but rows globally ordered by processing order — byte-exact
-    * single-file fidelity with the reference's sequential writer. Costs a
-    * global sort; use run() + TsvSink.writeDir at scale. */
+    * single-file fidelity with the reference's sequential writer. A numbered
+    * target already sits in that order in its id snapshot, so its sort
+    * plans away; the person target pays a global sort. */
   def runOrdered(): Map[String, DataFrame] = builds.map { case (target, b) =>
     target -> b.joined.filter(col(Matched))
-      .orderBy(col(FileIdx), col(RowIdx), col(CmIdx), col(ComboOut))
+      .orderBy(b.order.map(col): _*)
       .select(schema.columns(target).map(c => col(c.toLowerCase)): _*)
   }
 
@@ -243,9 +257,8 @@ final class CarrotEngine(
 
   /** One branch per concept-mapped source field (T13 column pruning is
     * implicit: only referenced columns appear, Catalyst prunes the scan). */
-  private def buildStandardBranches(m: TableMapping): Seq[DataFrame] = {
+  private def buildStandardBranches(m: TableMapping, fileIdx: Int): Seq[DataFrame] = {
     val src = prepared(m.source)
-    val fileIdx = rules.sourceTables.indexOf(m.source)
 
     m.conceptMappings.zipWithIndex.map { case (cm, ci) =>
       val (known, fallback) = cm.effectiveCombos(rules.v1Compat)
@@ -284,8 +297,7 @@ final class CarrotEngine(
     * row (reference `record_builder.py:199-292` / `core.py:78-96`), with
     * first-row-wins dedupe per source ID in v2 (D1: the row claims the slot
     * even if it yields no record) and NO cross-row dedupe in v1 (D2). */
-  private def buildPersonBranch(m: TableMapping): DataFrame = {
-    val fileIdx = rules.sourceTables.indexOf(m.source)
+  private def buildPersonBranch(m: TableMapping, fileIdx: Int): DataFrame = {
     val base0 = prepared(m.source)
 
     val base =
@@ -448,4 +460,8 @@ object CarrotEngine {
   val SrcCol     = "_src"
   val DatacolCol = "_datacol"
   val Matched    = "_matched"
+
+  /** Processing order, the reference's sequential emit order: the unique
+    * key auto-numbering and the ordered write sort by. */
+  val OrderKeys: Seq[String] = Seq(FileIdx, RowIdx, CmIdx, ComboOut)
 }

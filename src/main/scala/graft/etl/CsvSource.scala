@@ -14,9 +14,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    absent cells become the empty string, matching the reference's
   *    `list[str]` rows (`tools/sources.py:49`).
   *
-  * Adds `_row_idx` (0-based position in file order) via `zipWithIndex`, which
-  * preserves file order across partitions without a global sort — the
-  * processing-order anchor for auto-numbering and first-wins dedupe.
+  * Adds `_row_idx`, a key that rises in file order, via
+  * `monotonically_increasing_id` ([[withRowIdx]]) — the processing-order
+  * anchor for auto-numbering and first-wins dedupe.
   */
 object CsvSource {
 
