@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{CacheScope, Cluster, Corpus, Dedup, Multimodal, Pipeline, Shard, TextAnalysis}
+import graft.ops.{CacheScope, Cluster, Corpus, Dedup, Multimodal, Pipeline, Shard, StandingStore, TextAnalysis}
 
 /** CLI front door for the curation surface — the reference is a CLI tool
   * end-to-end (`cli/command.py:9-21`, which fronts the ETL the same way
@@ -243,12 +243,12 @@ import graft.ops.{CacheScope, Cluster, Corpus, Dedup, Multimodal, Pipeline, Shar
   *             rebuild/refound loop
   *   forget  — right-to-be-forgotten deletions against ANY standing
   *             store (`--store`): the ids in `--in` are appended to the
-  *             store's tombstone sidecar ([[graft.ops.Tombstones]] —
-  *             O(ids), history untouched); loads subtract them, the
-  *             next `compact` applies them physically. The store layout
-  *             (snapshot / neardup / embeddup / ivfpq) is detected from
-  *             its tables, so a typo'd path fails loudly instead of
-  *             founding a stray sidecar
+  *             store's tombstone sidecar ([[graft.ops.StandingStore]]
+  *             — O(ids), history untouched); loads subtract them, the
+  *             next `compact` applies them physically. The store family
+  *             (snapshot / neardup / embeddup / ivfpq / phash / frames)
+  *             is detected from its tables, so a typo'd path fails
+  *             loudly instead of founding a stray sidecar
   *   compact — offline store maintenance (`--store`, same layout
   *             detection): rewrite per-batch append deltas into
   *             ~128 MB files with pending tombstones applied and
@@ -384,60 +384,18 @@ object CurateCli {
     CommandOptions.getOrElse(command, throw new IllegalArgumentException(
       s"unknown command '$command' (expected ${CommandOptions.keys.toSeq.sorted.mkString(", ")})"))
 
-  /** Strict `--key value` argv parse (the [[graft.etl.CarrotCli]]
-    * discipline: unknown flags and dangling values error loudly),
-    * validated against the COMMAND's own option set. */
-  private def parseArgv(args: Array[String],
-                        KnownOptions: Set[String]): Map[String, String] = {
-    val out = Map.newBuilder[String, String]
-    var i = 0
-    while (i < args.length) {
-      val tok = args(i)
-      if (!tok.startsWith("--"))
-        throw new IllegalArgumentException(s"unexpected positional argument '$tok'")
-      val eq = tok.indexOf('=')
-      if (eq >= 0) {
-        val k = tok.substring(0, eq)
-        if (!KnownOptions.contains(k))
-          throw new IllegalArgumentException(s"unknown option $k")
-        out += k -> tok.substring(eq + 1)
-        i += 1
-      } else {
-        if (!KnownOptions.contains(tok))
-          throw new IllegalArgumentException(s"unknown option $tok")
-        if (i + 1 >= args.length || KnownOptions.contains(args(i + 1)))
-          throw new IllegalArgumentException(s"option $tok requires a value")
-        out += tok -> args(i + 1)
-        i += 2
-      }
-    }
-    out.result()
-  }
-
-  /** A snapshot store "exists" for the probe iff it holds non-hidden
-    * parquet content — a dir created by a sidecar write alone has no
-    * inferable schema. */
-  private def snapshotHasData(fs: org.apache.hadoop.fs.FileSystem,
-                              snapDir: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(snapDir)
-    fs.exists(root) && fs.listStatus(root).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
   /** `--bloom Y` founds the snapshot store's Bloom sidecar if absent
     * (capacity `--bloom-capacity`, a FOUNDING constant — the
     * stored-params-win discipline; sketches of mismatched sizing cannot
     * merge); `N`/absent never removes one, and an existing sidecar is
     * probed and maintained regardless of the flag. */
   private def maybeFoundBloom(spark: SparkSession, snapDir: String,
-                              argv: Map[String, String]): Unit =
+                              argv: Map[String, String], idCol: String): Unit =
     argv.getOrElse("--bloom", "N") match {
       case "Y" =>
         if (graft.ops.Dedup.snapshotBloomParams(spark, snapDir).isEmpty)
           graft.ops.Dedup.foundSnapshotBloom(spark, snapDir,
-            argv.getOrElse("--bloom-capacity", "1000000").toLong)
+            argv.getOrElse("--bloom-capacity", "1000000").toLong, idCol = idCol)
       case "N" =>
       case other => throw new IllegalArgumentException(
         s"--bloom must be Y or N, got '$other'")
@@ -445,12 +403,12 @@ object CurateCli {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: CurateCli <clean|curate|refine|audit|dedup|ingest|neardup|embeddup|annindex|annsearch|anneval|split|diversity|dividend|labelaudit|pii|manifest|profile|overlap|bpe|tokenize|card|quality|drift|sample|select|stats|occupancy|forget|compact> --in PATH --out PATH [options]")
-    run(args.head, parseArgv(args.tail, optionsFor(args.head)))
+    run(args.head, Argv.parse(args.tail, optionsFor(args.head)))
   }
 
   /** Testable entry: command + parsed options against the current (or a
     * fresh) session. Re-validates keys against the command's option set
-    * (specs call this directly, bypassing [[parseArgv]]). */
+    * (specs call this directly, bypassing [[Argv.parse]]). */
   def run(command: String, argv: Map[String, String]): Unit = {
     val stray = argv.keySet -- optionsFor(command)
     if (stray.nonEmpty)
@@ -486,26 +444,6 @@ object CurateCli {
     // actually requires it
     lazy val in = read(req("--in"))
     lazy val out = req("--out")
-
-    // store-layout detection for forget/compact: each standing store is
-    // identified by the table only IT has; the flat fingerprint-snapshot
-    // dir (the `dedup` loop's) is the fallback, gated on existence so a
-    // typo'd path fails loudly instead of founding a stray sidecar
-    def storeKind(store: String): String = {
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def has(child: String) =
-        fs.exists(new org.apache.hadoop.fs.Path(s"$store/$child"))
-      if (has("shingles")) "neardup"
-      else if (has("buckets")) "embeddup"
-      else if (has("coded")) "ivfpq"
-      else if (has("pbands")) "phash"
-      else if (has("fbands")) "frames"
-      else if (fs.exists(new org.apache.hadoop.fs.Path(store))) "snapshot"
-      else throw new IllegalArgumentException(
-        s"no standing store at '$store' (expected a neardup/embeddup/ivfpq/" +
-          "phash/frames index dir or a fingerprint-snapshot dir)")
-    }
 
     CacheScope.withScope { scope =>
       command match {
@@ -573,7 +511,7 @@ object CurateCli {
           import spark.implicits._
           // a mutating default gated on one exact string is a footgun:
           // "n"/"no"/"false" must not silently fall through to APPEND —
-          // validate against the explicit Y/N set (parseArgv's fail-loud
+          // validate against the explicit Y/N set (Argv.parse's fail-loud
           // discipline) BEFORE any work touches the standing snapshot
           val updateSnapshot = argv.getOrElse("--update-snapshot", "Y") match {
             case "Y" => true
@@ -582,8 +520,6 @@ object CurateCli {
               s"--update-snapshot must be Y or N, got '$other'")
           }
           val snapDir = req("--snapshot")
-          val fs = new org.apache.hadoop.fs.Path(snapDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
           // `--normalize Y` keys the whole loop on NORMALIZED fingerprints
           // (md5 of normalizeForDedup text, q161): punctuation/counter
           // variants of the same boilerplate dedup at exact cost. The
@@ -603,7 +539,7 @@ object CurateCli {
                 s"snapshot at '$snapDir' is keyed on $stored fingerprints; " +
                   s"--normalize ${if (normalize) "Y" else "N"} disagrees")
             case None =>
-              if (snapshotHasData(fs, snapDir) && normalize)
+              if (StandingStore.founded(spark, snapDir) && normalize)
                 throw new IllegalArgumentException(
                   s"snapshot at '$snapDir' predates the fingerprint-kind " +
                     "marker and is keyed on raw fingerprints; --normalize Y " +
@@ -629,15 +565,15 @@ object CurateCli {
           // probe-only `--bloom Y` founding run leaves a store holding
           // only the `_bloom` sidecar, which has no inferable schema
           val snapshot =
-            if (snapshotHasData(fs, snapDir))
-              Dedup.snapshotLive(spark, snapDir, idCol).select(col("fp"))
+            if (StandingStore.founded(spark, snapDir))
+              Dedup.snapshotLive(spark, snapDir, idCol, scope).select(col("fp"))
             else Seq.empty[String].toDF("fp")
           // `--bloom Y` FOUNDS the Bloom sidecar (q141 path) if absent —
           // seeded from the snapshot's current live rows; once a sidecar
           // exists, probes use it and appends maintain it regardless of
           // the flag (an unmaintained sketch would grow false NEGATIVES,
           // which turn duplicates into `kept`)
-          maybeFoundBloom(spark, snapDir, argv)
+          maybeFoundBloom(spark, snapDir, argv, idCol)
           val bloom = Dedup.loadSnapshotBloom(spark, snapDir)
           val verdicts = scope.track(
             Dedup.incrementalDedupSnapshot(keyed, idCol, textCol, snapshot,
@@ -695,16 +631,15 @@ object CurateCli {
               "--ledger/--hist/--sample require --batch-id (ledgers are " +
                 "keyed per ingest batch)")).toLong
           }
-          val fs = new org.apache.hadoop.fs.Path(snapDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
           // presence = non-hidden content, not bare dir existence: a
           // probe-only `--bloom Y` founding run leaves a store holding
           // only the `_bloom` sidecar, which has no inferable schema
+          val snapHasData = StandingStore.founded(spark, snapDir)
           val snapshot =
-            if (snapshotHasData(fs, snapDir))
-              Dedup.snapshotLive(spark, snapDir, idCol).select(col("fp"))
+            if (snapHasData)
+              Dedup.snapshotLive(spark, snapDir, idCol, scope).select(col("fp"))
             else Seq.empty[String].toDF("fp")
-          val haveIdx = fs.exists(new org.apache.hadoop.fs.Path(s"$idxDir/params"))
+          val haveIdx = StandingStore.founded(spark, idxDir)
           // `--normalize Y`: content identity for BOTH rungs (exact fp
           // and near-dup shingles) is the q161 canonical form. The kind
           // is a FOUNDING constant of EACH store (the `dedup` command's
@@ -720,7 +655,7 @@ object CurateCli {
           }
           val ingKind = if (ingNorm) "normalized" else "raw"
           for ((dir, hasData) <- Seq(
-              snapDir -> snapshotHasData(fs, snapDir), idxDir -> haveIdx))
+              snapDir -> snapHasData, idxDir -> haveIdx))
             Dedup.snapshotFpKind(spark, dir) match {
               case Some(stored) =>
                 if (stored != ingKind) throw new IllegalArgumentException(
@@ -742,7 +677,7 @@ object CurateCli {
           // presence drives probe + maintenance (loadSnapshotBloom gives
           // driver-side BYTES, so the prefilter is immune to the
           // write-back cache invalidation below)
-          maybeFoundBloom(spark, snapDir, argv)
+          maybeFoundBloom(spark, snapDir, argv, idCol)
           val bloom = Dedup.loadSnapshotBloom(spark, snapDir)
           val lowQ =
             if (!qualityOn) None
@@ -860,9 +795,7 @@ object CurateCli {
           }
           val idxDir = req("--index")
           val minJ = argv.getOrElse("--min-jaccard", "0.2").toDouble
-          val fs = new org.apache.hadoop.fs.Path(idxDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val ndHaveIdx = fs.exists(new org.apache.hadoop.fs.Path(s"$idxDir/params"))
+          val ndHaveIdx = StandingStore.founded(spark, idxDir)
           // content-identity marker, shared with `dedup`/`ingest`: an
           // index keyed on normalized shingles must not be probed with
           // raw text (or vice versa) — stored kind wins, disagreement
@@ -951,9 +884,7 @@ object CurateCli {
             case other => throw new IllegalArgumentException(
               s"--multiprobe must be Y or N, got '$other'")
           }
-          val fs = new org.apache.hadoop.fs.Path(idxDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(new org.apache.hadoop.fs.Path(s"$idxDir/params"))) {
+          if (StandingStore.founded(spark, idxDir)) {
             val idx = graft.ops.Similarity.loadEmbedIndex(spark, idxDir, scope)
             for ((flag, stored) <- Seq("--dim" -> idx.dim, "--planes" -> idx.nPlanes);
                 stated <- argv.get(flag))
@@ -1000,8 +931,6 @@ object CurateCli {
             case other => throw new IllegalArgumentException(
               s"$flag must be Y or N, got '$other'")
           }
-          val fs = new org.apache.hadoop.fs.Path(idxDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
           if (yn("--refound", "N")) {
             // drift remediation (the ivfPqIndexStats signal): retrain
             // geometry from --in as the CURRENT full corpus and swap the
@@ -1013,12 +942,12 @@ object CurateCli {
                   "kept; the cell count re-derives from the corpus size)")
             graft.ops.Similarity.refoundIvfPqIndex(spark, idxDir, in, aidCol,
               vecCol, scope = scope)
-          } else if (fs.exists(new org.apache.hadoop.fs.Path(s"$idxDir/params"))) {
+          } else if (StandingStore.founded(spark, idxDir)) {
             // geometry lives in the stored index; a restated value that
             // DISAGREES fails loudly (the neardup/embeddup discipline —
             // the append would otherwise encode under stored params the
             // caller didn't state)
-            val p = spark.read.parquet(s"$idxDir/params").head()
+            val p = StandingStore.params(spark, idxDir)
             for (stated <- argv.get("--dim"); stored = p.getAs[Int]("dim");
                  if stated.toInt != stored)
               throw new IllegalArgumentException(
@@ -1374,9 +1303,7 @@ object CurateCli {
           val giUpd = myn("--update-index", "Y")
           val giAudio = myn("--audio", "N")
           val giMaxDist = argv.getOrElse("--max-dist", "6").toInt
-          val giFs = new org.apache.hadoop.fs.Path(giDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val giExists = giFs.exists(new org.apache.hadoop.fs.Path(s"$giDir/params"))
+          val giExists = StandingStore.founded(spark, giDir)
           if (!giExists && !giUpd) throw new IllegalArgumentException(
             s"--index $giDir does not exist and --update-index N founds " +
               "nothing: nothing to probe, nothing would be built — check " +
@@ -1658,9 +1585,7 @@ object CurateCli {
             // Hamming-1 neighbors, batch-side only — a per-probe choice,
             // deliberately NOT a founding constant
             val fMulti = fyn("--multiprobe", "N")
-            val fs = new org.apache.hadoop.fs.Path(idxDir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(new org.apache.hadoop.fs.Path(s"$idxDir/params"))) {
+            if (StandingStore.founded(spark, idxDir)) {
               val idx = Multimodal.loadFrameIndex(spark, idxDir, scope)
               for (stated <- argv.get("--decoder"))
                 if (stated != idx.decoder) throw new IllegalArgumentException(
@@ -1825,9 +1750,7 @@ object CurateCli {
               }
               val update = yn("--update-index")
               val multi = yn("--multiprobe")
-              val fs = new org.apache.hadoop.fs.Path(idxDir)
-                .getFileSystem(spark.sparkContext.hadoopConfiguration)
-              if (fs.exists(new org.apache.hadoop.fs.Path(s"$idxDir/params"))) {
+              if (StandingStore.founded(spark, idxDir)) {
                 val idx = Multimodal.loadPHashIndex(spark, idxDir, scope)
                 for (stated <- argv.get("--bands"))
                   if (stated.toInt != idx.nBands)
@@ -2209,22 +2132,15 @@ object CurateCli {
           val store = req("--store")
           val fsys = new org.apache.hadoop.fs.Path(store)
             .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          def has(child: String) =
-            fsys.exists(new org.apache.hadoop.fs.Path(s"$store/$child"))
-          def children() =
-            fsys.listStatus(new org.apache.hadoop.fs.Path(store))
-              .map(_.getPath.getName).toSeq
+          val index = StandingStore.kindOf(spark, store)
+            .filter(_ != StandingStore.Snapshot)
           val batchDirs =
             if (fsys.exists(new org.apache.hadoop.fs.Path(store)))
-              children().filter(_.startsWith("batch=")).sorted
+              fsys.listStatus(new org.apache.hadoop.fs.Path(store))
+                .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
             else Seq.empty
-          val kind =
-            if (has("shingles")) "neardup"
-            else if (has("buckets")) "embeddup"
-            else if (has("coded")) "ivfpq"
-            else if (has("pbands")) "phash"
-            else if (has("fbands")) "frames"
-            else if (batchDirs.nonEmpty) {
+          val kind = index.map(_.kind).getOrElse {
+            if (batchDirs.nonEmpty) {
               val cols = spark.read.parquet(s"$store/${batchDirs.head}")
                 .columns.toSet
               if (cols.contains("sketch")) "cardledger"
@@ -2232,22 +2148,14 @@ object CurateCli {
               else if (cols.contains("payload")) "sampleledger"
               else throw new IllegalArgumentException(
                 s"unrecognized ledger schema at '$store/${batchDirs.head}': $cols")
-            } else if (snapshotHasData(fsys, store)) "snapshot"
+            } else if (StandingStore.founded(spark, store)) "snapshot"
             else throw new IllegalArgumentException(
               s"no standing store at '$store'")
-          val mainTable = kind match {
-            case "neardup"  => s"$store/shingles"
-            case "embeddup" => s"$store/buckets"
-            case "ivfpq"    => s"$store/coded"
-            case "phash"    => s"$store/pbands"
-            case "frames"   => s"$store/fbands"
-            case _          => store // flat snapshot / ledger batch dirs
           }
-          val nRows = spark.read.parquet(mainTable).count()
-          val nTombs =
-            if (has("_tombstones"))
-              spark.read.parquet(s"$store/_tombstones").count()
-            else 0L
+          // an index's marker table; the flat snapshot / ledger batch dirs
+          val nRows = spark.read.parquet(index.fold(store)(f =>
+            StandingStore.tableDir(store, f.tables.head))).count()
+          val nTombs = StandingStore.pending(spark, store).fold(0L)(_.count())
           val horizonOpt = {
             val p = new org.apache.hadoop.fs.Path(s"$store/_horizon")
             if (fsys.exists(p)) {
@@ -2266,8 +2174,8 @@ object CurateCli {
                   .split("\n").map(_.trim).mkString(" "))
                 finally s2.close()
               } else None
-            case "neardup" | "embeddup" | "ivfpq" | "phash" | "frames" =>
-              val row = spark.read.parquet(s"$store/params").head()
+            case _ if index.nonEmpty =>
+              val row = StandingStore.params(spark, store)
               Some(row.schema.fieldNames.zipWithIndex
                 .map { case (f, i) => s"$f=${row.get(i)}" }.mkString(" "))
             // the snapshot's founding param is its fingerprint kind
@@ -2278,7 +2186,7 @@ object CurateCli {
           }
           write(Seq((store, kind, nRows, batchDirs.size.toLong, nTombs,
               horizonOpt, paramsStr,
-              if (has("_bloom")) "Y" else "N"))
+              if (Dedup.snapshotBloomParams(spark, store).isDefined) "Y" else "N"))
             .toDF("store", "kind", "n_rows", "n_batches", "n_tombstones",
               "horizon", "params", "bloom"), out)
 
@@ -2289,96 +2197,53 @@ object CurateCli {
           // the stored tables, no index struct rebuilt. Drift shows as
           // mass moving toward hot cells/buckets; the remediation is the
           // family's rebuild/refound loop
-          import spark.implicits._
           val store = req("--store")
+          val fam = StandingStore.familyAt(spark, store)
+          val perceptual = fam == StandingStore.PHash || fam == StandingStore.Frames
           for (o <- Seq("--advice", "--hot-bucket"); _ <- argv.get(o))
-            if (storeKind(store) != "phash" && storeKind(store) != "frames")
+            if (!perceptual)
               throw new IllegalArgumentException(
                 s"$o applies to the perceptual stores (phash/frames) — the " +
                   "other families' remediation is the rebuild/refound loop")
-          storeKind(store) match {
-            case "ivfpq" =>
-              write(graft.ops.Similarity.ivfPqIndexStats(
-                graft.ops.Similarity.loadIvfPqIndex(spark, store, scope)), out)
-            case "neardup" =>
-              write(spark.read.parquet(s"$store/bands")
-                .groupBy(col("_bucket")).agg(count(lit(1)).as("_sz"))
-                .groupBy(col("_sz")).agg(count(lit(1)).as("n_buckets"))
-                .select(col("_sz").as("bucket_size"), col("n_buckets")), out)
-            case "embeddup" =>
-              write(spark.read.parquet(s"$store/buckets")
-                .groupBy(col("_bucket")).agg(count(lit(1)).as("_sz"))
-                .groupBy(col("_sz")).agg(count(lit(1)).as("n_buckets"))
-                .select(col("_sz").as("bucket_size"), col("n_buckets")), out)
-            case "frames" =>
-              val wantFAdvice = argv.getOrElse("--advice", "N") match {
-                case "Y" => true
-                case "N" => false
-                case other => throw new IllegalArgumentException(
-                  s"--advice must be Y or N, got '$other'")
-              }
-              if (wantFAdvice)
-                write(Multimodal.frameIndexAdvice(
-                  Multimodal.loadFrameIndex(spark, store, scope),
-                  argv.getOrElse("--hot-bucket", "64").toInt), out)
-              else write(spark.read.parquet(s"$store/fbands")
-                .groupBy(col("_fi"), col("_b"), col("_v"))
-                .agg(count(lit(1)).as("_sz"))
-                .groupBy(col("_sz")).agg(count(lit(1)).as("n_buckets"))
-                .select(col("_sz").as("bucket_size"), col("n_buckets")), out)
-            case "phash" =>
-              // `--advice Y`: the diagnose half of the q136 loop — one
-              // row naming the remediation (ok | cap_probes |
-              // tombstone_flood) against `--hot-bucket` (default 64);
-              // 'cap_probes' answers with `phashdup --index
-              // --max-per-bucket`, 'tombstone_flood' with forget+compact
-              val wantAdvice = argv.getOrElse("--advice", "N") match {
-                case "Y" => true
-                case "N" => false
-                case other => throw new IllegalArgumentException(
-                  s"--advice must be Y or N, got '$other'")
-              }
-              if (wantAdvice)
-                write(Multimodal.pHashIndexAdvice(
-                  Multimodal.loadPHashIndex(spark, store, scope),
-                  argv.getOrElse("--hot-bucket", "64").toInt), out)
-              else write(spark.read.parquet(s"$store/pbands")
-                .groupBy(col("_b"), col("_v")).agg(count(lit(1)).as("_sz"))
-                .groupBy(col("_sz")).agg(count(lit(1)).as("n_buckets"))
-                .select(col("_sz").as("bucket_size"), col("n_buckets")), out)
+          // `--advice Y` (phash/frames): the diagnose half of the q136
+          // loop — one row naming the remediation (ok | cap_probes |
+          // tombstone_flood) against `--hot-bucket` (default 64);
+          // 'cap_probes' answers with `phashdup --index
+          // --max-per-bucket`, 'tombstone_flood' with forget+compact
+          val wantAdvice = argv.getOrElse("--advice", "N") match {
+            case "Y" => true
+            case "N" => false
             case other => throw new IllegalArgumentException(
-              s"occupancy reads index stores (neardup/embeddup/ivfpq/phash/frames), " +
-                s"not '$other' — the snapshot and ledgers have no buckets")
+              s"--advice must be Y or N, got '$other'")
           }
+          val hot = argv.getOrElse("--hot-bucket", "64").toInt
+          if (fam == StandingStore.IvfPq)
+            write(graft.ops.Similarity.ivfPqIndexStats(
+              graft.ops.Similarity.loadIvfPqIndex(spark, store, scope)), out)
+          else if (wantAdvice && fam == StandingStore.PHash)
+            write(Multimodal.pHashIndexAdvice(
+              Multimodal.loadPHashIndex(spark, store, scope), hot), out)
+          else if (wantAdvice)
+            write(Multimodal.frameIndexAdvice(
+              Multimodal.loadFrameIndex(spark, store, scope), hot), out)
+          else if (fam.bucketKeys.nonEmpty)
+            write(StandingStore.bucketSizes(spark.read.parquet(
+              StandingStore.tableDir(store, fam.tables.last)), fam.bucketKeys: _*), out)
+          else throw new IllegalArgumentException(
+            s"occupancy reads index stores (neardup/embeddup/ivfpq/phash/frames), " +
+              s"not '${fam.kind}' — the snapshot and ledgers have no buckets")
 
         case "forget" =>
           // deletion is by ID against any standing store; `--in` is the
           // id list. The id column defaults per store family (the vector
           // stores key on vec_id) unless stated
           val store = req("--store")
-          val kind = storeKind(store)
-          val fidCol = argv.getOrElse("--id-col",
-            if (kind == "embeddup" || kind == "ivfpq") "vec_id" else "doc_id")
-          kind match {
-            case "neardup"  => Dedup.tombstoneNearDupIndex(spark, store, in, fidCol)
-            case "embeddup" => graft.ops.Similarity.tombstoneEmbedIndex(spark, store, in, fidCol)
-            case "ivfpq"    => graft.ops.Similarity.tombstoneIvfPqIndex(spark, store, in, fidCol)
-            case "phash"    => Multimodal.tombstonePHashIndex(spark, store, in, fidCol)
-            case "frames"   => Multimodal.tombstoneFrameIndex(spark, store, in, fidCol)
-            case _          => Dedup.tombstoneSnapshot(spark, store, in, fidCol)
-          }
+          val fam = StandingStore.familyAt(spark, store)
+          StandingStore.tombstone(spark, store, in,
+            argv.getOrElse("--id-col", fam.cliIdCol))
 
         case "compact" =>
-          val store = req("--store")
-          storeKind(store) match {
-            case "neardup"  => Dedup.compactNearDupIndex(spark, store)
-            case "embeddup" => graft.ops.Similarity.compactEmbedIndex(spark, store)
-            case "ivfpq"    => graft.ops.Similarity.compactIvfPqIndex(spark, store)
-            case "phash"    => Multimodal.compactPHashIndex(spark, store)
-            case "frames"   => Multimodal.compactFrameIndex(spark, store)
-            case _          => Dedup.compactSnapshot(spark, store,
-              argv.getOrElse("--id-col", "doc_id"))
-          }
+          StandingStore.compact(spark, req("--store"), argv.get("--id-col"))
 
         case other => throw new IllegalStateException(s"unreachable: $other")
       }

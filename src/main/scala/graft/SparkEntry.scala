@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{DateExprs, DateNorm}
-import graft.ops.{BudgetSelect, Cluster, Corpus, Dedup, HistLedger, IdAssign, Layout, Multimodal, Pipeline, SampleLedger, Scrub, Sessionize, Shard, Similarity, Stats, TextAnalysis}
+import graft.ops.{BudgetSelect, Cluster, Corpus, Dedup, HistLedger, IdAssign, Layout, Multimodal, Pipeline, SampleLedger, Scrub, Sessionize, Shard, Similarity, StandingStore, Stats, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -1771,9 +1771,9 @@ object SparkEntry {
 
     // ---- Tombstoned standing-index search (round-9): q133's index
     //      with ids {vec_id % 7 = 0, vec_id >= 20} DELETED (the
-    //      right-to-be-forgotten path — dropFromIvfPqIndex is the
-    //      in-memory twin of the tombstones/ sidecar, equivalence
-    //      spec-pinned in StandingIndexSpec). Deletion removes CODED
+    //      right-to-be-forgotten path — StandingStore.without on the
+    //      coded table is the in-memory twin of the tombstone sidecar,
+    //      equivalence spec-pinned in StandingIndexSpec). Deletion removes CODED
     //      rows only — centroids/codebook are corpus-independent — so
     //      the oracle is q67's SQL with one more candidate filter.
     //      The deleted set dodges ids 8..15 (the deterministic
@@ -1784,7 +1784,8 @@ object SparkEntry {
       val idx = ivfPqIdx(s, dir, residual = false)
       val gone = emb.filter(col("vec_id") % 7 === 0 && col("vec_id") >= 20)
         .select(col("vec_id"))
-      Similarity.ivfPqTopKWith(Similarity.dropFromIvfPqIndex(idx, gone, "vec_id"),
+      Similarity.ivfPqTopKWith(
+          idx.copy(coded = StandingStore.without(idx.coded, "_id", gone)),
           emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           nProbe = 2, topK = 5)
         .select(col("query_id"), col("vec_id"), round(col("adist"), 4).as("adist"))
@@ -2165,14 +2166,14 @@ object SparkEntry {
     //      store. Candidate cost is quadratic in a bucket's size, so
     //      drift shows as mass moving toward large sizes ----
     "q169_neardup_occupancy" -> ((s, dir) =>
-      Dedup.nearDupIndexStats(Dedup.buildNearDupIndex(
+      StandingStore.bucketSizes(Dedup.buildNearDupIndex(
         tbl(s, dir, "documents"), "doc_id", "text",
-        k = 4, rowsPerBand = 2, n = 5))),
+        k = 4, rowsPerBand = 2, n = 5).bandFrame, "_bucket")),
 
     "q170_embed_occupancy" -> ((s, dir) =>
-      Similarity.embedIndexStats(Similarity.buildEmbedIndex(
+      StandingStore.bucketSizes(Similarity.buildEmbedIndex(
         tbl(s, dir, "embeddings"), "vec_id", "embedding",
-        dim = 64, nPlanes = 4))),
+        dim = 64, nPlanes = 4).bucketed, "_bucket")),
 
     // ---- Semantic dedup census (round-9): q147's threshold decision
     //      table on the EMBEDDING side — q42's LSH pairs generated once
@@ -2557,7 +2558,7 @@ object SparkEntry {
     //      bucket-size histogram for the THIRD index family — the
     //      drift signal that decides the phash probe cap ----
     "q195_phash_occupancy" -> ((s, dir) =>
-      Multimodal.pHashIndexStats(phashIdx(s, dir))),
+      StandingStore.bucketSizes(phashIdx(s, dir).banded, "_b", "_v")),
 
     // ---- Perceptual store advice row (round-12): the diagnose half
     //      of the q136 loop — hot-bucket census against a threshold

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.SparkSession
 
-import graft.GraftSession
+import graft.{Argv, GraftSession}
 
 /** CLI entry point mirroring the reference's `carrot-transform run` surface
   * (`tools/args.py:340-395`, `cli/subcommands/run.py:28-60`): rules file +
@@ -59,48 +59,6 @@ object CarrotCli {
     "--last-used-ids-file", "--log-file-threshold", "--sep", "--v2",
     "--output-mode")
 
-  /** Strict `--key value` argv parse: unknown flags, stray positionals and
-    * flags without a value ERROR instead of silently re-pairing everything
-    * after them (the old sliding(2,2) failure mode). Values are validated
-    * only at the KEY position, so non-word dash values (a `--sep` of "--")
-    * stay representable bare; flag-SHAPED bare values (`--\w…`) are
-    * rejected as probable typo'd options and must use the `--key=value`
-    * escape hatch. */
-  private def parseArgv(args: Array[String]): Map[String, String] = {
-    val out = Map.newBuilder[String, String]
-    var i = 0
-    while (i < args.length) {
-      val tok = args(i)
-      if (!tok.startsWith("--"))
-        throw new IllegalArgumentException(s"unexpected positional argument '$tok'")
-      val eq = tok.indexOf('=')
-      if (eq >= 0) {
-        val k = tok.substring(0, eq)
-        if (!KnownOptions.contains(k))
-          throw new IllegalArgumentException(s"unknown option $k")
-        out += k -> tok.substring(eq + 1)
-        i += 1
-      } else {
-        if (!KnownOptions.contains(tok))
-          throw new IllegalArgumentException(s"unknown option $tok")
-        if (i + 1 >= args.length || KnownOptions.contains(args(i + 1)))
-          throw new IllegalArgumentException(s"option $tok requires a value")
-        // a bare next-token shaped like a flag is almost always a typo'd
-        // option, not a value ("--person --persn" would silently pass the
-        // literal "--persn" as the person id). Flag-shaped VALUES stay
-        // representable through the --key=value escape hatch; non-word
-        // dash strings (a --sep of "--") are still accepted bare.
-        if (args(i + 1).matches("^--\\w.*"))
-          throw new IllegalArgumentException(
-            s"option $tok got flag-like value '${args(i + 1)}'; " +
-              s"use $tok=${args(i + 1)} if that value is intended")
-        out += tok -> args(i + 1)
-        i += 2
-      }
-    }
-    out.result()
-  }
-
   /** The `--last-used-ids-file` TSV, `table \t last_id` per line: each
     * table's counter resumes at last_id + 1 (S6, `person_helpers.py:16-24`).
     * Blank lines are skipped; a malformed line fails naming the file and
@@ -129,7 +87,7 @@ object CarrotCli {
   def run(args: Array[String], env: Map[String, String],
           log: String => Unit): Unit = {
     val startNanos = System.nanoTime()
-    val argv = parseArgv(args)
+    val argv = Argv.parse(args, KnownOptions)
     def opt(k: String): Option[String] = argv.get(k).orElse(EnvNames.get(k).flatMap(env.get))
     def req(k: String): String = opt(k).getOrElse(sys.error(s"missing required option $k"))
 

@@ -968,60 +968,23 @@ object Dedup {
 
   /** Live rows of a standing fingerprint-snapshot DIR — the flat
     * (id, fp) parquet table the [[incrementalDedupSnapshot]] loop (the
-    * CurateCli `dedup` command) appends, with pending
-    * [[tombstoneSnapshot]] deletions subtracted (one broadcast
-    * anti-join on the id — the snapshot never shuffles). The sidecar is
-    * the hidden `_tombstones` child ([[graft.ops.Tombstones]]), so a
-    * plain `spark.read.parquet(snapDir)` reader still sees exactly the
-    * appended rows — this accessor is the one that honors deletions. */
+    * CurateCli `dedup` command) appends, with pending deletions
+    * subtracted and cached in `scope` ([[StandingStore.live]]). A plain
+    * `spark.read.parquet(snapDir)` reader still sees exactly the appended
+    * rows — this accessor is the one that honors deletions. */
   def snapshotLive(spark: org.apache.spark.sql.SparkSession, snapDir: String,
-                   idCol: String = "doc_id"): DataFrame =
-    Tombstones.applyTo(spark, snapDir, spark.read.parquet(snapDir), idCol)
+                   idCol: String = "doc_id",
+                   scope: CacheScope = CacheScope.noop): DataFrame =
+    StandingStore.live(spark, snapDir, "", scope, idCol)
 
   /** Append a batch's kept (id, fp) delta to a snapshot dir — the
-    * write-back half of the [[incrementalDedupSnapshot]] loop, with the
-    * re-add guard: a pending-tombstoned id would be silently swallowed
-    * by the next [[snapshotLive]] subtract, so it fails loudly here
-    * until [[compactSnapshot]] has applied and cleared its tombstone
-    * (the same discipline as [[appendNearDupIndex]]). */
+    * write-back half of the [[incrementalDedupSnapshot]] loop, refused
+    * while one of its ids has a pending tombstone (the next
+    * [[snapshotLive]] subtract would silently swallow it) until
+    * [[StandingStore.compact]] has applied it. */
   def appendSnapshot(spark: org.apache.spark.sql.SparkSession, snapDir: String,
-                     delta: DataFrame, idCol: String): Unit = {
-    Tombstones.requireNotTombstoned(spark, snapDir, delta, idCol)
-    delta.write.mode("append").parquet(snapDir)
-  }
-
-  /** Record deletions against a snapshot dir — the exact layer's
-    * right-to-be-forgotten path: O(ids) append under
-    * `snapDir/_tombstones`; [[snapshotLive]] subtracts it, so a
-    * re-ingest of the forgotten document's CONTENT verdicts `kept`
-    * again (unless the same content survives under another id —
-    * identity is the fingerprint, deletion is by id). */
-  def tombstoneSnapshot(spark: org.apache.spark.sql.SparkSession, snapDir: String,
-                        ids: DataFrame, idCol: String): Unit =
-    Tombstones.append(spark, snapDir, ids, idCol)
-
-  /** Compact a snapshot dir ([[graft.ops.StoreCompact]]): rewrite the
-    * per-batch append deltas into ~128 MB files with pending
-    * [[tombstoneSnapshot]] deletions applied physically. The staged
-    * root swap carries the applied `_tombstones` sidecar away with the
-    * old files — no separate clear step, and a crash before the swap
-    * leaves both store and sidecar intact (the subtract-on-read stays
-    * correct). Offline maintenance, never in the ingest loop. */
-  def compactSnapshot(spark: org.apache.spark.sql.SparkSession, snapDir: String,
-                      idCol: String = "doc_id"): Unit = {
-    // the staged root swap carries the `_bloom` sidecar away with the old
-    // files (underscore children are invisible to the rewrite's parquet
-    // read) — refound it from the compacted live rows afterwards. This is
-    // also the sketch-can't-forget remediation: tombstoned fingerprints
-    // leave the sketch here, riding the rewrite the store was paying for
-    // anyway, exactly like the tombstone apply itself
-    val bloomParams = snapshotBloomParams(spark, snapDir)
-    StoreCompact.compactParquetDir(spark, snapDir,
-      Tombstones.readOpt(spark, snapDir).map((_, idCol)))
-    bloomParams.foreach { case (capacity, fpp) =>
-      foundSnapshotBloom(spark, snapDir, capacity, fpp)
-    }
-  }
+                     delta: DataFrame, idCol: String): Unit =
+    StandingStore.append(spark, snapDir, delta, idCol)("" -> delta)
 
   // ---- The snapshot store's persisted Bloom sidecar ----------------
   //
@@ -1037,7 +1000,7 @@ object Dedup {
   // sizing cannot merge; the stored-params-win discipline again. As
   // history outgrows the capacity the fpp degrades toward 1 — verdicts
   // stay exact by one-sided error, the prefilter just stops helping;
-  // [[compactSnapshot]] refounds the sketch from live rows (which also
+  // [[StandingStore.compact]] refounds the sketch from live rows (which also
   // flushes tombstoned fps — a sketch cannot forget, so the remediation
   // rides the same rewrite that applies deletions).
   //
@@ -1058,7 +1021,8 @@ object Dedup {
   // before the marker existed read as raw (None → caller treats as
   // "raw", and cannot be retrofitted to normalized).
 
-  private def fpKindSidecar(snapDir: String) = s"$snapDir/_fpkind"
+  private def fpKindSidecar(snapDir: String) =
+    s"$snapDir/${StandingStore.FpKindSidecar}"
 
   /** The founding fingerprint kind of a snapshot store, if recorded. */
   def snapshotFpKind(spark: org.apache.spark.sql.SparkSession,
@@ -1100,29 +1064,26 @@ object Dedup {
   /** Found (or refound) the sidecar: write the sizing params and ONE
     * sketch seeded from the snapshot's CURRENT live rows — founding on a
     * non-empty store must not start the sketch empty (a later probe
-    * would see false negatives for everything already ingested). */
+    * would see false negatives for everything already ingested).
+    * `idCol` is the snapshot's id column, which pending tombstones are
+    * subtracted on. */
   def foundSnapshotBloom(spark: org.apache.spark.sql.SparkSession,
                          snapDir: String, capacity: Long,
-                         fpp: Double = 0.01): Unit = {
+                         fpp: Double = 0.01, idCol: String = "doc_id"): Unit = {
     require(capacity > 0 && fpp > 0 && fpp < 1,
       s"need capacity > 0 and fpp in (0,1), got $capacity / $fpp")
     val side = new org.apache.hadoop.fs.Path(bloomSidecar(snapDir))
     val fs = side.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // decide data-presence BEFORE the params write: writing the sidecar
-    // creates the store dir as a side effect, and a dir holding only
-    // hidden (underscore) children has no inferable parquet schema
-    val root = new org.apache.hadoop.fs.Path(snapDir)
-    val hasData = fs.exists(root) && fs.listStatus(root).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+    // creates the store dir as a side effect
+    val hasData = StandingStore.founded(spark, snapDir)
     fs.delete(side, true)
     val sess = spark
     import sess.implicits._
     Seq((capacity, fpp)).toDF("capacity", "fpp")
       .coalesce(1).write.parquet(s"${bloomSidecar(snapDir)}/params")
     val live =
-      if (hasData) snapshotLive(spark, snapDir).select(col("fp"))
+      if (hasData) StandingStore.read(spark, snapDir, "", idCol).select(col("fp"))
       else Seq.empty[String].toDF("fp")
     appendSnapshotBloom(spark, snapDir, live, "fp")
   }
@@ -1318,21 +1279,6 @@ object Dedup {
       k, rowsPerBand, n)
   }
 
-  /** Banding-balance diagnostic for a [[NearDupIndex]] —
-    * [[graft.ops.Similarity.ivfPqIndexStats]]'s MinHash twin: the
-    * bucket-SIZE histogram of the band stream. Candidate generation is
-    * QUADRATIC in a bucket's size (why [[lshNearDupPairs]]-family ops
-    * grow a `maxPerBucket` cap), so append-only drift — a template farm
-    * piling into a few bands — shows up here as mass moving toward
-    * large sizes, the "rebuild with fresh banding params" signal.
-    * Two narrow groupBys over the 8-byte bucket keys; ids and text
-    * never move. Returns (bucket_size, n_buckets). */
-  def nearDupIndexStats(index: NearDupIndex): DataFrame =
-    index.bandFrame
-      .groupBy(col("_bucket")).agg(count(lit(1)).as("_sz"))
-      .groupBy(col("_sz")).agg(count(lit(1)).as("n_buckets"))
-      .select(col("_sz").as("bucket_size"), col("n_buckets"))
-
   /** Persist a [[NearDupIndex]]: the shingle-HASH frame (the string
     * shingles are build-time scaffolding — probes intersect `_shh` and
     * band only the batch side, so they don't ship), the band stream, and
@@ -1370,68 +1316,26 @@ object Dedup {
   def appendNearDupIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                          newDocs: DataFrame, idCol: String, textCol: String,
                          scope: CacheScope = CacheScope.noop): Unit = {
-    Tombstones.requireNotTombstoned(spark, path, newDocs, idCol)
-    val p = spark.read.parquet(s"$path/params").head()
+    val p = StandingStore.params(spark, path)
     val (k, rpb, n) =
       (p.getAs[Int]("k"), p.getAs[Int]("rows_per_band"), p.getAs[Int]("n"))
     val base = shingleSets(newDocs, idCol, textCol, n, scope).filter(col("_size") > 0)
-    base.select(col("_id"), col("_shh"), col("_size"))
-      .write.mode("append").parquet(s"$path/shingles")
-    bandStream(base, k, rpb).write.mode("append").parquet(s"$path/bands")
-  }
-
-  /** Compact an appended [[saveNearDupIndex]] store's shingle and band
-    * tables into ~128 MB files ([[graft.ops.StoreCompact]]): append-only
-    * ingest leaves one file group per batch; probes pay the listing/open
-    * cost. Pending [[tombstoneNearDupIndex]] deletions are applied
-    * PHYSICALLY to BOTH tables during the rewrite, then cleared (after
-    * both — a crash in between re-applies the idempotent anti-join on
-    * the next load). Offline maintenance, probe-invariant
-    * (spec-pinned). */
-  def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    val tombs = Tombstones.readOpt(spark, path)
-    StoreCompact.compactParquetDir(spark, s"$path/shingles", tombs.map((_, "_id")))
-    StoreCompact.compactParquetDir(spark, s"$path/bands", tombs.map((_, "_id")))
-    Tombstones.clear(spark, path)
+    StandingStore.append(spark, path, newDocs, idCol)(
+      "shingles" -> base.select(col("_id"), col("_shh"), col("_size")),
+      "bands" -> bandStream(base, k, rpb))
   }
 
   /** Load a [[saveNearDupIndex]]'d index; frames come back cached (the
     * point of a standing index — every batch of the day probes them).
-    * Pending [[tombstoneNearDupIndex]] deletions are subtracted from
+    * Pending deletions ([[StandingStore.tombstone]]) are subtracted from
     * both frames (broadcast anti-joins). */
   def loadNearDupIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                        scope: CacheScope = CacheScope.noop): NearDupIndex = {
-    val p = spark.read.parquet(s"$path/params").head()
-    NearDupIndex(
-      scope.track(Tombstones.applyTo(spark, path,
-        spark.read.parquet(s"$path/shingles"), "_id").cache()),
-      scope.track(Tombstones.applyTo(spark, path,
-        spark.read.parquet(s"$path/bands"), "_id").cache()),
+    val p = StandingStore.params(spark, path)
+    NearDupIndex(StandingStore.live(spark, path, "shingles", scope),
+      StandingStore.live(spark, path, "bands", scope),
       p.getAs[Int]("k"), p.getAs[Int]("rows_per_band"), p.getAs[Int]("n"))
   }
-
-  /** Delete documents from an in-memory [[NearDupIndex]]: broadcast
-    * anti-joins on both frames — a forgotten doc stops matching future
-    * batches immediately. On-disk twin: [[tombstoneNearDupIndex]]. */
-  def dropFromNearDupIndex(index: NearDupIndex, ids: DataFrame,
-                           idCol: String): NearDupIndex = {
-    val tombs = ids.select(col(idCol).as("_tid")).distinct()
-    def minus(df: DataFrame) =
-      df.join(broadcast(tombs), df("_id") === tombs("_tid"), "left_anti")
-    index.copy(shingleFrame = minus(index.shingleFrame),
-      bandFrame = minus(index.bandFrame))
-  }
-
-  /** Record deletions against a [[saveNearDupIndex]]'d store — the
-    * right-to-be-forgotten write path ([[graft.ops.Tombstones]]):
-    * O(ids) append under `path/_tombstones`, subtracted by
-    * [[loadNearDupIndex]], applied physically by
-    * [[compactNearDupIndex]]. A tombstoned id cannot be re-appended
-    * until then (fail-loud). */
-  def tombstoneNearDupIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                            ids: DataFrame, idCol: String): Unit =
-    Tombstones.append(spark, path, ids, idCol)
 
   /** Extend a [[NearDupIndex]] with a newly-ingested batch — the fuzzy
     * layer's write-back half, mirroring [[snapshotDelta]]'s exact-layer

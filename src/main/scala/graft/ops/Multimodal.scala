@@ -1015,8 +1015,7 @@ object Multimodal {
       * stale). Driver-side size is the number of DISTINCT bucket sizes —
       * bounded small. */
     private[ops] lazy val sizeHistogram: Map[Long, Long] =
-      banded.groupBy(col("_b"), col("_v")).agg(count(lit(1)).as("_sz"))
-        .groupBy(col("_sz")).agg(count(lit(1)).as("_n"))
+      StandingStore.bucketSizes(banded, StandingStore.PHash.bucketKeys: _*)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     /** Buckets larger than `threshold`, answered from the memoized
@@ -1039,13 +1038,6 @@ object Multimodal {
       .cache()), nBands, decoder)
   }
 
-  /** Bucket-balance diagnostic — [[Similarity.embedIndexStats]]'s
-    * perceptual twin: (bucket_size, n_buckets) over the band store. */
-  def pHashIndexStats(index: PHashIndex): DataFrame =
-    index.banded.groupBy(col("_b"), col("_v")).agg(count(lit(1)).as("_sz"))
-      .groupBy(col("_sz")).agg(count(lit(1)).as("n_buckets"))
-      .select(col("_sz").as("bucket_size"), col("n_buckets"))
-
   /** The diagnose half of the q136 diagnose-then-remediate loop for the
     * perceptual store (round-11 verdict #4): ONE advice row —
     * (n_buckets, max_bucket, n_hot_buckets, hot_row_frac, advice) —
@@ -1056,14 +1048,14 @@ object Multimodal {
     * with `maxPerBucket`, [[incrementalPerceptualDupsWith]]), or
     * `tombstone_flood` (hot buckets carry over `hotMassFrac` of all
     * band rows — capping would blind most probes, so the flood itself
-    * must leave: tombstone + [[compactPHashIndex]]). Unlike the IVF
+    * must leave: tombstone + [[StandingStore.compact]]). Unlike the IVF
     * family there is no refound rung: dHash banding is
     * content-determined — identical payloads collide under ANY band
     * count, so re-founding cannot rebalance what a flood floods. */
   def pHashIndexAdvice(index: PHashIndex, hotBucketThreshold: Int = 64,
                        hotMassFrac: Double = 0.05): DataFrame =
-    bucketAdvice(index.banded.groupBy(col("_b"), col("_v"))
-      .agg(count(lit(1)).as("_sz")), hotBucketThreshold, hotMassFrac)
+    bucketAdvice(StandingStore.bucketSizes(index.banded,
+      StandingStore.PHash.bucketKeys: _*), hotBucketThreshold, hotMassFrac)
 
   /** [[pHashIndexAdvice]] for the FRAME store — same census, same
     * remediations (cap the probe / tombstone the flood), over the
@@ -1071,19 +1063,22 @@ object Multimodal {
     * floods FIRST. */
   def frameIndexAdvice(index: FrameIndex, hotBucketThreshold: Int = 64,
                        hotMassFrac: Double = 0.05): DataFrame =
-    bucketAdvice(index.banded.groupBy(col("_fi"), col("_b"), col("_v"))
-      .agg(count(lit(1)).as("_sz")), hotBucketThreshold, hotMassFrac)
+    bucketAdvice(StandingStore.bucketSizes(index.banded,
+      StandingStore.Frames.bucketKeys: _*), hotBucketThreshold, hotMassFrac)
 
-  private def bucketAdvice(sizes: DataFrame, hotBucketThreshold: Int,
+  /** The advice row over a [[StandingStore.bucketSizes]] histogram; an
+    * empty store has no buckets, hence none hot: `ok`. */
+  private def bucketAdvice(hist: DataFrame, hotBucketThreshold: Int,
                            hotMassFrac: Double): DataFrame = {
     require(hotBucketThreshold >= 1, "hotBucketThreshold >= 1")
-    sizes.agg(
-        count(lit(1)).as("n_buckets"),
-        max(col("_sz")).as("max_bucket"),
-        sum(when(col("_sz") > hotBucketThreshold, 1L).otherwise(0L))
+    val hot = col("bucket_size") > hotBucketThreshold
+    val rows = col("bucket_size") * col("n_buckets")
+    hist.agg(
+        coalesce(sum(col("n_buckets")), lit(0L)).as("n_buckets"),
+        max(col("bucket_size")).as("max_bucket"),
+        coalesce(sum(when(hot, col("n_buckets")).otherwise(0L)), lit(0L))
           .as("n_hot_buckets"),
-        (sum(when(col("_sz") > hotBucketThreshold, col("_sz")).otherwise(0L))
-          / sum(col("_sz"))).as("hot_row_frac"))
+        (sum(when(hot, rows).otherwise(0L)) / sum(rows)).as("hot_row_frac"))
       .withColumn("advice",
         when(col("n_hot_buckets") === 0, lit("ok"))
           .when(col("hot_row_frac") > hotMassFrac, lit("tombstone_flood"))
@@ -1100,16 +1095,14 @@ object Multimodal {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
   }
 
-  /** Load a [[savePHashIndex]]'d store; pending [[tombstonePHashIndex]]
-    * deletions are subtracted (broadcast anti-join). A pre-round-13
-    * store without a `decoder` params column loads as stub-founded —
-    * the only space those stores were ever written in. */
+  /** Load a [[savePHashIndex]]'d store; pending deletions
+    * ([[StandingStore.tombstone]]) are subtracted (broadcast anti-join).
+    * A pre-round-13 store without a `decoder` params column loads as
+    * stub-founded — the only space those stores were ever written in. */
   def loadPHashIndex(spark: SparkSession, path: String,
                      scope: CacheScope = CacheScope.noop): PHashIndex = {
     val (nBands, dec) = loadPHashIndexParams(spark, path)
-    PHashIndex(scope.track(Tombstones.applyTo(spark, path,
-        spark.read.parquet(s"$path/pbands"), "_hid").cache()),
-      nBands, dec)
+    PHashIndex(StandingStore.live(spark, path, "pbands", scope), nBands, dec)
   }
 
   /** APPEND a newly-ingested batch to an on-disk store: signature the
@@ -1118,36 +1111,24 @@ object Multimodal {
     * cross-batch union lineage accumulates. */
   def appendPHashIndex(spark: SparkSession, path: String,
                        batch: DataFrame, idCol: String, payloadCol: String): Unit = {
-    Tombstones.requireNotTombstoned(spark, path, batch, idCol)
     val idx = loadPHashIndexParams(spark, path)
-    withBands(pHashSigsOf(batch, idCol, payloadCol, idx._2, "_hid"), idx._1)
-      .write.mode("append").parquet(s"$path/pbands")
+    StandingStore.append(spark, path, batch, idCol)("pbands" ->
+      withBands(pHashSigsOf(batch, idCol, payloadCol, idx._2, "_hid"), idx._1))
   }
 
   /** (nBands, decoder) of an on-disk store without loading its bands;
     * a pre-round-13 store without a `decoder` column reads stub — the
     * only space those stores were ever written in. */
   private def loadPHashIndexParams(spark: SparkSession, path: String): (Int, String) = {
-    val pdf = spark.read.parquet(s"$path/params")
-    val p = pdf.head()
-    (p.getAs[Int]("n_bands"),
-      if (pdf.columns.contains("decoder")) p.getAs[String]("decoder")
-      else StubDecoder)
+    val p = StandingStore.params(spark, path)
+    (p.getAs[Int]("n_bands"), storedDecoder(p))
   }
 
-  /** Record deletions against an on-disk store (O(ids), history
-    * untouched; subtracted at load, applied by [[compactPHashIndex]]). */
-  def tombstonePHashIndex(spark: SparkSession, path: String,
-                          ids: DataFrame, idCol: String): Unit =
-    Tombstones.append(spark, path, ids, idCol)
-
-  /** Compact an appended store's band table — ~128 MB rewrite with
-    * pending tombstones applied physically and cleared. */
-  def compactPHashIndex(spark: SparkSession, path: String): Unit = {
-    StoreCompact.compactParquetDir(spark, s"$path/pbands",
-      Tombstones.readOpt(spark, path).map((_, "_hid")))
-    Tombstones.clear(spark, path)
-  }
+  /** A params row's signature space; a pre-round-13 row without a
+    * `decoder` column reads stub. */
+  private def storedDecoder(p: Row): String =
+    if (p.schema.fieldNames.contains("decoder")) p.getAs[String]("decoder")
+    else StubDecoder
 
   /** Incremental perceptual near-dup probe against a standing
     * [[PHashIndex]] — the binary-column member of the daily-loop family
@@ -1164,7 +1145,7 @@ object Multimodal {
     * batch-side only.
     *
     * `maxPerBucket` is the probe-time HOT-BUCKET remediation the
-    * [[pHashIndexStats]] diagnostic calls for (the q136
+    * [[StandingStore.bucketSizes]] diagnostic calls for (the q136
     * diagnose-then-remediate loop, round-11 verdict #4): when > 0,
     * each store (band, value) bucket is capped at its `maxPerBucket`
     * lowest history ids before the join, so a constant-payload flood
@@ -1172,7 +1153,7 @@ object Multimodal {
     * cannot make every probe against that bucket quadratic. The cap
     * binding is LOUD — one warning naming the hot-bucket count and the
     * durable remediations (tombstone the flood, then
-    * [[compactPHashIndex]]) — because a capped bucket can hide a true
+    * [[StandingStore.compact]]) — because a capped bucket can hide a true
     * best match: an explicit recall trade, never a silent one. The
     * check is one narrow aggregate over the (cached) band store.
     * Returns (idCol, hist_id, dist). */
@@ -1246,8 +1227,7 @@ object Multimodal {
       * buckets, collected once per instance — [[PHashIndex.sizeHistogram]]'s
       * frame twin, same probe-only staleness argument. */
     private[ops] lazy val sizeHistogram: Map[Long, Long] =
-      banded.groupBy(col("_fi"), col("_b"), col("_v")).agg(count(lit(1)).as("_sz"))
-        .groupBy(col("_sz")).agg(count(lit(1)).as("_n"))
+      StandingStore.bucketSizes(banded, StandingStore.Frames.bucketKeys: _*)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     private[ops] def hotBuckets(threshold: Int): Long =
@@ -1295,16 +1275,6 @@ object Multimodal {
       nBands, frameBytes, stride, maxFrames, decoder)
   }
 
-  /** Bucket-balance diagnostic over the frame store's (frame_idx, band,
-    * value) buckets — [[pHashIndexStats]]'s frame twin; read it with
-    * [[pHashIndexAdvice]]'s thresholds in mind (constant frames flood
-    * these buckets FIRST). */
-  def frameIndexStats(index: FrameIndex): DataFrame =
-    index.banded.groupBy(col("_fi"), col("_b"), col("_v"))
-      .agg(count(lit(1)).as("_sz"))
-      .groupBy(col("_sz")).agg(count(lit(1)).as("n_buckets"))
-      .select(col("_sz").as("bucket_size"), col("n_buckets"))
-
   /** Persist a [[FrameIndex]] (band table + the five founding params). */
   def saveFrameIndex(index: FrameIndex, path: String): Unit = {
     val sess = index.banded.sparkSession
@@ -1321,20 +1291,16 @@ object Multimodal {
     * stores were written in; same rule as [[loadPHashIndexParams]]). */
   private def loadFrameIndexParams(spark: SparkSession, path: String)
       : (Int, Int, Int, Int, String) = {
-    val pdf = spark.read.parquet(s"$path/params")
-    val p = pdf.head()
+    val p = StandingStore.params(spark, path)
     (p.getAs[Int]("n_bands"), p.getAs[Int]("frame_bytes"),
-      p.getAs[Int]("stride"), p.getAs[Int]("max_frames"),
-      if (pdf.columns.contains("decoder")) p.getAs[String]("decoder")
-      else StubDecoder)
+      p.getAs[Int]("stride"), p.getAs[Int]("max_frames"), storedDecoder(p))
   }
 
   /** Load a [[saveFrameIndex]]'d store; pending tombstones subtracted. */
   def loadFrameIndex(spark: SparkSession, path: String,
                      scope: CacheScope = CacheScope.noop): FrameIndex = {
     val (nBands, fb, st, mf, dec) = loadFrameIndexParams(spark, path)
-    FrameIndex(scope.track(Tombstones.applyTo(spark, path,
-        spark.read.parquet(s"$path/fbands"), "_hid").cache()),
+    FrameIndex(StandingStore.live(spark, path, "fbands", scope),
       nBands, fb, st, mf, dec)
   }
 
@@ -1342,24 +1308,10 @@ object Multimodal {
     * signature space — history never rewritten, `mode("append")`. */
   def appendFrameIndex(spark: SparkSession, path: String,
                        batch: DataFrame, idCol: String, payloadCol: String): Unit = {
-    Tombstones.requireNotTombstoned(spark, path, batch, idCol)
     val (nBands, fb, st, mf, dec) = loadFrameIndexParams(spark, path)
-    withBands(Parallelize.ensure(frameSigsOf(batch, idCol, payloadCol,
-        fb, st, mf, "_hid", dec)), nBands)
-      .write.mode("append").parquet(s"$path/fbands")
-  }
-
-  /** Record deletions (O(ids), applied at load / by [[compactFrameIndex]]). */
-  def tombstoneFrameIndex(spark: SparkSession, path: String,
-                          ids: DataFrame, idCol: String): Unit =
-    Tombstones.append(spark, path, ids, idCol)
-
-  /** Compact the frame store's band table (~128 MB rewrite, tombstones
-    * applied physically and cleared). */
-  def compactFrameIndex(spark: SparkSession, path: String): Unit = {
-    StoreCompact.compactParquetDir(spark, s"$path/fbands",
-      Tombstones.readOpt(spark, path).map((_, "_hid")))
-    Tombstones.clear(spark, path)
+    StandingStore.append(spark, path, batch, idCol)("fbands" ->
+      withBands(Parallelize.ensure(frameSigsOf(batch, idCol, payloadCol,
+        fb, st, mf, "_hid", dec)), nBands))
   }
 
   /** Incremental frame-aligned probe against a standing [[FrameIndex]]

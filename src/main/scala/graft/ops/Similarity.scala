@@ -669,37 +669,16 @@ object Similarity {
 
   /** Load a [[saveIvfPqIndex]]'d index; the coded table and centroids
     * come back cached (every query batch of the day probes them).
-    * Pending [[tombstoneIvfPqIndex]] deletions are subtracted here —
+    * Pending deletions ([[StandingStore.tombstone]]) are subtracted here —
     * one broadcast anti-join on the coded table; the centroids and
     * codebook are corpus-independent and stay as built. */
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                      scope: CacheScope = CacheScope.noop): IvfPqIndex = {
-    val p = spark.read.parquet(s"$path/params").head()
-    IvfPqIndex(scope.track(Tombstones.applyTo(spark, path,
-        spark.read.parquet(s"$path/coded"), "_id").cache()),
+    val p = StandingStore.params(spark, path)
+    IvfPqIndex(StandingStore.live(spark, path, "coded", scope),
       scope.track(spark.read.parquet(s"$path/cents").cache()),
       readPqBook(spark, path), p.getAs[Int]("dim"), p.getAs[Boolean]("residual"))
   }
-
-  /** Delete vectors from an in-memory [[IvfPqIndex]]: broadcast
-    * anti-join on the coded table — O(|ids|) shipped, history never
-    * shuffled. The on-disk twin is [[tombstoneIvfPqIndex]]. */
-  def dropFromIvfPqIndex(index: IvfPqIndex, ids: DataFrame,
-                         idCol: String): IvfPqIndex = {
-    val tombs = ids.select(col(idCol).as("_tid")).distinct()
-    index.copy(coded = index.coded.join(broadcast(tombs),
-      index.coded("_id") === tombs("_tid"), "left_anti"))
-  }
-
-  /** Record deletions against a [[saveIvfPqIndex]]'d store — the
-    * right-to-be-forgotten write path ([[Tombstones]]): appends the ids
-    * under `path/_tombstones`, O(ids) regardless of history size.
-    * [[loadIvfPqIndex]] subtracts pending tombstones;
-    * [[compactIvfPqIndex]] applies them physically and clears them. A
-    * tombstoned id cannot be re-appended until then (fail-loud). */
-  def tombstoneIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                          ids: DataFrame, idCol: String): Unit =
-    Tombstones.append(spark, path, ids, idCol)
 
   /** APPEND a newly-ingested batch to a [[saveIvfPqIndex]]'d index ON
     * DISK — the [[appendEmbedIndex]] discipline on the ANN serving path:
@@ -710,29 +689,12 @@ object Similarity {
     * parquet delta per day, and a reload probes one flat table. */
   def appendIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                        newVecs: DataFrame, idCol: String, vecCol: String): Unit = {
-    Tombstones.requireNotTombstoned(spark, path, newVecs, idCol)
     val cents = spark.read.parquet(s"$path/cents")
     val book = readPqBook(spark, path)
-    val residual = spark.read.parquet(s"$path/params").head()
-      .getAs[Boolean]("residual")
-    (if (residual) ivfPqEncodeResidual(cents, newVecs, idCol, vecCol, book)
-     else ivfPqEncode(cents, newVecs, idCol, vecCol, book))
-      .write.mode("append").parquet(s"$path/coded")
-  }
-
-  /** Compact an appended [[saveIvfPqIndex]] store's coded table into
-    * ~128 MB files ([[StoreCompact]]): append-only ingest leaves one
-    * file group per batch; probes pay the listing/open cost. Pending
-    * [[tombstoneIvfPqIndex]] deletions are applied PHYSICALLY during
-    * the rewrite (the anti-join rides the compaction scan) and the
-    * tombstone dir cleared — a crash between swap and clear only
-    * re-applies the (idempotent) anti-join on the next load. Offline
-    * maintenance, probe-invariant (spec-pinned). */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Unit = {
-    StoreCompact.compactParquetDir(spark, s"$path/coded",
-      Tombstones.readOpt(spark, path).map((_, "_id")))
-    Tombstones.clear(spark, path)
+    val residual = StandingStore.params(spark, path).getAs[Boolean]("residual")
+    StandingStore.append(spark, path, newVecs, idCol)("coded" ->
+      (if (residual) ivfPqEncodeResidual(cents, newVecs, idCol, vecCol, book)
+       else ivfPqEncode(cents, newVecs, idCol, vecCol, book)))
   }
 
   /** REBUILD a [[saveIvfPqIndex]]'d index from the current corpus — the
@@ -744,7 +706,7 @@ object Similarity {
     * constant occupancy ([[autoCells]] on the CURRENT corpus size — the
     * cell count is the one geometry parameter that MUST move with n),
     * retrain the PQ book, re-encode, and atomically replace the store
-    * via the [[StoreCompact.stagedSwap]] discipline — a concurrent
+    * via the [[StandingStore.stagedSwap]] discipline — a concurrent
     * probe sees the old index or the new one, never a half-written mix,
     * and a crash mid-swap self-repairs on the next maintenance call.
     *
@@ -759,8 +721,8 @@ object Similarity {
                         corpus: DataFrame, idCol: String, vecCol: String,
                         targetPerCell: Long = 1024L,
                         scope: CacheScope = CacheScope.noop): Unit = {
-    StoreCompact.repairSwap(spark, path)
-    val p = spark.read.parquet(s"$path/params").head()
+    StandingStore.repairSwap(spark, path)
+    val p = StandingStore.params(spark, path)
     val (dim, m, k, residual) = (p.getAs[Int]("dim"), p.getAs[Int]("m"),
       p.getAs[Int]("k"), p.getAs[Boolean]("residual"))
     val n = corpus.count()
@@ -769,39 +731,13 @@ object Similarity {
       corpus.select(col(vecCol).cast("array<double>").as("_v")), "_v",
       autoCells(n, targetPerCell))
     val book = pqTrain(corpus, vecCol, dim, m, k)
-    val swapped = StoreCompact.stagedSwap(spark, path) { tmpDir =>
+    val swapped = StandingStore.stagedSwap(spark, path) { tmpDir =>
       saveIvfPqIndex(
         buildIvfPqIndex(corpus, idCol, vecCol, cents, book, dim, residual, scope),
         tmpDir)
     }
     require(swapped, s"no standing index at '$path' to refound")
   }
-
-  /** Compact an appended [[saveEmbedIndex]] store's bucket table —
-    * [[compactIvfPqIndex]]'s LSH twin, same physical tombstone apply. */
-  def compactEmbedIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Unit = {
-    StoreCompact.compactParquetDir(spark, s"$path/buckets",
-      Tombstones.readOpt(spark, path).map((_, "_hid")))
-    Tombstones.clear(spark, path)
-  }
-
-  /** Delete vectors from an in-memory [[EmbedIndex]]: broadcast
-    * anti-join on the bucket table. On-disk twin:
-    * [[tombstoneEmbedIndex]]. */
-  def dropFromEmbedIndex(index: EmbedIndex, ids: DataFrame,
-                         idCol: String): EmbedIndex = {
-    val tombs = ids.select(col(idCol).as("_tid")).distinct()
-    index.copy(bucketed = index.bucketed.join(broadcast(tombs),
-      index.bucketed("_hid") === tombs("_tid"), "left_anti"))
-  }
-
-  /** Record deletions against a [[saveEmbedIndex]]'d store
-    * ([[Tombstones]] — O(ids), history untouched; subtracted by
-    * [[loadEmbedIndex]], applied physically by [[compactEmbedIndex]]). */
-  def tombstoneEmbedIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                          ids: DataFrame, idCol: String): Unit =
-    Tombstones.append(spark, path, ids, idCol)
 
   /** Routing-balance diagnostic for an [[IvfPqIndex]]: vectors per
     * coarse cell, INCLUDING empty cells (a cell the codebook reserves
@@ -1180,18 +1116,6 @@ object Similarity {
       .withColumn("_bucket", lshBucket(col("_hv"), dim, nPlanes, seed))
       .cache()), dim, nPlanes, seed)
 
-  /** Bucket-balance diagnostic for an [[EmbedIndex]] —
-    * [[graft.ops.Dedup.nearDupIndexStats]]'s vector twin: the
-    * bucket-size histogram of the LSH store (probe cost per bucket is
-    * linear in its size, candidate verification quadratic — the
-    * [[autoPlanes]] occupancy rule's drift monitor). Returns
-    * (bucket_size, n_buckets). */
-  def embedIndexStats(index: EmbedIndex): DataFrame =
-    index.bucketed
-      .groupBy(col("_bucket")).agg(count(lit(1)).as("_sz"))
-      .groupBy(col("_sz")).agg(count(lit(1)).as("n_buckets"))
-      .select(col("_sz").as("bucket_size"), col("n_buckets"))
-
   /** Persist an [[EmbedIndex]] (bucketed store + params) as parquet —
     * the standing index survives the JVM; tomorrow's ingest
     * [[loadEmbedIndex]]s it instead of re-bucketing the store. */
@@ -1205,13 +1129,12 @@ object Similarity {
   }
 
   /** Load a [[saveEmbedIndex]]'d index; the store comes back cached.
-    * Pending [[tombstoneEmbedIndex]] deletions are subtracted (one
+    * Pending deletions ([[StandingStore.tombstone]]) are subtracted (one
     * broadcast anti-join on the bucket table). */
   def loadEmbedIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                      scope: CacheScope = CacheScope.noop): EmbedIndex = {
-    val p = spark.read.parquet(s"$path/params").head()
-    EmbedIndex(scope.track(Tombstones.applyTo(spark, path,
-        spark.read.parquet(s"$path/buckets"), "_hid").cache()),
+    val p = StandingStore.params(spark, path)
+    EmbedIndex(StandingStore.live(spark, path, "buckets", scope),
       p.getAs[Int]("dim"), p.getAs[Int]("n_planes"), p.getAs[String]("seed"))
   }
 
@@ -1224,13 +1147,12 @@ object Similarity {
     * reload probes one flat table. */
   def appendEmbedIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                        newVecs: DataFrame, idCol: String, vecCol: String): Unit = {
-    Tombstones.requireNotTombstoned(spark, path, newVecs, idCol)
-    val p = spark.read.parquet(s"$path/params").head()
-    Parallelize.ensure(newVecs.select(col(idCol).as("_hid"),
-        col(vecCol).cast("array<double>").as("_hv")))
-      .withColumn("_bucket", lshBucket(col("_hv"), p.getAs[Int]("dim"),
-        p.getAs[Int]("n_planes"), p.getAs[String]("seed")))
-      .write.mode("append").parquet(s"$path/buckets")
+    val p = StandingStore.params(spark, path)
+    StandingStore.append(spark, path, newVecs, idCol)("buckets" ->
+      Parallelize.ensure(newVecs.select(col(idCol).as("_hid"),
+          col(vecCol).cast("array<double>").as("_hv")))
+        .withColumn("_bucket", lshBucket(col("_hv"), p.getAs[Int]("dim"),
+          p.getAs[Int]("n_planes"), p.getAs[String]("seed"))))
   }
 
   /** Extend an [[EmbedIndex]] with a newly-ingested batch: bucket ONLY

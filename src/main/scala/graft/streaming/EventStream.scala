@@ -619,8 +619,7 @@ object EventStream {
     // to "doc_id" broke (or silently skipped) tombstones for any store
     // founded under another id name, contradicting the doc's "tombstoned
     // clips stop matching" contract
-    val snap = scope.track(graft.ops.Dedup
-      .snapshotLive(stream.sparkSession, snapDir, idCol).cache())
+    val snap = graft.ops.Dedup.snapshotLive(stream.sparkSession, snapDir, idCol, scope)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -764,8 +763,7 @@ object EventStream {
         s"store at '$dir' is keyed on $stored content identity; " +
           s"the sink was started with normalize = $stated")
     }
-    val snap = scope.track(
-      graft.ops.Dedup.snapshotLive(sess, snapDir, idCol).select(col("fp")).cache())
+    val snap = graft.ops.Dedup.snapshotLive(sess, snapDir, idCol, scope).select(col("fp"))
     val bloom = graft.ops.Dedup.loadSnapshotBloom(sess, snapDir)
     val idx = graft.ops.Dedup.loadNearDupIndex(sess, indexDir, scope)
     stream.writeStream

@@ -53,7 +53,7 @@ object AnnScaleMain {
         // right-to-be-forgotten at scale: a pending tombstone sidecar
         // must not move the probe wall — the subtract is one broadcast
         // anti-join folded into the standing cache at load
-        Similarity.tombstoneIvfPqIndex(spark, dir,
+        graft.ops.StandingStore.tombstone(spark, dir,
           emb.select(col("vec_id")).filter(col("vec_id") % 997 === 0), "vec_id")
         graft.ops.CacheScope.withScope { scope =>
           val idx = Similarity.loadIvfPqIndex(spark, dir, scope)
@@ -64,7 +64,7 @@ object AnnScaleMain {
         }
         // …and the physical apply rides the compaction rewrite the store
         // was already paying for (no deletion-specific history pass)
-        timed(s"ivfPq compact+apply $label")(Similarity.compactIvfPqIndex(spark, dir))
+        timed(s"ivfPq compact+apply $label")(graft.ops.StandingStore.compact(spark, dir))
       }
       time(s"semDedup       $label")(
         Similarity.semDedup(cents, emb, "vec_id", "embedding", minSim = 0.95,

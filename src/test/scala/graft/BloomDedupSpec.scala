@@ -103,7 +103,7 @@ class BloomDedupSpec extends AnyFunSuite {
         "the sketch must cover every append — a miss here is a false negative")
       // forget: the tombstoned id stops counting as history even though
       // the sketch still contains its fp (false positive — harmless)
-      Dedup.tombstoneSnapshot(spark, snap, Seq(205L).toDF("doc_id"), "doc_id")
+      graft.ops.StandingStore.tombstone(spark, snap, Seq(205L).toDF("doc_id"), "doc_id")
       val probe3 = Dedup.incrementalDedupSnapshot(
           Seq((5001L, doc(205))).toDF("doc_id", "text"),
           "doc_id", "text", Dedup.snapshotLive(spark, snap).select(col("fp")),
@@ -113,7 +113,7 @@ class BloomDedupSpec extends AnyFunSuite {
         "a forgotten doc's re-ingest verdicts kept, sketch false positive or not")
       // compact: tombstone applied physically AND the sidecar refounds
       // from live rows at the stored sizing — same params, fresh sketch
-      Dedup.compactSnapshot(spark, snap)
+      graft.ops.StandingStore.compact(spark, snap)
       assert(Dedup.snapshotBloomParams(spark, snap).contains((10000L, 0.01)),
         "compaction must carry the sidecar's founding params across the root swap")
       val probe4 = Dedup.incrementalDedupSnapshot(
@@ -159,6 +159,23 @@ class BloomDedupSpec extends AnyFunSuite {
         "--snapshot" -> snapA, "--bloom" -> "true"))
     }
     (Seq(snapA, snapB, b1, b2) ++ o).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
+  }
+
+  test("dedup --bloom Y founds over pending tombstones on a store keyed on another id column") {
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val snap = tmp("bl-uid"); org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(snap))
+    val b = tmp("bl-uid-b"); val ids = tmp("bl-uid-ids"); val o = tmp("bl-uid-o")
+    (0 until 5).map(i => (i.toLong, doc(i))).toDF("uid", "text").write.mode("overwrite").parquet(b)
+    CurateCli.run("dedup", Map("--in" -> b, "--out" -> o, "--snapshot" -> snap, "--id-col" -> "uid"))
+    Seq(1L).toDF("uid").write.mode("overwrite").parquet(ids)
+    CurateCli.run("forget", Map("--in" -> ids, "--store" -> snap, "--id-col" -> "uid"))
+    CurateCli.run("dedup", Map("--in" -> b, "--out" -> o, "--snapshot" -> snap,
+      "--id-col" -> "uid", "--bloom" -> "Y", "--update-snapshot" -> "N"))
+    // the forgotten doc's content is novel again; the sketch holds the rest
+    assert(spark.read.parquet(o).as[(Long, String)].collect().sortBy(_._1).toSeq
+      == (0L until 5L).map(i => i -> (if (i == 1L) "kept" else "dup_history")))
+    Seq(snap, b, ids, o).foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
   }
 

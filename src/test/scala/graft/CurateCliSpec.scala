@@ -1007,6 +1007,46 @@ class CurateCliSpec extends AnyFunSuite {
     rm(snap, rawSnap, b1, b2, out1, out2, out3)
   }
 
+  test("compaction keeps a normalized snapshot's fingerprint-kind marker") {
+    val snap = tmp("cli-normcompact"); rm(snap)
+    val b1 = tmp("cli-nc-b1"); val b2 = tmp("cli-nc-b2"); val ids = tmp("cli-nc-ids")
+    val out = tmp("cli-nc-out")
+    Seq((1L, "Hello, World! 42"), (2L, "something else"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(b1)
+    Seq((10L, "HELLO... world 99")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(b2)
+    CurateCli.run("dedup", Map("--in" -> b1, "--out" -> out,
+      "--snapshot" -> snap, "--normalize" -> "Y"))
+    Seq(2L).toDF("doc_id").write.mode("overwrite").parquet(ids)
+    CurateCli.run("forget", Map("--in" -> ids, "--store" -> snap))
+    CurateCli.run("compact", Map("--store" -> snap))
+    assert(graft.ops.Dedup.snapshotFpKind(spark, snap).contains("normalized"))
+    // the compacted store still probes in its founding identity space…
+    CurateCli.run("dedup", Map("--in" -> b2, "--out" -> out,
+      "--snapshot" -> snap, "--normalize" -> "Y", "--update-snapshot" -> "N"))
+    assert(spark.read.parquet(out).as[(Long, String)].collect().toSeq
+      == Seq(10L -> "dup_history"))
+    // …and still refuses the other one
+    val e = intercept[IllegalArgumentException] {
+      CurateCli.run("dedup", Map("--in" -> b2, "--out" -> out, "--snapshot" -> snap))
+    }
+    assert(e.getMessage.contains("normalized"))
+    rm(snap, b1, b2, ids, out)
+  }
+
+  test("argv parse rejects a flag-shaped bare value; --key=value passes it") {
+    val e = intercept[IllegalArgumentException] {
+      CurateCli.main(Array("stats", "--store", "--out"))
+    }
+    assert(e.getMessage.contains("requires a value"))
+    val e2 = intercept[IllegalArgumentException] {
+      CurateCli.main(Array("stats", "--store", "--stroe", "--out", "x"))
+    }
+    assert(e2.getMessage.contains("flag-like value '--stroe'"))
+    assert(Argv.parse(Array("--store=--odd", "--out", "x"), Set("--store", "--out"))
+      == Map("--store" -> "--odd", "--out" -> "x"))
+  }
+
 
   test("refine command reproduces the refineCorpus ladder, repetition rung behind its flag") {
     val out1 = tmp("cli-refine1"); val out2 = tmp("cli-refine2")

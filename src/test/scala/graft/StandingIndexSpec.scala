@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{CacheScope, Dedup, Similarity}
+import graft.ops.{CacheScope, Dedup, Similarity, StandingStore}
 
 /** Round-6 ingestion-loop hardening: the standing near-dup indexes
   * (text MinHash-LSH and vector LSH) that let consecutive ingest batches
@@ -193,19 +193,19 @@ class StandingIndexSpec extends AnyFunSuite {
       val echoHit = probe(reloaded, echo)
       assert(echoHit.size == 1 && echoHit.head._2 == 22L && echoHit.head._3 == 0)
       // stats account for every band row: 25 entries x 4 bands
-      val stats = Multimodal.pHashIndexStats(reloaded)
+      val stats = StandingStore.bucketSizes(reloaded.banded, "_b", "_v")
         .as[(Long, Long)].collect()
       assert(stats.map { case (sz, n) => sz * n }.sum == 25L * 4)
       // tombstone doc 22: the echo stops matching after reload; compaction
       // applies physically and clears the sidecar
-      Multimodal.tombstonePHashIndex(spark, dir,
+      StandingStore.tombstone(spark, dir,
         Seq(22L).toDF("doc_id"), "doc_id")
       assert(probe(Multimodal.loadPHashIndex(spark, dir, scope), echo).isEmpty)
       intercept[IllegalArgumentException] {
         Multimodal.appendPHashIndex(spark, dir, echo.select(
           lit(22L).as("doc_id"), col("payload")), "doc_id", "payload")
       }
-      Multimodal.compactPHashIndex(spark, dir)
+      StandingStore.compact(spark, dir)
       assert(!new java.io.File(s"$dir/_tombstones").exists())
       assert(probe(Multimodal.loadPHashIndex(spark, dir, scope), echo).isEmpty)
       assert(spark.read.parquet(s"$dir/pbands")
@@ -254,7 +254,7 @@ class StandingIndexSpec extends AnyFunSuite {
       val reloaded = Multimodal.loadFrameIndex(spark, dir, scope)
       assert(probe(reloaded, echo) == Seq((99L, 22L, 4L, 0)))
       // stats account for every band row: 16 clips x 4 frames x 4 bands
-      val stats = Multimodal.frameIndexStats(reloaded).as[(Long, Long)].collect()
+      val stats = StandingStore.bucketSizes(reloaded.banded, "_fi", "_b", "_v").as[(Long, Long)].collect()
       assert(stats.map { case (sz, n) => sz * n }.sum == 16L * 4 * 4)
       // advice: healthy store reads ok; a 20-copy black-clip flood
       // dominating the band mass reads tombstone_flood (the frame
@@ -271,9 +271,9 @@ class StandingIndexSpec extends AnyFunSuite {
       assert(fAdv.getAs[String]("advice") == "tombstone_flood" &&
         fAdv.getAs[Long]("max_bucket") >= 20L)
       // tombstone clip 22; compaction applies physically and clears
-      Multimodal.tombstoneFrameIndex(spark, dir, Seq(22L).toDF("doc_id"), "doc_id")
+      StandingStore.tombstone(spark, dir, Seq(22L).toDF("doc_id"), "doc_id")
       assert(probe(Multimodal.loadFrameIndex(spark, dir, scope), echo).isEmpty)
-      Multimodal.compactFrameIndex(spark, dir)
+      StandingStore.compact(spark, dir)
       assert(!new java.io.File(s"$dir/_tombstones").exists())
       assert(spark.read.parquet(s"$dir/fbands")
         .filter(col("_hid") === 22L).count() == 0)
@@ -535,7 +535,7 @@ class StandingIndexSpec extends AnyFunSuite {
         .orderBy("doc_id").as[(Long, Long, Double)].collect().toSeq
       val before = probe()
       assert(dataFiles(s"$nd/shingles") >= 4, "appends must have left one file group per batch")
-      Dedup.compactNearDupIndex(spark, nd)
+      StandingStore.compact(spark, nd)
       assert(dataFiles(s"$nd/shingles") == 1 && dataFiles(s"$nd/bands") == 1,
         "a kilobyte store compacts to one file")
       assert(probe() == before && before.nonEmpty)
@@ -555,7 +555,7 @@ class StandingIndexSpec extends AnyFunSuite {
         .orderBy("query_id", "vec_id").as[(Long, Long, Double)].collect().toSeq
       val wantPq = searchPq()
       assert(dataFiles(s"$pq/coded") >= 3)
-      Similarity.compactIvfPqIndex(spark, pq)
+      StandingStore.compact(spark, pq)
       assert(dataFiles(s"$pq/coded") == 1)
       assert(searchPq() == wantPq && wantPq.nonEmpty)
       Seq(nd, pq).foreach(p =>
@@ -683,11 +683,11 @@ class StandingIndexSpec extends AnyFunSuite {
       val victim = search(built).head._2
       val other = if (victim == 43L) 42L else 43L
       val gone = Seq(victim, other).toDF("vec_id")
-      Similarity.tombstoneIvfPqIndex(spark, dir, gone, "vec_id")
+      StandingStore.tombstone(spark, dir, gone, "vec_id")
 
       val loaded = Similarity.loadIvfPqIndex(spark, dir, scope)
       val got = search(loaded)
-      assert(got == search(Similarity.dropFromIvfPqIndex(built, gone, "vec_id")),
+      assert(got == search(built.copy(coded = StandingStore.without(built.coded, "_id", gone))),
         "tombstone sidecar must equal the in-memory drop")
       val survivors = corpus.filter(!col("vec_id").isin(victim, other))
       assert(got == search(Similarity.buildIvfPqIndex(survivors, "vec_id", "emb",
@@ -706,7 +706,7 @@ class StandingIndexSpec extends AnyFunSuite {
       Similarity.appendIvfPqIndex(spark, dir, pqVecs(50 until 54), "vec_id", "emb")
 
       // compaction applies the deletion physically and clears the sidecar
-      Similarity.compactIvfPqIndex(spark, dir)
+      StandingStore.compact(spark, dir)
       assert(!new java.io.File(s"$dir/_tombstones").exists,
         "compaction must clear applied tombstones")
       val after = Similarity.loadIvfPqIndex(spark, dir, scope)
@@ -765,7 +765,7 @@ class StandingIndexSpec extends AnyFunSuite {
 
       // a pending tombstone dies with the old store: the refound corpus
       // IS the statement of what the index now contains
-      Similarity.tombstoneIvfPqIndex(spark, dir, Seq(100L).toDF("vec_id"), "vec_id")
+      StandingStore.tombstone(spark, dir, Seq(100L).toDF("vec_id"), "vec_id")
       Similarity.refoundIvfPqIndex(spark, dir, corpus, "vec_id", "emb",
         targetPerCell = 16, scope = scope)
       assert(!new java.io.File(s"$dir/_tombstones").exists)
@@ -812,18 +812,21 @@ class StandingIndexSpec extends AnyFunSuite {
       assert(probeNd(Dedup.loadNearDupIndex(spark, nd, scope)).nonEmpty,
         "template batch matches template history before the deletion")
       val goneDocs = (0 until 21 by 3).map(_.toLong).toDF("doc_id")
-      Dedup.tombstoneNearDupIndex(spark, nd, goneDocs, "doc_id")
+      StandingStore.tombstone(spark, nd, goneDocs, "doc_id")
       val ndLoaded = Dedup.loadNearDupIndex(spark, nd, scope)
       assert(probeNd(ndLoaded).isEmpty,
         "every doc the probe could match is forgotten")
       assert(probeNd(ndLoaded) ==
-        probeNd(Dedup.dropFromNearDupIndex(
-          Dedup.buildNearDupIndex(docs(0 until 21), "doc_id", "text",
-            k = 4, rowsPerBand = 2, n = 5, scope = scope), goneDocs, "doc_id")))
+        probeNd {
+          val built = Dedup.buildNearDupIndex(docs(0 until 21), "doc_id", "text",
+            k = 4, rowsPerBand = 2, n = 5, scope = scope)
+          built.copy(shingleFrame = StandingStore.without(built.shingleFrame, "_id", goneDocs),
+            bandFrame = StandingStore.without(built.bandFrame, "_id", goneDocs))
+        })
       assert(ndLoaded.shingleFrame.filter(col("_id") % 3 === 0).count() == 0
           && ndLoaded.bandFrame.filter(col("_id") % 3 === 0).count() == 0,
         "BOTH standing frames must subtract the tombstones")
-      Dedup.compactNearDupIndex(spark, nd)
+      StandingStore.compact(spark, nd)
       assert(!new java.io.File(s"$nd/_tombstones").exists)
       assert(probeNd(Dedup.loadNearDupIndex(spark, nd, scope)).isEmpty)
 
@@ -843,19 +846,21 @@ class StandingIndexSpec extends AnyFunSuite {
           .as[(Long, Long, Double)].collect().toSeq
       assert(probeEm(Similarity.loadEmbedIndex(spark, em, scope))
         .exists(_._2 == 7L), "the echo matches its source before the deletion")
-      Similarity.tombstoneEmbedIndex(spark, em, Seq(7L).toDF("vec_id"), "vec_id")
+      StandingStore.tombstone(spark, em, Seq(7L).toDF("vec_id"), "vec_id")
       val emLoaded = Similarity.loadEmbedIndex(spark, em, scope)
       assert(!probeEm(emLoaded).exists(_._2 == 7L),
         "the forgotten vector must stop matching")
       assert(probeEm(emLoaded) ==
-        probeEm(Similarity.dropFromEmbedIndex(
-          Similarity.buildEmbedIndex(vecs(0 until 20), "vec_id", "embedding",
-            dim = 4, nPlanes = 3, scope = scope),
-          Seq(7L).toDF("vec_id"), "vec_id")))
+        probeEm {
+          val built = Similarity.buildEmbedIndex(vecs(0 until 20), "vec_id", "embedding",
+            dim = 4, nPlanes = 3, scope = scope)
+          built.copy(bucketed = StandingStore.without(built.bucketed, "_hid",
+            Seq(7L).toDF("vec_id")))
+        })
       intercept[IllegalArgumentException] {
         Similarity.appendEmbedIndex(spark, em, vecs(7 until 8), "vec_id", "embedding")
       }
-      Similarity.compactEmbedIndex(spark, em)
+      StandingStore.compact(spark, em)
       assert(!new java.io.File(s"$em/_tombstones").exists)
       assert(Similarity.loadEmbedIndex(spark, em, scope).bucketed
         .filter(col("_hid") === 7L).count() == 0,
@@ -875,8 +880,8 @@ class StandingIndexSpec extends AnyFunSuite {
       (10 until 14).map(i => (i.toLong,
         s"wholly distinct content item $i " + (0 until 8).map(j => s"t$i$j").mkString(" ")))
     ).toDF("doc_id", "text")
-    val nd = Dedup.nearDupIndexStats(
-      Dedup.buildNearDupIndex(docs, "doc_id", "text", k = 4, rowsPerBand = 2, n = 5))
+    val nd = StandingStore.bucketSizes(Dedup.buildNearDupIndex(
+        docs, "doc_id", "text", k = 4, rowsPerBand = 2, n = 5).bandFrame, "_bucket")
       .as[(Long, Long)].collect().toMap
     // every (doc, band) row is accounted: sum(size * n_buckets) = docs * bands
     assert(nd.map { case (sz, nb) => sz * nb }.sum == 10L * 2L)
@@ -887,8 +892,8 @@ class StandingIndexSpec extends AnyFunSuite {
       val v = Array.tabulate(8)(d => if (d == i % 2) 1.0f else 0.1f)
       (i.toLong, v.toSeq)
     }.toDF("vec_id", "embedding")
-    val es = Similarity.embedIndexStats(
-      Similarity.buildEmbedIndex(vecs, "vec_id", "embedding", dim = 8, nPlanes = 3))
+    val es = StandingStore.bucketSizes(Similarity.buildEmbedIndex(
+        vecs, "vec_id", "embedding", dim = 8, nPlanes = 3).bucketed, "_bucket")
       .as[(Long, Long)].collect().toMap
     assert(es.map { case (sz, nb) => sz * nb }.sum == 12L)
   }
@@ -1085,10 +1090,10 @@ class StandingIndexSpec extends AnyFunSuite {
         .toDF("doc_id", "payload"))
       assert(hit20.size == 1 && hit20.head._2 == 20L && hit20.head._3 <= 2)
       // tombstone + compact keep the founding marker intact
-      Multimodal.tombstonePHashIndex(spark, dir, Seq(20L).toDF("doc_id"), "doc_id")
+      StandingStore.tombstone(spark, dir, Seq(20L).toDF("doc_id"), "doc_id")
       assert(probe(Multimodal.loadPHashIndex(spark, dir, scope),
         Seq((120L, imgInv("jpg"))).toDF("doc_id", "payload")).isEmpty)
-      Multimodal.compactPHashIndex(spark, dir)
+      StandingStore.compact(spark, dir)
       assert(Multimodal.loadPHashIndex(spark, dir, scope).decoder ==
         Multimodal.ImageioDecoder)
       // a pre-round-13 store (no decoder column in params) loads as
