@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
 import graft.ops.{CacheScope, Cluster, Corpus, Dedup, Multimodal, Pipeline, Shard, StandingStore, TextAnalysis}
 
@@ -265,8 +266,10 @@ import graft.ops.{CacheScope, Cluster, Corpus, Dedup, Multimodal, Pipeline, Shar
   * documents table reproduces q92/q117 exactly (spec-pinned). */
 object CurateCli {
 
-  private val CommonOptions = Set(
-    "--in", "--out", "--in-format", "--out-format", "--id-col", "--text-col")
+  private val IoOptions = Set("--in", "--out", "--in-format", "--out-format")
+  /** The base set of the media commands: I/O plus the id column. */
+  private val MediaOptions = IoOptions + "--id-col"
+  private val CommonOptions = MediaOptions + "--text-col"
 
   /** Per-COMMAND allowed-option sets (round-8 advice): a global known set
     * silently accepted `--merges` on `dedup` — syntactically valid,
@@ -306,8 +309,8 @@ object CurateCli {
     "annindex" -> Set("--in", "--in-format", "--index", "--id-col",
       "--vec-col", "--dim", "--cells", "--subspaces", "--codes", "--residual",
       "--refound"),
-    "annsearch" -> (CommonOptions - "--text-col" ++ Set("--index",
-      "--vec-col", "--topk", "--nprobe")),
+    "annsearch" -> (MediaOptions ++ Set("--index", "--vec-col", "--topk",
+      "--nprobe")),
     "anneval" -> (CommonOptions ++ Set("--index",
       "--vec-col", "--topk", "--nprobe", "--queries", "--queries-format",
       "--nqueries", "--store-kind", "--min-jaccard", "--min-sim",
@@ -320,48 +323,38 @@ object CurateCli {
     "dividend" -> (CommonOptions ++ Set("--group-col", "--ngram",
       "--minhash-k", "--rows-per-band", "--min-jaccard", "--thresholds",
       "--cc-strategy")),
-    "labelaudit" -> (Set("--in", "--out", "--in-format", "--out-format")
-      ++ Set("--label-col", "--pred-col")),
-    "phashdup" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--payload-col", "--max-dist", "--bands", "--max-per-bucket",
-        "--index", "--update-index", "--multiprobe", "--decoder",
-        "--thresholds")),
-    "framedup" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--payload-col", "--frame-bytes", "--stride", "--max-frames",
-        "--max-dist", "--bands", "--min-matched", "--shifted",
-        "--max-per-bucket", "--decoder", "--index", "--update-index",
-        "--multiprobe")),
-    "integrity" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--bad-only")),
-    "features" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--payload-col", "--decoder")),
-    "audiogate" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--payload-col", "--max-clip", "--max-silence", "--silence-tol",
-        "--bad-only")),
-    "scenes" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--payload-col", "--frame-bytes", "--stride", "--max-frames",
-        "--cut-threshold", "--decoder", "--emit", "--min-shared",
-        "--max-per-bucket")),
-    "resize" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--payload-col", "--max-w", "--max-h", "--format",
-        "--bad-only")),
-    "crossmodal" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--payload-col", "--caption-col", "--decoder", "--bad-only")),
-    "mediacard" -> Set("--in", "--out", "--in-format", "--out-format"),
-    "utterances" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--payload-col", "--frame-bytes", "--stride", "--max-frames",
-        "--silence-tol", "--min-silent-frac")),
-    "consensus" -> (Set("--in", "--out", "--in-format", "--out-format")
-      ++ Set("--in-b", "--in-b-format", "--a-name", "--b-name")),
-    "mingest" -> (Set("--in", "--out", "--in-format", "--out-format", "--id-col")
-      ++ Set("--index", "--update-index", "--max-dist", "--bands", "--decoder",
-        "--audio", "--max-clip", "--max-silence", "--silence-tol")),
+    "labelaudit" -> (IoOptions ++ Set("--label-col", "--pred-col")),
+    "phashdup" -> (MediaOptions ++ Set("--payload-col", "--max-dist",
+      "--bands", "--max-per-bucket", "--index", "--update-index",
+      "--multiprobe", "--decoder", "--thresholds")),
+    "framedup" -> (MediaOptions ++ Set("--payload-col", "--frame-bytes",
+      "--stride", "--max-frames", "--max-dist", "--bands", "--min-matched",
+      "--shifted", "--max-per-bucket", "--decoder", "--index",
+      "--update-index", "--multiprobe")),
+    "integrity" -> (MediaOptions + "--bad-only"),
+    "features" -> (MediaOptions ++ Set("--payload-col", "--decoder")),
+    "audiogate" -> (MediaOptions ++ Set("--payload-col", "--max-clip",
+      "--max-silence", "--silence-tol", "--bad-only")),
+    "scenes" -> (MediaOptions ++ Set("--payload-col", "--frame-bytes",
+      "--stride", "--max-frames", "--cut-threshold", "--decoder", "--emit",
+      "--min-shared", "--max-per-bucket")),
+    "resize" -> (MediaOptions ++ Set("--payload-col", "--max-w", "--max-h",
+      "--format", "--bad-only")),
+    "crossmodal" -> (MediaOptions ++ Set("--payload-col", "--caption-col",
+      "--decoder", "--bad-only")),
+    "mediacard" -> IoOptions,
+    "utterances" -> (MediaOptions ++ Set("--payload-col", "--frame-bytes",
+      "--stride", "--max-frames", "--silence-tol", "--min-silent-frac")),
+    "consensus" -> (IoOptions ++ Set("--in-b", "--in-b-format", "--a-name",
+      "--b-name")),
+    "mingest" -> (MediaOptions ++ Set("--index", "--update-index",
+      "--max-dist", "--bands", "--decoder", "--audio", "--max-clip",
+      "--max-silence", "--silence-tol")),
     "pii" -> (CommonOptions ++ Set("--group-col", "--census",
       "--min-digits")),
     "manifest" -> (CommonOptions ++ Set("--shards", "--size-col",
       "--shard-col", "--diff", "--diff-format")),
-    "profile" -> (CommonOptions - "--text-col" - "--id-col"
-      ++ Set("--cols", "--approx")),
+    "profile" -> (IoOptions ++ Set("--cols", "--approx")),
     "overlap" -> (CommonOptions ++ Set("--bench", "--bench-format",
       "--ngram", "--max-overlap")),
     "drift" -> (CommonOptions ++ Set("--ledger", "--group-col", "--val-col",
@@ -384,46 +377,183 @@ object CurateCli {
     CommandOptions.getOrElse(command, throw new IllegalArgumentException(
       s"unknown command '$command' (expected ${CommandOptions.keys.toSeq.sorted.mkString(", ")})"))
 
-  /** `--bloom Y` founds the snapshot store's Bloom sidecar if absent
-    * (capacity `--bloom-capacity`, a FOUNDING constant — the
-    * stored-params-win discipline; sketches of mismatched sizing cannot
-    * merge); `N`/absent never removes one, and an existing sidecar is
-    * probed and maintained regardless of the flag. */
+  /** `--bloom Y`: the capacity (`--bloom-capacity`, a FOUNDING constant —
+    * sketches of mismatched sizing cannot merge) to found the snapshot
+    * store's Bloom sidecar with if it has none. `N`/absent never removes
+    * one, and an existing sidecar is probed and maintained regardless of
+    * the flag. */
+  private def bloomToFound(argv: Argv.Flags): Option[Long] = {
+    val capacity = argv.long("--bloom-capacity", 1000000L)
+    Option.when(argv.yesNo("--bloom", default = false))(capacity)
+  }
+
   private def maybeFoundBloom(spark: SparkSession, snapDir: String,
-                              argv: Map[String, String], idCol: String): Unit =
-    argv.getOrElse("--bloom", "N") match {
-      case "Y" =>
-        if (graft.ops.Dedup.snapshotBloomParams(spark, snapDir).isEmpty)
-          graft.ops.Dedup.foundSnapshotBloom(spark, snapDir,
-            argv.getOrElse("--bloom-capacity", "1000000").toLong, idCol = idCol)
-      case "N" =>
-      case other => throw new IllegalArgumentException(
-        s"--bloom must be Y or N, got '$other'")
+                              capacity: Option[Long], idCol: String): Unit =
+    for (c <- capacity if Dedup.snapshotBloomParams(spark, snapDir).isEmpty)
+      Dedup.foundSnapshotBloom(spark, snapDir, c, idCol = idCol)
+
+  /** `--splits train=0.8,val=0.1,test=0.1` as (name, fraction) pairs in
+    * declaration order (split boundaries stack in that order, like the
+    * gate query). */
+  private def splits(argv: Argv.Flags): Seq[(String, Double)] =
+    argv.list("--splits").getOrElse(Seq("train=0.8", "val=0.1", "test=0.1")).map { part =>
+      (part.split("=", 2).map(_.trim) match {
+        case Array(name, frac) if name.nonEmpty => frac.toDoubleOption.map(name -> _)
+        case _ => None
+      }).getOrElse(throw new IllegalArgumentException(
+        s"--splits takes name=fraction pairs, got '$part'"))
     }
 
+  /** The `--batch-id` a standing-ledger command appends under, or None
+    * for a read-only `--update N` probe. */
+  private def appendBatch(argv: Argv.Flags): Option[Long] = {
+    val update = argv.yesNo("--update", default = true)
+    val batch = argv.long("--batch-id")
+    if (!update) None
+    else Some(batch.getOrElse(throw new IllegalArgumentException(
+      "--update Y (the default) needs --batch-id")))
+  }
+
+  /** The MinHash-LSH knobs the fuzzy commands share (neardup, ingest,
+    * `split --leakage-safe`, dividend), defaults applied. */
+  private final case class Banding(k: Int, rowsPerBand: Int, ngram: Int)
+
+  private def banding(argv: Argv.Flags): Banding =
+    Banding(argv.int("--minhash-k", 4), argv.int("--rows-per-band", 2),
+      argv.int("--ngram", 5))
+
+  /** A founded MinHash index keeps its banding: a restated knob must agree. */
+  private def checkBanding(argv: Argv.Flags, idx: Dedup.NearDupIndex): Unit =
+    for ((flag, stored) <- Seq("--minhash-k" -> idx.k,
+        "--rows-per-band" -> idx.rowsPerBand, "--ngram" -> idx.n))
+      agrees(flag, argv.int(flag), stored, "banding parameters are")
+
+  /** A restated founding constant must equal the stored one: the probe
+    * runs under the stored value, not the stated one, so a disagreement
+    * is the quiet misconfiguration the strict parse exists to kill. */
+  private def agrees(flag: String, stated: Option[Any], stored: Any,
+                     fixed: String): Unit =
+    for (s <- stated if s != stored) throw new IllegalArgumentException(
+      s"$flag $s disagrees with the stored index ($stored) — $fixed fixed at build time")
+
+  /** A missing index is founded from the batch, which needs
+    * `--update-index Y`: with N nothing is probed and nothing built, so a
+    * typo'd `--index` path fails loudly instead of writing a silent empty
+    * verdict table. */
+  private def requireFoundable(idxDir: String, founded: Boolean, update: Boolean): Unit =
+    if (!founded && !update) throw new IllegalArgumentException(
+      s"--index $idxDir does not exist and --update-index N founds nothing: " +
+        "nothing to probe, nothing would be built — check the index path")
+
+  /** `--normalize`: the content-identity kind (raw or q161-normalized
+    * text) is a FOUNDING constant of a dedup store — the two are
+    * different identity spaces. A stored kind must match; a store founded
+    * before the `_fpkind` marker is raw and cannot be retrofitted; an
+    * unmarked store gets the marker only when this run may write
+    * (`found`), since a read-only probe of an absent store must not pin
+    * the kind of a store holding no data. */
+  private def checkContentKind(spark: SparkSession, what: String, dir: String,
+                               normalize: Boolean, found: Boolean): Unit = {
+    val kind = if (normalize) "normalized" else "raw"
+    Dedup.snapshotFpKind(spark, dir) match {
+      case Some(stored) =>
+        if (stored != kind) throw new IllegalArgumentException(
+          s"$what at '$dir' is keyed on $stored content identity; " +
+            s"--normalize ${if (normalize) "Y" else "N"} disagrees")
+      case None =>
+        if (normalize && StandingStore.founded(spark, dir))
+          throw new IllegalArgumentException(
+            s"$what at '$dir' predates the content-identity marker and is " +
+              "keyed on raw text; --normalize Y cannot retrofit it (found a " +
+              "fresh store instead)")
+        if (found) Dedup.foundSnapshotFpKind(spark, dir, kind)
+    }
+  }
+
+  /** `df` with its text column in the q161 canonical form when
+    * `normalize`: every fingerprint and shingle downstream then keys on
+    * it. */
+  private def keyedText(df: DataFrame, textCol: String, normalize: Boolean): DataFrame =
+    if (normalize) df.withColumn(textCol, TextAnalysis.normalizeForDedup(col(textCol)))
+    else df
+
+  /** The `--payload-col` column (default `payload`), checked present. */
+  private def payloadCol(argv: Argv.Flags, in: DataFrame): String = {
+    val pc = argv.str("--payload-col", "payload")
+    require(in.columns.contains(pc),
+      s"--payload-col '$pc' not in input columns ${in.columns.mkString(",")}")
+    pc
+  }
+
+  /** The payload as bytes: a binary column passes through and a string
+    * column is UTF-8-encoded (the q68 stub-decode discipline — real media
+    * bytes swap in without CLI changes). */
+  private def payloadBytes(in: DataFrame, pc: String): Column = in.schema(pc).dataType match {
+    case BinaryType => col(pc)
+    case StringType => encode(col(pc), "utf-8")
+    case other => throw new IllegalArgumentException(
+      s"--payload-col must be binary or string, got $other")
+  }
+
+  private def requireBinary(in: DataFrame, pc: String, who: String, holds: String): Unit =
+    require(in.schema(pc).dataType == BinaryType,
+      s"$who needs a BINARY payload column ($holds)")
+
+  /** `--decoder stub|imageio|wav`: a media command's signature space. The
+    * real decoders read BINARY bytes — a string re-encoded to bytes would
+    * decode as nothing. `frames`: the payload is a clip, so `imageio`
+    * reads length-prefixed encoded frames and the byte-window knobs
+    * cannot apply to it. */
+  private def decoderOf(argv: Argv.Flags, in: DataFrame, pc: String,
+                        frames: Boolean = false): String = {
+    val d = argv.choice("--decoder", "stub", "stub", "imageio", "wav")
+    if (frames && d == "imageio")
+      for (o <- Seq("--frame-bytes", "--stride") if argv.has(o))
+        throw new IllegalArgumentException(
+          s"$o applies to byte-window decoders (stub/wav); --decoder " +
+            "imageio reads length-prefixed encoded frames")
+    if (d != "stub") requireBinary(in, pc, s"--decoder $d",
+      if (d == "wav") "RIFF/WAVE bytes"
+      else if (frames) "encoded image frames, packImageFrames layout"
+      else "encoded image bytes")
+    d
+  }
+
+  /** A perceptual store's signature space is a FOUNDING constant: a
+    * restated `--decoder` must match it, and the STORED decoder governs
+    * the probe even when `--decoder` is omitted, so the payload check
+    * follows the store, not the flag. */
+  private def checkSignatureSpace(argv: Argv.Flags, in: DataFrame, pc: String,
+                                  stored: String): Unit = {
+    agrees("--decoder", argv.get("--decoder"), stored, "the signature space is")
+    if (stored != "stub") requireBinary(in, pc,
+      s"probing an index founded on the $stored signature space",
+      "re-encoded strings would extract nothing, silently")
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: CurateCli <clean|curate|refine|audit|dedup|ingest|neardup|embeddup|annindex|annsearch|anneval|split|diversity|dividend|labelaudit|pii|manifest|profile|overlap|bpe|tokenize|card|quality|drift|sample|select|stats|occupancy|forget|compact> --in PATH --out PATH [options]")
+    require(args.nonEmpty, s"usage: CurateCli <${CommandOptions.keys.toSeq.sorted.mkString("|")}> " +
+      "--in PATH --out PATH [options]")
     run(args.head, Argv.parse(args.tail, optionsFor(args.head)))
   }
 
   /** Testable entry: command + parsed options against the current (or a
     * fresh) session. Re-validates keys against the command's option set
-    * (specs call this directly, bypassing [[Argv.parse]]). */
-  def run(command: String, argv: Map[String, String]): Unit = {
-    val stray = argv.keySet -- optionsFor(command)
+    * (specs call this directly, bypassing [[Argv.parse]]). Every handler
+    * reads its flags before its first write, so a malformed one fails
+    * before any output or store changes. */
+  def run(command: String, opts: Map[String, String]): Unit = {
+    val stray = opts.keySet -- optionsFor(command)
     if (stray.nonEmpty)
       throw new IllegalArgumentException(
         s"option${if (stray.size > 1) "s" else ""} not valid for '$command': ${stray.toSeq.sorted.mkString(", ")}")
-    def req(k: String): String = argv.getOrElse(k, sys.error(s"missing required option $k"))
+    val argv = Argv.Flags(opts)
     val preexisting = SparkSession.getDefaultSession.isDefined
     val spark = GraftSession.cli("graft-curate")
 
-    def fmt(path: String, key: String): String = argv.get(key) match {
-      case Some(f @ ("jsonl" | "parquet")) => f
-      case Some(other) => throw new IllegalArgumentException(
-        s"$key must be jsonl or parquet, got '$other'")
-      case None => if (path.endsWith(".json") || path.endsWith(".jsonl")) "jsonl" else "parquet"
-    }
+    def fmt(path: String, key: String): String = argv.choice(key,
+      if (path.endsWith(".json") || path.endsWith(".jsonl")) "jsonl" else "parquet",
+      "jsonl", "parquet")
     // `--in-format` governs ONLY `--in`; the benchmark file gets its own
     // `--bench-format` (else extension sniffing) so forcing the corpus to
     // JSONL cannot silently misread a parquet benchmark, and vice versa
@@ -437,61 +567,51 @@ object CurateCli {
       case _       => df.write.mode("overwrite").parquet(path)
     }
 
-    val idCol   = argv.getOrElse("--id-col", "doc_id")
-    val textCol = argv.getOrElse("--text-col", "text")
+    val idCol   = argv.str("--id-col", "doc_id")
+    val textCol = argv.str("--text-col", "text")
     // lazy: the maintenance commands (forget/compact) have no --out, and
     // compact no --in — a missing option only errors on a command that
     // actually requires it
-    lazy val in = read(req("--in"))
-    lazy val out = req("--out")
+    lazy val in = read(argv.req("--in"))
+    lazy val out = argv.req("--out")
 
     CacheScope.withScope { scope =>
       command match {
         case "curate" =>
           write(Pipeline.curateCorpus(in, idCol, textCol,
-            argv.getOrElse("--lang-col", "lang"),
-            argv.getOrElse("--target-lang", "en"),
-            argv.getOrElse("--min-chars", "200").toInt,
-            argv.getOrElse("--chunk-tokens", "10").toInt,
-            argv.getOrElse("--budget-num", "1").toLong,
-            argv.getOrElse("--budget-den", "2").toLong, scope), out)
+            argv.str("--lang-col", "lang"),
+            argv.str("--target-lang", "en"),
+            argv.int("--min-chars", 200),
+            argv.int("--chunk-tokens", 10),
+            argv.long("--budget-num", 1L),
+            argv.long("--budget-den", 2L), scope), out)
 
         case "clean" =>
           // `--contamination excise` keeps contaminated docs and removes
           // just the benchmark-overlapping spans (q175) instead of
           // dropping whole pages; strict vocabulary, typos fail loudly
-          val contamination = argv.getOrElse("--contamination", "drop")
-          if (contamination != "drop" && contamination != "excise")
-            throw new IllegalArgumentException(
-              s"--contamination must be drop or excise, got '$contamination'")
-          write(Pipeline.cleanCorpus(in, readAs(req("--bench"), "--bench-format"), idCol, textCol,
-            argv.getOrElse("--min-tokens", "20").toInt,
-            argv.getOrElse("--ngram", "5").toInt,
-            argv.getOrElse("--chunk-size", "16").toInt,
-            argv.getOrElse("--overlap", "4").toInt, contamination, scope), out)
+          val contamination = argv.choice("--contamination", "drop", "drop", "excise")
+          write(Pipeline.cleanCorpus(in, readAs(argv.req("--bench"), "--bench-format"), idCol, textCol,
+            argv.int("--min-tokens", 20),
+            argv.int("--ngram", 5),
+            argv.int("--chunk-size", 16),
+            argv.int("--overlap", 4), contamination, scope), out)
 
         case "audit" =>
-          // "train=0.8,val=0.1,test=0.1" — order-preserving (split
-          // boundaries stack in declaration order, like the gate query)
-          val splits = argv.getOrElse("--splits", "train=0.8,val=0.1,test=0.1")
-            .split(",").toSeq.map { part =>
-              val Array(name, frac) = part.split("=")
-              name.trim -> frac.trim.toDouble
-            }
           write(Pipeline.auditReport(in, idCol, textCol,
-            argv.getOrElse("--group-col", "source"),
-            argv.getOrElse("--cap", "50").toInt,
-            splits, argv.getOrElse("--train-split", "train"),
-            argv.getOrElse("--chunk-tokens", "10").toInt, scope), out)
+            argv.str("--group-col", "source"),
+            argv.int("--cap", 50),
+            splits(argv), argv.str("--train-split", "train"),
+            argv.int("--chunk-tokens", 10), scope), out)
 
         case "bpe" =>
           import spark.implicits._
           // rank order IS the vocabulary: encoders must apply rules in
           // learned order, so it is materialized as an explicit column
           val rules = graft.ops.Corpus.bpeTrainLocal(in, textCol,
-            argv.getOrElse("--merges", "1000").toInt,
-            argv.getOrElse("--min-pair-count", "2").toLong,
-            argv.getOrElse("--max-distinct-words", "20000000").toInt)
+            argv.int("--merges", 1000),
+            argv.long("--min-pair-count", 2L),
+            argv.int("--max-distinct-words", 20000000))
           write(rules.zipWithIndex
             .map { case ((a, b, n), i) => (i, a, b, n) }
             .toDF("rank", "left", "right", "pair_count")
@@ -501,63 +621,30 @@ object CurateCli {
           // rank order IS the vocabulary (the `bpe` contract): apply
           // rules in learned order; the table is vocabulary-sized, so
           // the collect is driver-bounded by construction
-          val rules = readAs(req("--rules"), "--rules-format")
+          val rulesPath = argv.req("--rules")
+          val rules = readAs(rulesPath, "--rules-format")
             .orderBy(col("rank")).select(col("left"), col("right"))
             .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-          require(rules.nonEmpty, s"empty rules table at ${req("--rules")}")
+          require(rules.nonEmpty, s"empty rules table at $rulesPath")
           write(graft.ops.Corpus.bpeEncode(in, idCol, textCol, rules), out)
 
         case "dedup" =>
           import spark.implicits._
-          // a mutating default gated on one exact string is a footgun:
-          // "n"/"no"/"false" must not silently fall through to APPEND —
-          // validate against the explicit Y/N set (Argv.parse's fail-loud
-          // discipline) BEFORE any work touches the standing snapshot
-          val updateSnapshot = argv.getOrElse("--update-snapshot", "Y") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--update-snapshot must be Y or N, got '$other'")
-          }
-          val snapDir = req("--snapshot")
+          // every flag is read BEFORE any work touches the standing
+          // snapshot: "n"/"no"/"false" must not fall through to APPEND
+          val updateSnapshot = argv.yesNo("--update-snapshot", default = true)
+          val snapDir = argv.req("--snapshot")
           // `--normalize Y` keys the whole loop on NORMALIZED fingerprints
           // (md5 of normalizeForDedup text, q161): punctuation/counter
-          // variants of the same boilerplate dedup at exact cost. The
-          // kind is a FOUNDING constant of the store — raw and normalized
-          // are different identity spaces, so a disagreeing restatement
-          // (or trying to retrofit a pre-marker raw store) fails loudly
-          val normalize = argv.getOrElse("--normalize", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--normalize must be Y or N, got '$other'")
-          }
-          val requestedKind = if (normalize) "normalized" else "raw"
-          Dedup.snapshotFpKind(spark, snapDir) match {
-            case Some(stored) =>
-              if (stored != requestedKind) throw new IllegalArgumentException(
-                s"snapshot at '$snapDir' is keyed on $stored fingerprints; " +
-                  s"--normalize ${if (normalize) "Y" else "N"} disagrees")
-            case None =>
-              if (StandingStore.founded(spark, snapDir) && normalize)
-                throw new IllegalArgumentException(
-                  s"snapshot at '$snapDir' predates the fingerprint-kind " +
-                    "marker and is keyed on raw fingerprints; --normalize Y " +
-                    "cannot retrofit it (found a fresh store instead)")
-              // probe-only runs never FOUND the marker (the streaming-sink
-              // discipline): a read-only probe of an absent store must not
-              // pin the identity kind of a store holding no data
-              if (updateSnapshot)
-                Dedup.foundSnapshotFpKind(spark, snapDir, requestedKind)
-          }
+          // variants of the same boilerplate dedup at exact cost
+          val normalize = argv.yesNo("--normalize", default = false)
+          val bloomCapacity = bloomToFound(argv)
+          checkContentKind(spark, "snapshot", snapDir, normalize, found = updateSnapshot)
           // normalized runs rewrite the text column ONCE here; every
           // downstream fingerprint (probe + write-back delta) then hashes
           // the canonical form — fingerprint() of already-canonical text
           // is exactly md5(text), the q161 identity
-          val keyed =
-            if (normalize)
-              in.withColumn(textCol, TextAnalysis.normalizeForDedup(col(textCol)))
-            else in
+          val keyed = keyedText(in, textCol, normalize)
           // snapshotLive, not a raw read: pending `forget` tombstones
           // must stop counting as history (a re-ingest of forgotten
           // content verdicts `kept` again)
@@ -573,7 +660,7 @@ object CurateCli {
           // exists, probes use it and appends maintain it regardless of
           // the flag (an unmaintained sketch would grow false NEGATIVES,
           // which turn duplicates into `kept`)
-          maybeFoundBloom(spark, snapDir, argv, idCol)
+          maybeFoundBloom(spark, snapDir, bloomCapacity, idCol)
           val bloom = Dedup.loadSnapshotBloom(spark, snapDir)
           val verdicts = scope.track(
             Dedup.incrementalDedupSnapshot(keyed, idCol, textCol, snapshot,
@@ -602,100 +689,63 @@ object CurateCli {
           // data engineer would otherwise hand-write (filtering the
           // exact survivors between rungs, appending only final-kept)
           import spark.implicits._
-          val update = argv.getOrElse("--update", "Y") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--update must be Y or N, got '$other'")
-          }
-          val snapDir = req("--snapshot")
-          val idxDir = req("--index")
-          val minJ = argv.getOrElse("--min-jaccard", "0.2").toDouble
+          val update = argv.yesNo("--update", default = true)
+          val snapDir = argv.req("--snapshot")
+          val idxDir = argv.req("--index")
+          val minJ = argv.double("--min-jaccard", 0.2)
           // the CHEAPEST rung runs first: `--quality Y` drops documents
           // failing the Gopher gate (row-local, q140) before anything is
           // hashed — verdict `low_quality`, terminal, and such docs never
           // enter the stores (a later exact copy of a rejected doc is NOT
           // dup_history; it was never history)
-          val qualityOn = argv.getOrElse("--quality", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--quality must be Y or N, got '$other'")
-          }
-          val ledger = argv.get("--ledger")
-          val histDir = argv.get("--hist")
-          val sampleDir = argv.get("--sample")
-          // fail on a malformed/missing batch id BEFORE any store mutates
-          val ledgerBatch = ledger.orElse(histDir).orElse(sampleDir).map { _ =>
-            argv.getOrElse("--batch-id", throw new IllegalArgumentException(
-              "--ledger/--hist/--sample require --batch-id (ledgers are " +
-                "keyed per ingest batch)")).toLong
-          }
-          // presence = non-hidden content, not bare dir existence: a
-          // probe-only `--bloom Y` founding run leaves a store holding
-          // only the `_bloom` sidecar, which has no inferable schema
-          val snapHasData = StandingStore.founded(spark, snapDir)
-          val snapshot =
-            if (snapHasData)
-              Dedup.snapshotLive(spark, snapDir, idCol, scope).select(col("fp"))
-            else Seq.empty[String].toDF("fp")
-          val haveIdx = StandingStore.founded(spark, idxDir)
-          // `--normalize Y`: content identity for BOTH rungs (exact fp
-          // and near-dup shingles) is the q161 canonical form. The kind
-          // is a FOUNDING constant of EACH store (the `dedup` command's
-          // discipline — raw and normalized identity spaces cannot mix);
-          // the quality gate, histogram signal, and sample payload stay
-          // on the RAW text (features and the rows a human reads must
-          // not be canonicalized)
-          val ingNorm = argv.getOrElse("--normalize", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--normalize must be Y or N, got '$other'")
-          }
-          val ingKind = if (ingNorm) "normalized" else "raw"
-          for ((dir, hasData) <- Seq(
-              snapDir -> snapHasData, idxDir -> haveIdx))
-            Dedup.snapshotFpKind(spark, dir) match {
-              case Some(stored) =>
-                if (stored != ingKind) throw new IllegalArgumentException(
-                  s"store at '$dir' is keyed on $stored content identity; " +
-                    s"--normalize ${if (ingNorm) "Y" else "N"} disagrees")
-              case None =>
-                if (hasData && ingNorm) throw new IllegalArgumentException(
-                  s"store at '$dir' predates the content-identity marker " +
-                    "and is keyed on raw text; --normalize Y cannot " +
-                    "retrofit it (found fresh stores instead)")
-                // probe-only runs never FOUND (see `dedup`)
-                if (update) Dedup.foundSnapshotFpKind(spark, dir, ingKind)
-            }
-          def keyed(df: DataFrame): DataFrame =
-            if (ingNorm)
-              df.withColumn(textCol, TextAnalysis.normalizeForDedup(col(textCol)))
-            else df
-          // the same sidecar contract as `dedup`: `--bloom Y` founds,
-          // presence drives probe + maintenance (loadSnapshotBloom gives
-          // driver-side BYTES, so the prefilter is immune to the
-          // write-back cache invalidation below)
-          maybeFoundBloom(spark, snapDir, argv, idCol)
-          val bloom = Dedup.loadSnapshotBloom(spark, snapDir)
-          val lowQ =
-            if (!qualityOn) None
-            else Some(TextAnalysis.gopherQualityGate(in, idCol, textCol,
-                minWords = argv.getOrElse("--min-words", "50").toInt)
-              .filter(col("gopher_ok") === 0).select(col(idCol)))
-          val gated0 = lowQ.fold(in)(bad => in.join(bad, Seq(idCol), "left_anti"))
+          val qualityOn = argv.yesNo("--quality", default = false)
+          val minWords = argv.int("--min-words", 50)
           // `--repetition Y`: the q160 gate (paper defaults, RAW text —
           // canonicalization would erase the punctuation/case structure
           // the rules read) over the QUALITY survivors, so a doc failing
           // both rungs verdicts once; same terminal contract as
           // low_quality — never history, row-local, native single pass
-          val repOn = argv.getOrElse("--repetition", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--repetition must be Y or N, got '$other'")
+          val repOn = argv.yesNo("--repetition", default = false)
+          // `--normalize Y`: content identity for BOTH rungs (exact fp
+          // and near-dup shingles) is the q161 canonical form, a founding
+          // constant of EACH store; the quality gate, histogram signal,
+          // and sample payload stay on the RAW text (features and the
+          // rows a human reads must not be canonicalized)
+          val ingNorm = argv.yesNo("--normalize", default = false)
+          val band = banding(argv)
+          val bloomCapacity = bloomToFound(argv)
+          val grpCol = argv.str("--group-col", "source")
+          val ledger = argv.get("--ledger")
+          val histDir = argv.get("--hist")
+          val sampleDir = argv.get("--sample")
+          val ledgerBatch = ledger.orElse(histDir).orElse(sampleDir).map { _ =>
+            argv.long("--batch-id").getOrElse(throw new IllegalArgumentException(
+              "--ledger/--hist/--sample require --batch-id (ledgers are " +
+                "keyed per ingest batch)"))
           }
+          // presence = non-hidden content, not bare dir existence: a
+          // probe-only `--bloom Y` founding run leaves a store holding
+          // only the `_bloom` sidecar, which has no inferable schema
+          val snapshot =
+            if (StandingStore.founded(spark, snapDir))
+              Dedup.snapshotLive(spark, snapDir, idCol, scope).select(col("fp"))
+            else Seq.empty[String].toDF("fp")
+          val haveIdx = StandingStore.founded(spark, idxDir)
+          for (dir <- Seq(snapDir, idxDir))
+            checkContentKind(spark, "store", dir, ingNorm, found = update)
+          def keyed(df: DataFrame): DataFrame = keyedText(df, textCol, ingNorm)
+          // the same sidecar contract as `dedup`: `--bloom Y` founds,
+          // presence drives probe + maintenance (loadSnapshotBloom gives
+          // driver-side BYTES, so the prefilter is immune to the
+          // write-back cache invalidation below)
+          maybeFoundBloom(spark, snapDir, bloomCapacity, idCol)
+          val bloom = Dedup.loadSnapshotBloom(spark, snapDir)
+          val lowQ =
+            if (!qualityOn) None
+            else Some(TextAnalysis.gopherQualityGate(in, idCol, textCol,
+                minWords = minWords)
+              .filter(col("gopher_ok") === 0).select(col(idCol)))
+          val gated0 = lowQ.fold(in)(bad => in.join(bad, Seq(idCol), "left_anti"))
           val repBad =
             if (!repOn) None
             else Some(TextAnalysis.gopherRepetitionGate(gated0, idCol, textCol)
@@ -704,13 +754,7 @@ object CurateCli {
             gated0.join(bad, Seq(idCol), "left_anti"))
           val rungVerdicts = if (haveIdx) {
             val idx = Dedup.loadNearDupIndex(spark, idxDir, scope)
-            for ((flag, stored) <- Seq("--minhash-k" -> idx.k,
-                "--rows-per-band" -> idx.rowsPerBand, "--ngram" -> idx.n);
-                stated <- argv.get(flag))
-              if (stated.toInt != stored)
-                throw new IllegalArgumentException(
-                  s"$flag ${stated} disagrees with the stored index ($stored) — " +
-                    "banding parameters are fixed at build time")
+            checkBanding(argv, idx)
             Pipeline.ingestGate(keyed(gated), idCol, textCol, snapshot, idx, minJ,
               scope, bloomPrefilter = bloom)
           } else {
@@ -755,10 +799,7 @@ object CurateCli {
               Dedup.appendNearDupIndex(spark, idxDir, keyed(kept), idCol, textCol, scope)
             else
               Dedup.saveNearDupIndex(Dedup.buildNearDupIndex(keyed(kept), idCol, textCol,
-                argv.getOrElse("--minhash-k", "4").toInt,
-                argv.getOrElse("--rows-per-band", "2").toInt,
-                argv.getOrElse("--ngram", "5").toInt, scope), idxDir)
-            val grpCol = argv.getOrElse("--group-col", "source")
+                band.k, band.rowsPerBand, band.ngram, scope), idxDir)
             for (ledgerDir <- ledger)
               graft.ops.Corpus.cardLedgerAppend(spark, ledgerDir,
                 keyed(kept).select(col(grpCol),
@@ -787,57 +828,21 @@ object CurateCli {
           // batch's shingle/band projections — history is never
           // re-shingled or rewritten (the exact layer's `dedup`
           // discipline one rung up)
-          val updateIndex = argv.getOrElse("--update-index", "Y") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--update-index must be Y or N, got '$other'")
-          }
-          val idxDir = req("--index")
-          val minJ = argv.getOrElse("--min-jaccard", "0.2").toDouble
-          val ndHaveIdx = StandingStore.founded(spark, idxDir)
+          val updateIndex = argv.yesNo("--update-index", default = true)
+          val idxDir = argv.req("--index")
+          val minJ = argv.double("--min-jaccard", 0.2)
           // content-identity marker, shared with `dedup`/`ingest`: an
           // index keyed on normalized shingles must not be probed with
-          // raw text (or vice versa) — stored kind wins, disagreement
-          // fails loudly, a pre-marker store reads as raw
-          val ndNorm = argv.getOrElse("--normalize", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--normalize must be Y or N, got '$other'")
-          }
-          val ndKind = if (ndNorm) "normalized" else "raw"
-          Dedup.snapshotFpKind(spark, idxDir) match {
-            case Some(stored) =>
-              if (stored != ndKind) throw new IllegalArgumentException(
-                s"index at '$idxDir' is keyed on $stored content identity; " +
-                  s"--normalize ${if (ndNorm) "Y" else "N"} disagrees")
-            case None =>
-              if (ndHaveIdx && ndNorm) throw new IllegalArgumentException(
-                s"index at '$idxDir' predates the content-identity marker " +
-                  "and is keyed on raw text; --normalize Y cannot retrofit " +
-                  "it (found a fresh index instead)")
-              // probe-only runs never FOUND (see `dedup`)
-              if (updateIndex)
-                Dedup.foundSnapshotFpKind(spark, idxDir, ndKind)
-          }
-          val ndIn =
-            if (ndNorm)
-              in.withColumn(textCol, TextAnalysis.normalizeForDedup(col(textCol)))
-            else in
+          // raw text (or vice versa)
+          val ndNorm = argv.yesNo("--normalize", default = false)
+          val band = banding(argv)
+          val ndHaveIdx = StandingStore.founded(spark, idxDir)
+          requireFoundable(idxDir, ndHaveIdx, updateIndex)
+          checkContentKind(spark, "index", idxDir, ndNorm, found = updateIndex)
+          val ndIn = keyedText(in, textCol, ndNorm)
           if (ndHaveIdx) {
-            // banding parameters live in the stored index; restating one
-            // that DISAGREES is the quiet-misconfiguration class the
-            // strict parse kills — the probe would band the batch under
-            // the stored values, not the stated ones
             val idx = Dedup.loadNearDupIndex(spark, idxDir, scope)
-            for ((flag, stored) <- Seq("--minhash-k" -> idx.k,
-                "--rows-per-band" -> idx.rowsPerBand, "--ngram" -> idx.n);
-                stated <- argv.get(flag))
-              if (stated.toInt != stored)
-                throw new IllegalArgumentException(
-                  s"$flag ${stated} disagrees with the stored index ($stored) — " +
-                    "banding parameters are fixed at build time")
+            checkBanding(argv, idx)
             write(Dedup.incrementalNearDupsWith(ndIn, idx, idCol, textCol,
               minJ, scope), out)
             if (updateIndex)
@@ -845,76 +850,48 @@ object CurateCli {
           } else {
             // first batch: no history to probe — zero verdicts (with the
             // probe's schema, so downstream readers see one shape), and
-            // the batch founds the index. Founding needs --update-index
-            // Y: with N nothing is probed and nothing built, so a typo'd
-            // --index path must fail loudly, not silently no-op
-            if (!updateIndex) throw new IllegalArgumentException(
-              s"--index $idxDir does not exist and --update-index N " +
-                "founds nothing: nothing to probe, nothing would be " +
-                "built — check the index path")
+            // the batch founds the index
             write(ndIn.select(col(idCol), col(idCol).as("hist_id"),
               lit(0.0).as("jaccard")).limit(0), out)
             Dedup.saveNearDupIndex(Dedup.buildNearDupIndex(ndIn, idCol, textCol,
-              argv.getOrElse("--minhash-k", "4").toInt,
-              argv.getOrElse("--rows-per-band", "2").toInt,
-              argv.getOrElse("--ngram", "5").toInt, scope), idxDir)
+              band.k, band.rowsPerBand, band.ngram, scope), idxDir)
           }
 
         case "embeddup" =>
           // the VECTOR rung of the same loop (q115/q127 discipline):
           // probe the batch's embeddings against the standing LSH bucket
           // index, append the batch's buckets unless read-only
-          val updateIndex = argv.getOrElse("--update-index", "Y") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--update-index must be Y or N, got '$other'")
-          }
-          val idxDir = req("--index")
-          val minSim = argv.getOrElse("--min-sim", "0.3").toDouble
-          val vecCol = argv.getOrElse("--vec-col", "embedding")
-          val eidCol = argv.getOrElse("--id-col", "vec_id")
+          val S = graft.ops.Similarity
+          val updateIndex = argv.yesNo("--update-index", default = true)
+          val idxDir = argv.req("--index")
+          val minSim = argv.double("--min-sim", 0.3)
+          val vecCol = argv.str("--vec-col", "embedding")
+          val eidCol = argv.str("--id-col", "vec_id")
           // `--multiprobe Y` widens each batch vector's probe to its
           // Hamming-1 bucket neighbors (q174): a PER-PROBE recall knob,
           // deliberately NOT a founding constant — the store's buckets
           // are unchanged, only this batch's candidate set widens
-          val ndMulti = argv.getOrElse("--multiprobe", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--multiprobe must be Y or N, got '$other'")
-          }
-          if (StandingStore.founded(spark, idxDir)) {
-            val idx = graft.ops.Similarity.loadEmbedIndex(spark, idxDir, scope)
-            for ((flag, stored) <- Seq("--dim" -> idx.dim, "--planes" -> idx.nPlanes);
-                stated <- argv.get(flag))
-              if (stated.toInt != stored)
-                throw new IllegalArgumentException(
-                  s"$flag ${stated} disagrees with the stored index ($stored) — " +
-                    "hashing parameters are fixed at build time")
-            write(graft.ops.Similarity.incrementalEmbedNearDupsWith(in, idx,
+          val ndMulti = argv.yesNo("--multiprobe", default = false)
+          val dim = argv.int("--dim")
+          val planes = argv.int("--planes")
+          val founded = StandingStore.founded(spark, idxDir)
+          requireFoundable(idxDir, founded, updateIndex)
+          if (founded) {
+            val idx = S.loadEmbedIndex(spark, idxDir, scope)
+            agrees("--dim", dim, idx.dim, "hashing parameters are")
+            agrees("--planes", planes, idx.nPlanes, "hashing parameters are")
+            write(S.incrementalEmbedNearDupsWith(in, idx,
               eidCol, vecCol, minSim, multiProbe = ndMulti), out)
             if (updateIndex)
-              graft.ops.Similarity.appendEmbedIndex(spark, idxDir, in, eidCol, vecCol)
+              S.appendEmbedIndex(spark, idxDir, in, eidCol, vecCol)
           } else {
-            // founding needs --update-index Y (the neardup/framedup/
-            // phashdup discipline): a typo'd --index with N must fail
-            // loudly, not write a silent empty verdict table
-            if (!updateIndex) throw new IllegalArgumentException(
-              s"--index $idxDir does not exist and --update-index N " +
-                "founds nothing: nothing to probe, nothing would be " +
-                "built — check the index path")
             write(in.select(col(eidCol), col(eidCol).as("hist_id"),
               lit(0.0).as("sim")).limit(0), out)
             // dim defaults to the data's own width; plane count to the
             // occupancy-targeting rule on the founding batch's size
-            val dim = argv.get("--dim").map(_.toInt).getOrElse(
-              in.select(size(col(vecCol))).head().getInt(0))
-            val planes = argv.get("--planes").map(_.toInt).getOrElse(
-              graft.ops.Similarity.autoPlanes(in.count()))
-            graft.ops.Similarity.saveEmbedIndex(
-              graft.ops.Similarity.buildEmbedIndex(in, eidCol, vecCol,
-                dim, planes, scope = scope), idxDir)
+            S.saveEmbedIndex(S.buildEmbedIndex(in, eidCol, vecCol,
+              dim.getOrElse(in.select(size(col(vecCol))).head().getInt(0)),
+              planes.getOrElse(S.autoPlanes(in.count())), scope = scope), idxDir)
           }
 
         case "annindex" =>
@@ -922,72 +899,59 @@ object CurateCli {
           // encode the founding batch), else append encoded under the
           // STORED geometry — history is never re-encoded
           val S = graft.ops.Similarity
-          val idxDir = req("--index")
-          val vecCol = argv.getOrElse("--vec-col", "embedding")
-          val aidCol = argv.getOrElse("--id-col", "vec_id")
-          def yn(flag: String, dflt: String) = argv.getOrElse(flag, dflt) match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"$flag must be Y or N, got '$other'")
-          }
-          if (yn("--refound", "N")) {
+          val idxDir = argv.req("--index")
+          val vecCol = argv.str("--vec-col", "embedding")
+          val aidCol = argv.str("--id-col", "vec_id")
+          val refound = argv.yesNo("--refound", default = false)
+          val residual = argv.yesNo("--residual", default = false)
+          val dim = argv.int("--dim")
+          val cells = argv.int("--cells")
+          val subspaces = argv.int("--subspaces")
+          val codes = argv.int("--codes")
+          if (refound) {
             // drift remediation (the ivfPqIndexStats signal): retrain
             // geometry from --in as the CURRENT full corpus and swap the
             // store atomically — stored dim/subspaces/codes/residual kept
-            for (flag <- Seq("--dim", "--cells", "--subspaces", "--codes", "--residual");
-                 _ <- argv.get(flag))
+            for (flag <- Seq("--dim", "--cells", "--subspaces", "--codes", "--residual")
+                 if argv.has(flag))
               throw new IllegalArgumentException(
                 s"$flag does not apply with --refound Y (stored geometry is " +
                   "kept; the cell count re-derives from the corpus size)")
-            graft.ops.Similarity.refoundIvfPqIndex(spark, idxDir, in, aidCol,
-              vecCol, scope = scope)
+            S.refoundIvfPqIndex(spark, idxDir, in, aidCol, vecCol, scope = scope)
           } else if (StandingStore.founded(spark, idxDir)) {
-            // geometry lives in the stored index; a restated value that
-            // DISAGREES fails loudly (the neardup/embeddup discipline —
-            // the append would otherwise encode under stored params the
-            // caller didn't state)
+            // geometry lives in the stored index (the append would
+            // otherwise encode under stored params the caller didn't state)
             val p = StandingStore.params(spark, idxDir)
-            for (stated <- argv.get("--dim"); stored = p.getAs[Int]("dim");
-                 if stated.toInt != stored)
-              throw new IllegalArgumentException(
-                s"--dim $stated disagrees with the stored index ($stored) — " +
-                  "index geometry is fixed at build time")
-            for (stated <- argv.get("--residual");
-                 if yn("--residual", stated) != p.getAs[Boolean]("residual"))
-              throw new IllegalArgumentException(
-                s"--residual $stated disagrees with the stored index — " +
-                  "the code space is fixed at build time")
-            for (flag <- Seq("--cells", "--subspaces", "--codes"); _ <- argv.get(flag))
+            agrees("--dim", dim, p.getAs[Int]("dim"), "index geometry is")
+            agrees("--residual", argv.get("--residual"),
+              if (p.getAs[Boolean]("residual")) "Y" else "N", "the code space is")
+            for (flag <- Seq("--cells", "--subspaces", "--codes") if argv.has(flag))
               throw new IllegalArgumentException(
                 s"$flag is a build-time option; the stored index already has its geometry")
             S.appendIvfPqIndex(spark, idxDir, in, aidCol, vecCol)
           } else {
-            val dim = argv.get("--dim").map(_.toInt).getOrElse(
-              in.select(size(col(vecCol))).head().getInt(0))
-            val n = in.count()
-            val cells = argv.get("--cells").map(_.toInt).getOrElse(S.autoCells(n))
+            val d = dim.getOrElse(in.select(size(col(vecCol))).head().getInt(0))
+            val cents = S.ivfTrain(
+              in.select(col(vecCol).cast("array<double>").as("_v")), "_v",
+              cells.getOrElse(S.autoCells(in.count())))
             // sub-space count must divide dim; default to the widest of
             // the usual powers of two that does
-            val m = argv.get("--subspaces").map(_.toInt).getOrElse(
-              Seq(8, 4, 2, 1).find(dim % _ == 0).get)
-            val codes = argv.get("--codes").map(_.toInt).getOrElse(16)
-            val cents = S.ivfTrain(
-              in.select(col(vecCol).cast("array<double>").as("_v")), "_v", cells)
-            val book = S.pqTrain(in, vecCol, dim, m, codes)
+            val book = S.pqTrain(in, vecCol, d,
+              subspaces.getOrElse(Seq(8, 4, 2, 1).find(d % _ == 0).get),
+              codes.getOrElse(16))
             S.saveIvfPqIndex(S.buildIvfPqIndex(in, aidCol, vecCol, cents, book,
-              dim, yn("--residual", "N"), scope), idxDir)
+              d, residual, scope), idxDir)
           }
 
         case "annsearch" =>
           val S = graft.ops.Similarity
-          val idx = S.loadIvfPqIndex(spark, req("--index"), scope)
-          val nCells = idx.cents.count().toInt
+          val nprobe = argv.int("--nprobe")
+          val idx = S.loadIvfPqIndex(spark, argv.req("--index"), scope)
           write(S.ivfPqTopKWith(idx, in,
-            argv.getOrElse("--id-col", "vec_id"),
-            argv.getOrElse("--vec-col", "embedding"),
-            argv.get("--nprobe").map(_.toInt).getOrElse(S.autoProbe(nCells)),
-            argv.getOrElse("--topk", "10").toInt), out)
+            argv.str("--id-col", "vec_id"),
+            argv.str("--vec-col", "embedding"),
+            nprobe.getOrElse(S.autoProbe(idx.cents.count().toInt)),
+            argv.int("--topk", 10)), out)
 
         case "anneval" =>
           // the serving-quality loop closer: search a STANDING store
@@ -1006,8 +970,8 @@ object CurateCli {
           //     cosine (q173: the --planes/--min-sim decision table —
           //     the threshold's cost lands in recall, not hidden)
           val S = graft.ops.Similarity
-          val k = argv.getOrElse("--topk", "10").toInt
-          val kind = argv.getOrElse("--store-kind", "ivfpq")
+          val k = argv.int("--topk", 10)
+          val kind = argv.choice("--store-kind", "ivfpq", "ivfpq", "neardup", "embeddup")
           // a flag from ANOTHER rung fails as loudly as a typo — the
           // per-command option-set discipline applied per KIND (silently
           // ignoring --min-jaccard on an ivfpq eval is the quiet
@@ -1015,49 +979,47 @@ object CurateCli {
           val inapplicable: Seq[String] = kind match {
             case "ivfpq"    => Seq("--min-jaccard", "--min-sim", "--multiprobe")
             case "neardup"  => Seq("--nprobe", "--min-sim", "--multiprobe", "--vec-col")
-            case "embeddup" => Seq("--nprobe", "--min-jaccard")
-            case _          => Seq.empty
+            case _          => Seq("--nprobe", "--min-jaccard")
           }
-          for (flag <- inapplicable if argv.contains(flag))
+          for (flag <- inapplicable if argv.has(flag))
             throw new IllegalArgumentException(
               s"$flag does not apply to --store-kind $kind")
+          val idxDir = argv.req("--index")
+          val aid = argv.str("--id-col", "vec_id")
+          val vecCol = argv.str("--vec-col", "embedding")
+          val nprobe = argv.int("--nprobe")
+          val minJ = argv.double("--min-jaccard", 0.2)
+          val minSim = argv.double("--min-sim", 0.3)
+          // grade the widened probe when asked — the eval half of the
+          // q174 multi-probe knob
+          val mp = argv.yesNo("--multiprobe", default = false)
           // queries: an explicit frame, or the first --nqueries corpus
           // rows by id (deterministic); --queries-format is its own
           // flag (the --bench-format lesson — formats must not leak
           // between inputs)
+          val nQueries = argv.int("--nqueries", 10)
           def queriesFrom(keyCol: String): DataFrame =
             argv.get("--queries") match {
               case Some(p) => readAs(p, "--queries-format")
-              case None => in.orderBy(col(keyCol))
-                .limit(argv.getOrElse("--nqueries", "10").toInt)
+              case None => in.orderBy(col(keyCol)).limit(nQueries)
             }
           kind match {
             case "ivfpq" =>
-              val idx = S.loadIvfPqIndex(spark, req("--index"), scope)
-              val nCells = idx.cents.count().toInt
-              val aid = argv.getOrElse("--id-col", "vec_id")
-              val vecCol = argv.getOrElse("--vec-col", "embedding")
-              val nprobe = argv.get("--nprobe").map(_.toInt)
-                .getOrElse(S.autoProbe(nCells))
+              val idx = S.loadIvfPqIndex(spark, idxDir, scope)
               val queries = queriesFrom(aid)
-              val approx = S.ivfPqTopKWith(idx, queries, aid, vecCol, nprobe, k)
+              val approx = S.ivfPqTopKWith(idx, queries, aid, vecCol,
+                nprobe.getOrElse(S.autoProbe(idx.cents.count().toInt)), k)
               val exact = S.exactTopK(in, aid, vecCol, queries, aid, vecCol, k)
               write(S.rankedEval(approx, exact, "query_id", "vec_id",
                 "adist", ascending = true, k), out)
             case "neardup" =>
-              val ndIdxDir = req("--index")
-              val idx = Dedup.loadNearDupIndex(spark, ndIdxDir, scope)
-              val minJ = argv.getOrElse("--min-jaccard", "0.2").toDouble
+              val idx = Dedup.loadNearDupIndex(spark, idxDir, scope)
               // honor the store's FOUNDING content-identity marker: a
               // normalized-keyed index probed with raw text would grade
               // garbage silently — the exact failure the _fpkind marker
               // exists to prevent on the probe commands
-              def keyed(df: DataFrame): DataFrame =
-                Dedup.snapshotFpKind(spark, ndIdxDir) match {
-                  case Some("normalized") => df.withColumn(textCol,
-                    TextAnalysis.normalizeForDedup(col(textCol)))
-                  case _ => df
-                }
+              def keyed(df: DataFrame): DataFrame = keyedText(df, textCol,
+                Dedup.snapshotFpKind(spark, idxDir).contains("normalized"))
               val queries = keyed(queriesFrom(idCol))
               val approx = Dedup.nearDupTopKWith(queries, idx,
                 idCol, textCol, minJ, k, scope)
@@ -1065,27 +1027,14 @@ object CurateCli {
                 textCol, idx.n, minJ, k, scope)
               write(S.rankedEval(approx, exact, "query_id", idCol,
                 "jaccard", ascending = false, k), out)
-            case "embeddup" =>
-              val idx = S.loadEmbedIndex(spark, req("--index"), scope)
-              val aid = argv.getOrElse("--id-col", "vec_id")
-              val vecCol = argv.getOrElse("--vec-col", "embedding")
-              val minSim = argv.getOrElse("--min-sim", "0.3").toDouble
-              // grade the widened probe when asked — the eval half of the
-              // q174 multi-probe knob
-              val mp = argv.getOrElse("--multiprobe", "N") match {
-                case "Y" => true
-                case "N" => false
-                case other => throw new IllegalArgumentException(
-                  s"--multiprobe must be Y or N, got '$other'")
-              }
+            case _ =>
+              val idx = S.loadEmbedIndex(spark, idxDir, scope)
               val queries = queriesFrom(aid)
               val approx = S.embedNearDupTopKWith(queries, idx,
                 aid, vecCol, minSim, k, multiProbe = mp)
               val exact = S.exactTopK(in, aid, vecCol, queries, aid, vecCol, k)
               write(S.rankedEval(approx, exact, "query_id", aid,
                 "sim", ascending = false, k), out)
-            case other => throw new IllegalArgumentException(
-              s"--store-kind must be ivfpq, neardup or embeddup, got '$other'")
           }
 
         case "split" =>
@@ -1098,45 +1047,34 @@ object CurateCli {
           // shared with `neardup`) and hash the CLUSTER id instead — a
           // resolved component takes one draw, so near-dup pairs cannot
           // straddle train/eval
-          val splits = argv.getOrElse("--splits", "train=0.8,val=0.1,test=0.1")
-            .split(",").toSeq.map { s =>
-              val Array(name, frac) = s.split("=", 2)
-              name -> frac.toDouble
-            }
-          val leakageSafe = argv.getOrElse("--leakage-safe", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--leakage-safe must be Y or N, got '$other'")
-          }
-          val assigned = if (leakageSafe) {
+          val sp = splits(argv)
+          val assigned = if (argv.yesNo("--leakage-safe", default = false)) {
             // the key IS the resolved component — a --key-col here would
             // be silently ignored, so reject it loudly
-            for (_ <- argv.get("--key-col")) throw new IllegalArgumentException(
+            if (argv.has("--key-col")) throw new IllegalArgumentException(
               "--key-col does not apply with --leakage-safe Y (the hash " +
                 "key is the resolved cluster id)")
-            val sh = Dedup.shingleSets(in, idCol, textCol,
-              argv.getOrElse("--ngram", "5").toInt, scope)
-            val pairs = Dedup.minhashLshPairsOf(sh,
-              k = argv.getOrElse("--minhash-k", "4").toInt,
-              rowsPerBand = argv.getOrElse("--rows-per-band", "2").toInt,
-              minJaccard = argv.getOrElse("--min-jaccard", "0.5").toDouble)
+            val band = banding(argv)
+            val sh = Dedup.shingleSets(in, idCol, textCol, band.ngram, scope)
+            val pairs = Dedup.minhashLshPairsOf(sh, k = band.k,
+              rowsPerBand = band.rowsPerBand,
+              minJaccard = argv.double("--min-jaccard", 0.5))
             // --cc-strategy defaults to auto: an unattended split job on a
             // boilerplate megacluster should degrade to the logarithmic
             // star rounds, not die at label propagation's diameter cap
             val comps = Cluster.resolveComponents(
-              argv.getOrElse("--cc-strategy", "auto"),
+              argv.str("--cc-strategy", "auto"),
               in.select(col(idCol)), idCol, pairs, "id_a", "id_b",
               scope = scope)
-            in.join(Cluster.leakageSafeSplit(comps, idCol, "component", splits)
+            in.join(Cluster.leakageSafeSplit(comps, idCol, "component", sp)
               .drop("component"), Seq(idCol))
           } else {
             for (o <- Seq("--ngram", "--minhash-k", "--rows-per-band",
-                "--min-jaccard", "--cc-strategy"); _ <- argv.get(o))
+                "--min-jaccard", "--cc-strategy") if argv.has(o))
               throw new IllegalArgumentException(
                 s"$o only applies with --leakage-safe Y")
             in.withColumn("split",
-              TextAnalysis.hashSplit(col(argv.getOrElse("--key-col", idCol)), splits))
+              TextAnalysis.hashSplit(col(argv.str("--key-col", idCol)), sp))
           }
           fmt(out, "--out-format") match {
             case "jsonl" => assigned.write.mode("overwrite")
@@ -1150,17 +1088,16 @@ object CurateCli {
           // near-dup clusters inline (the split --leakage-safe
           // machinery, same neardup knobs) and price the non-canonical
           // doc/token mass
-          val sh = Dedup.shingleSets(in, idCol, textCol,
-            argv.getOrElse("--ngram", "5").toInt, scope)
+          val band = banding(argv)
+          val ccStrategy = argv.str("--cc-strategy", "auto")
           // with --thresholds the pair table must reach DOWN to the
           // lowest requested cutoff: pairs with jaccard in
           // [cutoff, minJaccard) would otherwise never be emitted and
           // every curve point below --min-jaccard silently under-prices
           // (round-10 advice). An explicit --min-jaccard above the lowest
           // cutoff is a contradiction — fail loudly, don't guess.
-          val curveCuts = argv.get("--thresholds")
-            .map(_.split(",").toSeq.map(_.trim.toDouble))
-          val minJ = argv.get("--min-jaccard").map(_.toDouble) match {
+          val curveCuts = argv.doubles("--thresholds")
+          val minJ = argv.double("--min-jaccard") match {
             case Some(mj) =>
               for (cuts <- curveCuts if cuts.min < mj)
                 throw new IllegalArgumentException(
@@ -1171,34 +1108,32 @@ object CurateCli {
               mj
             case None => curveCuts.map(_.min).getOrElse(0.5).min(0.5)
           }
-          val pairs = Dedup.minhashLshPairsOf(sh,
-            k = argv.getOrElse("--minhash-k", "4").toInt,
-            rowsPerBand = argv.getOrElse("--rows-per-band", "2").toInt,
-            minJaccard = minJ)
+          if (curveCuts.isDefined && argv.has("--group-col"))
+            throw new IllegalArgumentException(
+              "--group-col does not apply with --thresholds (the " +
+                "curve prices the whole corpus per cutoff)")
+          val pairs = Dedup.minhashLshPairsOf(
+            Dedup.shingleSets(in, idCol, textCol, band.ngram, scope),
+            k = band.k, rowsPerBand = band.rowsPerBand, minJaccard = minJ)
           // `--thresholds 0.5,0.7,0.9` writes the q184 CURVE (the
           // cutoff decision table, one CC per cutoff on the same pair
           // table) instead of the per-group q181 report
           write(curveCuts match {
             case Some(cuts) =>
-              for (_ <- argv.get("--group-col"))
-                throw new IllegalArgumentException(
-                  "--group-col does not apply with --thresholds (the " +
-                    "curve prices the whole corpus per cutoff)")
               Cluster.dividendCurve(in.select(col(idCol)), idCol,
                 pairs, "id_a", "id_b", "jaccard",
                 in.select(col(idCol),
                   TextAnalysis.tokenCount(col(textCol)).as("_nt")),
-                idCol, "_nt", cuts, scope,
-                strategy = argv.getOrElse("--cc-strategy", "auto"))
+                idCol, "_nt", cuts, scope, strategy = ccStrategy)
             case None =>
-              val comps = Cluster.resolveComponents(
-                argv.getOrElse("--cc-strategy", "auto"),
+              val comps = Cluster.resolveComponents(ccStrategy,
                 in.select(col(idCol)), idCol, pairs, "id_a", "id_b",
                 scope = scope)
+              val g = argv.str("--group-col", "source")
               Cluster.dedupDividend(comps, idCol, "component",
-                in.select(col(idCol), col(argv.getOrElse("--group-col", "source")),
+                in.select(col(idCol), col(g),
                   TextAnalysis.tokenCount(col(textCol)).as("_nt")),
-                idCol, argv.getOrElse("--group-col", "source"), "_nt")
+                idCol, g, "_nt")
           }, out)
 
         case "labelaudit" =>
@@ -1206,8 +1141,8 @@ object CurateCli {
           // already carries both columns (the prediction is whatever
           // upstream scored — langId, a topic model, a vendor tag)
           write(TextAnalysis.labelAgreement(in,
-            argv.getOrElse("--label-col", "lang"),
-            argv.getOrElse("--pred-col", "pred_lang")), out)
+            argv.str("--label-col", "lang"),
+            argv.str("--pred-col", "pred_lang")), out)
 
         case "integrity" =>
           // payload integrity audit (q193): verify each binary payload
@@ -1217,47 +1152,24 @@ object CurateCli {
             require(in.columns.contains(c),
               s"integrity expects a packed input with a '$c' column " +
                 s"(packBinary's layout); got ${in.columns.mkString(",")}")
+          val badOnly = argv.yesNo("--bad-only", default = false)
           val report = Multimodal.payloadIntegrity(in, idCol)
-          write(argv.getOrElse("--bad-only", "N") match {
-            case "Y" => report.filter(col("verdict") =!= "ok")
-            case "N" => report
-            case other => throw new IllegalArgumentException(
-              s"--bad-only must be Y or N, got '$other'")
-          }, out)
+          write(if (badOnly) report.filter(col("verdict") =!= "ok") else report, out)
 
         case "features" =>
           // partition-batched media feature extraction (q68): one
           // decoder instance per partition. --decoder stub = the
           // deterministic q68 fake (DuckDB-oracled); imageio = the REAL
           // decoder (true dims/channels/mean-luma brightness,
-          // undecodables kept with decoded=false — the audit shape)
-          val mpc = argv.getOrElse("--payload-col", "payload")
-          require(in.columns.contains(mpc),
-            s"--payload-col '$mpc' not in input columns ${in.columns.mkString(",")}")
-          val mpayload = in.schema(mpc).dataType match {
-            case org.apache.spark.sql.types.BinaryType => col(mpc)
-            case org.apache.spark.sql.types.StringType => encode(col(mpc), "utf-8")
-            case other => throw new IllegalArgumentException(
-              s"--payload-col must be binary or string, got $other")
-          }
-          val min = in.select(col(idCol), mpayload.as("payload"))
-          write(argv.getOrElse("--decoder", "stub") match {
+          // undecodables kept with decoded=false — the audit shape);
+          // wav = AUDIO features (q202): fmt facts + samples + duration +
+          // mean amplitude, malformed containers audit valid=false
+          val mpc = payloadCol(argv, in)
+          val min = in.select(col(idCol), payloadBytes(in, mpc).as("payload"))
+          write(decoderOf(argv, in, mpc) match {
             case "stub" => Multimodal.extractFeatures(min, idCol)
-            case "imageio" =>
-              require(in.schema(mpc).dataType ==
-                org.apache.spark.sql.types.BinaryType,
-                "--decoder imageio needs a BINARY payload column " +
-                  "(encoded image bytes)")
-              Multimodal.extractImageFeatures(min, idCol)
-            case "wav" =>
-              // AUDIO features (q202): fmt facts + samples + duration +
-              // mean amplitude; malformed containers audit valid=false
-              require(in.schema(mpc).dataType ==
-                org.apache.spark.sql.types.BinaryType,
-                "--decoder wav needs a BINARY payload column (RIFF/WAVE bytes)")
-              Multimodal.extractWavFeatures(min, idCol)
-            case other => throw new IllegalArgumentException(
-              s"--decoder must be stub, imageio or wav, got '$other'")
+            case "imageio" => Multimodal.extractImageFeatures(min, idCol)
+            case _ => Multimodal.extractWavFeatures(min, idCol)
           }, out)
 
         case "audiogate" =>
@@ -1265,23 +1177,15 @@ object CurateCli {
           // fractions per recording with the keep verdict — the Gopher
           // gate's analogue for the third modality; --bad-only Y keeps
           // the violations (the integrity command's discipline)
-          val apc = argv.getOrElse("--payload-col", "payload")
-          require(in.columns.contains(apc),
-            s"--payload-col '$apc' not in input columns ${in.columns.mkString(",")}")
-          require(in.schema(apc).dataType ==
-            org.apache.spark.sql.types.BinaryType,
-            "audiogate needs a BINARY payload column (RIFF/WAVE bytes)")
+          val apc = payloadCol(argv, in)
+          requireBinary(in, apc, "audiogate", "RIFF/WAVE bytes")
+          val badOnly = argv.yesNo("--bad-only", default = false)
           val gated = Multimodal.wavQualityGate(
             in.select(col(idCol), col(apc).as("payload")), idCol,
-            maxClipFrac = argv.getOrElse("--max-clip", "0.2").toDouble,
-            maxSilenceFrac = argv.getOrElse("--max-silence", "0.5").toDouble,
-            silenceTol = argv.getOrElse("--silence-tol", "2").toInt)
-          write(argv.getOrElse("--bad-only", "N") match {
-            case "Y" => gated.filter(!col("keep"))
-            case "N" => gated
-            case other => throw new IllegalArgumentException(
-              s"--bad-only must be Y or N, got '$other'")
-          }, out)
+            maxClipFrac = argv.double("--max-clip", 0.2),
+            maxSilenceFrac = argv.double("--max-silence", 0.5),
+            silenceTol = argv.int("--silence-tol", 2))
+          write(if (badOnly) gated.filter(!col("keep")) else gated, out)
 
         case "mingest" =>
           // the MEDIA ingest daily loop (the `ingest` command's
@@ -1293,48 +1197,27 @@ object CurateCli {
           for (c <- Seq("payload", "meta"))
             require(in.columns.contains(c),
               s"mingest needs a packed payload+meta table, missing '$c'")
-          def myn(flag: String, dflt: String) = argv.getOrElse(flag, dflt) match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"$flag must be Y or N, got '$other'")
-          }
-          val giDir = req("--index")
-          val giUpd = myn("--update-index", "Y")
-          val giAudio = myn("--audio", "N")
-          val giMaxDist = argv.getOrElse("--max-dist", "6").toInt
+          val giDir = argv.req("--index")
+          val giUpd = argv.yesNo("--update-index", default = true)
+          val giAudio = argv.yesNo("--audio", default = false)
+          val giMaxDist = argv.int("--max-dist", 6)
+          val bands = argv.int("--bands")
+          val decoder = decoderOf(argv, in, "payload")
+          val maxClip = argv.double("--max-clip", 0.2)
+          val maxSilence = argv.double("--max-silence", 0.5)
+          val silenceTol = argv.int("--silence-tol", 2)
           val giExists = StandingStore.founded(spark, giDir)
-          if (!giExists && !giUpd) throw new IllegalArgumentException(
-            s"--index $giDir does not exist and --update-index N founds " +
-              "nothing: nothing to probe, nothing would be built — check " +
-              "the index path")
+          requireFoundable(giDir, giExists, giUpd)
           val giIdx =
             if (giExists) {
               val idx = Multimodal.loadPHashIndex(spark, giDir, scope)
-              for (stated <- argv.get("--bands"))
-                if (stated.toInt != idx.nBands)
-                  throw new IllegalArgumentException(
-                    s"--bands $stated disagrees with the stored index " +
-                      s"(${idx.nBands}) — banding is fixed at build time")
-              for (stated <- argv.get("--decoder"))
-                if (stated != idx.decoder)
-                  throw new IllegalArgumentException(
-                    s"--decoder $stated disagrees with the stored index " +
-                      s"(${idx.decoder}) — the signature space is fixed " +
-                      "at build time")
+              agrees("--bands", bands, idx.nBands, "banding is")
+              checkSignatureSpace(argv, in, "payload", idx.decoder)
               idx
             } else Multimodal.buildPHashIndex(in.limit(0), idCol, "payload",
-              argv.getOrElse("--bands", "4").toInt,
-              argv.getOrElse("--decoder", "stub") match {
-                case dd @ ("stub" | "imageio" | "wav") => dd
-                case other => throw new IllegalArgumentException(
-                  s"--decoder must be stub, imageio or wav, got '$other'")
-              }, scope)
+              bands.getOrElse(4), decoder, scope)
           val giVerdicts = scope.track(Pipeline.mediaIngestGate(in, idCol,
-            giIdx, giMaxDist, giAudio,
-            argv.getOrElse("--max-clip", "0.2").toDouble,
-            argv.getOrElse("--max-silence", "0.5").toDouble,
-            argv.getOrElse("--silence-tol", "2").toInt, scope).cache())
+            giIdx, giMaxDist, giAudio, maxClip, maxSilence, silenceTol, scope).cache())
           write(giVerdicts, out)
           if (giUpd) {
             val kept = in.join(giVerdicts.filter(col("verdict") === "kept")
@@ -1350,29 +1233,25 @@ object CurateCli {
           // multi-signal near-dup fusion (q212): full-outer join two
           // rungs' pair tables on (id_a, id_b) — confirmed /
           // <rung>_only verdicts with both scores riding through
-          val bIn = readAs(req("--in-b"), "--in-b-format")
+          val bIn = readAs(argv.req("--in-b"), "--in-b-format")
           write(Dedup.pairConsensus(in, bIn,
-            argv.getOrElse("--a-name", "a"),
-            argv.getOrElse("--b-name", "b")), out)
+            argv.str("--a-name", "a"),
+            argv.str("--b-name", "b")), out)
 
         case "utterances" =>
           // silence-run utterance segmentation (q210): maximal
           // non-silent frame runs over the RIFF-extracted PCM — the
           // pre-transcription split; row-local, zero shuffles
-          val upc = argv.getOrElse("--payload-col", "payload")
-          require(in.columns.contains(upc),
-            s"--payload-col '$upc' not in input columns ${in.columns.mkString(",")}")
-          require(in.schema(upc).dataType ==
-            org.apache.spark.sql.types.BinaryType,
-            "utterances needs a BINARY payload column (RIFF/WAVE bytes)")
-          val ufb = argv.getOrElse("--frame-bytes", "160").toInt
+          val upc = payloadCol(argv, in)
+          requireBinary(in, upc, "utterances", "RIFF/WAVE bytes")
+          val ufb = argv.int("--frame-bytes", 160)
           write(Multimodal.wavUtterances(
             in.select(col(idCol), col(upc).as("payload")), idCol, "payload",
             frameBytes = ufb,
-            stride = argv.getOrElse("--stride", ufb.toString).toInt,
-            maxFrames = argv.getOrElse("--max-frames", "8").toInt,
-            silenceTol = argv.getOrElse("--silence-tol", "2").toInt,
-            minSilentFrac = argv.getOrElse("--min-silent-frac", "0.9").toDouble),
+            stride = argv.int("--stride", ufb),
+            maxFrames = argv.int("--max-frames", 8),
+            silenceTol = argv.int("--silence-tol", 2),
+            minSilentFrac = argv.double("--min-silent-frac", 0.9)),
             out)
 
         case "mediacard" =>
@@ -1388,58 +1267,32 @@ object CurateCli {
           // the paired image↔caption dedup audit (q207): verdicts
           // exact_dup / recaptioned / stock_caption / ok per pair row;
           // --bad-only Y keeps the violations (the integrity shape)
-          val xpc = argv.getOrElse("--payload-col", "payload")
-          val xcc = argv.getOrElse("--caption-col", "caption")
-          for (c <- Seq(xpc, xcc))
-            require(in.columns.contains(c),
-              s"column '$c' not in input columns ${in.columns.mkString(",")}")
-          val xpayload = in.schema(xpc).dataType match {
-            case org.apache.spark.sql.types.BinaryType => col(xpc)
-            case org.apache.spark.sql.types.StringType => encode(col(xpc), "utf-8")
-            case other => throw new IllegalArgumentException(
-              s"--payload-col must be binary or string, got $other")
-          }
-          val xDecoder = argv.getOrElse("--decoder", "stub") match {
-            case dd @ ("stub" | "imageio" | "wav") => dd
-            case other => throw new IllegalArgumentException(
-              s"--decoder must be stub, imageio or wav, got '$other'")
-          }
-          if (xDecoder != "stub")
-            require(in.schema(xpc).dataType ==
-              org.apache.spark.sql.types.BinaryType,
-              s"--decoder $xDecoder needs a BINARY payload column")
+          val xpc = payloadCol(argv, in)
+          val xcc = argv.str("--caption-col", "caption")
+          require(in.columns.contains(xcc),
+            s"--caption-col '$xcc' not in input columns ${in.columns.mkString(",")}")
+          val xpayload = payloadBytes(in, xpc)
+          val xDecoder = decoderOf(argv, in, xpc)
+          val badOnly = argv.yesNo("--bad-only", default = false)
           val audited = Multimodal.crossModalDupAudit(
             in.select(col(idCol), xpayload.as("_payload"), col(xcc)),
             idCol, "_payload", xcc, xDecoder)
-          write(argv.getOrElse("--bad-only", "N") match {
-            case "Y" => audited.filter(col("verdict") =!= "ok")
-            case "N" => audited
-            case other => throw new IllegalArgumentException(
-              s"--bad-only must be Y or N, got '$other'")
-          }, out)
+          write(if (badOnly) audited.filter(col("verdict") =!= "ok") else audited, out)
 
         case "resize" =>
           // the thumbnail rung: bound every decodable image inside
           // (--max-w, --max-h), aspect-preserving, verbatim pass-through
           // when already within bounds, lossless re-encode otherwise;
           // --bad-only Y keeps only the undecodables (the audit shape)
-          val rpc = argv.getOrElse("--payload-col", "payload")
-          require(in.columns.contains(rpc),
-            s"--payload-col '$rpc' not in input columns ${in.columns.mkString(",")}")
-          require(in.schema(rpc).dataType ==
-            org.apache.spark.sql.types.BinaryType,
-            "resize needs a BINARY payload column (encoded image bytes)")
+          val rpc = payloadCol(argv, in)
+          requireBinary(in, rpc, "resize", "encoded image bytes")
+          val badOnly = argv.yesNo("--bad-only", default = false)
           val sized = Multimodal.resizeImages(
             in.select(col(idCol), col(rpc).as("payload")), idCol,
-            maxW = argv.getOrElse("--max-w", "256").toInt,
-            maxH = argv.getOrElse("--max-h", "256").toInt,
-            format = argv.getOrElse("--format", "png"))
-          write(argv.getOrElse("--bad-only", "N") match {
-            case "Y" => sized.filter(!col("valid"))
-            case "N" => sized
-            case other => throw new IllegalArgumentException(
-              s"--bad-only must be Y or N, got '$other'")
-          }, out)
+            maxW = argv.int("--max-w", 256),
+            maxH = argv.int("--max-h", 256),
+            format = argv.str("--format", "png"))
+          write(if (badOnly) sized.filter(!col("valid")) else sized, out)
 
         case "scenes" =>
           // shot-boundary segmentation (q204) and the storyboard
@@ -1449,43 +1302,18 @@ object CurateCli {
           // dupgroups = the clip-level dedup census (groups > 1, lowest
           // id canonical). Same string→UTF-8 payload door and the same
           // founding signature spaces as phashdup/framedup.
-          val spc = argv.getOrElse("--payload-col", "payload")
-          require(in.columns.contains(spc),
-            s"--payload-col '$spc' not in input columns ${in.columns.mkString(",")}")
-          val spayload = in.schema(spc).dataType match {
-            case org.apache.spark.sql.types.BinaryType => col(spc)
-            case org.apache.spark.sql.types.StringType => encode(col(spc), "utf-8")
-            case other => throw new IllegalArgumentException(
-              s"--payload-col must be binary or string, got $other")
-          }
-          val sDecoder = argv.getOrElse("--decoder", "stub") match {
-            case d @ ("stub" | "imageio" | "wav") => d
-            case other => throw new IllegalArgumentException(
-              s"--decoder must be stub, imageio or wav, got '$other'")
-          }
-          if (sDecoder == "imageio") {
-            for (o <- Seq("--frame-bytes", "--stride"); _ <- argv.get(o))
-              throw new IllegalArgumentException(
-                s"$o applies to byte-window decoders (stub/wav); --decoder " +
-                  "imageio reads length-prefixed encoded frames")
-            require(in.schema(spc).dataType ==
-              org.apache.spark.sql.types.BinaryType,
-              "--decoder imageio needs a BINARY payload column " +
-                "(encoded image frames, packImageFrames layout)")
-          }
-          if (sDecoder == "wav")
-            require(in.schema(spc).dataType ==
-              org.apache.spark.sql.types.BinaryType,
-              "--decoder wav needs a BINARY payload column (RIFF/WAVE bytes)")
-          val sin = in.select(col(idCol), spayload.as("_payload"))
-          val sfb = argv.getOrElse("--frame-bytes", "128").toInt
-          val sst = argv.getOrElse("--stride", sfb.toString).toInt
-          val smf = argv.getOrElse("--max-frames", "8").toInt
-          val sct = argv.getOrElse("--cut-threshold", "10").toInt
-          val sEmit = argv.getOrElse("--emit", "segments")
+          val spc = payloadCol(argv, in)
+          val sin = in.select(col(idCol), payloadBytes(in, spc).as("_payload"))
+          val sDecoder = decoderOf(argv, in, spc, frames = true)
+          val sfb = argv.int("--frame-bytes", 128)
+          val sst = argv.int("--stride", sfb)
+          val smf = argv.int("--max-frames", 8)
+          val sct = argv.int("--cut-threshold", 10)
+          val sEmit = argv.choice("--emit", "segments",
+            "segments", "boards", "dupgroups", "overlap", "chunks")
           // the pairing knobs only mean something for the overlap pairs
           if (sEmit != "overlap")
-            for (o <- Seq("--min-shared", "--max-per-bucket"); _ <- argv.get(o))
+            for (o <- Seq("--min-shared", "--max-per-bucket") if argv.has(o))
               throw new IllegalArgumentException(
                 s"$o applies to --emit overlap only")
           write(sEmit match {
@@ -1497,12 +1325,10 @@ object CurateCli {
               "_payload", sfb, sst, smf, sct, sDecoder)
             case "overlap" => Multimodal.sceneOverlapPairs(sin, idCol,
               "_payload", sfb, sst, smf, sct,
-              argv.getOrElse("--min-shared", "2").toInt,
-              argv.getOrElse("--max-per-bucket", "0").toInt, sDecoder)
-            case "chunks" => Multimodal.sceneChunks(sin, idCol,
+              argv.int("--min-shared", 2),
+              argv.int("--max-per-bucket", 0), sDecoder)
+            case _ => Multimodal.sceneChunks(sin, idCol,
               "_payload", sfb, sst, smf, sct, sDecoder)
-            case other => throw new IllegalArgumentException(
-              s"--emit must be segments, boards, dupgroups, overlap or chunks, got '$other'")
           }, out)
 
         case "framedup" =>
@@ -1510,121 +1336,54 @@ object CurateCli {
           // (q191/q192): sampled frames dHashed individually; aligned
           // matching by default, `--shifted Y` for offset voting (the
           // trimmed-clip shape). Same string→UTF-8 door as phashdup.
-          val fpc = argv.getOrElse("--payload-col", "payload")
-          require(in.columns.contains(fpc),
-            s"--payload-col '$fpc' not in input columns ${in.columns.mkString(",")}")
-          val fpayload = in.schema(fpc).dataType match {
-            case org.apache.spark.sql.types.BinaryType => col(fpc)
-            case org.apache.spark.sql.types.StringType => encode(col(fpc), "utf-8")
-            case other => throw new IllegalArgumentException(
-              s"--payload-col must be binary or string, got $other")
-          }
-          val fin = in.select(col(idCol), fpayload.as("_payload"))
-          val shifted = argv.getOrElse("--shifted", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--shifted must be Y or N, got '$other'")
-          }
-          val fb = argv.getOrElse("--frame-bytes",
-            if (shifted) "64" else "128").toInt
-          val st = argv.getOrElse("--stride", fb.toString).toInt
-          val mf = argv.getOrElse("--max-frames", "8").toInt
-          val fMaxDist = argv.getOrElse("--max-dist", "2").toInt
-          val fBands = argv.getOrElse("--bands", "4").toInt
-          val mm = argv.getOrElse("--min-matched",
-            if (shifted) "4" else "3").toInt
+          val fpc = payloadCol(argv, in)
+          val fin = in.select(col(idCol), payloadBytes(in, fpc).as("_payload"))
+          val shifted = argv.yesNo("--shifted", default = false)
+          val fb = argv.int("--frame-bytes", if (shifted) 64 else 128)
+          val st = argv.int("--stride", fb)
+          val mf = argv.int("--max-frames", 8)
+          val fMaxDist = argv.int("--max-dist", 2)
+          val fBands = argv.int("--bands", 4)
+          val mm = argv.int("--min-matched", if (shifted) 4 else 3)
           // the frame rungs are MORE flood-exposed than phashdup (black
           // frames all hash alike), so they carry the same skew cap
-          val fCap = argv.getOrElse("--max-per-bucket", "0").toInt
+          val fCap = argv.int("--max-per-bucket", 0)
           // the signature space: stub byte windows, RIFF-extracted PCM
           // windows (wav), or decoded keyframes (imageio). With --index
           // it is a FOUNDING constant (round-12 verdict #1): stated at
           // build, stored in _params, and a disagreeing restatement
           // fails as loudly as a --bands mismatch — a probe hashed in
           // the wrong space silently finds nothing.
-          val fDecoder = argv.getOrElse("--decoder", "stub") match {
-            case d @ ("stub" | "imageio" | "wav") => d
-            case other => throw new IllegalArgumentException(
-              s"--decoder must be stub, imageio or wav, got '$other'")
-          }
-          if (fDecoder == "imageio") {
-            // byte-window knobs don't apply: container frames carry
-            // their own boundaries
-            for (o <- Seq("--frame-bytes", "--stride"); _ <- argv.get(o))
-              throw new IllegalArgumentException(
-                s"$o applies to byte-window decoders (stub/wav); --decoder " +
-                  "imageio reads length-prefixed encoded frames")
-            require(in.schema(fpc).dataType ==
-              org.apache.spark.sql.types.BinaryType,
-              "--decoder imageio needs a BINARY payload column " +
-                "(encoded image frames, packImageFrames layout)")
-          }
-          if (fDecoder == "wav")
-            require(in.schema(fpc).dataType ==
-              org.apache.spark.sql.types.BinaryType,
-              "--decoder wav needs a BINARY payload column (RIFF/WAVE bytes)")
+          val fDecoder = decoderOf(argv, in, fpc, frames = true)
+          val update = argv.yesNo("--update-index", default = true)
+          // q174's recall knob: widen each frame's band keys to their
+          // Hamming-1 neighbors, batch-side only — a per-probe choice,
+          // deliberately NOT a founding constant
+          val fMulti = argv.yesNo("--multiprobe", default = false)
           argv.get("--index") match { case Some(idxDir) =>
             // the standing frame-store daily loop (q199): found-if-
             // absent under the stated geometry + signature space, else
             // probe under the STORED founding constants — restating a
             // disagreeing sampling knob or decoder fails loudly (a
             // probe sampled or hashed differently cannot be answered)
-            for (_ <- argv.get("--shifted"))
+            if (argv.has("--shifted"))
               throw new IllegalArgumentException(
                 "--shifted does not apply with --index (the standing " +
                   "loop is aligned)")
-            def fyn(flag: String, dflt: String) = argv.getOrElse(flag, dflt) match {
-              case "Y" => true
-              case "N" => false
-              case other => throw new IllegalArgumentException(
-                s"$flag must be Y or N, got '$other'")
-            }
-            val update = fyn("--update-index", "Y")
-            // q174's recall knob: widen each frame's band keys to their
-            // Hamming-1 neighbors, batch-side only — a per-probe choice,
-            // deliberately NOT a founding constant
-            val fMulti = fyn("--multiprobe", "N")
-            if (StandingStore.founded(spark, idxDir)) {
+            val founded = StandingStore.founded(spark, idxDir)
+            requireFoundable(idxDir, founded, update)
+            if (founded) {
               val idx = Multimodal.loadFrameIndex(spark, idxDir, scope)
-              for (stated <- argv.get("--decoder"))
-                if (stated != idx.decoder) throw new IllegalArgumentException(
-                  s"--decoder $stated disagrees with the stored index " +
-                    s"(${idx.decoder}) — the signature space is fixed " +
-                    "at build time")
-              // the STORED decoder governs the probe even when --decoder
-              // is omitted (the happy path), so the payload-type check
-              // must follow the store, not the flag: a string column
-              // UTF-8-encoded into a wav/imageio-founded store would
-              // extract nothing and write an empty verdict table silently
-              if (idx.decoder != "stub")
-                require(in.schema(fpc).dataType ==
-                  org.apache.spark.sql.types.BinaryType,
-                  s"this index is founded on the ${idx.decoder} signature " +
-                    "space — probes need a BINARY payload column " +
-                    "(re-encoded strings would extract nothing, silently)")
-              for ((flag, stated, stored) <- Seq(
-                  ("--bands", argv.get("--bands"), idx.nBands),
-                  ("--frame-bytes", argv.get("--frame-bytes"), idx.frameBytes),
-                  ("--stride", argv.get("--stride"), idx.stride),
-                  ("--max-frames", argv.get("--max-frames"), idx.maxFrames));
-                  s <- stated)
-                if (s.toInt != stored) throw new IllegalArgumentException(
-                  s"$flag $s disagrees with the stored index ($stored) — " +
-                    "the sampling geometry is fixed at build time")
+              checkSignatureSpace(argv, in, fpc, idx.decoder)
+              for ((flag, stored) <- Seq("--bands" -> idx.nBands,
+                  "--frame-bytes" -> idx.frameBytes, "--stride" -> idx.stride,
+                  "--max-frames" -> idx.maxFrames))
+                agrees(flag, argv.int(flag), stored, "the sampling geometry is")
               write(Multimodal.incrementalFrameDupsWith(fin, idx, idCol,
                 "_payload", fMaxDist, mm, fCap, fMulti), out)
               if (update)
                 Multimodal.appendFrameIndex(spark, idxDir, fin, idCol, "_payload")
             } else {
-              // a missing store founds — but founding needs --update-
-              // index Y: with N there is nothing to probe and nothing
-              // would be built, so a typo'd --index path must fail
-              // loudly, not become a silent empty verdict table
-              if (!update) throw new IllegalArgumentException(
-                s"--index $idxDir does not exist and --update-index N " +
-                  "founds nothing: nothing to probe, nothing would be " +
-                  "built — check the index path")
               write(fin.select(col(idCol), col(idCol).as("hist_id"),
                 lit(0L).as("n_matched"), lit(0).as("min_dist")).limit(0), out)
               Multimodal.saveFrameIndex(Multimodal.buildFrameIndex(
@@ -1632,7 +1391,7 @@ object CurateCli {
                 idxDir)
             }
           case None =>
-          for (o <- Seq("--update-index", "--multiprobe"); _ <- argv.get(o))
+          for (o <- Seq("--update-index", "--multiprobe") if argv.has(o))
             throw new IllegalArgumentException(
               s"$o only applies with --index (the standing-store loop)")
           write(fDecoder match {
@@ -1660,137 +1419,74 @@ object CurateCli {
         case "phashdup" =>
           // perceptual near-dup rung over a BINARY payload column
           // (q187/q190): dHash signatures, Hamming-band candidate join;
-          // a string column is encoded UTF-8 first (the q68 stub-decode
-          // discipline — swap in real media bytes without CLI changes).
-          // Without --index: the one-shot PAIRS table. With --index: the
-          // standing-store daily loop (probe the batch against the
-          // stored band table, append unless read-only — the neardup/
-          // embeddup discipline; --bands is a founding constant)
-          val pc = argv.getOrElse("--payload-col", "payload")
-          require(in.columns.contains(pc),
-            s"--payload-col '$pc' not in input columns ${in.columns.mkString(",")}")
-          val payload = in.schema(pc).dataType match {
-            case org.apache.spark.sql.types.BinaryType => col(pc)
-            case org.apache.spark.sql.types.StringType => encode(col(pc), "utf-8")
-            case other => throw new IllegalArgumentException(
-              s"--payload-col must be binary or string, got $other")
-          }
-          val pin = in.select(col(idCol), payload.as("_payload"))
-          val maxDist = argv.getOrElse("--max-dist", "6").toInt
-          val decoder = argv.getOrElse("--decoder", "stub") match {
-            case d @ ("stub" | "imageio" | "wav") => d
-            case other => throw new IllegalArgumentException(
-              s"--decoder must be stub, imageio or wav, got '$other'")
-          }
-          if (decoder == "imageio")
-            require(in.schema(pc).dataType ==
-              org.apache.spark.sql.types.BinaryType,
-              "--decoder imageio needs a BINARY payload column " +
-                "(encoded image bytes)")
-          if (decoder == "wav")
-            require(in.schema(pc).dataType ==
-              org.apache.spark.sql.types.BinaryType,
-              "--decoder wav needs a BINARY payload column (RIFF/WAVE bytes)")
+          // a string column is encoded UTF-8 first. Without --index: the
+          // one-shot PAIRS table. With --index: the standing-store daily
+          // loop (probe the batch against the stored band table, append
+          // unless read-only — the neardup/embeddup discipline; --bands
+          // is a founding constant)
+          val pc = payloadCol(argv, in)
+          val pin = in.select(col(idCol), payloadBytes(in, pc).as("_payload"))
+          val maxDist = argv.int("--max-dist", 6)
+          val decoder = decoderOf(argv, in, pc)
+          val bands = argv.int("--bands", 4)
+          val maxPerBucket = argv.int("--max-per-bucket", 0)
+          val cuts = argv.ints("--thresholds")
+          val update = argv.yesNo("--update-index", default = true)
+          val multi = argv.yesNo("--multiprobe", default = false)
           argv.get("--index") match {
-            case None if argv.contains("--thresholds") =>
+            case None if cuts.isDefined =>
               // the q197 dedup-rate curve: one pairing pass at the
               // loosest cutoff, fanned over the literal cutoffs — the
               // dividend/--thresholds discipline for the binary rung
-              for (o <- Seq("--max-dist", "--update-index", "--multiprobe")
-                   ; _ <- argv.get(o))
+              for (o <- Seq("--max-dist", "--update-index", "--multiprobe") if argv.has(o))
                 throw new IllegalArgumentException(
                   s"$o contradicts --thresholds (the curve sweeps cutoffs)")
               // the curve prices cutoffs in ANY signature space — the
               // banding is content-agnostic, --decoder picks the space
               write(Multimodal.perceptualDupRateCurve(pin, idCol, "_payload",
-                maxDists = argv("--thresholds").split(",").toSeq
-                  .map(_.trim.toInt),
-                nBands = argv.getOrElse("--bands", "4").toInt,
-                maxPerBucket = argv.getOrElse("--max-per-bucket", "0").toInt,
-                decoder = decoder), out)
+                maxDists = cuts.get, nBands = bands,
+                maxPerBucket = maxPerBucket, decoder = decoder), out)
             case None =>
-              for (o <- Seq("--update-index", "--multiprobe"); _ <- argv.get(o))
+              for (o <- Seq("--update-index", "--multiprobe") if argv.has(o))
                 throw new IllegalArgumentException(
                   s"$o only applies with --index (the standing-store loop)")
               write(decoder match {
-                case "imageio" =>
-                  Multimodal.perceptualDupPairsDecoded(pin, idCol, "_payload",
-                    maxDist = maxDist,
-                    nBands = argv.getOrElse("--bands", "4").toInt,
-                    maxPerBucket = argv.getOrElse("--max-per-bucket", "0").toInt)
-                case "wav" =>
-                  Multimodal.perceptualDupPairsWav(pin, idCol, "_payload",
-                    maxDist = maxDist,
-                    nBands = argv.getOrElse("--bands", "4").toInt,
-                    maxPerBucket = argv.getOrElse("--max-per-bucket", "0").toInt)
-                case _ => Multimodal.perceptualDupPairs(pin, idCol, "_payload",
-                  maxDist = maxDist,
-                  nBands = argv.getOrElse("--bands", "4").toInt,
-                  maxPerBucket = argv.getOrElse("--max-per-bucket", "0").toInt)
+                case "imageio" => Multimodal.perceptualDupPairsDecoded(pin, idCol,
+                  "_payload", maxDist = maxDist, nBands = bands, maxPerBucket = maxPerBucket)
+                case "wav" => Multimodal.perceptualDupPairsWav(pin, idCol,
+                  "_payload", maxDist = maxDist, nBands = bands, maxPerBucket = maxPerBucket)
+                case _ => Multimodal.perceptualDupPairs(pin, idCol,
+                  "_payload", maxDist = maxDist, nBands = bands, maxPerBucket = maxPerBucket)
               }, out)
             case Some(idxDir) =>
-              for (_ <- argv.get("--thresholds"))
+              if (cuts.isDefined)
                 throw new IllegalArgumentException(
                   "--thresholds is the one-shot curve; the standing-store " +
                     "loop probes at a single --max-dist")
-              // the signature space is a FOUNDING constant of the store
-              // (round-12 verdict #1): stated at build, stored in
-              // _params beside --bands, enforced on every later probe —
-              // a stub-space probe against a decoded-space store (or
-              // vice versa) would silently find nothing
-              // probe-time hot-bucket remediation (the occupancy
-              // --advice 'cap_probes' answer): store buckets capped at
-              // their lowest ids before the join, binding is loud
-              val probeCap = argv.getOrElse("--max-per-bucket", "0").toInt
-              def yn(flag: String) = argv.getOrElse(flag, if (flag == "--update-index") "Y" else "N") match {
-                case "Y" => true
-                case "N" => false
-                case other => throw new IllegalArgumentException(
-                  s"$flag must be Y or N, got '$other'")
-              }
-              val update = yn("--update-index")
-              val multi = yn("--multiprobe")
-              if (StandingStore.founded(spark, idxDir)) {
+              val founded = StandingStore.founded(spark, idxDir)
+              requireFoundable(idxDir, founded, update)
+              if (founded) {
+                // the signature space is a FOUNDING constant of the store
+                // (round-12 verdict #1): stated at build, stored in
+                // _params beside --bands, enforced on every later probe —
+                // a stub-space probe against a decoded-space store (or
+                // vice versa) would silently find nothing
                 val idx = Multimodal.loadPHashIndex(spark, idxDir, scope)
-                for (stated <- argv.get("--bands"))
-                  if (stated.toInt != idx.nBands)
-                    throw new IllegalArgumentException(
-                      s"--bands $stated disagrees with the stored index " +
-                        s"(${idx.nBands}) — banding is fixed at build time")
-                for (stated <- argv.get("--decoder"))
-                  if (stated != idx.decoder)
-                    throw new IllegalArgumentException(
-                      s"--decoder $stated disagrees with the stored index " +
-                        s"(${idx.decoder}) — the signature space is fixed " +
-                        "at build time")
-                // the STORED decoder governs even when --decoder is
-                // omitted: a UTF-8-encoded string probed into a
-                // wav/imageio-founded store would silently find nothing
-                if (idx.decoder != "stub")
-                  require(in.schema(pc).dataType ==
-                    org.apache.spark.sql.types.BinaryType,
-                    s"this index is founded on the ${idx.decoder} " +
-                      "signature space — probes need a BINARY payload " +
-                      "column (re-encoded strings would extract nothing, " +
-                      "silently)")
+                agrees("--bands", argv.int("--bands"), idx.nBands, "banding is")
+                checkSignatureSpace(argv, in, pc, idx.decoder)
+                // probe-time hot-bucket remediation (the occupancy
+                // --advice 'cap_probes' answer): store buckets capped at
+                // their lowest ids before the join, binding is loud
                 write(Multimodal.incrementalPerceptualDupsWith(pin, idx,
                   idCol, "_payload", maxDist, multiProbe = multi,
-                  maxPerBucket = probeCap), out)
+                  maxPerBucket = maxPerBucket), out)
                 if (update)
                   Multimodal.appendPHashIndex(spark, idxDir, pin, idCol, "_payload")
               } else {
-                // founding needs --update-index Y: with N nothing is
-                // probed and nothing built — a typo'd --index path must
-                // fail loudly, not write a silent empty verdict table
-                if (!update) throw new IllegalArgumentException(
-                  s"--index $idxDir does not exist and --update-index N " +
-                    "founds nothing: nothing to probe, nothing would be " +
-                    "built — check the index path")
                 write(pin.select(col(idCol), col(idCol).as("hist_id"),
                   lit(0).as("dist")).limit(0), out)
                 Multimodal.savePHashIndex(Multimodal.buildPHashIndex(
-                  pin, idCol, "_payload",
-                  argv.getOrElse("--bands", "4").toInt, decoder, scope), idxDir)
+                  pin, idCol, "_payload", bands, decoder, scope), idxDir)
               }
           }
 
@@ -1800,33 +1496,27 @@ object CurateCli {
           // `--approx Y` swaps exact distincts for HLL sketches (bounded
           // agg state per group — the 100 TB shape, the profile
           // command's discipline)
-          val ns = argv.getOrElse("--ngrams", "1,2,3").split(",").toSeq
-            .map(_.trim.toInt)
-          val g = argv.getOrElse("--group-col", "source")
-          write(argv.getOrElse("--approx", "N") match {
-            case "Y" => Corpus.ngramDiversityApprox(in, g, textCol, ns)
-            case "N" => Corpus.ngramDiversity(in, g, textCol, ns)
-            case other => throw new IllegalArgumentException(
-              s"--approx must be Y or N, got '$other'")
-          }, out)
+          val ns = argv.ints("--ngrams").getOrElse(Seq(1, 2, 3))
+          val g = argv.str("--group-col", "source")
+          write(if (argv.yesNo("--approx", default = false))
+              Corpus.ngramDiversityApprox(in, g, textCol, ns)
+            else Corpus.ngramDiversity(in, g, textCol, ns), out)
 
         case "pii" =>
           // `--census Y` (q178): the per-(group, rule) exposure report
           // read BEFORE committing to a masking pass; default applies
           // the q73 sequential mask and writes the corpus with textCol
           // replaced in place
-          val minDigits = argv.getOrElse("--min-digits", "6").toInt
-          argv.getOrElse("--census", "N") match {
-            case "Y" => write(graft.ops.Scrub.piiCensus(in,
-              argv.getOrElse("--group-col", "source"), textCol, minDigits), out)
-            case "N" =>
-              for (_ <- argv.get("--group-col"))
-                throw new IllegalArgumentException(
-                  "--group-col only applies with --census Y")
-              write(in.withColumn(textCol,
-                graft.ops.Scrub.piiMask(col(textCol), minDigits = minDigits)), out)
-            case other => throw new IllegalArgumentException(
-              s"--census must be Y or N, got '$other'")
+          val minDigits = argv.int("--min-digits", 6)
+          if (argv.yesNo("--census", default = false))
+            write(graft.ops.Scrub.piiCensus(in,
+              argv.str("--group-col", "source"), textCol, minDigits), out)
+          else {
+            if (argv.has("--group-col"))
+              throw new IllegalArgumentException(
+                "--group-col only applies with --census Y")
+            write(in.withColumn(textCol,
+              graft.ops.Scrub.piiMask(col(textCol), minDigits = minDigits)), out)
           }
 
         case "manifest" =>
@@ -1835,7 +1525,8 @@ object CurateCli {
           // (`--shard-col`, default `shard`) is manifested as-is; else
           // rows are size-balance-assigned first (`--shards`, weight
           // `--size-col` or the token count of textCol)
-          val shardCol = argv.getOrElse("--shard-col", "shard")
+          val shardCol = argv.str("--shard-col", "shard")
+          val shards = argv.int("--shards")
           val sized = argv.get("--size-col") match {
             case Some(c) => in.withColumn("_msz", col(c).cast("long"))
             case None => in.withColumn("_msz",
@@ -1843,13 +1534,13 @@ object CurateCli {
           }
           val assigned =
             if (in.columns.contains(shardCol)) {
-              for (_ <- argv.get("--shards"))
+              if (shards.isDefined)
                 throw new IllegalArgumentException(
                   s"--shards does not apply when the input already has " +
                     s"a '$shardCol' column")
               sized
             } else Shard.balancedAssign(sized, idCol, "_msz",
-              argv.getOrElse("--shards", "8").toInt, shardCol)
+              shards.getOrElse(8), shardCol)
           val mf = Shard.manifest(assigned, idCol, textCol, "_msz", shardCol)
           // `--diff PRIOR` writes the release-gate diff against a prior
           // manifest (own `--diff-format` — the --bench-format lesson)
@@ -1866,15 +1557,16 @@ object CurateCli {
           // (`--bench`, own `--bench-format` — the clean command's
           // lesson). `--max-overlap X` adds a contaminated verdict
           // column for the release gate's threshold
-          val benchDocs = readAs(req("--bench"), "--bench-format")
-          val n = argv.getOrElse("--ngram", "5").toInt
+          val benchDocs = readAs(argv.req("--bench"), "--bench-format")
+          val n = argv.int("--ngram", 5)
+          val maxOverlap = argv.double("--max-overlap")
           val shT = Dedup.shingleSets(in, idCol, textCol, n, scope)
           val shB = Dedup.shingleSets(benchDocs, idCol, textCol, n, scope)
           val scores = Dedup.contaminationScoreOf(shT, shB)
             .withColumnRenamed("_id", idCol)
-          write(argv.get("--max-overlap").fold(scores) { t =>
+          write(maxOverlap.fold(scores) { t =>
             scores.withColumn("contaminated",
-              when(coalesce(col("overlap_frac") > t.toDouble, lit(false)), 1)
+              when(coalesce(col("overlap_frac") > t, lit(false)), 1)
                 .otherwise(0))
           }, out)
 
@@ -1882,14 +1574,8 @@ object CurateCli {
           // the data-doctor for ANY table (q167): per-column rows, nulls,
           // distincts, min/max — `--cols` to pick columns (default all),
           // `--approx Y` for the HLL-distinct 100 TB shape (no Expand)
-          val pCols = argv.get("--cols").map(_.split(",").toSeq)
-            .getOrElse(in.columns.toSeq)
-          val pApprox = argv.getOrElse("--approx", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--approx must be Y or N, got '$other'")
-          }
+          val pCols = argv.list("--cols").getOrElse(in.columns.toSeq)
+          val pApprox = argv.yesNo("--approx", default = false)
           write(if (pApprox) graft.ops.Stats.tableProfileApprox(in, pCols)
             else graft.ops.Stats.tableProfile(in, pCols), out)
 
@@ -1900,20 +1586,15 @@ object CurateCli {
               // from the mergeable sketches — no corpus read at all, so
               // corpus-shaped flags cannot apply and say so loudly
               for (bad <- Seq("--approx", "--group-col", "--lang-col", "--in",
-                  "--in-format", "--id-col", "--text-col"); _ <- argv.get(bad))
+                  "--in-format", "--id-col", "--text-col") if argv.has(bad))
                 throw new IllegalArgumentException(
                   s"$bad does not apply with --ledger (the ledger fixed its " +
                     "grouping at append time and never rescans data)")
               write(graft.ops.Corpus.cardLedgerEstimate(spark, ledgerDir), out)
             case None =>
-              val g = argv.getOrElse("--group-col", "source")
-              val l = argv.getOrElse("--lang-col", "lang")
-              val approx = argv.getOrElse("--approx", "N") match {
-                case "Y" => true
-                case "N" => false
-                case other => throw new IllegalArgumentException(
-                  s"--approx must be Y or N, got '$other'")
-              }
+              val g = argv.str("--group-col", "source")
+              val l = argv.str("--lang-col", "lang")
+              val approx = argv.yesNo("--approx", default = false)
               write(
                 if (approx) graft.ops.Corpus.datasetCardApprox(in, g, textCol, l)
                 else graft.ops.Corpus.datasetCardWeighted(in, g, textCol, l, scope),
@@ -1925,40 +1606,35 @@ object CurateCli {
           // Pipeline.refineCorpus): Gopher gate → optional repetition
           // gate → survivor-built vocab gate → ExactSubstr span removal,
           // writing the (id, n_tokens, kept_tokens, text_clean) rebuild
-          val rep = argv.getOrElse("--repetition", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--repetition must be Y or N, got '$other'")
-          }
           write(Pipeline.refineCorpus(in, idCol, textCol,
-            minWords = argv.getOrElse("--min-words", "50").toInt,
-            vocabTopK = argv.getOrElse("--vocab-topk", "10000").toInt,
-            maxOovFrac = argv.getOrElse("--max-oov", "0.1").toDouble,
-            spanN = argv.getOrElse("--span-n", "5").toInt,
-            withRepetition = rep, scope = scope), out)
+            minWords = argv.int("--min-words", 50),
+            vocabTopK = argv.int("--vocab-topk", 10000),
+            maxOovFrac = argv.double("--max-oov", 0.1),
+            spanN = argv.int("--span-n", 5),
+            withRepetition = argv.yesNo("--repetition", default = false),
+            scope = scope), out)
 
         case "quality" =>
           // the Gopher gate standalone (q140): per-doc features + verdict,
           // so a curator tunes thresholds from the written table before
           // wiring `ingest --quality Y`
           val gopher = TextAnalysis.gopherQualityGate(in, idCol, textCol,
-            argv.getOrElse("--min-words", "50").toInt,
-            argv.getOrElse("--max-words", "100000").toInt,
-            minAlphaFrac = argv.getOrElse("--min-alpha", "0.8").toDouble,
-            minStopHits = argv.getOrElse("--min-stop-hits", "2").toInt,
-            maxSymbolRatio = argv.getOrElse("--max-symbol-ratio", "0.1").toDouble)
+            argv.int("--min-words", 50),
+            argv.int("--max-words", 100000),
+            minAlphaFrac = argv.double("--min-alpha", 0.8),
+            minStopHits = argv.int("--min-stop-hits", 2),
+            maxSymbolRatio = argv.double("--max-symbol-ratio", 0.1))
           // `--vocab-topk K` adds the vocabulary-coverage rung (q142): the
           // OOV features + verdict land BESIDE the Gopher ones in the same
           // table, so a curator tunes both gates from one scan. Left join:
           // a tokenless doc has no coverage row but keeps its Gopher row
-          if (argv.contains("--max-oov") && !argv.contains("--vocab-topk"))
+          if (argv.has("--max-oov") && !argv.has("--vocab-topk"))
             throw new IllegalArgumentException(
               "--max-oov requires --vocab-topk (it thresholds the vocab rung)")
-          val withVocab = argv.get("--vocab-topk").fold(gopher) { k =>
+          val withVocab = argv.int("--vocab-topk").fold(gopher) { k =>
             gopher.join(
-              graft.ops.Corpus.vocabCoverage(in, idCol, textCol, k.toInt,
-                argv.getOrElse("--max-oov", "0.1").toDouble)
+              graft.ops.Corpus.vocabCoverage(in, idCol, textCol, k,
+                argv.double("--max-oov", 0.1))
                 .drop("n_tokens"),
               Seq(idCol), "left")
           }
@@ -1966,16 +1642,11 @@ object CurateCli {
           // (paper-default thresholds) beside the Gopher/OOV columns —
           // the third gate tuned from the same one-scan table. Its own
           // n_words duplicates the Gopher one and is dropped
-          val withRep = argv.getOrElse("--repetition", "N") match {
-            case "Y" => withVocab.join(
+          write(if (!argv.yesNo("--repetition", default = false)) withVocab
+            else withVocab.join(
               TextAnalysis.gopherRepetitionGate(in, idCol, textCol)
                 .drop("n_words"),
-              Seq(idCol), "left")
-            case "N" => withVocab
-            case other => throw new IllegalArgumentException(
-              s"--repetition must be Y or N, got '$other'")
-          }
-          write(withRep, out)
+              Seq(idCol), "left"), out)
 
         case "drift" =>
           // the distribution-drift gate against a STANDING histogram
@@ -1990,34 +1661,42 @@ object CurateCli {
           // token-length default), an existing ledger's stored grid
           // wins and restating a disagreeing one fails loudly
           import spark.implicits._
-          val ledger = req("--ledger")
-          val groupCol = argv.getOrElse("--group-col", "lang")
+          val ledger = argv.req("--ledger")
+          val groupCol = argv.str("--group-col", "lang")
           val batch = argv.get("--val-col") match {
             case Some(v) => in.select(col(groupCol).as("_hg"), col(v).as("_hv"))
             case None    => in.select(col(groupCol).as("_hg"),
               TextAnalysis.tokenCount(col(textCol)).as("_hv"))
           }
-          val update = argv.getOrElse("--update", "Y") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--update must be Y or N, got '$other'")
-          }
+          val appendAs = appendBatch(argv)
+          val (statedLo, statedHi, statedNb) =
+            (argv.double("--lo"), argv.double("--hi"), argv.int("--buckets"))
+          // `--max-tv X` turns the report into a GATE (driftGatedHistSink's
+          // batch twin): groups past the threshold divert their ROWS to
+          // `--quarantine DIR` and are excluded from the history append —
+          // a poisoned source cannot normalize itself. Founding batches
+          // (empty report) gate nothing
+          val maxTv = argv.double("--max-tv")
+          val quarantine = argv.get("--quarantine")
+          if (maxTv.isDefined && quarantine.isEmpty)
+            throw new IllegalArgumentException(
+              "--max-tv requires --quarantine (gated groups' rows must land somewhere)")
+          if (quarantine.isDefined && maxTv.isEmpty)
+            throw new IllegalArgumentException(
+              "--quarantine requires --max-tv (the gate's threshold)")
           val stored = graft.ops.HistLedger.params(spark, ledger)
           val (lo, hi, nb) = stored match {
             case Some((slo, shi, snb)) =>
-              if (argv.get("--lo").exists(_.toDouble != slo)
-                  || argv.get("--hi").exists(_.toDouble != shi)
-                  || argv.get("--buckets").exists(_.toInt != snb))
+              if (statedLo.exists(_ != slo) || statedHi.exists(_ != shi)
+                  || statedNb.exists(_ != snb))
                 throw new IllegalArgumentException(
                   s"histogram ledger at $ledger was founded with grid " +
                     s"[$slo, $shi)×$snb; restating a different grid cannot " +
                     "merge — drop the grid flags or use a new ledger dir")
               (slo, shi, snb)
             case None =>
-              (argv.getOrElse("--lo", "0").toDouble,
-                argv.getOrElse("--hi", "8192").toDouble,
-                argv.getOrElse("--buckets", "64").toInt)
+              (statedLo.getOrElse(0.0), statedHi.getOrElse(8192.0),
+                statedNb.getOrElse(64))
           }
           val report = stored match {
             case Some(_) =>
@@ -2031,18 +1710,6 @@ object CurateCli {
               Seq.empty[(String, Double)].toDF(groupCol, "tv_dist")
           }
           write(report, out)
-          // `--max-tv X` turns the report into a GATE (driftGatedHistSink's
-          // batch twin): groups past the threshold divert their ROWS to
-          // `--quarantine DIR` and are excluded from the history append —
-          // a poisoned source cannot normalize itself. Founding batches
-          // (empty report) gate nothing
-          val maxTv = argv.get("--max-tv").map(_.toDouble)
-          if (maxTv.isDefined && !argv.contains("--quarantine"))
-            throw new IllegalArgumentException(
-              "--max-tv requires --quarantine (gated groups' rows must land somewhere)")
-          if (argv.contains("--quarantine") && maxTv.isEmpty)
-            throw new IllegalArgumentException(
-              "--quarantine requires --max-tv (the gate's threshold)")
           val badGroups = maxTv.fold(Seq.empty[String]) { t =>
             report.filter(col("tv_dist") > t)
               .select(col(groupCol).cast("string")).collect()
@@ -2050,7 +1717,7 @@ object CurateCli {
           }
           val gkey = col(groupCol).cast("string")
           if (badGroups.nonEmpty)
-            write(in.filter(gkey.isin(badGroups: _*)), req("--quarantine"))
+            write(in.filter(gkey.isin(badGroups: _*)), quarantine.get)
           // same CASTED key as the quarantine filter above: isin() over the
           // native column would coerce the collected strings back to the
           // native type, so quarantined rows and ledger-excluded rows could
@@ -2059,11 +1726,9 @@ object CurateCli {
             if (badGroups.isEmpty) batch
             else batch.filter(
               !coalesce(col("_hg").cast("string").isin(badGroups: _*), lit(false)))
-          if (update)
+          for (b <- appendAs)
             graft.ops.HistLedger.append(spark, ledger, passBatch, "_hg", "_hv",
-              argv.getOrElse("--batch-id", sys.error(
-                "--update Y (the default) needs --batch-id")).toLong,
-              lo, hi, nb)
+              b, lo, hi, nb)
 
         case "sample" =>
           // the standing inspection-sample loop (graft.ops.SampleLedger,
@@ -2071,13 +1736,9 @@ object CurateCli {
           // then dump the corpus-to-date sample. k/seed are FOUNDING
           // constants — stored values win; explicitly restating
           // disagreeing ones fails loudly
-          val ledger = req("--ledger")
-          val update = argv.getOrElse("--update", "Y") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--update must be Y or N, got '$other'")
-          }
+          val ledger = argv.req("--ledger")
+          val appendAs = appendBatch(argv)
+          val k = argv.int("--k")
           // ALL five constants are founding (k, seed, and the three
           // column choices — a ledger whose batches sampled different
           // columns merges arithmetically but means nothing): stored
@@ -2085,7 +1746,7 @@ object CurateCli {
           val p = graft.ops.SampleLedger.params(spark, ledger) match {
             case Some(p0) =>
               val restated = Seq(
-                argv.get("--k").exists(_.toInt != p0.k),
+                k.exists(_ != p0.k),
                 argv.get("--seed").exists(_ != p0.seed),
                 argv.get("--group-col").exists(_ != p0.groupCol),
                 argv.get("--id-col").exists(_ != p0.idCol),
@@ -2097,17 +1758,14 @@ object CurateCli {
                     "the flags or use a new ledger dir")
               p0
             case None => graft.ops.SampleLedger.SampleParams(
-              argv.getOrElse("--k", "20").toInt,
-              argv.getOrElse("--seed", "graft-sample"),
-              argv.getOrElse("--group-col", "lang"), idCol,
-              argv.getOrElse("--payload-col", textCol))
+              k.getOrElse(20),
+              argv.str("--seed", "graft-sample"),
+              argv.str("--group-col", "lang"), idCol,
+              argv.str("--payload-col", textCol))
           }
-          if (update)
+          for (b <- appendAs)
             graft.ops.SampleLedger.append(spark, ledger, in, p.groupCol,
-              p.idCol, p.payloadCol,
-              argv.getOrElse("--batch-id", sys.error(
-                "--update Y (the default) needs --batch-id")).toLong,
-              p.k, p.seed)
+              p.idCol, p.payloadCol, b, p.k, p.seed)
           write(graft.ops.SampleLedger.merged(spark, ledger), out)
 
         case "select" =>
@@ -2116,10 +1774,10 @@ object CurateCli {
           // the salted-md5 prefix, then the selected ids pull their
           // full rows — the "give me a balanced N-doc slice" front door
           val picked = graft.ops.Corpus.waterfillSample(in, idCol,
-            argv.getOrElse("--group-col", "lang"),
-            argv.getOrElse("--alpha", "0.5").toDouble,
-            argv.getOrElse("--budget", "1000").toLong,
-            argv.getOrElse("--seed", "graft-temp"), scope)
+            argv.str("--group-col", "lang"),
+            argv.double("--alpha", 0.5),
+            argv.long("--budget", 1000L),
+            argv.str("--seed", "graft-temp"), scope)
           write(in.join(picked.select(col(idCol)), Seq(idCol), "left_semi"), out)
 
         case "stats" =>
@@ -2129,7 +1787,7 @@ object CurateCli {
           // ledger dirs by the schema of their batch dirs; the flat
           // fingerprint snapshot is the gated fallback
           import spark.implicits._
-          val store = req("--store")
+          val store = argv.req("--store")
           val fsys = new org.apache.hadoop.fs.Path(store)
             .getFileSystem(spark.sparkContext.hadoopConfiguration)
           val index = StandingStore.kindOf(spark, store)
@@ -2197,26 +1855,20 @@ object CurateCli {
           // the stored tables, no index struct rebuilt. Drift shows as
           // mass moving toward hot cells/buckets; the remediation is the
           // family's rebuild/refound loop
-          val store = req("--store")
+          val store = argv.req("--store")
           val fam = StandingStore.familyAt(spark, store)
           val perceptual = fam == StandingStore.PHash || fam == StandingStore.Frames
-          for (o <- Seq("--advice", "--hot-bucket"); _ <- argv.get(o))
-            if (!perceptual)
-              throw new IllegalArgumentException(
-                s"$o applies to the perceptual stores (phash/frames) — the " +
-                  "other families' remediation is the rebuild/refound loop")
+          for (o <- Seq("--advice", "--hot-bucket") if argv.has(o) && !perceptual)
+            throw new IllegalArgumentException(
+              s"$o applies to the perceptual stores (phash/frames) — the " +
+                "other families' remediation is the rebuild/refound loop")
           // `--advice Y` (phash/frames): the diagnose half of the q136
           // loop — one row naming the remediation (ok | cap_probes |
           // tombstone_flood) against `--hot-bucket` (default 64);
           // 'cap_probes' answers with `phashdup --index
           // --max-per-bucket`, 'tombstone_flood' with forget+compact
-          val wantAdvice = argv.getOrElse("--advice", "N") match {
-            case "Y" => true
-            case "N" => false
-            case other => throw new IllegalArgumentException(
-              s"--advice must be Y or N, got '$other'")
-          }
-          val hot = argv.getOrElse("--hot-bucket", "64").toInt
+          val wantAdvice = argv.yesNo("--advice", default = false)
+          val hot = argv.int("--hot-bucket", 64)
           if (fam == StandingStore.IvfPq)
             write(graft.ops.Similarity.ivfPqIndexStats(
               graft.ops.Similarity.loadIvfPqIndex(spark, store, scope)), out)
@@ -2227,8 +1879,10 @@ object CurateCli {
             write(Multimodal.frameIndexAdvice(
               Multimodal.loadFrameIndex(spark, store, scope), hot), out)
           else if (fam.bucketKeys.nonEmpty)
-            write(StandingStore.bucketSizes(spark.read.parquet(
-              StandingStore.tableDir(store, fam.tables.last)), fam.bucketKeys: _*), out)
+            // live rows: a pending `forget` tombstone occupies no bucket
+            // (the ivfpq branch's load subtracts them too)
+            write(StandingStore.bucketSizes(StandingStore.live(spark, store,
+              fam.tables.last, scope), fam.bucketKeys: _*), out)
           else throw new IllegalArgumentException(
             s"occupancy reads index stores (neardup/embeddup/ivfpq/phash/frames), " +
               s"not '${fam.kind}' — the snapshot and ledgers have no buckets")
@@ -2237,13 +1891,13 @@ object CurateCli {
           // deletion is by ID against any standing store; `--in` is the
           // id list. The id column defaults per store family (the vector
           // stores key on vec_id) unless stated
-          val store = req("--store")
+          val store = argv.req("--store")
           val fam = StandingStore.familyAt(spark, store)
           StandingStore.tombstone(spark, store, in,
-            argv.getOrElse("--id-col", fam.cliIdCol))
+            argv.str("--id-col", fam.cliIdCol))
 
         case "compact" =>
-          StandingStore.compact(spark, req("--store"), argv.get("--id-col"))
+          StandingStore.compact(spark, argv.req("--store"), argv.get("--id-col"))
 
         case other => throw new IllegalStateException(s"unreachable: $other")
       }

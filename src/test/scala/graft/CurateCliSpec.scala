@@ -2496,4 +2496,54 @@ class CurateCliSpec extends AnyFunSuite {
     rm(mcIn, oMc)
   }
 
+  test("occupancy counts live rows: forgotten neardup docs leave their buckets") {
+    val nd = tmp("cli-occ-live"); rm(nd)
+    val batch = tmp("cli-occ-live-b"); val ids = tmp("cli-occ-live-ids")
+    val v = tmp("cli-occ-live-v"); val o = tmp("cli-occ-live-o")
+    spark.read.parquet(docsPath).orderBy("doc_id").limit(20)
+      .write.mode("overwrite").parquet(batch)
+    CurateCli.run("neardup", Map("--in" -> batch, "--out" -> v, "--index" -> nd))
+    def bandRows(): Long = {
+      CurateCli.run("occupancy", Map("--store" -> nd, "--out" -> o))
+      spark.read.parquet(o).as[(Long, Long)].collect().map { case (sz, nb) => sz * nb }.sum
+    }
+    val bands = spark.read.parquet(s"$nd/bands")
+    val all = bands.count()
+    assert(all > 0 && bandRows() == all)
+    val docIds = bands.select("_id").distinct().as[Long].collect().sorted
+    val gone = docIds.take(docIds.length / 2).toSeq
+    gone.toDF("doc_id").write.mode("overwrite").parquet(ids)
+    CurateCli.run("forget", Map("--in" -> ids, "--store" -> nd))
+    val live = bands.filter(!col("_id").isin(gone: _*)).count()
+    assert(live < all && bandRows() == live)
+    rm(nd, batch, ids, v, o)
+  }
+
+  test("a malformed --splits fails naming the flag on audit and split") {
+    val out = tmp("cli-splits-bad")
+    for (cmd <- Seq("audit", "split"); bad <- Seq("train=0.8,val", "train=0.8,val=x")) {
+      val e = intercept[IllegalArgumentException] {
+        CurateCli.run(cmd, Map("--in" -> docsPath, "--out" -> out, "--splits" -> bad))
+      }
+      assert(e.getMessage.contains("--splits"), s"$cmd $bad: ${e.getMessage}")
+    }
+    rm(out)
+  }
+
+  test("a malformed numeric flag fails naming the flag and the value") {
+    val out = tmp("cli-num-bad")
+    for ((cmd, flag, extra) <- Seq(
+        ("neardup", "--minhash-k", Map("--index" -> tmp("cli-num-idx"))),
+        ("select", "--budget", Map.empty[String, String]),
+        ("drift", "--batch-id", Map("--ledger" -> tmp("cli-num-led"))),
+        ("curate", "--min-chars", Map.empty[String, String]),
+        ("diversity", "--ngrams", Map.empty[String, String]))) {
+      val e = intercept[IllegalArgumentException] {
+        CurateCli.run(cmd, Map("--in" -> docsPath, "--out" -> out, flag -> "abc") ++ extra)
+      }
+      assert(e.getMessage.contains(flag) && e.getMessage.contains("'abc'"),
+        s"$cmd: ${e.getMessage}")
+    }
+    rm(out)
+  }
 }
