@@ -27,6 +27,15 @@ import graft.{Argv, GraftSession}
   * the default `single` matches the reference's one-file-per-table layout
   * byte for byte.
   *
+  * The run itself is [[CarrotEngine.writeTo]]: the engine's one dependency
+  * schedule opens the sources together, writes `person_ids` once the
+  * dictionary is built and each target once it is numbered and joined,
+  * with the metrics parts collecting beside the writes — every sink, SQL
+  * ones included, is written concurrently. A failed branch is rethrown as
+  * the sink threw it, after the other branches ended. Then
+  * `summary_mapstream` is written and the run log printed from the
+  * collected counters.
+  *
   * The session is [[graft.GraftSession.cli]]'s (UTC, nanosAsLong — the
   * engine stringifies all inputs, so a nanos column reads as its raw tick
   * count, verbatim) plus
@@ -101,7 +110,8 @@ object CarrotCli {
       "@carrot/config/OMOPCDM_postgresql_5.3_ddl.sql")
     val cfgFile   = opt("--omop-config-file").getOrElse(
       "@carrot/config/config.json")
-    val threshold = argv.getOrElse("--log-file-threshold", "0").toLong
+    val flags     = Argv.Flags(argv)
+    val threshold = flags.long("--log-file-threshold", 0L)
     val usePids   = argv.getOrElse("--use-input-person-ids", "N") != "N"
     val sep       = argv.getOrElse("--sep", ",")
     val strictV2  = argv.getOrElse("--v2", "N") != "N"
@@ -109,10 +119,7 @@ object CarrotCli {
     // exact against the goldens; `dir` = the scale path, a directory of
     // part files per table written in parallel (skips the sequential
     // single-file merge — the dominant cost of a large write)
-    val outMode   = argv.getOrElse("--output-mode", "single")
-    if (outMode != "single" && outMode != "dir")
-      throw new IllegalArgumentException(
-        s"--output-mode must be 'single' or 'dir', got '$outMode'")
+    val outMode   = flags.choice("--output-mode", "single", "single", "dir")
 
     val person = opt("--person")
     person.filterNot(_.matches(PersonTablePattern)).foreach { p =>
@@ -152,14 +159,14 @@ object CarrotCli {
       cacheJoined = true)
 
     val write = Dispatch.outputTarget(spark, output, dirMode = outMode == "dir")
-    write("person_ids", engine.personIds)
     // file-ish sinks get the reference's sequential row order; a SQL table
     // has no observable order, so skip the global sort there
-    val results = if (Dispatch.isSql(output, spark.sparkContext.hadoopConfiguration) &&
-        !Dispatch.isMinio(output))
-      engine.run() else engine.runOrdered()
-    for ((target, df) <- results) write(target, df)
-    write("summary_mapstream", engine.summary(threshold))
+    val ordered = !Dispatch.isSql(output, spark.sparkContext.hadoopConfiguration) ||
+      Dispatch.isMinio(output)
+    try {
+      engine.writeTo(write, ordered)
+      write("summary_mapstream", engine.summary(threshold))
+    } finally engine.close()
 
     // Reference logging surface (logger.py; run.py:304-307,341): one
     // INPUT line per source file (input count + time since start), a
@@ -183,7 +190,6 @@ object CarrotCli {
         log(s"TARGET: $tgt: output count ${outCounts.getOrElse((src, tgt), 0L)}")
     }
     log("-" * 80)
-    engine.close()
 
     // a test harness may have handed us its own live session — leave it up
     if (!preexisting) spark.stop()

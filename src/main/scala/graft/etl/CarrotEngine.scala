@@ -1,8 +1,15 @@
 package graft.etl
 
+import java.util.concurrent.{ConcurrentLinkedQueue, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.DateNorm
 import graft.ops.IdAssign
@@ -21,6 +28,20 @@ import graft.ops.IdAssign
   *   per mapping/per concept-field branch: validity gate (T2) → literal-map
   *   concept lookup (T4) → explode combos (T5) → OMOP projection
   *   (T6-T11) → union → dense auto-number (T12) → broadcast person join (J1).
+  *
+  * The run is one dependency schedule. Each node of the DAG is one
+  * memoised `Future` that starts as soon as its own inputs are ready, on
+  * one engine-owned pool:
+  *   source open (person file first) → person dictionary (J2);
+  *   the sources of a target → its auto-number; + the dictionary → its J1;
+  *   the dictionary → the `person_ids` write; a joined target → its write;
+  *   a joined target → its rollup; the targets a source feeds → its flag
+  *   aggregate.
+  * [[run]], [[runOrdered]], [[personLookup]] and the metrics counters await
+  * the nodes they need; [[writeTo]] runs the whole schedule into a sink.
+  * Nodes only compose futures and never wait on one another, so the pool
+  * can be as small as the widest point of the DAG: the dictionary plus one
+  * thread per target.
   */
 final class CarrotEngine(
     spark: SparkSession,
@@ -40,11 +61,36 @@ final class CarrotEngine(
     * sessions must call it after the last action on the outputs. */
   private val scope = new graft.ops.CacheScope
 
-  /** Unpersist all engine-held caches. The output DataFrames remain valid
-    * but recompute from source on later actions — in particular, dense IDs
+  /** The schedule's pool. Its threads are daemons and end when idle, so an
+    * engine nobody closes (a memoised query run) keeps no JVM alive; every
+    * thread it ever made is kept for [[close]] to join. */
+  private val threads = new ConcurrentLinkedQueue[Thread]
+  private val pool = {
+    val n = rules.tables.map(_.target).distinct.size + 1
+    val p = new ThreadPoolExecutor(n, n, 30, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable],
+      (r: Runnable) => {
+        val t = new Thread(r, s"$ThreadPrefix${threads.size}")
+        t.setDaemon(true)
+        threads.add(t)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+  private implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+
+  /** Stop the schedule's pool (waiting for its running nodes) and unpersist
+    * all engine-held caches. The output DataFrames remain valid but
+    * recompute from source on later actions — in particular, dense IDs
     * would re-sample their range boundaries, so close only after the last
     * consumer ran. */
-  def close(): Unit = scope.close()
+  def close(): Unit = {
+    pool.shutdown()
+    threads.forEach(_.join())
+    scope.close()
+  }
+
+  private def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
 
   /** V1/V2 guard (reference `tools/args.py:125-299`): ALL person-table
     * mappings must come from exactly one source table — the person file. */
@@ -63,177 +109,79 @@ final class CarrotEngine(
     pms.head
   }
 
-  /** Raw per-source DataFrames. An under-split source is repartitioned AND
-    * cached (`ensureMaterialized`): the cache is what keeps the regex-heavy
-    * date filter from being pushed back into a single-task scan, and every
-    * source here has ≥2 physical passes anyway (auto-number offsets + final
-    * output, or person dictionary + person branch). Well-split inputs (the
-    * cluster-scale case) are left alone — scan-side filter pushdown is then
-    * the right plan. Row order is irrelevant; ordering rides on `_row_idx`. */
-  private lazy val rawSources: Map[String, DataFrame] =
-    rules.sourceTables.map { s =>
-      val consumers = rules.forSource(s).size + (if (s == personMapping.source) 1 else 0)
-      val df = graft.ops.Parallelize.ensureMaterialized(readSource(s), scope)
-      // a well-split multi-consumer source still pays one scan per consumer
-      // unless cached; keep the old multi-consumer cache for that case
-      s -> (if (consumers > 1 && df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-              scope.track(df.cache())
-            else df)
-    }.toMap
+  // The node maps below are lazy vals that only CREATE futures. Lazy-val
+  // init locks the engine's monitor, so an initialiser must never wait on a
+  // future, and a node's body must never touch an engine lazy val: every
+  // node gets its inputs as arguments.
+
+  /** One open per source file, the person file's first: it feeds the
+    * dictionary, which every J1 waits for. */
+  private lazy val sources: Map[String, Future[Opened]] =
+    rules.sourceTables.sortBy(_ != personMapping.source).map(s => s -> Future(open(s))).toMap
 
   /** J2: the person dictionary, built from the RAW person file (strict
-    * date-only birthdate validation — not the lax T1 normalizer).
-    *
-    * Memoized behind its OWN lock (not an engine lazy val): lazy-val init
-    * synchronizes on the engine instance, and `builds` initializes target
-    * plans on worker threads while holding that monitor — the dictionary
-    * must be initializable from any thread without touching it. */
-  private val personLookupRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-
-  def personLookup: DataFrame = {
-    val cur = personLookupRef.get()
-    if (cur != null) cur
-    else personLookupRef.synchronized {
-      val again = personLookupRef.get()
-      if (again != null) again
-      else {
-        val built = scope.track(PersonLookup.build(rawSources(personMapping.source),
-          personMapping.personIdSource, personMapping.dateSource, useInputPersonIds, scope).cache())
-        personLookupRef.set(built)
-        built
-      }
-    }
+    * date-only birthdate validation — not the lax T1 normalizer). */
+  private lazy val dictionary: Future[DataFrame] = sources(personMapping.source).map { s =>
+    scope.track(PersonLookup.build(s.raw, personMapping.personIdSource, personMapping.dateSource,
+      useInputPersonIds, scope).cache())
   }
+
+  /** The person dictionary: `source_subject` → `target_subject`. */
+  def personLookup: DataFrame = await(dictionary)
 
   /** person_ids sink shape (reference K5). */
-  lazy val personIds: DataFrame =
-    personLookup.select(col("source_subject").as("SOURCE_SUBJECT"), col("target_subject").as("TARGET_SUBJECT"))
+  def personIds: DataFrame = personIdsOf(personLookup)
 
-  /** Date-normalized view per source file: the designated datetime column is
-    * replaced by its normalized value and unparseable rows are dropped for
-    * ALL targets (reference mutates `indata[datetime_col]` in place,
-    * `run.py:229-242`). */
-  private lazy val prepared: Map[String, DataFrame] = rawSources.map { case (src, df) =>
-    // single-pass `normalise_to8601` — bit-identical to the composable
-    // reference model in DateNormSpec, ~10× fewer regex executions on the
-    // engine's hottest path
-    val out = dateColsOf(src).foldLeft(df) { (d, c) =>
-      d.withColumn(c, graft.functions.DateExprs.normalise8601(col(c)))
+  private def personIdsOf(dict: DataFrame): DataFrame =
+    dict.select(col("source_subject").as("SOURCE_SUBJECT"), col("target_subject").as("TARGET_SUBJECT"))
+
+  /** Each target numbered once its sources are open, then joined with the
+    * dictionary once that is built. */
+  private lazy val builds: Map[String, Future[TargetBuild]] =
+    rules.tables.groupBy(_.target).map { case (target, mappings) =>
+      val inputs = Future.traverse(mappings.map(_.source).distinct)(s => sources(s).map(s -> _))
+      target -> inputs.map(in => numberTarget(target, mappings, in.toMap)).zipWith(dictionary)(joinPersons)
     }
-    val filtered = dateColsOf(src).foldLeft(out)((d, c) => d.filter(col(c).isNotNull))
-    // the normalizer's regex chain is the engine's hottest expression, and it
-    // gets evaluated once in the filter AND once in the projection, per
-    // physical pass (a range exchange alone makes two passes: sample +
-    // shuffle write). When the source is small enough that ensureMaterialized
-    // cached it, cache the normalized view too — the regex then runs exactly
-    // once per row. Large (well-split) sources stay uncached: at scale the
-    // recompute is the right trade against caching a source-sized relation.
-    src -> (if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-              scope.track(filtered.cache())
-            else filtered)
-  }
 
-  private def dateColsOf(src: String): Seq[String] = rules.forSource(src).map(_.dateSource).distinct
-
-  /** Per-target instrumented plan: candidates (pre component-filter, with
-    * metadata), joined (filtered, auto-numbered, left-joined with the
-    * person dictionary; `_matched` marks J1 hits) and the processing-order
-    * keys its rows are numbered and written in. */
-  final case class TargetBuild(target: String, candidates: DataFrame, joined: DataFrame,
-                               order: Seq[String])
-
-  private lazy val builds: Map[String, TargetBuild] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // a small dedicated pool: enough to overlap the Spark jobs (which are
-    // mostly waiting on the cluster), without stampeding the single-JVM
-    // codegen compiler from 32 fork-join workers at once
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    // per-target construction is EAGER (the dense-ID assigner collects its
-    // partition offsets), so run the person-dictionary build and every
-    // target as concurrent Spark jobs — the scheduler interleaves them and
-    // wall-clock becomes max, not sum. EVERY engine lazy val the workers
-    // touch must be forced on THIS thread first: lazy-val init locks the
-    // instance monitor, which this thread holds while initializing `builds`
-    // — a worker hitting an uninitialized lazy val would deadlock against
-    // Await below. (personLookup memoizes behind its own lock instead.)
-    prepared
-    val dictFuture = Future(personLookup)
-    val futures = rules.tables.groupBy(_.target).map { case (target, mappings) =>
-      target -> Future(buildTarget(target, mappings))
-    }
-    try {
-      Await.result(dictFuture, Duration.Inf)
-      futures.map { case (t, f) => t -> Await.result(f, Duration.Inf) }
-    } finally pool.shutdown()
-  }
-
-  private def buildTarget(target: String, mappings: Seq[TableMapping]): TargetBuild = {
-      // (file index, concept-mapping index, rows) per branch
-      val branches = mappings.flatMap { m =>
-        val fileIdx = rules.sourceTables.indexOf(m.source)
-        if (target == "person") Seq((fileIdx, 0, buildPersonBranch(m, fileIdx)))
-        else buildStandardBranches(m, fileIdx).zipWithIndex.map { case (b, ci) => (fileIdx, ci, b) }
-      }
-      val candidates = branches.map(_._3).reduce(_.unionByName(_))
-      // a key every branch sets to the same literal orders nothing, and the
-      // optimizer folds it out of the snapshot's sort: leave it out, so the
-      // write sorts by exactly the order the snapshot has
-      val constant = Map(FileIdx -> branches.map(_._1), CmIdx -> branches.map(_._2))
-        .collect { case (k, vs) if vs.distinct.size == 1 => k }.toSet
-      val order = OrderKeys.filterNot(constant)
-      val filtered   = candidates.filter(!col(HasComp) || col(CompOk)).drop(CompOk, HasComp)
-
-      // T12: dense auto-number in processing order, assigned BEFORE the person
-      // join — rejected person IDs consume numbers, like the reference
-      // (`run.py:266-273` increments before the person_lookup check). The
-      // wide candidate rows are numbered in place: IdAssign's range-sorted,
-      // cached snapshot is this target's one materialised copy, and J1, the
-      // `_matched` filter and the projection keep its partitioning and
-      // order, so runOrdered()'s sort by the same key plans no exchange and
-      // no sort. A SQL sink (run()) pays that one range shuffle of the wide
-      // rows too, where it needs no order.
-      val auto = schema.autoNumberField.get(target)
-      val numbered = auto match {
-        case Some(a) =>
-          IdAssign.withDenseId(filtered, "_auto", lastUsedIds.getOrElse(target, 0L),
-              scope, order.map(col): _*)
-            .withColumn(a, col("_auto").cast("string"))
-            .drop("_auto")
-        case None => filtered
-      }
-
-      // J1: broadcast hash join replacing source person IDs (left join keeps
-      // the miss path visible for metrics; result takes the inner slice)
-      val pidDest = schema.personIdField.getOrElse(target, "person_id").toLowerCase
-      val joined0 = numbered
-        .join(broadcast(personLookup), numbered(pidDest) === personLookup("source_subject"), "left")
-        .withColumn(Matched, col("target_subject").isNotNull)
-        .withColumn(pidDest, coalesce(col("target_subject"), col(pidDest)))
-      // a target without an auto-number (person) has no snapshot: callers
-      // that consume it twice (the CLI: table write + metrics summary) opt
-      // into caching the joined relation, so its wide pipeline runs once
-      val joined = if (cacheJoined && auto.isEmpty) scope.track(joined0.cache()) else joined0
-
-      TargetBuild(target, candidates, joined, order)
-  }
+  /** The metrics parts, each collected on its own: one rollup per target
+    * once it is built, and one flag aggregate per source once the targets
+    * reading it are built — by then the source's caches are filled, so
+    * the aggregate neither races the auto-numbers to fill them nor holds a
+    * thread they need. */
+  private lazy val counterParts: Seq[Future[Seq[CarrotMetrics.Counter]]] =
+    rules.sourceTables.map { s =>
+      val readers = rules.forSource(s).map(_.target).distinct.map(builds)
+      Future.sequence(readers).zipWith(sources(s))((_, in) =>
+        CarrotMetrics.sourceCounts(rules, s, in.raw, in.prepared))
+    } ++ builds.values.map(_.map(CarrotMetrics.targetCounts(rules, schema, _)))
 
   /** All target tables this rules file populates, each as an OMOP-shaped
     * all-string DataFrame (DDL column order; auto-number assigned; person IDs
     * replaced via the dictionary). */
-  def run(): Map[String, DataFrame] = builds.map { case (target, b) =>
-    target -> b.joined.filter(col(Matched)).select(schema.columns(target).map(c => col(c.toLowerCase)): _*)
-  }
+  def run(): Map[String, DataFrame] = builds.map { case (t, b) => t -> output(await(b), ordered = false) }
 
   /** Like run(), but rows globally ordered by processing order — byte-exact
     * single-file fidelity with the reference's sequential writer. A numbered
     * target already sits in that order in its id snapshot, so its sort
     * plans away; the person target pays a global sort. */
-  def runOrdered(): Map[String, DataFrame] = builds.map { case (target, b) =>
-    target -> b.joined.filter(col(Matched))
-      .orderBy(b.order.map(col): _*)
-      .select(schema.columns(target).map(c => col(c.toLowerCase)): _*)
+  def runOrdered(): Map[String, DataFrame] = builds.map { case (t, b) => t -> output(await(b), ordered = true) }
+
+  private def output(b: TargetBuild, ordered: Boolean): DataFrame = {
+    val matched = b.joined.filter(col(Matched))
+    (if (ordered) matched.orderBy(b.order.map(col): _*) else matched)
+      .select(schema.columns(b.target).map(c => col(c.toLowerCase)): _*)
+  }
+
+  /** The whole run into `sink`: `person_ids` once the dictionary is built,
+    * each target once it is joined, while the metrics parts collect beside
+    * the writes, so [[summary]] costs no further Spark job. Every branch
+    * ends before this returns; the first failure (in the order above) is
+    * then rethrown as it was thrown. */
+  def writeTo(sink: (String, DataFrame) => Unit, ordered: Boolean): Unit = {
+    val nodes: Seq[Future[Any]] = dictionary.map(d => sink("person_ids", personIdsOf(d))) +:
+      (builds.toSeq.map { case (t, b) => b.map(x => sink(t, output(x, ordered))) } ++ counterParts)
+    val ended = await(Future.sequence(nodes.map(_.transform(Success(_)))))
+    ended.collectFirst { case Failure(e) => e }.foreach(e => throw e)
   }
 
   /** The metrics/summary subsystem (reference A1/A2/A3, `tools/metrics.py`):
@@ -241,25 +189,112 @@ final class CarrotEngine(
     * summary_mapstream table sorted by stringified key. */
   def summary(threshold: Long = 0): DataFrame = CarrotMetrics.summary(this, threshold)
 
-  /** The raw metrics counters, collected on first use and kept: the summary
-    * (at any threshold) and the CLI's run log read these same rows. */
-  private[etl] lazy val metricsCounts: Seq[CarrotMetrics.Counter] = CarrotMetrics.rawCounts(this)
+  /** The raw metrics counters of every part: the summary (at any threshold)
+    * and the CLI's run log read these same rows. */
+  private[etl] def metricsCounts: Seq[CarrotMetrics.Counter] = counterParts.flatMap(await)
 
   // internal accessors for CarrotMetrics
-  private[etl] def metricsSchema: OmopSchema = schema
   private[etl] def metricsRules: CarrotRules = rules
-  private[etl] def metricsRaw: Map[String, DataFrame] = rawSources
-  private[etl] def metricsPrepared: Map[String, DataFrame] = prepared
-  private[etl] def metricsBuilds: Map[String, TargetBuild] = builds
   private[etl] def sparkSession: SparkSession = spark
+
+  // ------------------------------------------------------------ nodes
+
+  /** A raw source (an under-split one is repartitioned AND cached by
+    * `ensureMaterialized`: the cache is what keeps the regex-heavy date
+    * filter from being pushed back into a single-task scan, and every
+    * source here has ≥2 physical passes anyway — auto-number offsets + final
+    * output, or person dictionary + person branch; well-split inputs, the
+    * cluster-scale case, are left alone, where scan-side filter pushdown is
+    * the right plan; row order is irrelevant, ordering rides on `_row_idx`),
+    * and its date-normalized view: the designated datetime column is
+    * replaced by its normalized value and unparseable rows are dropped for
+    * ALL targets (reference mutates `indata[datetime_col]` in place,
+    * `run.py:229-242`). */
+  private def open(src: String): Opened = {
+    val consumers = rules.forSource(src).size + (if (src == personMapping.source) 1 else 0)
+    val read = graft.ops.Parallelize.ensureMaterialized(readSource(src), scope)
+    // a well-split multi-consumer source still pays one scan per consumer
+    // unless cached; keep the old multi-consumer cache for that case
+    val raw = if (consumers > 1 && read.storageLevel == StorageLevel.NONE) scope.track(read.cache()) else read
+    // single-pass `normalise_to8601` — bit-identical to the composable
+    // reference model in DateNormSpec, ~10× fewer regex executions on the
+    // engine's hottest path
+    val dateCols = rules.forSource(src).map(_.dateSource).distinct
+    val normalized = dateCols.foldLeft(raw) { (d, c) =>
+      d.withColumn(c, graft.functions.DateExprs.normalise8601(col(c)))
+    }
+    val filtered = dateCols.foldLeft(normalized)((d, c) => d.filter(col(c).isNotNull))
+    // the normalizer's regex chain is the engine's hottest expression, and it
+    // gets evaluated once in the filter AND once in the projection, per
+    // physical pass (a range exchange alone makes two passes: sample +
+    // shuffle write). When the source is small enough that ensureMaterialized
+    // cached it, cache the normalized view too — the regex then runs exactly
+    // once per row. Large (well-split) sources stay uncached: at scale the
+    // recompute is the right trade against caching a source-sized relation.
+    Opened(raw, if (read.storageLevel != StorageLevel.NONE) scope.track(filtered.cache()) else filtered)
+  }
+
+  /** A target's candidates, numbered in processing order when the target
+    * has an auto-number field. */
+  private def numberTarget(target: String, mappings: Seq[TableMapping],
+                           in: Map[String, Opened]): Numbered = {
+    // (file index, concept-mapping index, rows) per branch
+    val branches = mappings.flatMap { m =>
+      val fileIdx = rules.sourceTables.indexOf(m.source)
+      val src = in(m.source).prepared
+      if (target == "person") Seq((fileIdx, 0, buildPersonBranch(m, src, fileIdx)))
+      else buildStandardBranches(m, src, fileIdx).zipWithIndex.map { case (b, ci) => (fileIdx, ci, b) }
+    }
+    val candidates = branches.map(_._3).reduce(_.unionByName(_))
+    // a key every branch sets to the same literal orders nothing, and the
+    // optimizer folds it out of the snapshot's sort: leave it out, so the
+    // write sorts by exactly the order the snapshot has
+    val constant = Map(FileIdx -> branches.map(_._1), CmIdx -> branches.map(_._2))
+      .collect { case (k, vs) if vs.distinct.size == 1 => k }.toSet
+    val order = OrderKeys.filterNot(constant)
+    val filtered   = candidates.filter(!col(HasComp) || col(CompOk)).drop(CompOk, HasComp)
+
+    // T12: dense auto-number in processing order, assigned BEFORE the person
+    // join — rejected person IDs consume numbers, like the reference
+    // (`run.py:266-273` increments before the person_lookup check). The
+    // wide candidate rows are numbered in place: IdAssign's range-sorted,
+    // cached snapshot is this target's one materialised copy, and J1, the
+    // `_matched` filter and the projection keep its partitioning and
+    // order, so runOrdered()'s sort by the same key plans no exchange and
+    // no sort. A SQL sink (run()) pays that one range shuffle of the wide
+    // rows too, where it needs no order.
+    val numbered = schema.autoNumberField.get(target) match {
+      case Some(a) =>
+        IdAssign.withDenseId(filtered, "_auto", lastUsedIds.getOrElse(target, 0L),
+            scope, order.map(col): _*)
+          .withColumn(a, col("_auto").cast("string"))
+          .drop("_auto")
+      case None => filtered
+    }
+    Numbered(target, candidates, numbered, order)
+  }
+
+  /** J1: broadcast hash join replacing source person IDs (left join keeps
+    * the miss path visible for metrics; the outputs take the inner slice,
+    * `_matched` marks the hits). */
+  private def joinPersons(n: Numbered, dict: DataFrame): TargetBuild = {
+    val pidDest = schema.personIdField.getOrElse(n.target, "person_id").toLowerCase
+    val joined = n.rows
+      .join(broadcast(dict), n.rows(pidDest) === dict("source_subject"), "left")
+      .withColumn(Matched, col("target_subject").isNotNull)
+      .withColumn(pidDest, coalesce(col("target_subject"), col(pidDest)))
+    // a target without an auto-number (person) has no snapshot: callers
+    // that consume it twice (the CLI: table write + metrics summary) opt
+    // into caching the joined relation, so its wide pipeline runs once
+    val cached = cacheJoined && !schema.autoNumberField.contains(n.target)
+    TargetBuild(n.target, n.candidates, if (cached) scope.track(joined.cache()) else joined, n.order)
+  }
 
   // ------------------------------------------------------------ standard
 
   /** One branch per concept-mapped source field (T13 column pruning is
     * implicit: only referenced columns appear, Catalyst prunes the scan). */
-  private def buildStandardBranches(m: TableMapping, fileIdx: Int): Seq[DataFrame] = {
-    val src = prepared(m.source)
-
+  private def buildStandardBranches(m: TableMapping, src: DataFrame, fileIdx: Int): Seq[DataFrame] = {
     m.conceptMappings.zipWithIndex.map { case (cm, ci) =>
       val (known, fallback) = cm.effectiveCombos(rules.v1Compat)
       val v     = col(cm.sourceField)
@@ -297,8 +332,7 @@ final class CarrotEngine(
     * row (reference `record_builder.py:199-292` / `core.py:78-96`), with
     * first-row-wins dedupe per source ID in v2 (D1: the row claims the slot
     * even if it yields no record) and NO cross-row dedupe in v1 (D2). */
-  private def buildPersonBranch(m: TableMapping, fileIdx: Int): DataFrame = {
-    val base0 = prepared(m.source)
+  private def buildPersonBranch(m: TableMapping, base0: DataFrame, fileIdx: Int): DataFrame = {
 
     val base =
       if (rules.v1Compat) base0
@@ -461,7 +495,25 @@ object CarrotEngine {
   val DatacolCol = "_datacol"
   val Matched    = "_matched"
 
+  /** Name prefix of the schedule pool's threads. */
+  val ThreadPrefix = "carrot-etl-"
+
   /** Processing order, the reference's sequential emit order: the unique
     * key auto-numbering and the ordered write sort by. */
   val OrderKeys: Seq[String] = Seq(FileIdx, RowIdx, CmIdx, ComboOut)
+
+  /** An open source: raw rows and the date-normalized view. */
+  private[etl] final case class Opened(raw: DataFrame, prepared: DataFrame)
+
+  /** A target's candidates (pre component-filter, with metadata), its rows
+    * (auto-numbered when the target has an auto-number field) and the
+    * processing-order keys its rows are numbered and written in. */
+  private[etl] final case class Numbered(target: String, candidates: DataFrame, rows: DataFrame,
+                                    order: Seq[String])
+
+  /** A built target: [[Numbered]]'s rows left-joined with the person
+    * dictionary (`_matched` marks J1 hits), as the outputs and the metrics
+    * rollup read it. */
+  private[etl] final case class TargetBuild(target: String, candidates: DataFrame,
+                                            joined: DataFrame, order: Seq[String])
 }

@@ -22,11 +22,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    (`metrics.py:191-259`; person rows use out_record[1] as concept and
   *    out_record[2] as additional, non-person rows use out_record[2])
   *
-  * The raw counters are computed ONCE per engine: one union of per-source
-  * and per-target aggregations, collected and memoised on the engine
-  * (`CarrotEngine.metricsCounts`). [[summary]] and [[runLogCounts]] both
-  * read those same rows, so the console counts always agree with the
-  * written summary and printing them costs no Spark job.
+  * The raw counters are computed ONCE per engine, in parts: one flag
+  * aggregate per source ([[sourceCounts]]) and one rollup per built target
+  * ([[targetCounts]]), each collected as a node of the engine's schedule as
+  * soon as its input is ready (`CarrotEngine.metricsCounts`). [[summary]]
+  * and [[runLogCounts]] both read those same rows, so the console counts
+  * always agree with the written summary and printing them costs no Spark
+  * job.
   *
   * Materialization (A3, `metrics.py:305-343`): rows sorted by the
   * "src~field~table~concept~additional" key string, source truncated at the
@@ -52,118 +54,114 @@ object CarrotMetrics {
       concept.as("concept_id"), additional.as("additional"),
       lit(countType).as("count_type"), n.cast("long").as("n"))
 
-  /** Every raw counter, as one collected union — call through the engine's
-    * memo (`CarrotEngine.metricsCounts`), never directly. */
-  private[etl] def rawCounts(e: CarrotEngine): Seq[Counter] = {
-    val rules  = e.metricsRules
-    val schema = e.metricsSchema
+  /** One source's counters: the input count from the raw rows; the date
+    * drops and the empty-value counts from the engine's date-normalized
+    * (`prepared`) view, which holds exactly the date-valid rows — so
+    * input_date_fields = input rows - prepared rows, and empties are
+    * counted over the rows that passed the date filter, as the reference
+    * counts them after its date check. Both sides feed ONE global
+    * aggregate as 0/1 flag columns: a single shuffle per source. */
+  private[etl] def sourceCounts(rules: CarrotRules, src: String, raw: DataFrame,
+                                prepared: DataFrame): Seq[Counter] = {
+    // v1 iterates every mapped data column (term fields AND verbatim-copy
+    // source fields); v2's standard builder counts per concept-mapped
+    // field and its person builder does not count at all.
+    val empties: Seq[(String, String)] = for {
+      m <- rules.forSource(src)
+      f <- (if (m.target == "person") {
+              if (rules.v1Compat) m.conceptMappings.take(1).map(_.sourceField) else Seq.empty
+            } else {
+              val extra = if (rules.v1Compat) m.conceptMappings.flatMap(_.extraCopies.map(_._1)) else Seq.empty
+              (m.conceptMappings.map(_.sourceField) ++ extra).distinct
+            })
+    } yield f -> m.target
 
-    val parts = Seq.newBuilder[DataFrame]
+    val flags = "_in" +: "_ok" +: empties.indices.map(i => s"_e$i")
+    def flagRow(ones: Map[String, Column]): Seq[Column] =
+      flags.map(c => ones.getOrElse(c, lit(0L)).as(c))
+    val rawSide = raw.select(flagRow(Map("_in" -> lit(1L))): _*)
+    val okSide = prepared.select(flagRow(Map("_ok" -> lit(1L)) ++
+      empties.zipWithIndex.map { case ((f, _), i) =>
+        s"_e$i" -> when(trim(col(f)) === "", 1L).otherwise(0L)
+      }): _*)
+    val totals = rawSide.unionByName(okSide).agg(sum(flags.head).as(flags.head),
+      flags.tail.map(c => sum(c).as(c)): _*)
 
-    // ---- per source file: the input count from the raw rows; the date
-    // drops and the empty-value counts from the engine's date-normalized
-    // (`prepared`) view, which holds exactly the date-valid rows — so
-    // input_date_fields = input rows - prepared rows, and empties are
-    // counted over the rows that passed the date filter, as the reference
-    // counts them after its date check. Both sides feed ONE global
-    // aggregate as 0/1 flag columns: a single shuffle per source.
-    for (src <- rules.sourceTables) {
-      // v1 iterates every mapped data column (term fields AND verbatim-copy
-      // source fields); v2's standard builder counts per concept-mapped
-      // field and its person builder does not count at all.
-      val empties: Seq[(String, String)] = for {
-        m <- rules.forSource(src)
-        f <- (if (m.target == "person") {
-                if (rules.v1Compat) m.conceptMappings.take(1).map(_.sourceField) else Seq.empty
-              } else {
-                val extra = if (rules.v1Compat) m.conceptMappings.flatMap(_.extraCopies.map(_._1)) else Seq.empty
-                (m.conceptMappings.map(_.sourceField) ++ extra).distinct
-              })
-      } yield f -> m.target
+    val all = lit("all")
+    val keys =
+      counter(lit(src), all, all, all, lit(""), "input_count", col("_in")) +:
+        counter(lit(src), all, all, all, lit(""), "input_date_fields", col("_in") - col("_ok")) +:
+        empties.zipWithIndex.map { case ((f, t), i) =>
+          counter(lit(src), lit(f), lit(t), all, lit(""), "invalid_source_fields", col(s"_e$i"))
+        }
+    collectCounters(totals.select(explode(array(keys: _*)).as("k")).select(col("k.*")))
+  }
 
-      val flags = "_in" +: "_ok" +: empties.indices.map(i => s"_e$i")
-      def flagRow(ones: Map[String, Column]): Seq[Column] =
-        flags.map(c => ones.getOrElse(c, lit(0L)).as(c))
-      val rawSide = e.metricsRaw(src).select(flagRow(Map("_in" -> lit(1L))): _*)
-      val okSide = e.metricsPrepared(src).select(flagRow(Map("_ok" -> lit(1L)) ++
-        empties.zipWithIndex.map { case ((f, _), i) =>
-          s"_e$i" -> when(trim(col(f)) === "", 1L).otherwise(0L)
-        }): _*)
-      val totals = rawSide.unionByName(okSide).agg(sum(flags.head).as(flags.head),
-        flags.tail.map(c => sum(c).as(c)): _*)
+  /** One built target's counters: invalid_date from the pre-filter
+    * candidates (one pass), then ONE grouped pass over the joined records
+    * carrying the match flag — rollups and the invalid-person count both
+    * derive from the resulting tiny grouped relation. */
+  private[etl] def targetCounts(rules: CarrotRules, schema: OmopSchema, b: TargetBuild): Seq[Counter] = {
+    val target = b.target
+    // the component-parse drop can only happen for targets whose date
+    // dests include configured date components (in practice: person) —
+    // statically skip the pre-filter pass everywhere else
+    val compPossible = rules.tables.filter(_.target == target).exists { m =>
+      val treated = if (rules.v1Compat) m.dateDests.takeRight(1) else m.dateDests
+      schema.dateComponents(target).keys.exists(treated.contains)
+    }
+    val invalidDates =
+      if (!compPossible) None
+      else Some(b.candidates.filter(col(HasComp) && !col(CompOk))
+        .groupBy(col(SrcCol), col(DatacolCol)).count()
+        .select(keyed(col(SrcCol), col(DatacolCol), lit(target), lit("all"), lit(""), "invalid_date_fields", col("count")): _*))
 
-      val all = lit("all")
-      val keys =
-        counter(lit(src), all, all, all, lit(""), "input_count", col("_in")) +:
-          counter(lit(src), all, all, all, lit(""), "input_date_fields", col("_in") - col("_ok")) +:
-          empties.zipWithIndex.map { case ((f, t), i) =>
-            counter(lit(src), lit(f), lit(t), all, lit(""), "invalid_source_fields", col(s"_e$i"))
-          }
-      parts += totals.select(explode(array(keys: _*)).as("k")).select(col("k.*"))
+    val cols = schema.columns(target)
+    val c1   = col(cols(1).toLowerCase) // person: gender_concept_id
+    val c2   = col(cols(2).toLowerCase) // person: year_of_birth; else concept id
+    val g = b.joined
+      .groupBy(col(Matched).as("m"), col(SrcCol).as("s"), col(DatacolCol).as("f"), c1.as("c1"), c2.as("c2"))
+      .count()
+
+    // one pass over the (tiny) grouped relation: every rollup key plus the
+    // invalid-person key is exploded per row and re-summed — not one
+    // aggregation job per rollup level
+    def rk(src: Column, field: Column, table: Column, concept: Column,
+           additional: Column, ct: String): Column =
+      struct(src.as("source"), field.as("fieldname"), table.as("tablename"),
+        concept.as("concept_id"), additional.as("additional"), lit(ct).as("count_type"))
+
+    val rollKeys: Seq[Column] = {
+      val base = Seq(
+        rk(col("s"), lit("all"), lit("all"), lit("all"), lit(""), "output_count"),
+        rk(lit("all"), lit("all"), lit(target), lit("all"), lit(""), "output_count"),
+        rk(col("s"), lit("all"), lit(target), lit("all"), lit(""), "output_count"))
+      val extra =
+        if (target == "person") Seq(
+          rk(col("s"), lit("all"), lit(target), col("c1"), lit(""), "output_count"),
+          rk(col("s"), lit("all"), lit(target), col("c1"), col("c2"), "output_count"))
+        else Seq(
+          rk(col("s"), col("f"), lit(target), col("c2"), lit(""), "output_count"),
+          rk(col("s"), lit("all"), lit(target), col("c2"), lit(""), "output_count"),
+          rk(lit("all"), lit("all"), lit(target), col("c2"), lit(""), "output_count"),
+          rk(lit("all"), lit("all"), lit("all"), col("c2"), lit(""), "output_count"))
+      (base ++ extra).map(k => when(col("m"), k)) :+
+        when(!col("m"), rk(col("s"), lit("all"), lit(target), lit("all"), lit(""), "invalid_person_ids"))
     }
 
-    // ---- per target: invalid_date from the pre-filter candidates (one
-    // pass), then ONE grouped pass over the joined records carrying the
-    // match flag — rollups and the invalid-person count both derive from
-    // the resulting tiny grouped relation.
-    for ((target, b) <- e.metricsBuilds) {
-      // the component-parse drop can only happen for targets whose date
-      // dests include configured date components (in practice: person) —
-      // statically skip the pre-filter pass everywhere else
-      val compPossible = rules.tables.filter(_.target == target).exists { m =>
-        val treated = if (rules.v1Compat) m.dateDests.takeRight(1) else m.dateDests
-        schema.dateComponents(target).keys.exists(treated.contains)
-      }
-      if (compPossible)
-        parts += b.candidates.filter(col(HasComp) && !col(CompOk))
-          .groupBy(col(SrcCol), col(DatacolCol)).count()
-          .select(keyed(col(SrcCol), col(DatacolCol), lit(target), lit("all"), lit(""), "invalid_date_fields", col("count")): _*)
+    val rollups = g
+      .select(col("count"), explode(array(rollKeys: _*)).as("k"))
+      .filter(col("k").isNotNull)
+      .groupBy(col("k.source"), col("k.fieldname"), col("k.tablename"),
+        col("k.concept_id"), col("k.additional"), col("k.count_type"))
+      .agg(sum(col("count")).cast("long").as("n"))
+    collectCounters(invalidDates.fold(rollups)(_.unionByName(rollups)))
+  }
 
-      val cols = schema.columns(target)
-      val c1   = col(cols(1).toLowerCase) // person: gender_concept_id
-      val c2   = col(cols(2).toLowerCase) // person: year_of_birth; else concept id
-      val g = b.joined
-        .groupBy(col(Matched).as("m"), col(SrcCol).as("s"), col(DatacolCol).as("f"), c1.as("c1"), c2.as("c2"))
-        .count()
-
-      // one pass over the (tiny) grouped relation: every rollup key plus the
-      // invalid-person key is exploded per row and re-summed — not one
-      // aggregation job per rollup level
-      def rk(src: Column, field: Column, table: Column, concept: Column,
-             additional: Column, ct: String): Column =
-        struct(src.as("source"), field.as("fieldname"), table.as("tablename"),
-          concept.as("concept_id"), additional.as("additional"), lit(ct).as("count_type"))
-
-      val rollKeys: Seq[Column] = {
-        val base = Seq(
-          rk(col("s"), lit("all"), lit("all"), lit("all"), lit(""), "output_count"),
-          rk(lit("all"), lit("all"), lit(target), lit("all"), lit(""), "output_count"),
-          rk(col("s"), lit("all"), lit(target), lit("all"), lit(""), "output_count"))
-        val extra =
-          if (target == "person") Seq(
-            rk(col("s"), lit("all"), lit(target), col("c1"), lit(""), "output_count"),
-            rk(col("s"), lit("all"), lit(target), col("c1"), col("c2"), "output_count"))
-          else Seq(
-            rk(col("s"), col("f"), lit(target), col("c2"), lit(""), "output_count"),
-            rk(col("s"), lit("all"), lit(target), col("c2"), lit(""), "output_count"),
-            rk(lit("all"), lit("all"), lit(target), col("c2"), lit(""), "output_count"),
-            rk(lit("all"), lit("all"), lit("all"), col("c2"), lit(""), "output_count"))
-        (base ++ extra).map(k => when(col("m"), k)) :+
-          when(!col("m"), rk(col("s"), lit("all"), lit(target), lit("all"), lit(""), "invalid_person_ids"))
-      }
-
-      parts += g
-        .select(col("count"), explode(array(rollKeys: _*)).as("k"))
-        .filter(col("k").isNotNull)
-        .groupBy(col("k.source"), col("k.fieldname"), col("k.tablename"),
-          col("k.concept_id"), col("k.additional"), col("k.count_type"))
-        .agg(sum(col("count")).cast("long").as("n"))
-    }
-
-    parts.result().reduce(_.unionByName(_)).filter(col("n") > 0).collect().toSeq.map(r =>
+  private def collectCounters(counts: DataFrame): Seq[Counter] =
+    counts.filter(col("n") > 0).collect().toSeq.map(r =>
       Counter(r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getString(4),
         r.getString(5), r.getLong(6)))
-  }
 
   private val SummarySchema = StructType(Seq("dsname", "source", "source_field", "target",
     "concept_id", "additional", "incount", "invalid_persid", "invalid_date",

@@ -215,6 +215,15 @@ class DispatchSpec extends AnyFunSuite {
 
   // ---- option handling ----
 
+  test("--log-file-threshold and --output-mode fail naming the flag and the value") {
+    def failure(flag: String, value: String): String = intercept[IllegalArgumentException] {
+      CarrotCli.run(Array("--rules-file", "r.json", "--inputs", "in", "--output", "out", flag, value),
+        env = Map.empty)
+    }.getMessage
+    assert(failure("--log-file-threshold", "abc") == "--log-file-threshold must be an integer, got 'abc'")
+    assert(failure("--output-mode", "both") == "--output-mode must be single or dir, got 'both'")
+  }
+
   test("--output-mode dir writes each table as a part directory with the same rows") {
     val td = s"${Golden.RefRoot}/tests/test_data/integration_test1"
     val rules = s"${Golden.RefRoot}/tests/test_V2/rules-v2.json"
