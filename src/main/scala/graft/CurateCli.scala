@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
-import graft.ops.{CacheScope, Cluster, Corpus, Dedup, Multimodal, Pipeline, Shard, StandingStore, TextAnalysis}
+import graft.ops.{CacheScope, Cluster, Corpus, Dedup, Ledger, Multimodal, Pipeline, Shard, StandingStore, TextAnalysis}
 
 /** CLI front door for the curation surface — the reference is a CLI tool
   * end-to-end (`cli/command.py:9-21`, which fronts the ETL the same way
@@ -1788,25 +1788,11 @@ object CurateCli {
           // fingerprint snapshot is the gated fallback
           import spark.implicits._
           val store = argv.req("--store")
-          val fsys = new org.apache.hadoop.fs.Path(store)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
           val index = StandingStore.kindOf(spark, store)
             .filter(_ != StandingStore.Snapshot)
-          val batchDirs =
-            if (fsys.exists(new org.apache.hadoop.fs.Path(store)))
-              fsys.listStatus(new org.apache.hadoop.fs.Path(store))
-                .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
-            else Seq.empty
-          val kind = index.map(_.kind).getOrElse {
-            if (batchDirs.nonEmpty) {
-              val cols = spark.read.parquet(s"$store/${batchDirs.head}")
-                .columns.toSet
-              if (cols.contains("sketch")) "cardledger"
-              else if (cols.contains("bucket")) "histledger"
-              else if (cols.contains("payload")) "sampleledger"
-              else throw new IllegalArgumentException(
-                s"unrecognized ledger schema at '$store/${batchDirs.head}': $cols")
-            } else if (StandingStore.founded(spark, store)) "snapshot"
+          val ledger = if (index.isEmpty) Ledger.kindOf(spark, store) else None
+          val kind = index.map(_.kind).orElse(ledger.map(_.kind)).getOrElse {
+            if (StandingStore.founded(spark, store)) "snapshot"
             else throw new IllegalArgumentException(
               s"no standing store at '$store'")
           }
@@ -1814,36 +1800,22 @@ object CurateCli {
           val nRows = spark.read.parquet(index.fold(store)(f =>
             StandingStore.tableDir(store, f.tables.head))).count()
           val nTombs = StandingStore.pending(spark, store).fold(0L)(_.count())
-          val horizonOpt = {
-            val p = new org.apache.hadoop.fs.Path(s"$store/_horizon")
-            if (fsys.exists(p)) {
-              val s2 = fsys.open(p)
-              try Some(new String(s2.readAllBytes(), "UTF-8").trim.toLong)
-              finally s2.close()
-            } else None
-          }
-          val paramsStr: Option[String] = kind match {
-            case "histledger" | "sampleledger" =>
-              val p = new org.apache.hadoop.fs.Path(s"$store/_params")
-              if (fsys.exists(p)) {
-                val s2 = fsys.open(p)
-                // one-per-line founding constants render space-joined
-                try Some(new String(s2.readAllBytes(), "UTF-8").trim
-                  .split("\n").map(_.trim).mkString(" "))
-                finally s2.close()
-              } else None
-            case _ if index.nonEmpty =>
+          val paramsStr: Option[String] =
+            if (ledger.nonEmpty)
+              // one-per-line founding constants render space-joined
+              Ledger.founding(spark, store)
+                .map(_.split("\n").map(_.trim).mkString(" "))
+            else if (index.nonEmpty) {
               val row = StandingStore.params(spark, store)
               Some(row.schema.fieldNames.zipWithIndex
                 .map { case (f, i) => s"$f=${row.get(i)}" }.mkString(" "))
+            }
             // the snapshot's founding param is its fingerprint kind
             // (pre-marker stores have none and read as raw)
-            case "snapshot" =>
-              Dedup.snapshotFpKind(spark, store).map(k => s"fp_kind=$k")
-            case _ => None
-          }
-          write(Seq((store, kind, nRows, batchDirs.size.toLong, nTombs,
-              horizonOpt, paramsStr,
+            else Dedup.snapshotFpKind(spark, store).map(k => s"fp_kind=$k")
+          write(Seq((store, kind, nRows,
+              Ledger.batchIds(spark, store).size.toLong, nTombs,
+              Ledger.horizon(spark, store), paramsStr,
               if (Dedup.snapshotBloomParams(spark, store).isDefined) "Y" else "N"))
             .toDF("store", "kind", "n_rows", "n_batches", "n_tombstones",
               "horizon", "params", "bloom"), out)

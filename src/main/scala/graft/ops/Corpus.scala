@@ -308,68 +308,38 @@ object Corpus {
     * pass per day. HLL sketches are MERGEABLE (union of per-batch
     * sketches ≡ sketch of the unioned data — the DataSketches set
     * property), so the ledger stores one (group, sketch) row-set per
-    * batch under `dir/batch=<id>` and [[cardLedgerEstimate]] answers
-    * from sketch bytes alone: per-batch cost rides the batch, history is
-    * NEVER rescanned, and the ledger read is kilobytes × batches × groups
-    * — [[graft.streaming.EventStream]]'s PackOffsetStore discipline at
-    * sketch scale.
+    * batch and [[cardLedgerEstimate]] answers from sketch bytes alone:
+    * per-batch cost rides the batch, history is NEVER rescanned, and the
+    * ledger read is kilobytes × batches × groups. The batch dirs, replay
+    * guards and compaction are the [[Ledger]] protocol.
     *
-    * Overwrite-per-batch-dir keeps replay idempotent (at-least-once
-    * delivery re-writes the same dir), and HLL union is itself
-    * idempotent (unioning a sketch with itself changes nothing), so even
-    * a DOUBLE-append of identical content under two batch ids cannot
-    * inflate the estimate — both layers are spec-pinned. One `lgK` per
-    * ledger: unions reject mismatched lgK rather than silently degrade
-    * to the coarser sketch.
+    * HLL union is itself idempotent (unioning a sketch with itself
+    * changes nothing), so even a DOUBLE-append of identical content under
+    * two batch ids cannot inflate the estimate. `lgK` is the founding
+    * constant: unions reject mismatched lgK rather than silently degrade
+    * to the coarser sketch, so an append restating another lgK fails
+    * before it writes (a ledger from before `_params` founds it on its
+    * next append).
     *
     * Honestly not oracle-able (estimates are implementation-defined);
     * pinned by tolerance specs against exact distincts, the
     * [[datasetCardApprox]] discipline. */
   def cardLedgerAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
                        batch: DataFrame, groupCol: String, valueCol: String,
-                       batchId: Long, lgK: Int = 12, keepLast: Int = -1): Unit = {
-    // horizon guard (the PackOffsetStore.startFor discipline): batches
-    // at-or-below the compaction horizon were FOLDED — their mass lives
-    // merged in the snapshot dir. Re-delivery of the horizon batch
-    // itself is a no-op (its content is already counted; overwriting
-    // the snapshot with a raw batch sketch would silently DROP every
-    // other folded batch's mass), and anything strictly below it is a
-    // caller replaying from before the horizon — fail loudly. Ids are
-    // microbatch ids: a re-delivered id always carries the same content.
-    val horizon = cardLedgerHorizon(spark, dir)
-    if (horizon.contains(batchId)) return
-    if (horizon.exists(batchId < _))
-      throw new IllegalStateException(
-        s"batch $batchId is below the ledger's compaction horizon " +
-          s"(${horizon.get}) — replay only batches at or above the " +
-          "horizon, or compact with a wider keepLast")
-    // dir-based fallback guard for ledgers compacted before the marker
-    // existed: an id below the oldest surviving dir with no dir of its
-    // own can only be a below-horizon replay
-    val existing = cardLedgerBatchIds(spark, dir)
-    if (existing.nonEmpty && !existing.contains(batchId) && batchId < existing.min)
-      throw new IllegalStateException(
-        s"batch $batchId is below the ledger's compaction horizon " +
-          s"(oldest surviving dir: batch ${existing.min}) — replay only " +
-          "batches at or above the horizon, or compact with a wider keepLast")
-    cardLedgerSketch(batch, groupCol, valueCol, lgK)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-    if (keepLast >= 0) cardLedgerCompact(spark, dir, batchId - keepLast)
-  }
+                       batchId: Long, lgK: Int = 12, keepLast: Int = -1): Unit =
+    Ledger.append(spark, dir, cardLedger, lgK, batchId, keepLast)(
+      cardLedgerSketch(batch, groupCol, valueCol, lgK))
 
-  /** The ledger's compaction horizon: the id of the snapshot dir every
-    * at-or-below batch was folded into (None before any compaction). */
-  private def cardLedgerHorizon(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_horizon")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-      finally in.close()
-    }
-  }
+  /** The card ledger's [[Ledger.Family]]: founding `lgK`, folded by HLL
+    * union (register-wise max — associative, so estimates are invariant
+    * across a compaction). */
+  private[ops] val cardLedger = Ledger.Family[Int]("cardledger", "sketch",
+    _.toString, _.toInt,
+    (dir, founded, stated) => s"card ledger at $dir was founded with lgK " +
+      s"$founded; an append restating lgK $stated cannot merge (HLL unions " +
+      "reject mixed lgK) — use the founding lgK or a new ledger dir",
+    (_, rows) => rows.groupBy(col("group"))
+      .agg(hll_union_agg(col("sketch")).as("sketch")))
 
   /** Corpus-to-date distinct estimates from the ledger alone: one union
     * per group over per-batch sketch bytes — no data rescan. Returns
@@ -380,85 +350,14 @@ object Corpus {
       .groupBy(col("group"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("distinct_est"))
 
-  /** The `batch=<id>` ids currently present under a ledger dir. */
-  private def cardLedgerBatchIds(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).toSeq
-  }
-
-  /** Fold every ledger dir at-or-below `upTo` into ONE snapshot dir —
-    * the [[graft.streaming.EventStream]] PackOffsetStore.compact hazard
-    * closed for this ledger (round-8 verdict #4): without it a year of
-    * 1-minute batches is ~500 k parquet dirs LISTED per estimate. Unlike
-    * the offset ledger, old records here can't just be deleted — their
-    * sketches carry distinct mass — but HLL union makes the fold
-    * trivial: merge all at-or-below-horizon sketches into one (group,
-    * sketch) row-set stored under the NEWEST folded id (so the horizon
-    * stays visible as the oldest surviving dir). Per-batch dirs above
-    * the horizon are untouched, preserving replay idempotence there;
-    * estimates are invariant across the fold (HLL union is associative —
-    * register-wise max — so regrouping changes nothing).
-    *
-    * Crash safety: the merged row-set is computed (collected — it is
-    * kilobytes) BEFORE anything is touched, then swapped in via
-    * underscore-invisible staging (`_compact_tmp`/`_compact_old`,
-    * ignored by partition discovery): stage → survivor aside → staged
-    * in → cleanup. A crash leaves either pure history (pre-swap), or a
-    * repairable aside dir — [[cardLedgerCompact]] self-repairs stale
-    * staging on its next run; every window between deletes is
-    * estimate-safe because surviving content is a superset and HLL
-    * union is idempotent. */
+  /** Fold every ledger dir at-or-below `upTo` into ONE snapshot dir
+    * ([[Ledger.compact]]): without it a year of 1-minute batches is
+    * ~500 k parquet dirs LISTED per estimate. Unlike an offset ledger, old
+    * records here can't just be deleted — their sketches carry distinct
+    * mass — but HLL union makes the fold exact. */
   def cardLedgerCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        upTo: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    def path(name: String) = new org.apache.hadoop.fs.Path(s"$dir/$name")
-    // self-repair stale staging from a previous crashed compaction:
-    // _compact_tmp was never swapped in (sources still present) — drop;
-    // _compact_old without its survivor means death mid-swap — restore
-    val old = fs.globStatus(path("_compact_old_*"))
-    if (old != null) old.foreach { s =>
-      val survivor = path("batch=" + s.getPath.getName.stripPrefix("_compact_old_"))
-      if (!fs.exists(survivor)) fs.rename(s.getPath, survivor)
-      else fs.delete(s.getPath, true)
-    }
-    if (fs.exists(path("_compact_tmp"))) fs.delete(path("_compact_tmp"), true)
-
-    val ids = cardLedgerBatchIds(spark, dir)
-    val folded = ids.filter(_ <= upTo)
-    if (folded.size <= 1) return
-    val survivor = folded.max
-    // merge on the DRIVER first (groups × one sketch — kilobytes), so no
-    // destructive op happens before the union is fully materialized
-    val merged = spark.read.parquet(folded.map(id => s"$dir/batch=$id"): _*)
-      .groupBy(col("group"))
-      .agg(hll_union_agg(col("sketch")).as("sketch"))
-      .collect().toSeq
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("group",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("sketch",
-        org.apache.spark.sql.types.BinaryType)))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(merged.asJava, schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_compact_tmp")
-    // horizon marker BEFORE the destructive phase: from here on, appends
-    // at-or-below `survivor` are no-op'd/refused even if a crash
-    // interrupts mid-swap — a crash before the marker leaves pure
-    // history; after it, every window holds a superset of the mass
-    val mk = fs.create(path("_horizon"), true)
-    try mk.write(survivor.toString.getBytes("UTF-8")) finally mk.close()
-    fs.rename(path(s"batch=$survivor"), path(s"_compact_old_$survivor"))
-    fs.rename(path("_compact_tmp"), path(s"batch=$survivor"))
-    fs.delete(path(s"_compact_old_$survivor"), true)
-    folded.filter(_ < survivor).foreach(id => fs.delete(path(s"batch=$id"), true))
-  }
+                        upTo: Long): Unit =
+    Ledger.compact(spark, dir, cardLedger, upTo)
 
   /** Smoothed bigram-LM fluency score: for each document, the mean
     * add-one-smoothed conditional transition probability of its word

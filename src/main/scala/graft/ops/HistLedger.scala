@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Standing score-DISTRIBUTION ledger: the [[Corpus.cardLedgerAppend]]
-  * discipline applied to histograms instead of distinct counts. A daily
+  * idea applied to histograms instead of distinct counts. A daily
   * 100 TB ingest loop needs "has the quality-score / doc-length / lang-id
   * distribution drifted from the corpus to date?" every batch — the
   * canary that catches a broken extractor or a poisoned source the row
@@ -22,17 +22,10 @@ import org.apache.spark.sql.functions._
   * integer arithmetic — the whole family is DuckDB-oracle-able
   * (q151–q153), not just tolerance-pinned.
   *
-  * Store discipline (all inherited from the card ledger, spec-pinned
-  * there and here):
-  *  - bucketing geometry (`lo`, `hi`, `nBuckets`) is a FOUNDING constant
-  *    persisted in `dir/_params`; an append restating different geometry
-  *    fails loudly — histograms on different grids cannot merge;
-  *  - overwrite-per-batch-dir keeps at-least-once replay idempotent
-  *    (same id + same content → same rows);
-  *  - compaction folds all at-or-below-horizon batch dirs into one
-  *    summed snapshot via the crash-safe staged swap, and the `_horizon`
-  *    marker makes a below-horizon replay fail loudly instead of
-  *    silently double-counting.
+  * Store discipline: the [[Ledger]] protocol (per-batch dirs, horizon
+  * guard, staged compaction). The bucketing geometry (`lo`, `hi`,
+  * `nBuckets`) is the FOUNDING constant — histograms on different grids
+  * cannot merge, so an append restating another grid fails loudly.
   *
   * Bucket rule ([[bucketOf]]): underflow → −1, `v >= hi` → nBuckets,
   * else `min(⌊(v−lo)/width⌋, nBuckets−1)` with `width = (hi−lo)/nBuckets`
@@ -140,98 +133,45 @@ object HistLedger {
 
   // ---- the standing store ----
 
-  private def paramsPath(dir: String) = s"$dir/_params"
-  private def horizonPath(dir: String) = s"$dir/_horizon"
-
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readSmall(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, path)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
-    }
-  }
-
-  private def writeSmall(spark: SparkSession, path: String, s: String): Unit = {
-    val f = fs(spark, path)
-    val out = f.create(new org.apache.hadoop.fs.Path(path), true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
+  /** The histogram ledger's [[Ledger.Family]]: the founding geometry as
+    * its exact textual doubles `"lo hi n"`, so a restated geometry
+    * compares by VALUE, not by bits-of-formatting; folded by summing
+    * counts. */
+  private[ops] val ledger = Ledger.Family[(Double, Double, Int)](
+    "histledger", "bucket",
+    { case (lo, hi, n) => s"$lo $hi $n" },
+    { s => val a = s.split("\\s+"); (a(0).toDouble, a(1).toDouble, a(2).toInt) },
+    { case (dir, (plo, phi, pn), (lo, hi, n)) =>
+      s"histogram ledger at $dir was founded with geometry [$plo, $phi)×$pn; " +
+        s"an append restating [$lo, $hi)×$n cannot merge — use the founding " +
+        "geometry or a new ledger dir" },
+    (_, rows) => mergedOf(Seq(rows)))
 
   /** The founding bucket geometry, or None for a store with no appends
-    * yet. Encoded as the exact textual doubles, so a restated geometry
-    * compares by VALUE, not by bits-of-formatting. */
+    * yet. */
   def params(spark: SparkSession, dir: String): Option[(Double, Double, Int)] =
-    readSmall(spark, paramsPath(dir)).map { s =>
-      val a = s.split("\\s+")
-      (a(0).toDouble, a(1).toDouble, a(2).toInt)
-    }
-
-  private def horizon(spark: SparkSession, dir: String): Option[Long] =
-    readSmall(spark, horizonPath(dir)).map(_.toLong)
+    Ledger.params(spark, dir, ledger)
 
   /** True once at least one batch dir exists — the founding test the
     * drift-gated ingest sink uses (a founding batch has no history to
     * drift against and must be admitted, or nothing ever founds). */
   def hasHistory(spark: SparkSession, dir: String): Boolean =
-    batchIds(spark, dir).nonEmpty
+    Ledger.batchIds(spark, dir).nonEmpty
 
-  private def batchIds(spark: SparkSession, dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).toSeq
-  }
-
-  /** Append one batch's histogram under `dir/batch=<batchId>` — the
-    * card-ledger append contract verbatim: geometry founded on first
-    * append and enforced forever after; horizon-batch re-delivery is a
-    * no-op; below-horizon replay fails loudly; optional `keepLast`
-    * compacts on the way out. */
+  /** Append one batch's histogram under the [[Ledger]] protocol: geometry
+    * founded by the first append and enforced forever after; optional
+    * `keepLast` compacts on the way out. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
              groupCol: String, valCol: String, batchId: Long,
              lo: Double, hi: Double, nBuckets: Int,
-             keepLast: Int = -1): Unit = {
-    params(spark, dir) match {
-      case Some((plo, phi, pn)) =>
-        require(plo == lo && phi == hi && pn == nBuckets,
-          s"histogram ledger at $dir was founded with geometry " +
-            s"[$plo, $phi)×$pn; an append restating [$lo, $hi)×$nBuckets " +
-            "cannot merge — use the founding geometry or a new ledger dir")
-      case None =>
-        writeSmall(spark, paramsPath(dir), s"$lo $hi $nBuckets")
-    }
-    val hz = horizon(spark, dir)
-    if (hz.contains(batchId)) return
-    if (hz.exists(batchId < _))
-      throw new IllegalStateException(
-        s"batch $batchId is below the ledger's compaction horizon " +
-          s"(${hz.get}) — replay only batches at or above the horizon, " +
-          "or compact with a wider keepLast")
-    val existing = batchIds(spark, dir)
-    if (existing.nonEmpty && !existing.contains(batchId) && batchId < existing.min)
-      throw new IllegalStateException(
-        s"batch $batchId is below the ledger's compaction horizon " +
-          s"(oldest surviving dir: batch ${existing.min}) — replay only " +
-          "batches at or above the horizon, or compact with a wider keepLast")
-    sketch(batch, groupCol, valCol, lo, hi, nBuckets)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-    if (keepLast >= 0) compact(spark, dir, batchId - keepLast)
-  }
+             keepLast: Int = -1): Unit =
+    Ledger.append(spark, dir, ledger, (lo, hi, nBuckets), batchId, keepLast)(
+      sketch(batch, groupCol, valCol, lo, hi, nBuckets))
 
   /** Corpus-to-date histogram from the ledger alone: one sum per
     * (group, bucket) over per-batch counts — no data rescan. */
   def merged(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
-      .groupBy(col("group"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
+    mergedOf(Seq(spark.read.parquet(dir)))
 
   /** Corpus-to-date quantile brackets from the ledger alone. */
   def quantiles(spark: SparkSession, dir: String, qs: Seq[Double]): DataFrame = {
@@ -252,48 +192,8 @@ object HistLedger {
   }
 
   /** Fold every batch dir at-or-below `upTo` into one summed snapshot
-    * under the newest folded id — the card-ledger compaction verbatim
-    * (staged swap, self-repair of crashed staging, horizon marker before
-    * the destructive phase; every window holds a superset of the counts
-    * and per-dir content is never partially deleted). Counts sum
-    * exactly, so estimates are invariant across the fold. */
-  def compact(spark: SparkSession, dir: String, upTo: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(root)) return
-    def path(name: String) = new org.apache.hadoop.fs.Path(s"$dir/$name")
-    val old = f.globStatus(path("_compact_old_*"))
-    if (old != null) old.foreach { s =>
-      val survivor = path("batch=" + s.getPath.getName.stripPrefix("_compact_old_"))
-      if (!f.exists(survivor)) f.rename(s.getPath, survivor)
-      else f.delete(s.getPath, true)
-    }
-    if (f.exists(path("_compact_tmp"))) f.delete(path("_compact_tmp"), true)
-
-    val ids = batchIds(spark, dir)
-    val folded = ids.filter(_ <= upTo)
-    if (folded.size <= 1) return
-    val survivor = folded.max
-    // merge on the driver first (groups × buckets — metadata), so no
-    // destructive op happens before the fold is fully materialized
-    val mergedRows = spark.read.parquet(folded.map(id => s"$dir/batch=$id"): _*)
-      .groupBy(col("group"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .collect().toSeq
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("group",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(mergedRows.asJava, schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_compact_tmp")
-    writeSmall(spark, horizonPath(dir), survivor.toString)
-    f.rename(path(s"batch=$survivor"), path(s"_compact_old_$survivor"))
-    f.rename(path("_compact_tmp"), path(s"batch=$survivor"))
-    f.delete(path(s"_compact_old_$survivor"), true)
-    folded.filter(_ < survivor).foreach(id => f.delete(path(s"batch=$id"), true))
-  }
+    * ([[Ledger.compact]]). Counts sum exactly, so estimates are invariant
+    * across the fold. */
+  def compact(spark: SparkSession, dir: String, upTo: Long): Unit =
+    Ledger.compact(spark, dir, ledger, upTo)
 }

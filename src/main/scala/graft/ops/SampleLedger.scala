@@ -23,12 +23,11 @@ import org.apache.spark.sql.functions._
   * (hash, id) candidates and the bottom-k cannot change, so even a
   * double-append under two batch ids leaves the sample bit-identical.
   *
-  * Store discipline (the card/histogram contract): `k` and `seed` are
-  * FOUNDING constants in `_params` (k=10 survivors cannot answer a k=20
-  * read; a different seed is a different permutation — neither merges),
-  * overwrite-per-batch-dir replay idempotence, `_horizon` guard, and
-  * the staged-swap [[compact]] folding at-or-below-horizon dirs into one
-  * snapshot of ≤ groups × k rows.
+  * Store discipline: the [[Ledger]] protocol (per-batch dirs, horizon
+  * guard, staged compaction into one snapshot of ≤ groups × k rows).
+  * `k` and `seed` are FOUNDING constants, with the three column choices
+  * (k=10 survivors cannot answer a k=20 read; a different seed is a
+  * different permutation — neither merges).
   *
   * Ledger schema: (group string, id string, payload string) — the id
   * re-derives the rank (md5 is recomputable), the payload is whatever
@@ -70,143 +69,57 @@ object SampleLedger {
 
   // ---- the standing store ----
 
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readSmall(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, path)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
-    }
-  }
-
-  private def writeSmall(spark: SparkSession, path: String, s: String): Unit = {
-    val f = fs(spark, path)
-    val out = f.create(new org.apache.hadoop.fs.Path(path), true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
   /** The ledger's founding constants. `k` and `seed` shape the draw
     * itself; the three COLUMN choices are founding too — a ledger whose
     * batch 0 sampled (lang, doc_id, source) and batch 1 (source, doc_id,
-    * text) would still merge arithmetically but mean nothing. One
-    * constant per line (seeds may contain spaces). */
+    * text) would still merge arithmetically but mean nothing. */
   final case class SampleParams(k: Int, seed: String, groupCol: String,
                                 idCol: String, payloadCol: String)
 
+  /** The sample ledger's [[Ledger.Family]]: [[SampleParams]] one constant
+    * per line (seeds may contain spaces), folded by the bottom-k re-rank
+    * under the founding `k` and `seed`. */
+  private[ops] val ledger = Ledger.Family[SampleParams]("sampleledger", "payload",
+    p => s"${p.k}\n${p.seed}\n${p.groupCol}\n${p.idCol}\n${p.payloadCol}",
+    { s => val l = s.split("\n").map(_.trim)
+      SampleParams(l(0).toInt, l(1), l(2), l(3), l(4)) },
+    (dir, founded, stated) => s"sample ledger at $dir was founded with " +
+      s"$founded; an append restating $stated cannot merge — use the " +
+      "founding constants or a new ledger dir",
+    (dir, rows) => mergedAt(dir, rows).select("group", "id", "payload"))
+
   /** The founding constants, or None before the first append. */
   def params(spark: SparkSession, dir: String): Option[SampleParams] =
-    readSmall(spark, s"$dir/_params").map { s =>
-      val l = s.split("\n").map(_.trim)
-      SampleParams(l(0).toInt, l(1), l(2), l(3), l(4))
-    }
+    Ledger.params(spark, dir, ledger)
 
-  private def horizon(spark: SparkSession, dir: String): Option[Long] =
-    readSmall(spark, s"$dir/_horizon").map(_.toLong)
-
-  private def batchIds(spark: SparkSession, dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).toSeq
-  }
-
-  /** Append one batch's bottom-k under `dir/batch=<batchId>` — founding
-    * (k, seed) enforced forever after; horizon-batch re-delivery no-ops;
-    * below-horizon replay fails loudly; `keepLast` compacts on the way
-    * out. */
+  /** Append one batch's bottom-k under the [[Ledger]] protocol — all five
+    * constants founded by the first append and enforced forever after;
+    * `keepLast` compacts on the way out. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
              groupCol: String, idCol: String, payloadCol: String,
              batchId: Long, k: Int, seed: String = "graft-sample",
-             keepLast: Int = -1): Unit = {
-    params(spark, dir) match {
-      case Some(p) =>
-        require(p == SampleParams(k, seed, groupCol, idCol, payloadCol),
-          s"sample ledger at $dir was founded with $p; an append " +
-            s"restating ${SampleParams(k, seed, groupCol, idCol, payloadCol)} " +
-            "cannot merge — use the founding constants or a new ledger dir")
-      case None =>
-        writeSmall(spark, s"$dir/_params",
-          s"$k\n$seed\n$groupCol\n$idCol\n$payloadCol")
-    }
-    val hz = horizon(spark, dir)
-    if (hz.contains(batchId)) return
-    if (hz.exists(batchId < _))
-      throw new IllegalStateException(
-        s"batch $batchId is below the ledger's compaction horizon " +
-          s"(${hz.get}) — replay only batches at or above the horizon, " +
-          "or compact with a wider keepLast")
-    val existing = batchIds(spark, dir)
-    if (existing.nonEmpty && !existing.contains(batchId) && batchId < existing.min)
-      throw new IllegalStateException(
-        s"batch $batchId is below the ledger's compaction horizon " +
-          s"(oldest surviving dir: batch ${existing.min}) — replay only " +
-          "batches at or above the horizon, or compact with a wider keepLast")
-    sketch(batch, groupCol, idCol, payloadCol, k, seed)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-    if (keepLast >= 0) compact(spark, dir, batchId - keepLast)
+             keepLast: Int = -1): Unit =
+    Ledger.append(spark, dir, ledger,
+        SampleParams(k, seed, groupCol, idCol, payloadCol), batchId, keepLast)(
+      sketch(batch, groupCol, idCol, payloadCol, k, seed))
+
+  /** The bottom-k re-rank of ledger `rows` under the ledger's founding
+    * `k` and `seed`. */
+  private def mergedAt(dir: String, rows: DataFrame): DataFrame = {
+    val p = params(rows.sparkSession, dir).getOrElse(
+      throw new IllegalStateException(s"no sample ledger at $dir"))
+    mergedOf(Seq(rows.select("group", "id", "payload")), p.k, p.seed)
   }
 
   /** The corpus-to-date sample from the ledger alone: re-rank survivors,
     * keep the global per-group bottom-k — no data rescan. Returns
     * (group, id, payload, cap_rank). */
-  def merged(spark: SparkSession, dir: String): DataFrame = {
-    val p = params(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no sample ledger at $dir"))
-    mergedOf(Seq(spark.read.parquet(dir).select("group", "id", "payload")),
-      p.k, p.seed)
-  }
+  def merged(spark: SparkSession, dir: String): DataFrame =
+    mergedAt(dir, spark.read.parquet(dir))
 
-  /** Fold at-or-below-horizon dirs into one bottom-k snapshot (staged
-    * swap, self-repairing, horizon marker before the destructive phase —
-    * the card/histogram compaction verbatim). The fold is exact by the
-    * bottom-k merge property and idempotent on content. */
-  def compact(spark: SparkSession, dir: String, upTo: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(root)) return
-    def path(name: String) = new org.apache.hadoop.fs.Path(s"$dir/$name")
-    val old = f.globStatus(path("_compact_old_*"))
-    if (old != null) old.foreach { s =>
-      val survivor = path("batch=" + s.getPath.getName.stripPrefix("_compact_old_"))
-      if (!f.exists(survivor)) f.rename(s.getPath, survivor)
-      else f.delete(s.getPath, true)
-    }
-    if (f.exists(path("_compact_tmp"))) f.delete(path("_compact_tmp"), true)
-
-    val ids = batchIds(spark, dir)
-    val folded = ids.filter(_ <= upTo)
-    if (folded.size <= 1) return
-    val survivor = folded.max
-    val prm = params(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no sample ledger at $dir"))
-    // fold on the driver first (≤ groups × k rows — metadata), so no
-    // destructive op happens before the snapshot is fully materialized
-    val rows = mergedOf(Seq(
-        spark.read.parquet(folded.map(id => s"$dir/batch=$id"): _*)
-          .select("group", "id", "payload")), prm.k, prm.seed)
-      .select("group", "id", "payload")
-      .collect().toSeq
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("group",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("payload",
-        org.apache.spark.sql.types.StringType)))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_compact_tmp")
-    writeSmall(spark, s"$dir/_horizon", survivor.toString)
-    f.rename(path(s"batch=$survivor"), path(s"_compact_old_$survivor"))
-    f.rename(path("_compact_tmp"), path(s"batch=$survivor"))
-    f.delete(path(s"_compact_old_$survivor"), true)
-    folded.filter(_ < survivor).foreach(id => f.delete(path(s"batch=$id"), true))
-  }
+  /** Fold at-or-below-horizon dirs into one bottom-k snapshot
+    * ([[Ledger.compact]]). The fold is exact by the bottom-k merge
+    * property and idempotent on content. */
+  def compact(spark: SparkSession, dir: String, upTo: Long): Unit =
+    Ledger.compact(spark, dir, ledger, upTo)
 }

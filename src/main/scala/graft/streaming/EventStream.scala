@@ -332,18 +332,17 @@ object EventStream {
   /** Maintain the corpus-to-date distinct-count ledger AT INGEST TIME —
     * [[graft.ops.Corpus.cardLedgerAppend]] as a streaming sink (round-8
     * verdict #6): every microbatch contributes its (group, HLL sketch)
-    * row-set under `ledgerDir/batch=<id>`, so "distinct fingerprints per
-    * source, corpus-to-date" ([[graft.ops.Corpus.cardLedgerEstimate]])
-    * is answerable at any moment WITHOUT ever rescanning ingested data —
-    * the dataset card stays current as a side effect of ingest.
+    * row-set, so "distinct fingerprints per source, corpus-to-date"
+    * ([[graft.ops.Corpus.cardLedgerEstimate]]) is answerable at any
+    * moment WITHOUT ever rescanning ingested data — the dataset card
+    * stays current as a side effect of ingest.
     *
     * Exactly-once is free here: foreachBatch's at-least-once re-delivery
-    * overwrites the same `batch=<id>` dir (idempotent), and even a
+    * is the [[graft.ops.Ledger]] protocol's same-id overwrite, and even a
     * re-delivery under a different id cannot inflate the estimate — HLL
-    * union is idempotent on content. `keepLast` bounds the ledger dir
-    * count via [[graft.ops.Corpus.cardLedgerCompact]] (default 8, the
+    * union is idempotent on content. `keepLast` (default 8, the
     * PackOffsetStore margin: far wider than foreachBatch's one-epoch
-    * replay horizon). */
+    * replay horizon) bounds the dir count by compacting on the way out. */
   def cardLedgerSink(stream: DataFrame, groupCol: String, valueCol: String,
                      ledgerDir: String, checkpoint: String,
                      lgK: Int = 12, keepLast: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
@@ -359,13 +358,13 @@ object EventStream {
   /** Maintain the corpus-to-date DISTRIBUTION ledger at ingest time —
     * [[graft.ops.HistLedger.append]] as a streaming sink, the
     * [[cardLedgerSink]] twin for histograms: every microbatch contributes
-    * its (group, bucket, cnt) rows under `ledgerDir/batch=<id>`, so the
-    * drift gate ([[graft.ops.HistLedger.drift]]) and the quantile
-    * brackets ([[graft.ops.HistLedger.quantiles]]) answer at any moment
-    * without rescanning ingested data. Same exactly-once argument:
-    * re-delivery overwrites the same `batch=<id>` dir; `keepLast` bounds
-    * the dir count via the staged-swap compaction, whose horizon guard
-    * keeps a post-compaction replay loud instead of double-counted.
+    * its (group, bucket, cnt) rows, so the drift gate
+    * ([[graft.ops.HistLedger.drift]]) and the quantile brackets
+    * ([[graft.ops.HistLedger.quantiles]]) answer at any moment without
+    * rescanning ingested data. Replay and `keepLast` are the
+    * [[graft.ops.Ledger]] protocol, as in [[cardLedgerSink]]; counts are
+    * not idempotent on content, so its horizon guard is what keeps a
+    * post-compaction replay loud instead of double-counted.
     * The bucket grid is the ledger's FOUNDING geometry — the first
     * microbatch founds it; callers restating a different grid on an
     * existing ledger fail at the first trigger. */
@@ -457,9 +456,9 @@ object EventStream {
     * [[graft.ops.SampleLedger.append]] as a streaming sink, completing
     * the ledger-sink family (counts, distributions, and now the rows a
     * human looks at). Safe under at-least-once twice over: same-id
-    * re-delivery overwrites its dir, and the bottom-k fold is
-    * CONTENT-idempotent — even a replay under a new id cannot change
-    * the sample. */
+    * re-delivery is the [[graft.ops.Ledger]] protocol's overwrite, and the
+    * bottom-k fold is CONTENT-idempotent — even a replay under a new id
+    * cannot change the sample. */
   def sampleLedgerSink(stream: DataFrame, groupCol: String, idCol: String,
                        payloadCol: String, ledgerDir: String,
                        checkpoint: String, k: Int,

@@ -932,6 +932,16 @@ class CurateCliSpec extends AnyFunSuite {
     // the snapshot's founding fingerprint kind surfaces as its param
     assert(s3._6.contains("fp_kind=raw"))
 
+    // card ledger compacted: horizon surfaced, the founded lgK its param
+    val cled = tmp("cli-stats-cled")
+    (0 to 2).foreach(i => graft.ops.Corpus.cardLedgerAppend(spark, cled,
+      d.filter(col("doc_id") % 3 === i), "lang", "doc_id", i.toLong))
+    graft.ops.Corpus.cardLedgerCompact(spark, cled, upTo = 1L)
+    val s4 = stats(cled)
+    assert(s4._1 == "cardledger" && s4._3 == 2L && s4._5.contains(1L)
+      && s4._6.contains("12"))
+    rm(cled)
+
     // a typo'd path fails loudly
     intercept[IllegalArgumentException] { stats(sled + "/nope") }
     rm(sled, hled, snap, v, in0, ids)
